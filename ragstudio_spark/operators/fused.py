@@ -10,9 +10,12 @@ which is also the right shape at cluster scale: the dominant cost of the
 Python tier is serialization + process pressure, not the text algorithms.
 
 The JVM-side stages (content-type sniff before; quality gate, status,
-explode after) are unchanged — semantics are identical to the staged
-operators (same kernel functions), verified by the differential oracle
-tests.
+explode after) stay column expressions; the per-turn output is pinned to the
+pure-Python kernel by the differential oracle tests. This hop is the only
+per-turn Python path: the staged per-stage UDFs were deleted, and so was
+the Arrow RecordBatch engine (``python_engine="arrow"``), measured at 1.01×
+(the boundary cost is worker scheduling + IPC, not the pandas conversion
+layer).
 
 On batch-level pandas vectorization of the cheap stages (clean / quality
 prescan / langid): measured and rejected. pandas ``.str`` regex ops call
@@ -28,14 +31,34 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ragstudio_spark.kernel import bpe
 from ragstudio_spark.kernel import chunk as kchunk
 from ragstudio_spark.kernel import html_extract, langid
 from ragstudio_spark.kernel import profile as kprofile
 from ragstudio_spark.kernel import textops
-from ragstudio_spark.operators.chunker import CHUNK_STRUCT
+
+# public chunk struct (kernel/chunk.chunk_turn fields); the wire form in
+# FUSED_SCHEMA appends the transport-only b_start/b_len byte span
+CHUNK_STRUCT = StructType(
+    [
+        StructField("chunk_index", IntegerType()),
+        StructField("chunk_id", StringType()),
+        StructField("text", StringType()),
+        StructField("char_start", IntegerType()),
+        StructField("char_end", IntegerType()),
+        StructField("char_length", IntegerType()),
+        StructField("token_count", IntegerType()),
+        StructField("sentence_count", IntegerType()),
+        StructField("total_chunks", IntegerType()),
+        StructField("chunking_strategy", StringType()),
+        StructField("requested_strategy", StringType()),
+        StructField("chunk_size", IntegerType()),
+        StructField("chunk_overlap", IntegerType()),
+    ]
+)
 
 _CHUNK_FIELDS = [f.name for f in CHUNK_STRUCT.fields]
 
@@ -103,17 +126,13 @@ def process_turns(
     chunk structs immediately (convenient, but Catalyst inlines the rebuild
     into every downstream reference of ``chunks``).
 
-    ``python_engine`` selects the Arrow boundary implementation:
-    ``"pandas"`` = mapInPandas (pandas batches both directions);
-    ``"arrow"`` = mapInArrow (pyarrow RecordBatches, output assembled
-    columnar-natively — flat chunk tuples + offsets into StructArray/
-    ListArray — skipping the pandas layer entirely). Same kernel loop,
-    same output, differential-suite equal; the A/B numbers live in
-    BASELINE.md.
+    ``python_engine`` accepts only ``"pandas"`` (the mapInPandas hop).
     """
     if on_error not in ("quarantine", "skip", "fail_fast"):
         raise ValueError(f"on_error: {on_error}")
-    if python_engine not in ("pandas", "arrow"):
+    # python_engine survives only because perfbench/layers.py passes it;
+    # drop the parameter together with that argument
+    if python_engine != "pandas":
         raise ValueError(f"python_engine: {python_engine}")
     schema = FUSED_SCHEMA + (", ts timestamp" if carry_ts else "")
     if with_trace:
@@ -244,118 +263,56 @@ def process_turns(
                 len(extracted), stats, rows, base if chunks else None,
                 reason, trace)
 
-    def accumulate(conv_ids, turn_idxs, texts, ctypes) -> dict[str, list]:
-        """The shared per-row loop — column lists out, engine-agnostic."""
-        out: dict[str, list] = {k: [] for k in (
-            "conv_id", "turn_idx", "content_type", "extraction_engine",
-            "text_head", "language", "quality_score", "needs_repair",
-            "repair_applied", "extracted_chars", "extraction_fixes",
-            "page_numbers_removed", "error", "chunking_reason",
-            "base_utf8", "chunks",
-            *(["stage_trace"] if with_trace else []))}
-        for conv_id, turn_idx, text, ctype in zip(
-            conv_ids, turn_idxs, texts, ctypes
-        ):
-            error = None
-            try:
-                (language, quality_score, needs_repair, repaired,
-                 n_extracted, stats, chunks, base, reason,
-                 trace) = process_one(conv_id, turn_idx, text, ctype)
-            except Exception as exc:  # noqa: BLE001 — row-level fault barrier
-                if on_error == "fail_fast":
-                    raise
-                error = f"{type(exc).__name__}: {exc}"[:500]
-                language, quality_score = None, 0.0
-                needs_repair, repaired, n_extracted = False, False, 0
-                stats = {"extraction_fixes": 0, "page_numbers_removed": 0}
-                chunks, base, reason = [], None, None
-                trace = [] if with_trace else None
-            out["conv_id"].append(conv_id)
-            out["turn_idx"].append(turn_idx)
-            out["content_type"].append(ctype)
-            out["extraction_engine"].append(_ENGINES.get(ctype, "identity"))
-            out["text_head"].append((text or "")[:200])
-            out["language"].append(language)
-            out["quality_score"].append(quality_score)
-            out["needs_repair"].append(needs_repair)
-            out["repair_applied"].append(repaired)
-            out["extracted_chars"].append(n_extracted)
-            out["extraction_fixes"].append(stats["extraction_fixes"])
-            out["page_numbers_removed"].append(stats["page_numbers_removed"])
-            out["error"].append(error)
-            out["chunking_reason"].append(reason)
-            out["base_utf8"].append(base.encode("utf-8") if base is not None else None)
-            out["chunks"].append(chunks)
-            if with_trace:
-                out["stage_trace"].append(trace)
-        return out
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = accumulate(pdf["conv_id"], pdf["turn_idx"], pdf["text"],
-                             pdf["content_type"])
+            out: dict[str, list] = {k: [] for k in (
+                "conv_id", "turn_idx", "content_type", "extraction_engine",
+                "text_head", "language", "quality_score", "needs_repair",
+                "repair_applied", "extracted_chars", "extraction_fixes",
+                "page_numbers_removed", "error", "chunking_reason",
+                "base_utf8", "chunks",
+                *(["stage_trace"] if with_trace else []))}
+            for conv_id, turn_idx, text, ctype in zip(
+                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["content_type"]
+            ):
+                error = None
+                try:
+                    (language, quality_score, needs_repair, repaired,
+                     n_extracted, stats, chunks, base, reason,
+                     trace) = process_one(conv_id, turn_idx, text, ctype)
+                except Exception as exc:  # noqa: BLE001 — row-level fault barrier
+                    if on_error == "fail_fast":
+                        raise
+                    error = f"{type(exc).__name__}: {exc}"[:500]
+                    language, quality_score = None, 0.0
+                    needs_repair, repaired, n_extracted = False, False, 0
+                    stats = {"extraction_fixes": 0, "page_numbers_removed": 0}
+                    chunks, base, reason = [], None, None
+                    trace = [] if with_trace else None
+                out["conv_id"].append(conv_id)
+                out["turn_idx"].append(turn_idx)
+                out["content_type"].append(ctype)
+                out["extraction_engine"].append(_ENGINES.get(ctype, "identity"))
+                out["text_head"].append((text or "")[:200])
+                out["language"].append(language)
+                out["quality_score"].append(quality_score)
+                out["needs_repair"].append(needs_repair)
+                out["repair_applied"].append(repaired)
+                out["extracted_chars"].append(n_extracted)
+                out["extraction_fixes"].append(stats["extraction_fixes"])
+                out["page_numbers_removed"].append(stats["page_numbers_removed"])
+                out["error"].append(error)
+                out["chunking_reason"].append(reason)
+                out["base_utf8"].append(base.encode("utf-8") if base is not None else None)
+                out["chunks"].append(chunks)
+                if with_trace:
+                    out["stage_trace"].append(trace)
             if carry_ts:
                 out["ts"] = list(pdf["ts"])
             yield pd.DataFrame(out)
 
-    if python_engine == "arrow":
-        # resolve the arrow schema DRIVER-side (needs the JVM) and close
-        # over it — workers must not touch the SparkSession
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
-
-        pa_schema = to_arrow_schema(_parse_datatype_string(schema))
-
-        def run_arrow(batches):
-            import pyarrow as pa
-            for batch in batches:
-                cols = {batch.schema.field(i).name: batch.column(i)
-                        for i in range(batch.num_columns)}
-                out = accumulate(cols["conv_id"].to_pylist(),
-                                 cols["turn_idx"].to_pylist(),
-                                 cols["text"].to_pylist(),
-                                 cols["content_type"].to_pylist())
-                arrays = []
-                for field in pa_schema:
-                    if field.name == "ts":
-                        arr = cols["ts"]
-                        if arr.type != field.type:
-                            arr = arr.cast(field.type)
-                    elif pa.types.is_list(field.type):
-                        arr = _nested_rows_to_arrow(out[field.name], field.type)
-                    else:
-                        arr = pa.array(out[field.name], type=field.type)
-                    arrays.append(arr)
-                yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
-
-        out = df.mapInArrow(run_arrow, schema=schema)
-    else:
-        out = df.mapInPandas(run, schema=schema)
+    out = df.mapInPandas(run, schema=schema)
     return _materialize_chunk_text(out) if materialize_text else out
-
-
-def _nested_rows_to_arrow(values: list, list_type):
-    """list-of-list-of-tuples → Arrow ListArray<StructArray>, columnar:
-    one flatten pass + one zip transpose + one pa.array per child field —
-    never a per-row dict (the pandas serializer's path for nested structs
-    converts element-wise; this assembly is the mapInArrow win)."""
-    import pyarrow as pa
-
-    struct_type = list_type.value_type
-    nf = struct_type.num_fields
-    offsets = [0]
-    flat: list = []
-    for lst in values:
-        flat.extend(lst)
-        offsets.append(len(flat))
-    children_py = list(zip(*flat)) if flat else [[] for _ in range(nf)]
-    children = [pa.array(list(children_py[i]), type=struct_type.field(i).type)
-                for i in range(nf)]
-    struct_arr = pa.StructArray.from_arrays(
-        children, fields=[struct_type.field(i) for i in range(nf)])
-    arr = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()),
-                                   struct_arr)
-    return arr if arr.type == list_type else arr.cast(list_type)
 
 
 def chunk_text_expr(chunk: str = "c", base: str = "base_utf8") -> str:
@@ -367,15 +324,18 @@ def chunk_text_expr(chunk: str = "c", base: str = "base_utf8") -> str:
             f"{chunk}.b_start + 1, {chunk}.b_len) as string))")
 
 
-def sliced_chunk_text(chunk_col: str = "chunk",
-                      base_col: str = "base_utf8"):
-    """Column form of :func:`chunk_text_expr` for post-explode rows."""
-    c = F.col(chunk_col)
+def _wire_text(c: Column, base: Column) -> Column:
+    """Column form of :func:`chunk_text_expr` over a wire chunk struct."""
     return F.coalesce(
         c["text"],
-        F.substring(F.col(base_col),
-                    c["b_start"] + F.lit(1), c["b_len"]).cast("string"),
+        F.substring(base, c["b_start"] + F.lit(1), c["b_len"]).cast("string"),
     )
+
+
+def sliced_chunk_text(chunk_col: str = "chunk",
+                      base_col: str = "base_utf8") -> Column:
+    """Column form of :func:`chunk_text_expr` for post-explode rows."""
+    return _wire_text(F.col(chunk_col), F.col(base_col))
 
 
 def public_chunk_cols(chunk_col: str = "chunk",
@@ -403,11 +363,7 @@ def _materialize_chunk_text(df: DataFrame) -> DataFrame:
         cols = []
         for name in _CHUNK_FIELDS:
             if name == "text":
-                cols.append(F.coalesce(
-                    c["text"],
-                    F.substring(base_bytes, c["b_start"] + F.lit(1),
-                                c["b_len"]).cast("string"),
-                ).alias("text"))
+                cols.append(_wire_text(c, base_bytes).alias("text"))
             else:
                 cols.append(c[name].alias(name))
         return F.struct(*cols)

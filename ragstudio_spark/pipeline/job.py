@@ -51,7 +51,9 @@ class PipelineConfig:
     # char-window fallback (the reference's own tiktoken-less degradation
     # path); any other value = a merges.txt path
     bpe_merges_path: str | None = "auto"
-    python_engine: str = "pandas"    # "pandas" | "arrow" Arrow-boundary impl
+    # only "pandas" (process_turns rejects anything else); kept because
+    # perfbench/layers.py reads it — drop it together with that read
+    python_engine: str = "pandas"
 
 
 @dataclass

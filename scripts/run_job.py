@@ -57,10 +57,6 @@ def main() -> None:
                    help="merges.txt path → true BPE token splitting; "
                         "'none' forces the char-window fallback (default: "
                         "the shipped trained vocabulary)")
-    p.add_argument("--python-engine", default=None,
-                   choices=("pandas", "arrow"),
-                   help="Arrow-boundary impl for the fused hop "
-                        "(measured-equal; pandas is the default)")
     p.add_argument("--no-guard", action="store_true",
                    help="skip the batch-ingestion guard gate (reference "
                         "security.py tier: path/symlink/size/batch caps "
@@ -122,7 +118,6 @@ def main() -> None:
             "language_filter": args.langs,
             "min_readable_ratio": args.min_readable_ratio,
             "bpe_merges_path": args.bpe_merges,
-            "python_engine": args.python_engine,
         }.items() if v is not None
     }
     cfg = resolve_config(cli=cli_layer, yaml_path=args.config)

@@ -28,6 +28,10 @@ class TestErrorModes:
         with pytest.raises(ValueError):
             fused.process_turns(_input(spark), on_error="explode")
 
+    def test_unknown_python_engine_rejected(self, spark):
+        with pytest.raises(ValueError, match="python_engine"):
+            fused.process_turns(_input(spark), python_engine="arrow")
+
     def test_healthy_rows_have_null_error(self, spark):
         for mode in ("quarantine", "skip", "fail_fast"):
             out = fused.process_turns(_input(spark), on_error=mode).toPandas()

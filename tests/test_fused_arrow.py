@@ -1,85 +1,70 @@
-"""mapInArrow variant of the fused hop (operators/fused.py) — must be
-row-identical to the mapInPandas path in every mode.
+"""Row identity of the fused hop (operators/fused.py) across its output
+modes.
 
-Measured A/B at sf0.1/50k turns (interleaved min-of-4, warm fleet):
-pandas 3.56 s vs arrow 3.52 s on pipeline_extract_chunk — 1.01×, below
-the 1.15× adoption bar, so pandas stays the default and the arrow path
-is an option (BASELINE.md records the trial). The conclusion matters:
-the hop's overhead above kernel compute is worker scheduling + IPC, not
-the pandas conversion layer.
+The hop once had a second, mapInArrow engine; measured at 1.01× over
+mapInPandas (BASELINE.md) it was dropped, and the class keeps its name.
+What stays is the same contract across the modes that reshape the hop's
+output: the spans-only wire form sliced back JVM-side, the carried event
+time, and the stage trace must all leave every other field of every row
+exactly as the default form has it — with and without adaptive strategy
+selection.
 """
 
 from pyspark.sql import functions as F
 
-from ragstudio_spark.operators.fused import process_turns
+from ragstudio_spark.operators import fused
 from ragstudio_spark.operators.sniff import with_content_type
 
 
-def _input(spark):
-    # real timestamps on most rows (plus one NULL): the arrow engine's ts
-    # passthrough/cast branch must be exercised with concrete event-time
-    # instants, not just NULLs — a tz mis-cast would shift values silently
-    from datetime import datetime, timedelta
-
-    t0 = datetime(2024, 3, 1, 12, 30, 15)
-
-    def ts(i):
-        return t0 + timedelta(seconds=i)
-
-    rows = [
-        ("c1", 0, "<html><body><nav>m</nav><p>"
-         + "Real paragraph content here. " * 40 + "</p></body></html>",
-         None, ts(0)),
-        ("c1", 1, "plain text turn with several sentences. " * 30,
-         None, ts(1)),
-        ("c2", 0, "", None, ts(2)),
-        ("c2", 1, None, None, None),
-        ("c2", 2, "# Markdown\n\nSome **bold** content. " * 20, None, ts(3)),
-        ("c3", 0, "l i k e   t h i s  \x00 garbage " * 10, None, ts(4)),
-        ("c4", 0, "héllo wörld — des données accentuées. " * 25,
-         None, ts(5)),
-    ]
-    return with_content_type(spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, text string, tool string, ts timestamp"))
+def _rows(df):
+    return sorted(map(repr, df.collect()))
 
 
 class TestArrowEngineEquality:
-    def test_rows_identical_across_engines_and_modes(self, spark):
-        df = _input(spark)
-        for kw in (dict(), dict(adaptive=True), dict(materialize_text=False),
-                   dict(carry_ts=True)):
-            a = process_turns(df, python_engine="pandas", **kw)
-            b = process_turns(df, python_engine="arrow", **kw)
-            assert a.schema == b.schema, kw
-            ra = sorted(map(repr, a.collect()))
-            rb = sorted(map(repr, b.collect()))
-            assert ra == rb, kw
+    def test_rows_identical_across_engines_and_modes(self, spark,
+                                                     mixed_turns):
+        df = with_content_type(spark.createDataFrame(
+            mixed_turns,
+            "conv_id string, turn_idx int, text string, ts timestamp"))
+        src_ts = {(c, i): ts for c, i, _t, ts in mixed_turns}
+        for base in (dict(), dict(adaptive=True)):
+            ref = fused.process_turns(df, **base)
+            want = _rows(ref)
+            assert len(want) == len(mixed_turns), base
 
-    def test_trace_mode_same_stages(self, spark):
-        df = _input(spark)
-        a = process_turns(df, python_engine="pandas", with_trace=True)
-        b = process_turns(df, python_engine="arrow", with_trace=True)
-        key = ["conv_id", "turn_idx"]
-        sa = [[(s["stage"], s["engine"]) for s in r["stage_trace"]]
-              for r in a.orderBy(*key).collect()]
-        sb = [[(s["stage"], s["engine"]) for s in r["stage_trace"]]
-              for r in b.orderBy(*key).collect()]
-        assert sa == sb
-        # durations differ run-to-run; everything else must not
-        drop = [F.col("stage_trace")]
-        assert (sorted(map(repr, a.drop(*drop).collect()))
-                == sorted(map(repr, b.drop(*drop).collect())))
+            # the wire form sliced back in Python, independently of the
+            # JVM-side slice the default form runs
+            wire = fused.process_turns(df, materialize_text=False, **base)
+            assert "base_utf8" in wire.columns, base
+            texts = {}
+            for r in wire.collect():
+                for c in r["chunks"] or []:
+                    if c["text"] is None:
+                        lo = c["b_start"]
+                        text = bytes(r["base_utf8"][lo:lo + c["b_len"]])
+                        text = text.decode("utf-8")
+                    else:
+                        text = c["text"]
+                    key = (r["conv_id"], r["turn_idx"], c["chunk_index"])
+                    texts[key] = text
+            assert texts == {
+                (r["conv_id"], r["turn_idx"], c["chunk_index"]): c["text"]
+                for r in ref.collect() for c in r["chunks"] or []}, base
+            assert texts, base
+            sliced = fused._materialize_chunk_text(wire)
+            assert sliced.schema == ref.schema, base
+            assert _rows(sliced) == want, base
 
-    def test_plan_uses_map_in_arrow_node(self, spark):
-        df = _input(spark)
-        plan = (process_turns(df, python_engine="arrow")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "MapInArrow" in plan
-        assert "MapInPandas" not in plan
+            timed = fused.process_turns(df, carry_ts=True, **base)
+            got_ts = {(r["conv_id"], r["turn_idx"]): r["ts"]
+                      for r in timed.collect()}
+            assert got_ts == src_ts, base
+            untimed = timed.drop("ts")
+            assert untimed.schema == ref.schema, base
+            assert _rows(untimed) == want, base
 
-    def test_rejects_unknown_engine(self, spark):
-        import pytest
-
-        with pytest.raises(ValueError, match="python_engine"):
-            process_turns(_input(spark), python_engine="polars")
+            traced = fused.process_turns(df, with_trace=True, **base)
+            assert all(r["stage_trace"] for r in traced.collect()), base
+            untraced = traced.drop(F.col("stage_trace"))
+            assert untraced.schema == ref.schema, base
+            assert _rows(untraced) == want, base

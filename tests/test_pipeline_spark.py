@@ -214,39 +214,61 @@ class TestSpansOnlyWire:
         # heavier, not wrong (correctness is pinned by the slice test below)
         assert n_lit == 0
 
-    def test_materialized_text_matches_kernel(self, spark, input_pdf):
+    def test_materialized_text_matches_kernel(self, spark, input_pdf,
+                                              mixed_turns):
         """Default (materialized) form: slices reconstruct the kernel's
         chunk text exactly — the differential oracle re-checked on the
-        wire round trip, with explicit non-ASCII coverage."""
+        wire round trip, with explicit non-ASCII coverage. The mixed
+        hand-built input also runs with ``carry_ts=True``: every turn's
+        event time comes back unchanged, the NULL one included."""
         from ragstudio_spark.operators import fused, sniff
 
-        mat = fused.process_turns(
-            sniff.with_content_type(input_pdf).select(
-                "conv_id", "turn_idx", "text", "content_type"),
-        ).toPandas()
-        assert "base_utf8" not in mat.columns
+        def check(turns, src, carry_ts=False):
+            cols = ["conv_id", "turn_idx", "text", "content_type"]
+            out = fused.process_turns(
+                sniff.with_content_type(turns).select(
+                    *cols, *(["ts"] if carry_ts else [])),
+                carry_ts=carry_ts,
+            )
+            assert "base_utf8" not in out.columns
+            mat = out.collect()
+            assert len(mat) == len(src)
+            checked = non_ascii = 0
+            for r in mat:
+                key = (r["conv_id"], r["turn_idx"])
+                if carry_ts:
+                    assert r["ts"] == src[key]["ts"], key
+                if r["chunks"] is None or r["error"]:
+                    continue
+                text = src[key]["text"] or ""
+                if not text.strip():
+                    continue
+                extracted = fused._extract_one(text, r["content_type"])
+                expected, _ = kchunk.chunk_turn(
+                    extracted, source=f"{r['conv_id']}:{r['turn_idx']}")
+                got = list(r["chunks"])
+                assert len(got) == len(expected)
+                for g, e in zip(got, expected):
+                    assert g["text"] == e["text"]
+                    if not e["text"].isascii():
+                        non_ascii += 1
+                    checked += 1
+            return checked, non_ascii
+
         src = tsrc.generate_pandas(N_TURNS, seed=SEED).set_index(
             ["conv_id", "turn_idx"])
-        checked = non_ascii = 0
-        for _, r in mat.iterrows():
-            if r["chunks"] is None or r["error"]:
-                continue
-            text = src.loc[(r["conv_id"], r["turn_idx"])]["text"] or ""
-            if not text.strip():
-                continue
-            from ragstudio_spark.operators.fused import _extract_one
-            extracted = _extract_one(text, r["content_type"])
-            expected, _ = kchunk.chunk_turn(
-                extracted, source=f"{r['conv_id']}:{r['turn_idx']}")
-            got = list(r["chunks"])
-            assert len(got) == len(expected)
-            for g, e in zip(got, expected):
-                assert g["text"] == e["text"]
-                if not e["text"].isascii():
-                    non_ascii += 1
-                checked += 1
+        checked, non_ascii = check(
+            input_pdf, {k: {"text": t} for k, t in src["text"].items()})
         assert checked > 500
         assert non_ascii > 50
+
+        checked, non_ascii = check(
+            spark.createDataFrame(
+                mixed_turns,
+                "conv_id string, turn_idx int, text string, ts timestamp"),
+            {(c, i): {"text": t, "ts": ts} for c, i, t, ts in mixed_turns},
+            carry_ts=True)
+        assert checked > 0 and non_ascii > 0
 
 
 class TestIndexAndSearchLifecycle:

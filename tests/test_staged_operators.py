@@ -1,16 +1,14 @@
-"""Standalone staged operators (extract / normalizer / chunker) — these are
-the composable public forms of what the fused operator runs in one hop;
-pin them to the fused output so they can't rot."""
+"""Standalone normalizer operator (the reference's normalize_document
+ingest tier) — pinned to the fused hop's metrics so it can't rot — plus the
+Iceberg adapter and exact quantiles."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from ragstudio_spark.operators import chunker, extract, fused, normalizer, sniff
+from ragstudio_spark.operators import fused, normalizer, sniff
 from ragstudio_spark.pipeline import iceberg
 from ragstudio_spark.sources import transcripts as tsrc
-
-KEY = ["conv_id", "turn_idx", "chunk_index"]
 
 
 @pytest.fixture(scope="module")
@@ -20,34 +18,21 @@ def turns(spark):
     ).cache()
 
 
+@pytest.fixture(scope="module")
+def extracted(spark, turns):
+    """extracted_text computed on the driver by the fused hop's own
+    extractor, so the normalizer is checked without a second extract UDF."""
+    rows = [(r["conv_id"], r["turn_idx"],
+             fused._extract_one(r["text"] or "", r["content_type"]))
+            for r in turns.select("conv_id", "turn_idx", "text",
+                                  "content_type").collect()]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, extracted_text string")
+
+
 class TestStagedEqualsFused:
-    def test_staged_chunks_equal_fused(self, spark, turns):
-        staged = chunker.explode_chunks(
-            chunker.with_chunks(
-                extract.with_extracted_text(turns)
-            ).select("conv_id", "turn_idx", "chunk_result")
-        ).toPandas().sort_values(KEY).reset_index(drop=True)
-
-        fused_out = (
-            fused.process_turns(
-                turns.select("conv_id", "turn_idx", "text", "content_type"),
-                with_normalize=False,
-            )
-            .select("conv_id", "turn_idx", "extraction_fixes",
-                    "page_numbers_removed", F.explode("chunks").alias("chunk"))
-            .select("conv_id", "turn_idx", "extraction_fixes",
-                    "page_numbers_removed", "chunk.*")
-            .toPandas().sort_values(KEY).reset_index(drop=True)
-        )
-        assert len(staged) == len(fused_out) > 0
-        for col in ["chunk_id", "text", "char_start", "char_end",
-                    "extraction_fixes", "page_numbers_removed"]:
-            assert (staged[col].values == fused_out[col].values).all(), col
-
-    def test_staged_normalizer_matches_fused_metrics(self, spark, turns):
-        staged = normalizer.with_normalization(
-            extract.with_extracted_text(turns)
-        ).select(
+    def test_staged_normalizer_matches_fused_metrics(self, spark, turns, extracted):
+        staged = normalizer.with_normalization(extracted).select(
             "conv_id", "turn_idx",
             F.col("norm.language").alias("language"),
             F.col("norm.quality_score").alias("quality_score"),
@@ -58,11 +43,13 @@ class TestStagedEqualsFused:
         ).select("conv_id", "turn_idx", "language", "quality_score").toPandas(
         ).set_index(["conv_id", "turn_idx"]).sort_index()
 
+        assert len(staged) == len(fd) == 150
+        assert (staged.index == fd.index).all()
         assert (staged["quality_score"].values == fd["quality_score"].values).all()
         assert (staged["language"].fillna("∅").values == fd["language"].fillna("∅").values).all()
 
-    def test_language_filter_operator(self, spark, turns):
-        df = normalizer.with_normalization(extract.with_extracted_text(turns))
+    def test_language_filter_operator(self, spark, extracted):
+        df = normalizer.with_normalization(extracted)
         kept = normalizer.filter_languages(df, allowed=("fr", "en"))
         langs = {r["l"] for r in kept.select(
             F.lower(F.col("norm.language")).alias("l")).distinct().collect()}
