@@ -488,14 +488,6 @@ def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_near_pairs(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
-    """Near-duplicate candidates (delegates to the 64-bit banded sketch —
-    the 16-bit variant's 4-bit bands capped at 16 buckets/band and
-    degenerated to an all-pairs join at corpus scale)."""
-    return simhash64_near_pairs(df, text_col, id_col, max_hamming)
-
-
 def embedding_near_pairs(vectors: DataFrame, planes: DataFrame,
                          threshold: float = 0.9, id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:

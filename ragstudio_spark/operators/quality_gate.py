@@ -83,16 +83,3 @@ def with_chunks_gate(
         (F.col("total_chunks_gate") > 0)
         & (F.col("readable_ratio") >= min_readable_ratio),
     )
-
-
-def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(passing, quarantined) split after ``with_chunks_gate``; quarantined
-    rows carry a reason column (mirrors FileResult.error)."""
-    passing = df.filter(F.col("gate_passed"))
-    quarantined = df.filter(~F.col("gate_passed")).withColumn(
-        "failure_reason",
-        F.when(F.col("total_chunks_gate") == 0, F.lit("no_chunks")).otherwise(
-            F.lit("too_few_readable_chunks")
-        ),
-    )
-    return passing, quarantined

@@ -163,12 +163,10 @@ def heavy_keys(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",),
     skew_report overflow rationale), ordered by count desc with key
     tiebreaks."""
     # key-sized counts feed TWO consumers (the stats aggregate and the
-    # output join) — localCheckpoint per the multi-consumer-intermediate
-    # rule, matching join_cardinality; without it the groupBy over the
-    # full input can execute twice (r6 ADVICE).
-    counts = (df.groupBy(*key_cols).agg(F.count("*").cast("bigint")
-                                        .alias("key_count"))
-              .localCheckpoint())
+    # output join) within ONE plan: exchange reuse computes the input
+    # groupBy once (ReusedExchange), so a checkpoint would only add a job.
+    counts = df.groupBy(*key_cols).agg(F.count("*").cast("bigint")
+                                       .alias("key_count"))
     stats = (counts.agg(F.sum("key_count").cast("bigint").alias("_total"),
                         F.count("*").cast("bigint").alias("_nk"))
              .withColumn("_mean", F.expr("greatest(1L, _total DIV _nk)")))

@@ -155,8 +155,9 @@ def distribution_drift(old: DataFrame, new: DataFrame,
     bucket is a real bucket: the join is null-SAFE (the snapshot_diff
     convention), so NULL-keyed mass cannot double-count as both
     vanished and appeared. The bucket-sized merged table is
-    localCheckpointed — it feeds the TV aggregate AND the output (the
-    multi-consumer rule; without it both corpora scan twice).
+    localCheckpointed — it feeds the TV aggregate AND the output, and
+    dropping the checkpoint for exchange reuse measured mixed, so it
+    stays.
     """
     # one implementation: the row-level form is count-then-delegate
     # (review-found: the first cut duplicated the shares/merge/TV logic,
@@ -184,15 +185,15 @@ def join_cardinality(left: DataFrame, right: DataFrame, on: str,
     pairs is ALREADY a product of two counts, so the bigint 1e6·pairs
     wraps at a 4M×4M hot key in ANSI-off Spark while DuckDB raises
     (review-found — the exact class skew_report's DIV-floored mean
-    dodges). The key-sized per_key table is localCheckpointed: it
-    feeds the total aggregate AND the output.
+    dodges). The key-sized per_key table feeds the total aggregate AND
+    the output within one plan; exchange reuse computes the two per-key
+    counts once (ReusedExchange), so it is not checkpointed.
     """
     ca = left.groupBy(on).agg(F.count("*").cast("bigint").alias("c_left"))
     cb = right.groupBy(on).agg(F.count("*").cast("bigint").alias("c_right"))
     per_key = (ca.join(cb, on)
                .withColumn("pairs", (F.col("c_left") * F.col("c_right"))
-                           .cast("bigint"))
-               .localCheckpoint())
+                           .cast("bigint")))
     total = per_key.agg(F.sum("pairs").cast("bigint").alias("total_pairs"))
     return (per_key.crossJoin(F.broadcast(total))
             .withColumn("share_ppm",

@@ -19,7 +19,6 @@ only what a previous run left failed, with the reference's pacing.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import time
 from dataclasses import dataclass
@@ -83,13 +82,7 @@ def retry_call(fn, cfg: RetryConfig | None = None, seed: str = "", sleep=time.sl
 
 def list_runs(root: str) -> list[dict]:
     """Committed run summaries, oldest first."""
-    out = []
-    for run_id in _lineage.committed_runs(root):
-        path = os.path.join(root, "runs", run_id, "run.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                out.append(json.load(f))
-    return out
+    return _lineage.run_summaries(root)
 
 
 def last_failed_run(root: str) -> dict | None:
@@ -139,26 +132,23 @@ def estimated_retry_turns(root: str) -> int:
                for r in _lineage.run_summaries(root))
 
 
-def retry_subset(spark: SparkSession, transcripts: DataFrame, root: str,
-                 max_broadcast_keys: int = _lineage.BROADCAST_MAX_KEYS,
-                 ) -> DataFrame | None:
+def retry_subset(spark: SparkSession, transcripts: DataFrame,
+                 root: str) -> DataFrame | None:
     """Semi-join the input to the retryable key set, size-guarding the
     broadcast hint — after a large-scale partial failure the retry set can
     be arbitrarily big, so the hint is applied only under the estimate."""
     keys = retry_turn_keys(spark, root)
     if keys is None:
         return None
-    keys = _lineage.maybe_broadcast(keys, estimated_retry_turns(root),
-                                    max_broadcast_keys)
+    keys = _lineage.maybe_broadcast(keys, estimated_retry_turns(root))
     return transcripts.join(keys, on=["conv_id", "turn_idx"], how="left_semi")
 
 
 def retry_failed(spark: SparkSession, transcripts: DataFrame, root: str,
-                 run_id: str, config=None,
-                 max_broadcast_keys: int = _lineage.BROADCAST_MAX_KEYS) -> dict:
+                 run_id: str, config=None) -> dict:
     """``ragctl retry`` analogue: reprocess only turns whose latest status
     is retryable (semi-join), appending a new committed run."""
-    subset = retry_subset(spark, transcripts, root, max_broadcast_keys)
+    subset = retry_subset(spark, transcripts, root)
     if subset is None:
         return _lineage.run_with_lineage(spark, transcripts, root, run_id, config)
     return _lineage.run_with_lineage(

@@ -64,20 +64,20 @@ def estimated_committed_turns(root: str) -> int:
     return sum(r.get("total_turns", 0) for r in run_summaries(root))
 
 
-def maybe_broadcast(keys: DataFrame, estimated_keys: int,
-                    max_keys: int = BROADCAST_MAX_KEYS) -> DataFrame:
-    """Broadcast-hint ``keys`` only when the estimate fits the budget."""
-    return F.broadcast(keys) if estimated_keys <= max_keys else keys
+def maybe_broadcast(keys: DataFrame, estimated_keys: int) -> DataFrame:
+    """Broadcast-hint ``keys`` only when the estimate fits
+    ``BROADCAST_MAX_KEYS`` (read at call time)."""
+    return F.broadcast(keys) if estimated_keys <= BROADCAST_MAX_KEYS else keys
 
 
-def resume_filter(spark: SparkSession, transcripts: DataFrame, root: str,
-                  max_broadcast_keys: int = BROADCAST_MAX_KEYS) -> DataFrame:
+def resume_filter(spark: SparkSession, transcripts: DataFrame,
+                  root: str) -> DataFrame:
     """Anti-join the input against committed turn keys (the resume step),
     size-guarding the broadcast hint."""
     done = committed_turn_keys(spark, root)
     if done is None:
         return transcripts
-    done = maybe_broadcast(done, estimated_committed_turns(root), max_broadcast_keys)
+    done = maybe_broadcast(done, estimated_committed_turns(root))
     return transcripts.join(done, on=["conv_id", "turn_idx"], how="left_anti")
 
 
@@ -124,13 +124,12 @@ def run_with_lineage(
     run_id: str,
     config: PipelineConfig | None = None,
     resume: bool = True,
-    max_broadcast_keys: int = BROADCAST_MAX_KEYS,
 ) -> dict:
     """Execute the pipeline with lineage + resume; returns run summary."""
     t0 = time.time()
     df = transcripts
     if resume:
-        df = resume_filter(spark, df, root, max_broadcast_keys)
+        df = resume_filter(spark, df, root)
 
     out: PipelineOutput = run_pipeline(df, config)
     run_dir = _run_dir(root, run_id)

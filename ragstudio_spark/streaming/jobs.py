@@ -11,6 +11,12 @@ lift unchanged onto a streaming DataFrame. Adds:
 * ``windowed_chunk_counts`` — event-time tumbling-window aggregation with a
   watermark for late turns: chunks/minute per content type, the streaming
   analogue of the batch run counters (status.py:47-112).
+
+Every file-stream job here is an incremental batch: it reads a parquet
+directory (``_file_stream``, 8 files per trigger) and runs with
+``trigger(availableNow=True)`` (``_start``) — it processes every file not
+yet in its offset log, then stops. Scheduling happens outside the job; the
+checkpointed offset log makes each rerun resume where the last one stopped.
 """
 
 from __future__ import annotations
@@ -19,6 +25,37 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ragstudio_spark.operators import fused, quality_gate, sniff
 from ragstudio_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+
+def _file_stream(spark: SparkSession, schema: str,
+                 input_dir: str) -> DataFrame:
+    """The parquet-directory source every file-stream job reads."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 8).parquet(input_dir))
+
+
+def _start(writer, checkpoint_dir: str):
+    """Start ``writer`` as an incremental batch: everything new since the
+    checkpointed offsets, then stop."""
+    return (writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
+def _append_tagged(df: DataFrame, batch_id: int, store_dir: str) -> None:
+    """Append one micro-batch's partials to a log, tagged with its batch
+    id (foreachBatch re-delivers the same id on retry)."""
+    (df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
+     .write.mode("append").parquet(store_dir))
+
+
+def _sum_tagged_log(raw: DataFrame, keys: list[str],
+                    count_col: str) -> DataFrame:
+    """Read side of ``_append_tagged``: collapse retried (byte-identical)
+    appends with a max per (batch_id, keys), then sum across batches."""
+    per_batch = (raw.groupBy("batch_id", *keys)
+                 .agg(F.max(count_col).alias(count_col)))
+    return (per_batch.groupBy(*keys)
+            .agg(F.sum(count_col).cast("bigint").alias(count_col)))
 
 
 def transform_stream(stream_df: DataFrame, max_tokens: int = 400,
@@ -52,31 +89,16 @@ def transform_stream(stream_df: DataFrame, max_tokens: int = 400,
     )
 
 
-def streaming_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+def streaming_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
+                       checkpoint_dir: str):
     """File-source streaming job: new parquet files of transcript turns are
     picked up incrementally; exactly-once via the checkpointed offset log +
     idempotent parquet sink."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-    chunks = transform_stream(stream)
-    writer = (
-        chunks.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    chunks = transform_stream(_file_stream(spark, TRANSCRIPT_SCHEMA,
+                                           input_dir))
+    return _start(chunks.writeStream.format("parquet")
+                  .option("path", output_dir).outputMode("append"),
+                  checkpoint_dir)
 
 
 CONV_STATE_SCHEMA = "n_turns bigint, n_chars bigint, last_ts timestamp"
@@ -243,48 +265,27 @@ def conversation_lint_aggregator(stream_df, timeout: str = "NoTimeout"):
     )
 
 
-def tool_calls_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+def tool_calls_stream(spark: SparkSession, input_dir: str, output_dir: str,
+                      checkpoint_dir: str):
     """Streaming tool-call mining: the same all-JVM from_json branch as the
     batch toolcalls operator, lifted onto the file stream — stateless and
     row-local, so it needs no watermark and checkpoints exactly-once like
     the chunks stream."""
     from ragstudio_spark.operators import toolcalls
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-    calls = toolcalls.parse_tool_calls(stream)
-    writer = (
-        calls.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    calls = toolcalls.parse_tool_calls(
+        _file_stream(spark, TRANSCRIPT_SCHEMA, input_dir))
+    return _start(calls.writeStream.format("parquet")
+                  .option("path", output_dir).outputMode("append"),
+                  checkpoint_dir)
 
 
 DEDUP_DOC_SCHEMA = "doc_id bigint, text string"
 
 
-def incremental_near_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    corpus_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    k: int = 3,
-    trigger_available_now: bool = True,
-):
+def incremental_near_dedup_stream(spark: SparkSession, input_dir: str,
+                                  corpus_dir: str, pairs_dir: str,
+                                  checkpoint_dir: str, k: int = 3):
     """Streaming incremental NEAR-dedup: each micro-batch of new documents
     is MinHash-banded against the already-committed corpus (the
     decontamination join shape, operators/dedupe.py
@@ -322,12 +323,6 @@ def incremental_near_dedup_stream(
     for."""
     from ragstudio_spark.operators import dedupe
 
-    stream = (
-        spark.readStream.schema(DEDUP_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, _batch_id: int) -> None:
         import os
 
@@ -355,11 +350,8 @@ def incremental_near_dedup_stream(
         pairs.write.mode("append").parquet(pairs_dir)
         accepted.write.mode("append").parquet(corpus_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, DEDUP_DOC_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def curate_stream_batch(df: DataFrame, text_col: str = "text",
@@ -410,14 +402,8 @@ def curate_stream_batch(df: DataFrame, text_col: str = "text",
     return out
 
 
-def curation_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    benchmark_dir: str | None = None,
-    trigger_available_now: bool = True,
-):
+def curation_stream(spark: SparkSession, input_dir: str, output_dir: str,
+                    checkpoint_dir: str, benchmark_dir: str | None = None):
     """Streaming curation: new document files are redacted and
     quality-flagged incrementally (``curate_stream_batch`` per
     micro-batch via foreachBatch — the signals' explode→groupBy shapes
@@ -433,11 +419,6 @@ def curation_stream(
     re-reads processed files; the parquet append is at-least-once under
     mid-batch crash retry (standard foreachBatch caveat — readers dedup
     on doc_id)."""
-    stream = (
-        spark.readStream.schema(DEDUP_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
     bench_grams = None
     if benchmark_dir is not None:
         from ragstudio_spark.operators import dedupe
@@ -450,26 +431,16 @@ def curation_stream(
         curate_stream_batch(batch_df, benchmark_grams=bench_grams).write.mode(
             "append").parquet(output_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, DEDUP_DOC_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 EMBEDDING_SCHEMA = "vec_id bigint, embedding array<float>"
 
 
-def ivfpq_stream_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    centroids_dir: str,
-    codebooks_dir: str,
-    checkpoint_dir: str,
-    m: int = 4,
-    trigger_available_now: bool = True,
-):
+def ivfpq_stream_ingest(spark: SparkSession, input_dir: str, index_dir: str,
+                        centroids_dir: str, codebooks_dir: str,
+                        checkpoint_dir: str, m: int = 4):
     """Streaming ANN index ingestion: new embedding files are assigned to
     their coarse cell and PQ-encoded against the FROZEN model artifacts
     (centroids + codebooks read and localCheckpointed once at query
@@ -488,36 +459,21 @@ def ivfpq_stream_ingest(
 
     cents = spark.read.parquet(centroids_dir).localCheckpoint()
     books = spark.read.parquet(codebooks_dir).localCheckpoint()
-    stream = (
-        spark.readStream.schema(EMBEDDING_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, _batch_id: int) -> None:
         idx = similarity.ivfpq_index(batch_df, cents, books, m=m)
         idx.write.partitionBy("cell").mode("append").parquet(index_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, EMBEDDING_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 #: streamed cache-ingest input: a keyed value with its event timestamp
 CACHE_INGEST_SCHEMA = "doc_id bigint, text string, ts bigint"
 
 
-def cache_stream_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    prefix: str = "chunk",
-    ttl: int = 3600,
-    trigger_available_now: bool = True,
-):
+def cache_stream_ingest(spark: SparkSession, input_dir: str, store_dir: str,
+                        checkpoint_dir: str, prefix: str = "chunk",
+                        ttl: int = 3600):
     """Streaming ingestion into the parquet cache (pipeline/cache.py):
     each micro-batch bulk-upserts its rows as 'set' events keyed by
     doc_id, stamped with the row's OWN event ts (event-time leases, not
@@ -531,22 +487,13 @@ def cache_stream_ingest(
     physical duplicates. No dedup contract is pushed onto readers."""
     from ragstudio_spark.pipeline import cache
 
-    stream = (
-        spark.readStream.schema(CACHE_INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, _batch_id: int) -> None:
         cache.put_df(batch_df, store_dir, prefix,
                      cache.bulk_key_col(prefix, "doc_id"),
                      F.col("text"), ttl=ttl, now=F.col("ts"))
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, CACHE_INGEST_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def windowed_chunk_counts(
@@ -576,14 +523,8 @@ def windowed_chunk_counts(
 SKETCH_INGEST_SCHEMA = "source string, w string"
 
 
-def hll_stream_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    b_hex: int = 2,
-    trigger_available_now: bool = True,
-):
+def hll_stream_ingest(spark: SparkSession, input_dir: str, store_dir: str,
+                      checkpoint_dir: str, b_hex: int = 2):
     """Streaming HLL ingestion: each micro-batch's per-group register
     PARTIALS (sketches.hll_registers over just the batch) append to a
     register log; the read path (read_hll_registers) max-merges the log.
@@ -597,21 +538,12 @@ def hll_stream_ingest(
     collapse it without changing reads."""
     from ragstudio_spark.operators import sketches
 
-    stream = (
-        spark.readStream.schema(SKETCH_INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, _batch_id: int) -> None:
         regs = sketches.hll_registers(batch_df, "w", ("source",), b_hex)
         regs.write.mode("append").parquet(store_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, SKETCH_INGEST_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_hll_registers(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -622,15 +554,8 @@ def read_hll_registers(spark: SparkSession, store_dir: str) -> DataFrame:
     return sketches.hll_merge(spark.read.parquet(store_dir))
 
 
-def cms_stream_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    width: int = 1024,
-    depth: int = 3,
-    trigger_available_now: bool = True,
-):
+def cms_stream_ingest(spark: SparkSession, input_dir: str, store_dir: str,
+                      checkpoint_dir: str, width: int = 1024, depth: int = 3):
     """Streaming count-min ingestion: each micro-batch's counter
     PARTIALS (sketches.cms_build over just the batch) append to a log
     TAGGED WITH THE BATCH ID; read_cms_counters dedups per batch before
@@ -645,34 +570,21 @@ def cms_stream_ingest(
     invisibility are both tested."""
     from ragstudio_spark.operators import sketches
 
-    stream = (
-        spark.readStream.schema(SKETCH_INGEST_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        partial = sketches.cms_build(
-            batch_df.select("w"), "w", width=width, depth=depth)
-        (partial.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-         .write.mode("append").parquet(store_dir))
+        _append_tagged(sketches.cms_build(batch_df.select("w"), "w",
+                                          width=width, depth=depth),
+                       batch_id, store_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, SKETCH_INGEST_SCHEMA, input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_cms_counters(spark: SparkSession, store_dir: str) -> DataFrame:
     """Merged counter table over a streamed partial log: per-batch dedup
     (retried appends are byte-identical within a batch_id) then
     cross-batch sum — feed to sketches.cms_query."""
-    raw = spark.read.parquet(store_dir)
-    per_batch = (raw.groupBy("batch_id", "row_idx", "bucket")
-                 .agg(F.max("cnt").alias("cnt")))
-    return (per_batch.groupBy("row_idx", "bucket")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt")))
+    return _sum_tagged_log(spark.read.parquet(store_dir),
+                           ["row_idx", "bucket"], "cnt")
 
 
 def session_stats_stream(stream_df: DataFrame, gap_minutes: int = 30,
@@ -715,14 +627,8 @@ def session_stats_stream(stream_df: DataFrame, gap_minutes: int = 30,
 SKEW_INGEST_SCHEMA = "conv_id string"
 
 
-def skew_monitor_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "conv_id",
-    trigger_available_now: bool = True,
-):
+def skew_monitor_stream(spark: SparkSession, input_dir: str, store_dir: str,
+                        checkpoint_dir: str, key_col: str = "conv_id"):
     """Streaming skew observability: each micro-batch appends its
     per-key COUNTS tagged with the batch id; the reader sums across
     batches and diagnoses the CUMULATIVE distribution with the batch
@@ -734,23 +640,13 @@ def skew_monitor_stream(
     batch-id recipe). The log is per-KEY-per-batch sized — the raw rows
     never land in the store.
     """
-    stream = (
-        spark.readStream.schema(f"{key_col} string")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        counts = batch_df.groupBy(key_col).agg(
-            F.count("*").cast("bigint").alias("key_count"))
-        (counts.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-         .write.mode("append").parquet(store_dir))
+        _append_tagged(batch_df.groupBy(key_col).agg(
+            F.count("*").cast("bigint").alias("key_count")),
+            batch_id, store_dir)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_file_stream(spark, f"{key_col} string", input_dir)
+                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def read_key_counts(spark: SparkSession, store_dir: str,
@@ -759,8 +655,5 @@ def read_key_counts(spark: SparkSession, store_dir: str,
     dedup (retried appends are byte-identical within a batch_id) then
     cross-batch sum. Feed to skew.heavy_keys-style diagnostics or
     explode into a weights table."""
-    raw = spark.read.parquet(store_dir)
-    per_batch = (raw.groupBy("batch_id", key_col)
-                 .agg(F.max("key_count").alias("key_count")))
-    return (per_batch.groupBy(key_col)
-            .agg(F.sum("key_count").cast("bigint").alias("key_count")))
+    return _sum_tagged_log(spark.read.parquet(store_dir), [key_col],
+                           "key_count")

@@ -121,7 +121,7 @@ class TestDedupe:
         ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
         assert ham(sh[0], sh[2]) <= ham(sh[0], sh[3])
         near = {(r["doc_a"], r["doc_b"]): r["hamming"]
-                for r in dedupe.simhash_near_pairs(docs, max_hamming=3).collect()}
+                for r in dedupe.simhash64_near_pairs(docs, max_hamming=3).collect()}
         assert near[(0, 1)] == 0
 
 

@@ -59,7 +59,7 @@ class TestResume:
         s = lineage.run_with_lineage(spark, full, root, "run_2")
         assert s["total_turns"] == n
 
-    def test_broadcast_size_guard(self, spark, tmp_path):
+    def test_broadcast_size_guard(self, spark, tmp_path, monkeypatch):
         """VERDICT r1 #1: the resume anti-join must broadcast-hint the
         committed-key set only under the size threshold. Above it (a crash
         deep into a 10¹²-turn run) the join must stay a shuffle anti-join —
@@ -74,12 +74,13 @@ class TestResume:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         try:
-            small = lineage.resume_filter(spark, full, root,
-                                          max_broadcast_keys=10**9)
+            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 10**9)
+            small = lineage.resume_filter(spark, full, root)
             plan_small = small._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" in plan_small
 
-            big = lineage.resume_filter(spark, full, root, max_broadcast_keys=0)
+            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 0)
+            big = lineage.resume_filter(spark, full, root)
             plan_big = big._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" not in plan_big
             # result equality regardless of join strategy
@@ -88,7 +89,7 @@ class TestResume:
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
             spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
-    def test_retry_broadcast_size_guard(self, spark, tmp_path):
+    def test_retry_broadcast_size_guard(self, spark, tmp_path, monkeypatch):
         """Same guard on the retry semi-join (history.retry_subset)."""
         from ragstudio_spark.pipeline import history
 
@@ -101,11 +102,12 @@ class TestResume:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         try:
-            small = history.retry_subset(spark, full, root,
-                                         max_broadcast_keys=10**9)
+            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 10**9)
+            small = history.retry_subset(spark, full, root)
             assert "BroadcastHashJoin" in (
                 small._jdf.queryExecution().executedPlan().toString())
-            big = history.retry_subset(spark, full, root, max_broadcast_keys=0)
+            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 0)
+            big = history.retry_subset(spark, full, root)
             plan_big = big._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" not in plan_big
             assert small.count() == big.count()

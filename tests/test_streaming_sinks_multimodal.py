@@ -11,12 +11,22 @@ from ragstudio_spark.streaming import jobs as stream_jobs
 class TestStreaming:
     def test_file_stream_matches_batch(self, spark, tmp_path):
         """availableNow streaming run over a parquet dir produces the same
-        chunks as the batch transform over the same input."""
+        chunks as the batch transform over the same input, and the stream
+        transform publishes the same chunks as the batch pipeline: the two
+        pick publishing turns with different predicates (gate_passed and
+        not empty vs status == 'success'), so an empty and a NULL turn
+        ride along."""
+        from datetime import datetime
+
         inp = str(tmp_path / "in")
         outp = str(tmp_path / "out")
         ckpt = str(tmp_path / "ckpt")
+        edge = spark.createDataFrame(
+            [("c_edge", 0, "user", "", None, datetime(2024, 3, 1)),
+             ("c_edge", 1, "assistant", None, None, datetime(2024, 3, 1))],
+            tsrc.TRANSCRIPT_SCHEMA)
         df = tsrc.transcripts_df(spark, 120, seed=23, partitions=4)
-        df.write.parquet(inp)
+        df.unionByName(edge).write.parquet(inp)
 
         q = stream_jobs.streaming_pipeline(spark, inp, outp, ckpt)
         q.awaitTermination(120)
@@ -29,6 +39,13 @@ class TestStreaming:
         assert len(g) == len(b) > 0
         assert (g["chunk_id"].values == b["chunk_id"].values).all()
         assert (g["text"].values == b["text"].values).all()
+
+        chunks = run_pipeline(spark.read.parquet(inp)).chunks
+        shared = [c for c in batch.columns if c in chunks.columns]
+        assert len(shared) == 17
+        s, c = batch.select(shared), chunks.select(shared)
+        assert s.exceptAll(c).count() == 0
+        assert c.exceptAll(s).count() == 0
 
     def test_restart_with_checkpoint_is_incremental(self, spark, tmp_path):
         inp = str(tmp_path / "in")
