@@ -15,19 +15,63 @@ values):
 
 from __future__ import annotations
 
+import math
 import os
+import re
+import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ragstudio_spark import sqlspec
+from ragstudio_spark.operators import (
+    bpe_trainer, convlint, curation, dedupe, feedback, lm_filter, metrics,
+    ml_strategy, ml_trainer, multimodal, packing, quality_model,
+    quality_signals, rag_chain, rag_extras, redact, retrieval, sampling,
+    schema_extract, sessions, sft, similarity, sketches, skew, snapshot,
+    toolcalls, vectorstore, routing as routing_op,
+)
+from ragstudio_spark.operators.asof import asof_join
+from ragstudio_spark.operators.convlint import ROLES, VALID_TRANSITIONS
+from ragstudio_spark.operators.curation import (
+    CHARS_PER_TOKEN, curate_pretrain_stream,
+)
+from ragstudio_spark.operators.dedupe import _hex_positions
+from ragstudio_spark.operators.expectations import expectations_report
+from ragstudio_spark.operators.grounding import turn_grounding
+from ragstudio_spark.operators.index import phrase_search, terms_search
+from ragstudio_spark.operators.metrics import (
+    ERROR_OTHER, ERROR_TAXONOMY, exact_quantiles,
+)
+from ragstudio_spark.operators.quality_model import (
+    PUBLISHED_WEIGHTS, QM_STOPWORDS,
+)
+from ragstudio_spark.operators.quality_signals import (
+    C4_MIN_LINE_WORDS, C4_MIN_SENTENCES, C4_TERMINALS,
+)
+from ragstudio_spark.operators.rag_chain import DEFAULT_RAG_PROMPT
+from ragstudio_spark.operators.rag_extras import RRF_SCALE
+from ragstudio_spark.operators.redact import REDACTIONS
+from ragstudio_spark.operators.routing import (
+    EQUATION_PATTERNS, FRENCH_CHARS, MATH_SYMBOLS, SCIENTIFIC_KEYWORDS,
+)
+from ragstudio_spark.operators.schema_extract import (
+    CIRCLE_RE, CURVE_RE, FIGURE_RE, LATEX_RE, LINE_RE, SEGMENT_RE,
+    TRIANGLE_RE,
+)
+from ragstudio_spark.operators.sessions import (
+    cohort_retention, funnel, rolling_active, transition_matrix,
+)
+from ragstudio_spark.operators.sketches import _RHO_BITS, _alpha, lz4_case_sql
+from ragstudio_spark.operators.skew import heavy_keys, skew_report
+from ragstudio_spark.operators.snapshot import (
+    distribution_drift, join_cardinality, scd2_history,
+)
+from ragstudio_spark.pipeline import cache, guards
+from ragstudio_spark.pipeline.maintenance import forget_rewrite
 
 # --------------------------------------------------------------------------
 # helpers
 # --------------------------------------------------------------------------
-
-_TABLES = ("documents", "embeddings", "events", "orders", "customer", "lineitem",
-           "part", "supplier", "nation", "region")
-
 
 # Tables whose queries fan out per-row work (shingling, hashing, pairwise
 # similarity). The testdata ships as one parquet file each → one input split
@@ -47,16 +91,6 @@ def _register(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         df.createOrReplaceTempView(t)
 
 
-def _q(sql_spark: str, sql_duck: str | None, tables: tuple[str, ...]):
-    """Build a (queries-entry, oracle-sql) pair from dialect SQL strings."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register(spark, sf_dir, *tables)
-        return spark.sql(sql_spark)
-
-    return fn, sql_duck
-
-
 # --------------------------------------------------------------------------
 # shared SQL fragments (dialect-parameterized)
 # --------------------------------------------------------------------------
@@ -65,18 +99,13 @@ def _words_expr(col: str, engine: str) -> str:
     """Lower-cased whitespace tokens of a text column."""
     if engine == "spark":
         return f"filter(split(lower({col}), '\\\\s+'), w -> w != '')"
-    return f"list_filter(regexp_split_to_array(lower({col}), '\\s+'), w -> w != '')"
+    if engine == "duckdb":
+        return f"list_filter(regexp_split_to_array(lower({col}), '\\s+'), w -> w != '')"
+    raise ValueError(engine)
 
 
-def _shingles_expr(words: str, engine: str) -> str:
-    """3-word shingles (with duplicates) from a words array."""
-    if engine == "spark":
-        return (
-            f"CASE WHEN size({words}) >= 3 THEN "
-            f"transform(sequence(0, size({words}) - 3), "
-            f"i -> concat_ws(' ', {words}[i], {words}[i+1], {words}[i+2])) "
-            f"ELSE array() END"
-        )
+def _shingles_expr(words: str) -> str:
+    """3-word shingles (with duplicates) from a DuckDB words list."""
     return (
         f"CASE WHEN len({words}) >= 3 THEN "
         f"list_transform(range(1, len({words}) - 1), "
@@ -85,22 +114,9 @@ def _shingles_expr(words: str, engine: str) -> str:
     )
 
 
-def _dot(a: str, b: str, engine: str) -> str:
-    """Sequential left-fold dot product in double precision — identical
-    accumulation order in both engines."""
-    if engine == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-            f"cast(0.0 as double), (acc, v) -> acc + v)"
-        )
-    return (
-        f"list_aggregate(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')"
-    )
-
-
-# DuckDB list_aggregate('sum') may not fold sequentially; define via reduce:
 def _dot_duck(a: str, b: str) -> str:
+    """Sequential left-fold dot product in double precision (DuckDB
+    list_aggregate('sum') may not fold in order; list_reduce does)."""
     return (
         f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
         f"list_transform(list_zip({a}, {b}), "
@@ -108,16 +124,8 @@ def _dot_duck(a: str, b: str) -> str:
     )
 
 
-def _cosine(engine: str, a: str = "a.embedding", b: str = "b.embedding") -> str:
-    if engine == "spark":
-        dot = _dot(a, b, "spark")
-        na = _dot(a, a, "spark")
-        nb = _dot(b, b, "spark")
-    else:
-        dot = _dot_duck(a, b)
-        na = _dot_duck(a, a)
-        nb = _dot_duck(b, b)
-    return f"({dot}) / (sqrt({na}) * sqrt({nb}))"
+def _cosine(a: str = "a.embedding", b: str = "b.embedding") -> str:
+    return f"({_dot_duck(a, b)}) / (sqrt({_dot_duck(a, a)}) * sqrt({_dot_duck(b, b)}))"
 
 
 # --------------------------------------------------------------------------
@@ -127,8 +135,19 @@ def _cosine(engine: str, a: str = "a.embedding", b: str = "b.embedding") -> str:
 _DEFS: dict[str, tuple] = {}
 
 
-def _def(name: str, fn_sql_pair) -> None:
-    _DEFS[name] = fn_sql_pair
+def _def(name: str, spark_side, oracle: str | None, *tables: str) -> None:
+    """Declare entry ``name``. Its queries() callable registers ``tables``
+    as temp views, then builds the Spark side: a Spark SQL string, or
+    ``fn(spark) -> DataFrame`` reading those views. ``oracle`` is the DuckDB
+    twin (None: rows-only). An entry that reuses another's fn lists the
+    tables of both."""
+    def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register(spark, sf_dir, *tables)
+        if isinstance(spark_side, str):
+            return spark.sql(spark_side)
+        return spark_side(spark)
+
+    _DEFS[name] = (entry, oracle)
 
 
 # -- 1. eval metrics (reference eval.py:144-181): chunk-size stats from exact
@@ -144,7 +163,7 @@ SELECT count(*)                                        AS n_docs,
        / (count(*) - 1)                                AS var_chars
 FROM documents
 """
-_def("eval_metrics", _q(_EVAL_SPARK, _EVAL_SPARK, ("documents",)))
+_def("eval_metrics", _EVAL_SPARK, _EVAL_SPARK, "documents")
 
 # -- 2. size histogram (eval.py bucket counts)
 _HIST = """
@@ -156,7 +175,7 @@ SELECT bucket, count(*) AS n FROM (
   FROM documents) t
 GROUP BY bucket
 """
-_def("size_histogram", _q(_HIST, _HIST, ("documents",)))
+_def("size_histogram", _HIST, _HIST, "documents")
 
 # -- 3. status counters (batch run counters, status.py:47-112): exact
 #       decimal sum then one conversion to double
@@ -166,7 +185,7 @@ SELECT event_type,
        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
 FROM events GROUP BY event_type
 """
-_def("status_counts", _q(_STATUS_SPARK, _STATUS_SPARK, ("events",)))
+_def("status_counts", _STATUS_SPARK, _STATUS_SPARK, "events")
 
 # -- 4. exact dedup (md5 hash-groupBy; langchain_chunker.py:313-319). The
 #       key is the sorted distinct word set (a normalized-content hash):
@@ -188,8 +207,7 @@ SELECT h AS text_hash, count(*) AS dup_count
 FROM (SELECT md5({key}) AS h FROM documents) t
 GROUP BY h HAVING count(*) > 1
 """
-_def("dedup_exact", _q(_dedup_exact_sql("spark"), _dedup_exact_sql("duckdb"),
-                       ("documents",)))
+_def("dedup_exact", _dedup_exact_sql("spark"), _dedup_exact_sql("duckdb"), "documents")
 
 # -- 5. prefix-fingerprint dedup groups (document fingerprinting)
 def _fp_sql(engine: str) -> str:
@@ -203,23 +221,20 @@ SELECT md5({prefix}) AS fp, count(*) AS n_docs
 FROM documents
 GROUP BY 1 HAVING count(*) > 1
 """
-_def("fingerprint_dups", _q(_fp_sql("spark"), _fp_sql("duckdb"), ("documents",)))
+_def("fingerprint_dups", _fp_sql("spark"), _fp_sql("duckdb"), "documents")
 
 # -- 6. MinHash + LSH candidate pairs (banding over md5-permutation minima).
 #       Shape matters at scale: explode shingles ONCE, then a groupBy with
 #       8 min() aggregates (map-side partial aggregation) — never nest the
 #       signature computation inside reused expressions, which Spark inlines
 #       and recomputes per reference (measured 4-10× blowup at sf0.1).
-_MIN_COLS = ",\n         ".join(
-    f"min(md5(concat('{h}:', shingle))) AS h{h}" for h in range(8)
-)
 _MIN_COLS_DUCK = ",\n         ".join(
     f"min(md5('{h}:' || shingle)) AS h{h}" for h in range(8)
 )
 _BAND_SELECT = """
-SELECT doc_id, 0 AS band_idx, md5(concat(h0, h1, h2, h3)) AS band_key FROM sigs
+SELECT doc_id, 0 AS band_idx, md5(h0 || h1 || h2 || h3) AS band_key FROM sigs
 UNION ALL
-SELECT doc_id, 1 AS band_idx, md5(concat(h4, h5, h6, h7)) AS band_key FROM sigs
+SELECT doc_id, 1 AS band_idx, md5(h4 || h5 || h6 || h7) AS band_key FROM sigs
 """
 _PAIRS = """
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -228,48 +243,30 @@ FROM banded a JOIN banded b
 """
 
 
-def _minhash_sql(engine: str, final_select: str | None = None) -> str:
-    words = _words_expr("text", engine)
-    sh = _shingles_expr("words", engine)
-    final_select = final_select or _PAIRS
-    if engine == "spark":
-        ex = f"""
-SELECT doc_id, shingle FROM
-  (SELECT doc_id, {sh} AS shingles
-   FROM (SELECT doc_id, {words} AS words FROM documents) w) d
-LATERAL VIEW explode(shingles) AS shingle
-"""
-        mins = _MIN_COLS
-        band = _BAND_SELECT
-    else:
-        ex = f"""
+def _minhash_sql(final_select: str = _PAIRS) -> str:
+    words = _words_expr("text", "duckdb")
+    sh = _shingles_expr("words")
+    return f"""
+WITH ex AS (
 SELECT doc_id, unnest(shingles) AS shingle FROM
   (SELECT doc_id, {sh} AS shingles
    FROM (SELECT doc_id, {words} AS words FROM documents) w) d
-"""
-        mins = _MIN_COLS_DUCK
-        band = _BAND_SELECT.replace("concat(h0, h1, h2, h3)", "h0 || h1 || h2 || h3").replace(
-            "concat(h4, h5, h6, h7)", "h4 || h5 || h6 || h7")
-    return f"""
-WITH ex AS ({ex}),
+),
 sigs AS (
   SELECT doc_id,
-         {mins}
+         {_MIN_COLS_DUCK}
   FROM ex GROUP BY doc_id
 ),
-banded AS ({band})
+banded AS ({_BAND_SELECT})
 {final_select}
 """
-def _minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _minhash_fn(spark: SparkSession) -> DataFrame:
     return dedupe.minhash_lsh_pairs(spark.table("documents"))
 
 
 # Spark side runs the first-class operator (operators/dedupe.py); the
 # DuckDB SQL twin pins its semantics value-for-value.
-_def("dedup_minhash_lsh", (_minhash_fn, _minhash_sql("duckdb")))
+_def("dedup_minhash_lsh", _minhash_fn, _minhash_sql(), "documents")
 
 
 # -- 6b. cross-corpus near-dup candidates (benchmark decontamination /
@@ -285,17 +282,13 @@ WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
 """
 
 
-def _decontam_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _decontam_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     return dedupe.cross_corpus_minhash_pairs(
         docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1"))
 
 
-_def("decontaminate_cross_pairs",
-     (_decontam_fn, _minhash_sql("duckdb", final_select=_CROSS_PAIRS)))
+_def("decontaminate_cross_pairs", _decontam_fn, _minhash_sql(_CROSS_PAIRS), "documents")
 
 # -- 6b. near-dup cluster resolution: minhash candidate pairs → connected
 #        components (doc_id, cluster_id = min reachable id). Spark runs
@@ -303,7 +296,7 @@ _def("decontaminate_cross_pairs",
 #        DuckDB proves it with a recursive-CTE transitive closure.
 def _clusters_duck_sql() -> str:
     return f"""
-WITH RECURSIVE p AS ({_minhash_sql("duckdb")}),
+WITH RECURSIVE p AS ({_minhash_sql()}),
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM p
   UNION
@@ -319,45 +312,29 @@ FROM reach GROUP BY id
 """
 
 
-def _clusters_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _clusters_fn(spark: SparkSession) -> DataFrame:
     pairs = dedupe.minhash_lsh_pairs(spark.table("documents"))
     clusters = dedupe.duplicate_clusters(pairs)
     return clusters.select("doc_id", F.col("cluster_id").cast("bigint").alias("cluster_id"))
 
 
-_def("dedup_clusters", (_clusters_fn, _clusters_duck_sql()))
+_def("dedup_clusters", _clusters_fn, _clusters_duck_sql(), "documents")
 
 
 # -- 7. exact n-gram Jaccard top pairs (ground truth for LSH)
-def _jaccard_sql(engine: str) -> str:
-    words = _words_expr("text", engine)
-    sh = _shingles_expr("words", engine)
+def _jaccard_sql() -> str:
+    words = _words_expr("text", "duckdb")
+    sh = _shingles_expr("words")
     # compute the distinct-shingle array once in an inner subquery; size it
     # in the outer one (inlined expression reuse would recompute it)
-    if engine == "spark":
-        base = f"""
-WITH docs AS (
-  SELECT doc_id, shingles, size(shingles) AS n_sh FROM
-    (SELECT doc_id, array_distinct({sh}) AS shingles
-     FROM (SELECT doc_id, {words} AS words FROM documents) w) s
-), ex AS (
-  SELECT doc_id, n_sh, shingle FROM docs LATERAL VIEW explode(shingles) AS shingle
-)"""
-    else:
-        base = f"""
+    return f"""
 WITH docs AS (
   SELECT doc_id, shingles, len(shingles) AS n_sh FROM
     (SELECT doc_id, list_distinct({sh}) AS shingles
      FROM (SELECT doc_id, {words} AS words FROM documents) w) s
 ), ex AS (
   SELECT doc_id, n_sh, unnest(shingles) AS shingle FROM docs
-)"""
-    return base + """
+)
 , pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          count(*) AS inter,
@@ -371,17 +348,12 @@ FROM pairs
 ORDER BY jaccard DESC, doc_a ASC, doc_b ASC
 LIMIT 20
 """
-def _jaccard_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _jaccard_fn(spark: SparkSession) -> DataFrame:
     pairs = dedupe.jaccard_pairs(spark.table("documents"))
     return pairs.orderBy(F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b")).limit(20)
 
 
-_def("ngram_jaccard_top_pairs", (_jaccard_fn, _jaccard_sql("duckdb")))
+_def("ngram_jaccard_top_pairs", _jaccard_fn, _jaccard_sql(), "documents")
 
 # -- 7b. winnowing fingerprint overlap (MOSS): k-gram rolling hashes →
 #        window minima → shared-fingerprint pairs. Local-overlap candidate
@@ -422,12 +394,7 @@ ORDER BY shared_fingerprints DESC, doc_a ASC, doc_b ASC LIMIT 50
 """
 
 
-def _winnow_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _winnow_fn(spark: SparkSession) -> DataFrame:
     pairs = dedupe.winnow_overlap_pairs(
         spark.table("documents"), k=_WIN_K, w=_WIN_W,
         min_shared=_WIN_MIN_SHARED, max_fingerprint_df=_WIN_DF_CAP)
@@ -438,33 +405,12 @@ def _winnow_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(50))
 
 
-_def("winnow_fingerprint_overlap", (_winnow_fn, _winnow_duck_sql()))
+_def("winnow_fingerprint_overlap", _winnow_fn, _winnow_duck_sql(), "documents")
 
 
 # -- 8. SimHash (16-bit, md5-nibble bits, ±1 votes per distinct token)
-def _simhash_sql(engine: str) -> str:
-    words = _words_expr("text", engine)
-    if engine == "spark":
-        distinct_w = f"array_distinct({words})"
-        explode = "LATERAL VIEW explode(words) AS word"
-        nibble = "instr('0123456789abcdef', substring(h, CAST(floor(b / 4) AS INT) + 1, 1)) - 1"
-        bit = f"shiftright({nibble}, CAST(b % 4 AS INT)) & 1"
-        gen_bits = "LATERAL VIEW explode(sequence(0, 15)) AS b"
-        shl = "CAST(vote_sign AS BIGINT) * CAST(pow(2, b) AS BIGINT)"
-        return f"""
-WITH w AS (
-  SELECT doc_id, word FROM
-    (SELECT doc_id, {distinct_w} AS words FROM documents) d {explode}
-), bits AS (
-  SELECT doc_id, b, CASE WHEN ({bit}) = 1 THEN 1 ELSE -1 END AS v
-  FROM (SELECT doc_id, md5(word) AS h FROM w) x {gen_bits}
-), votes AS (
-  SELECT doc_id, b, CASE WHEN sum(v) > 0 THEN 1 ELSE 0 END AS vote_sign
-  FROM bits GROUP BY doc_id, b
-)
-SELECT doc_id, CAST(sum({shl}) AS BIGINT) AS simhash16
-FROM votes GROUP BY doc_id
-"""
+def _simhash_sql() -> str:
+    words = _words_expr("text", "duckdb")
     nibble = "strpos('0123456789abcdef', substring(h, CAST(floor(b / 4) AS INT) + 1, 1)) - 1"
     bit = f"(({nibble}) >> CAST(b % 4 AS INT)) & 1"
     return f"""
@@ -480,14 +426,11 @@ WITH w AS (
 SELECT doc_id, CAST(sum(CAST(vote_sign AS BIGINT) * CAST(pow(2, b) AS BIGINT)) AS BIGINT) AS simhash16
 FROM votes GROUP BY doc_id
 """
-def _simhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _simhash_fn(spark: SparkSession) -> DataFrame:
     return dedupe.simhash16(spark.table("documents"))
 
 
-_def("dedup_simhash", (_simhash_fn, _simhash_sql("duckdb")))
+_def("dedup_simhash", _simhash_fn, _simhash_sql(), "documents")
 
 # -- 8b. 64-bit SimHash near-duplicate pairs (the scale-safe banding:
 #        4 bands × 16 bits → 65,536 buckets per band, vs the retired
@@ -543,26 +486,20 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
 """
 
 
-def _simhash64_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _simhash64_fn(spark: SparkSession) -> DataFrame:
     dec = spark.sql(_SIMHASH64_DECORATE)
     pairs = dedupe.simhash64_near_pairs(dec, max_hamming=3)
     return pairs.select("doc_a", "doc_b", F.col("hamming").cast("bigint").alias("hamming"))
 
 
-_def("dedup_simhash64", (_simhash64_fn, _simhash64_sql_duck()))
+_def("dedup_simhash64", _simhash64_fn, _simhash64_sql_duck(), "documents")
 
 # -- 9. brute-force cosine top-k ANN (ranks only; floats never emitted)
-def _ann_sql(engine: str) -> str:
-    cos = _cosine(engine)
-    rank_src = f"""
+def _ann_sql() -> str:
+    return f"""
 WITH sims AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         {cos} AS sim
+         {_cosine()} AS sim
   FROM embeddings a JOIN embeddings b ON a.vec_id < 8 AND b.vec_id <> a.vec_id
 )
 SELECT query_id, neighbor_id, rank FROM (
@@ -572,11 +509,7 @@ SELECT query_id, neighbor_id, rank FROM (
   FROM sims) r
 WHERE rank <= 5
 """
-    return rank_src
-def _ann_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _ann_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     queries_df = vectors.filter("vec_id < 8")
     return similarity.brute_force_topk(vectors, queries_df, k=5).select(
@@ -584,13 +517,13 @@ def _ann_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("ann_cosine_topk", (_ann_fn, _ann_sql("duckdb")))
+_def("ann_cosine_topk", _ann_fn, _ann_sql(), "embeddings")
 
 # -- 10. IVF-bucketed ANN (coarse quantize to 16 leader centroids, search
 #        only the query's cell — the 100TB-scale path vs brute force)
-def _ivf_sql(engine: str) -> str:
-    cos = _cosine(engine, "v.embedding", "c.embedding")
-    cos_q = _cosine(engine, "q.embedding", "v.embedding")
+def _ivf_sql() -> str:
+    cos = _cosine("v.embedding", "c.embedding")
+    cos_q = _cosine("q.embedding", "v.embedding")
     return f"""
 WITH centroids AS (
   SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 16
@@ -598,7 +531,7 @@ WITH centroids AS (
   SELECT vec_id, cid FROM (
     SELECT v.vec_id, c.cid,
            row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY {cos.replace('c.embedding', 'c.embedding')} DESC, c.cid ASC) AS rn
+                              ORDER BY {cos} DESC, c.cid ASC) AS rn
     FROM embeddings v CROSS JOIN centroids c) a
   WHERE rn = 1
 ), q AS (
@@ -614,12 +547,7 @@ SELECT query_id, neighbor_id, rank FROM (
   JOIN embeddings q ON q.vec_id = qq.query_id) r
 WHERE rank <= 3
 """
-def _ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _ivf_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     centroids = vectors.filter("vec_id < 16").select(
         F.col("vec_id").alias("cid"), "embedding"
@@ -630,7 +558,7 @@ def _ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("ann_ivf_topk", (_ivf_fn, _ivf_sql("duckdb")))
+_def("ann_ivf_topk", _ivf_fn, _ivf_sql(), "embeddings")
 
 
 # -- 10-bis. ANN recall evaluation (operators/similarity.py
@@ -640,26 +568,24 @@ _def("ann_ivf_topk", (_ivf_fn, _ivf_sql("duckdb")))
 #            (one source each; the brute-force twin's top-5 is
 #            re-filtered to top-3, a strict prefix under the shared
 #            (sim desc, id asc) total order).
-def _ann_recall_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import similarity
-
+def _ann_recall_fn(spark: SparkSession) -> DataFrame:
     # REUSE the two sibling entries (one source each — drifting either
     # original would otherwise silently desynchronize this entry from
     # the twins its SQL aggregates): exact = the brute-force entry's
     # top-5 prefix-filtered to top-3 (a strict prefix under the shared
     # (sim desc, id asc) total order), approx = the IVF entry verbatim.
-    exact = _ann_fn(spark, sf_dir).filter("rank <= 3")
-    approx = _ivf_fn(spark, sf_dir)
+    exact = _ann_fn(spark).filter("rank <= 3")
+    approx = _ivf_fn(spark)
     return similarity.ann_recall_report(approx, exact)
 
 
 def _ann_recall_duck_sql() -> str:
     return f"""
 WITH exact AS (
-  SELECT DISTINCT query_id, neighbor_id FROM ({_ann_sql("duckdb")}) e
+  SELECT DISTINCT query_id, neighbor_id FROM ({_ann_sql()}) e
   WHERE rank <= 3
 ), approx AS (
-  SELECT DISTINCT query_id, neighbor_id FROM ({_ivf_sql("duckdb")}) a
+  SELECT DISTINCT query_id, neighbor_id FROM ({_ivf_sql()}) a
 ), hits AS (
   SELECT e.query_id, CAST(COUNT(*) AS BIGINT) AS n_hits
   FROM exact e
@@ -682,7 +608,7 @@ LEFT JOIN hits h ON h.query_id = ec.query_id
 """
 
 
-_def("ann_recall_report", (_ann_recall_fn, _ann_recall_duck_sql()))
+_def("ann_recall_report", _ann_recall_fn, _ann_recall_duck_sql(), "embeddings")
 
 # -- 10b. k-means IVF quantizer training (deterministic Lloyd, exact mode:
 #         order-fixed member folds so centroid doubles — and therefore the
@@ -743,12 +669,7 @@ FROM final_assign GROUP BY cid
 """
 
 
-def _km_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _km_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     cents = similarity.kmeans_centroids(vectors, k=_KM_K, iters=_KM_ITERS,
                                         exact=True)
@@ -763,7 +684,7 @@ def _km_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("vec_id").cast("bigint").alias("id_sum")))
 
 
-_def("ann_kmeans_ivf", (_km_fn, _km_duck_sql()))
+_def("ann_kmeans_ivf", _km_fn, _km_duck_sql(), "embeddings")
 
 
 # -- 10c. product quantization end-to-end (train → encode → asymmetric-
@@ -859,10 +780,7 @@ FROM dist ORDER BY adist ASC, neighbor_id ASC LIMIT {_PQ_TOPK}
 """
 
 
-def _pq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _pq_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     books = similarity.pq_train(vectors, m=_PQ_M, k=_PQ_K, iters=1, exact=True)
     codes = similarity.pq_encode(vectors, books, m=_PQ_M)
@@ -872,7 +790,7 @@ def _pq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_PQ_TOPK, m=_PQ_M)
 
 
-_def("ann_pq_topk", (_pq_fn, _pq_duck_sql()))
+_def("ann_pq_topk", _pq_fn, _pq_duck_sql(), "embeddings")
 
 
 # -- 10d. IVF-PQ composition (operators/similarity.py ivfpq_index/
@@ -886,12 +804,7 @@ _def("ann_pq_topk", (_pq_fn, _pq_duck_sql()))
 _IVFPQ_NPROBE, _IVFPQ_TOPK, _IVFPQ_NQ = 2, 5, 4
 
 
-def _ivfpq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _ivfpq_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     coarse = vectors.filter("vec_id < 8").select(
         F.col("vec_id").cast("int").alias("cid"), "embedding")
@@ -904,8 +817,8 @@ def _ivfpq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_duck_sql() -> str:
     d2 = _pq_d2_duck
-    cos_vc = _cosine("duckdb", "v.embedding", "c.embedding")
-    cos_qc = _cosine("duckdb", "q.embedding", "c.embedding")
+    cos_vc = _cosine("v.embedding", "c.embedding")
+    cos_qc = _cosine("q.embedding", "c.embedding")
     parts = [f"""
 coarse AS (
   SELECT CAST(vec_id AS INT) AS cid, embedding FROM embeddings WHERE vec_id < 8
@@ -957,7 +870,7 @@ WHERE rank <= {_IVFPQ_TOPK}
 """
 
 
-_def("ann_ivfpq_topk", (_ivfpq_fn, _ivfpq_duck_sql()))
+_def("ann_ivfpq_topk", _ivfpq_fn, _ivfpq_duck_sql(), "embeddings")
 
 
 # -- 10e. RESIDUAL IVF-PQ (operators/similarity.py ivfpq_train_residual/
@@ -970,12 +883,7 @@ _def("ann_ivfpq_topk", (_ivfpq_fn, _ivfpq_duck_sql()))
 #         frame, rank-only output. float→double conversion is exact and
 #         the residual subtraction runs in double in BOTH engines, so the
 #         codebook doubles stay bit-identical.
-def _ivfpq_res_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _ivfpq_res_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     coarse = vectors.filter("vec_id < 8").select(
         F.col("vec_id").cast("int").alias("cid"), "embedding")
@@ -989,8 +897,8 @@ def _ivfpq_res_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_res_duck_sql() -> str:
     d2 = _pq_d2_duck
-    cos_vc = _cosine("duckdb", "v.embedding", "c.embedding")
-    cos_qc = _cosine("duckdb", "q.embedding", "c.embedding")
+    cos_vc = _cosine("v.embedding", "c.embedding")
+    cos_qc = _cosine("q.embedding", "c.embedding")
     parts = [f"""
 coarse AS (
   SELECT CAST(vec_id AS INT) AS cid, embedding FROM embeddings WHERE vec_id < 8
@@ -1060,12 +968,12 @@ WHERE rank <= {_IVFPQ_TOPK}
 """
 
 
-_def("ann_ivfpq_residual_topk", (_ivfpq_res_fn, _ivfpq_res_duck_sql()))
+_def("ann_ivfpq_residual_topk", _ivfpq_res_fn, _ivfpq_res_duck_sql(), "embeddings")
 
 
 # -- 11. embedding nearest-neighbor per vector (near-dup scan, rank-1 only)
-def _nn_sql(engine: str) -> str:
-    cos = _cosine(engine)
+def _nn_sql() -> str:
+    cos = _cosine()
     return f"""
 SELECT vec_id, nn_id FROM (
   SELECT a.vec_id, b.vec_id AS nn_id,
@@ -1075,12 +983,7 @@ SELECT vec_id, nn_id FROM (
   WHERE a.vec_id < 64) t
 WHERE rn = 1
 """
-def _nn_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _nn_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     queries_df = vectors.filter("vec_id < 64")
     return similarity.brute_force_topk(vectors, queries_df, k=1).select(
@@ -1088,7 +991,7 @@ def _nn_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("embedding_nearest_neighbor", (_nn_fn, _nn_sql("duckdb")))
+_def("embedding_nearest_neighbor", _nn_fn, _nn_sql(), "embeddings")
 
 # -- 12. heuristic language-ID distribution (stopword profile scorer)
 _LANG_STOPWORDS = {
@@ -1131,7 +1034,7 @@ WITH scored AS (
 )
 SELECT predicted_lang, count(*) AS n FROM best GROUP BY predicted_lang
 """
-_def("langid_distribution", _q(_langid_sql("spark"), _langid_sql("duckdb"), ("documents",)))
+_def("langid_distribution", _langid_sql("spark"), _langid_sql("duckdb"), "documents")
 
 # -- 13. token counting (whitespace + BPE-ish regex pieces)
 def _tokens_sql(engine: str) -> str:
@@ -1147,7 +1050,7 @@ SELECT doc_id, CAST({ws} AS BIGINT) AS ws_tokens, CAST({bpe} AS BIGINT) AS bpe_t
        CAST(length(text) AS BIGINT) AS n_chars_computed
 FROM documents
 """
-_def("token_counts", _q(_tokens_sql("spark"), _tokens_sql("duckdb"), ("documents",)))
+_def("token_counts", _tokens_sql("spark"), _tokens_sql("duckdb"), "documents")
 
 # -- 14. document fingerprint (normalized md5)
 def _fingerprint_sql(engine: str) -> str:
@@ -1156,7 +1059,8 @@ def _fingerprint_sql(engine: str) -> str:
     else:
         norm = "regexp_replace(lower(text), '[^a-z0-9]', '', 'g')"
     return f"SELECT doc_id, md5({norm}) AS fingerprint FROM documents"
-_def("doc_fingerprint", _q(_fingerprint_sql("spark"), _fingerprint_sql("duckdb"), ("documents",)))
+_def("doc_fingerprint", _fingerprint_sql("spark"), _fingerprint_sql("duckdb"),
+     "documents")
 
 # -- 15. readability quality gate (the sqlspec predicate, both engines)
 def _quality_sql(engine: str) -> str:
@@ -1168,7 +1072,7 @@ SELECT CASE WHEN {spec['is_readable']} THEN 'readable' ELSE 'unreadable' END AS 
        CAST(sum({spec['n_words']}) AS BIGINT) AS total_words
 FROM documents GROUP BY 1
 """
-_def("quality_gate", _q(_quality_sql("spark"), _quality_sql("duckdb"), ("documents",)))
+_def("quality_gate", _quality_sql("spark"), _quality_sql("duckdb"), "documents")
 
 # -- 15b. quality feature vector (length / punctuation ratio / stopword
 #         ratio / mean word length) — the task-brief quality-scoring
@@ -1204,8 +1108,8 @@ FROM documents
 """
 
 
-_def("text_quality_features", _q(_quality_features_sql("spark"),
-                                 _quality_features_sql("duckdb"), ("documents",)))
+_def("text_quality_features", _quality_features_sql("spark"),
+     _quality_features_sql("duckdb"), "documents")
 
 
 # -- 16. profile → adaptive strategy distribution (decorated corpus hits
@@ -1299,7 +1203,8 @@ sel AS (
 )
 SELECT strategy, reason, count(*) AS n FROM sel GROUP BY strategy, reason
 """
-_def("strategy_distribution", _q(_strategy_sql("spark"), _strategy_sql("duckdb"), ("documents",)))
+_def("strategy_distribution", _strategy_sql("spark"), _strategy_sql("duckdb"),
+     "documents")
 
 # -- 16b. ML strategy classifier distribution (reference auto mode,
 #         chunk.py:677-717). Spark runs the column-expression operator
@@ -1355,12 +1260,7 @@ FROM pred GROUP BY ml_strategy
 """
 
 
-def _ml_strategy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import ml_strategy
-
-    _register(spark, sf_dir, "documents")
+def _ml_strategy_fn(spark: SparkSession) -> DataFrame:
     dec = spark.sql(_STRATEGY_DECORATE)
     scored = ml_strategy.with_ml_strategy(dec, text_col="text")
     best = F.greatest(*[F.col(f"ml_score_{c}") for c in ml_strategy.ML_CLASSES])
@@ -1374,7 +1274,7 @@ def _ml_strategy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("strategy_distribution_ml", (_ml_strategy_fn, _ml_strategy_duck_sql()))
+_def("strategy_distribution_ml", _ml_strategy_fn, _ml_strategy_duck_sql(), "documents")
 
 
 # -- 17. resume anti-join (retry semantics: history.py:311-328)
@@ -1384,14 +1284,14 @@ FROM documents d
 WHERE NOT EXISTS (
   SELECT 1 FROM documents c WHERE c.doc_id = d.doc_id AND c.doc_id % 7 < 3)
 """
-_def("resume_antijoin", _q(_RESUME, _RESUME, ("documents",)))
+_def("resume_antijoin", _RESUME, _RESUME, "documents")
 
 # -- 18. top-k recent/display limit (chunk.py:364-372, chunking_logger top-n)
 _TOPK = """
 SELECT event_id, event_type, CAST(value AS DOUBLE) AS value
 FROM events ORDER BY value DESC, event_id ASC LIMIT 10
 """
-_def("topk_events", _q(_TOPK, _TOPK, ("events",)))
+_def("topk_events", _TOPK, _TOPK, "events")
 
 # -- 19. sessionization (window/lag over event-time per user)
 _SESSION = """
@@ -1408,12 +1308,7 @@ GROUP BY user_id
 _SESSION_DUCK = _SESSION.replace("INTERVAL 30 MINUTE", "INTERVAL 30 MINUTES")
 
 
-def _sessionize_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sessions
-
-    _register(spark, sf_dir, "events")
+def _sessionize_fn(spark: SparkSession) -> DataFrame:
     s = sessions.sessionize(spark.table("events"), gap_minutes=30)
     return s.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
@@ -1423,7 +1318,7 @@ def _sessionize_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Spark side runs the first-class operator (operators/sessions.py); the
 # DuckDB SQL twin pins the gap/boundary semantics value-for-value.
-_def("sessionize_events", (_sessionize_fn, _SESSION_DUCK))
+_def("sessionize_events", _sessionize_fn, _SESSION_DUCK, "events")
 
 # -- 20. broadcast-dim join + top-k revenue (chunk→doc FK re-attach pattern)
 _TOPCUST = """
@@ -1433,7 +1328,7 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_name
 ORDER BY revenue DESC, name ASC LIMIT 10
 """
-_def("top_customers", _q(_TOPCUST, _TOPCUST, ("orders", "customer")))
+_def("top_customers", _TOPCUST, _TOPCUST, "orders", "customer")
 
 # -- 21. pricing-summary style aggregation (counters pivot, decimal-exact)
 _PRICING = """
@@ -1443,7 +1338,7 @@ SELECT l_returnflag, l_linestatus,
        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
 FROM lineitem GROUP BY l_returnflag, l_linestatus
 """
-_def("pricing_summary", _q(_PRICING, _PRICING, ("lineitem",)))
+_def("pricing_summary", _PRICING, _PRICING, "lineitem")
 
 # -- 22. char-window chunker fully in SQL (token-strategy fallback,
 #        chunker.py:39-56: window 200 chars, step 160) — JVM-only chunking
@@ -1465,7 +1360,8 @@ SELECT doc_id, CAST(start / 160 AS BIGINT) AS chunk_index,
 FROM (SELECT doc_id, text, unnest(range(0, CAST(length(text) AS BIGINT), 160)) AS start
       FROM documents WHERE length(text) > 0) t
 """
-_def("window_chunks_sql", _q(_window_chunks_sql("spark"), _window_chunks_sql("duckdb"), ("documents",)))
+_def("window_chunks_sql", _window_chunks_sql("spark"),
+     _window_chunks_sql("duckdb"), "documents")
 
 
 # -- 23. BM25 scoring + reciprocal-rank fusion with vector search (the
@@ -1476,17 +1372,10 @@ _def("window_chunks_sql", _q(_window_chunks_sql("spark"), _window_chunks_sql("du
 _BM25_TERMS = ("spark", "query", "fast", "table")
 
 
-def _bm25_hybrid_sql(engine: str) -> str:
-    words = _words_expr("text", engine)
-    if engine == "spark":
-        def tf(t):
-            return f"size(regexp_extract_all(lower(text), '\\\\b{t}\\\\b', 0))"
-        dl = f"size({words})"
-    else:
-        def tf(t):
-            return f"len(regexp_extract_all(lower(text), '\\b{t}\\b'))"
-        dl = f"len({words})"
-    tf_cols = ", ".join(f"{tf(t)} AS tf_{t}" for t in _BM25_TERMS)
+def _bm25_hybrid_sql() -> str:
+    dl = f"len({_words_expr('text', 'duckdb')})"
+    tf_cols = ", ".join(f"len(regexp_extract_all(lower(text), '\\b{t}\\b')) AS tf_{t}"
+                        for t in _BM25_TERMS)
     df_cols = ", ".join(
         f"sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS df_{t}" for t in _BM25_TERMS
     )
@@ -1496,7 +1385,7 @@ def _bm25_hybrid_sql(engine: str) -> str:
         f"* d.tf_{t} * 2.5 / (d.tf_{t} + 1.5 * (0.25 + 0.75 * d.dl / s.avgdl)))"
         for t in _BM25_TERMS
     )
-    cos = _cosine(engine, "q.embedding", "e.embedding")
+    cos = _cosine("q.embedding", "e.embedding")
     return f"""
 WITH docs AS (
   SELECT doc_id, {tf_cols}, {dl} AS dl FROM documents
@@ -1523,10 +1412,7 @@ SELECT doc_id, rank FROM (
   FROM fused) t
 WHERE rank <= 10
 """
-def _bm25_hybrid_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import retrieval
-
-    _register(spark, sf_dir, "documents", "embeddings")
+def _bm25_hybrid_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     vectors = spark.table("embeddings").filter("vec_id <> 0")
     query = spark.table("embeddings").filter("vec_id = 0")
@@ -1541,7 +1427,7 @@ def _bm25_hybrid_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Spark side runs the first-class operator (operators/retrieval.py); the
 # DuckDB SQL twin pins BM25 (k1=1.5, b=0.75) + RRF (k=60) value-for-value.
-_def("hybrid_bm25_rrf", (_bm25_hybrid_fn, _bm25_hybrid_sql("duckdb")))
+_def("hybrid_bm25_rrf", _bm25_hybrid_fn, _bm25_hybrid_sql(), "documents", "embeddings")
 
 # -- 23b. query-expansion retrieval (reference QueryExpansionRetriever:
 #         expand → BM25 top-k per expansion → merge in expansion order,
@@ -1554,8 +1440,6 @@ _EXPANSION_FINAL_K = 8
 
 
 def _expanded_terms() -> list[list[str]]:
-    from ragstudio_spark.operators import rag_extras
-
     expander = rag_extras.QueryExpander(
         rag_extras.QueryExpansionConfig(strategy="synonyms", num_queries=3))
     return [rag_extras._query_terms(q) for q in expander.expand(_EXPANSION_QUERY)]
@@ -1605,12 +1489,7 @@ FROM final
 """
 
 
-def _expansion_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import rag_extras
-
-    _register(spark, sf_dir, "documents")
+def _expansion_fn(spark: SparkSession) -> DataFrame:
     out = rag_extras.expansion_search(
         spark.table("documents"), _EXPANSION_QUERY,
         rag_extras.QueryExpander(
@@ -1621,7 +1500,7 @@ def _expansion_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"))
 
 
-_def("rag_expansion_search", (_expansion_fn, _expansion_duck_sql()))
+_def("rag_expansion_search", _expansion_fn, _expansion_duck_sql(), "documents")
 
 
 # -- 23c. lexical-overlap reranker (reference reranker.py semantics with a
@@ -1633,10 +1512,8 @@ _RERANK_MIN = 0.25
 
 
 def _rerank_duck_sql() -> str:
-    import re as _re
-
     terms = list(dict.fromkeys(
-        w for w in _re.findall(r"\w+", _RERANK_QUERY.lower()) if len(w) > 1))
+        w for w in re.findall(r"\w+", _RERANK_QUERY.lower()) if len(w) > 1))
     hits = " + ".join(
         f"(CASE WHEN regexp_matches(lower(text), '\\b{t}\\b') THEN 1 ELSE 0 END)"
         for t in terms)
@@ -1656,12 +1533,7 @@ FROM top
 """
 
 
-def _rerank_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import rag_extras
-
-    _register(spark, sf_dir, "documents")
+def _rerank_fn(spark: SparkSession) -> DataFrame:
     out = rag_extras.rerank(
         spark.table("documents").select("doc_id", "text"),
         rag_extras.lexical_overlap_score(_RERANK_QUERY),
@@ -1670,14 +1542,14 @@ def _rerank_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("rank").cast("bigint").alias("rank"))
 
 
-_def("rerank_lexical", (_rerank_fn, _rerank_duck_sql()))
+_def("rerank_lexical", _rerank_fn, _rerank_duck_sql(), "documents")
 
 
 # -- 24. random-hyperplane LSH bucketing over embeddings (sign-bit sketch;
 #        planes = vectors 8..15, deterministic). The scale path for
 #        embedding near-dup: candidates only within a bucket.
-def _hyperplane_sql(engine: str) -> str:
-    cos = _cosine(engine, "v.embedding", "p.embedding")
+def _hyperplane_sql() -> str:
+    cos = _cosine("v.embedding", "p.embedding")
     # sign bit of the raw dot product (denominator > 0 never flips sign,
     # so cosine vs dot is equivalent for the bit)
     return f"""
@@ -1693,12 +1565,7 @@ WITH bits AS (
 SELECT bucket, count(*) AS n_vectors
 FROM buckets GROUP BY bucket HAVING count(*) > 1
 """
-def _lsh_buckets_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _lsh_buckets_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     planes = vectors.filter("vec_id BETWEEN 8 AND 15").select(
         (F.col("vec_id") - 8).alias("plane"), "embedding"
@@ -1710,7 +1577,7 @@ def _lsh_buckets_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("embedding_lsh_buckets", (_lsh_buckets_fn, _hyperplane_sql("duckdb")))
+_def("embedding_lsh_buckets", _lsh_buckets_fn, _hyperplane_sql(), "embeddings")
 
 
 # -- 24b. embedding-cosine near-dup pairs (operators/dedupe.py
@@ -1723,9 +1590,9 @@ _def("embedding_lsh_buckets", (_lsh_buckets_fn, _hyperplane_sql("duckdb")))
 _EMB_NEAR_THRESHOLD = 0.25
 
 
-def _emb_near_sql(engine: str) -> str:
+def _emb_near_sql() -> str:
     dot_vp = _dot_duck("v.embedding", "p.embedding")
-    cos = _cosine(engine, "a2.embedding", "b2.embedding")
+    cos = _cosine("a2.embedding", "b2.embedding")
     return f"""
 WITH bits AS (
   SELECT v.vec_id, p.vec_id - 8 AS plane,
@@ -1751,22 +1618,17 @@ WHERE ({cos}) >= {_EMB_NEAR_THRESHOLD}
 def _emb_planes(vectors: DataFrame) -> DataFrame:
     """The fixture hyperplane set (vec_id 8..15) — single-sourced across
     the near-dup pair and semantic-dedup entries."""
-    from pyspark.sql import functions as F
-
     return vectors.filter("vec_id BETWEEN 8 AND 15").select(
         (F.col("vec_id") - 8).alias("plane"), "embedding")
 
 
-def _emb_near_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "embeddings")
+def _emb_near_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     return dedupe.embedding_near_pairs(
         vectors, _emb_planes(vectors), threshold=_EMB_NEAR_THRESHOLD)
 
 
-_def("embedding_near_dup", (_emb_near_fn, _emb_near_sql("duckdb")))
+_def("embedding_near_dup", _emb_near_fn, _emb_near_sql(), "embeddings")
 
 
 # -- 24c. SemDeDup-style semantic dedup (operators/dedupe.semantic_dedup):
@@ -1777,10 +1639,7 @@ _def("embedding_near_dup", (_emb_near_fn, _emb_near_sql("duckdb")))
 #         The pair-generation SQL is EMBEDDED from _emb_near_sql (one
 #         source — a bucketing/threshold change cannot silently fork the
 #         two twins), as is the Spark-side plane set (_emb_planes).
-def _sem_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "embeddings")
+def _sem_dedup_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     out = dedupe.semantic_dedup(vectors, _emb_planes(vectors),
                                 threshold=_EMB_NEAR_THRESHOLD)
@@ -1790,7 +1649,7 @@ def _sem_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sem_dedup_duck_sql() -> str:
     return f"""
 WITH RECURSIVE prs AS (
-  SELECT id_a, id_b FROM ({_emb_near_sql("duckdb")}) emb_pairs
+  SELECT id_a, id_b FROM ({_emb_near_sql()}) emb_pairs
 ), edges AS (
   SELECT id_a AS src, id_b AS dst FROM prs
   UNION
@@ -1809,7 +1668,7 @@ ANTI JOIN drops ON v.vec_id = drops.id
 """
 
 
-_def("semantic_dedup", (_sem_dedup_fn, _sem_dedup_duck_sql()))
+_def("semantic_dedup", _sem_dedup_fn, _sem_dedup_duck_sql(), "embeddings")
 
 # -- 25. chunk-table eval stats (eval.py:144-181 over the SQL window
 #        chunker's output — per-document chunk counts and span coverage)
@@ -1825,8 +1684,8 @@ SELECT count(*) AS n_chunks,
        CAST(max(char_end - char_start) AS BIGINT) AS max_chunk_len
 FROM chunks
 """
-_def("chunk_eval_stats", _q(_chunk_stats_sql("spark"), _chunk_stats_sql("duckdb"),
-                            ("documents",)))
+_def("chunk_eval_stats", _chunk_stats_sql("spark"), _chunk_stats_sql("duckdb"),
+     "documents")
 
 
 # -- 26. routing-analyzer distribution (§2.6: scientific detector, OCR
@@ -1858,12 +1717,7 @@ _ROUTING_INDICATORS = {
 }
 
 
-def _routing_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import routing as routing_op
-
-    _register(spark, sf_dir, "documents")
+def _routing_fn(spark: SparkSession) -> DataFrame:
     dec = spark.sql(_ROUTING_DECORATE.replace("chr(9)", "'\\t'").replace(
         "chr(10)", "'\\n'"))
     routed = routing_op.with_routing(
@@ -1879,10 +1733,6 @@ def _routing_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _routing_duck_sql() -> str:
-    from ragstudio_spark.operators.routing import (
-        EQUATION_PATTERNS, FRENCH_CHARS, MATH_SYMBOLS, SCIENTIFIC_KEYWORDS,
-    )
-
     spec = sqlspec.readability_exprs("text", "duckdb", min_ratio=0.4)
     vwr = spec["valid_word_ratio"]
     sym = f"len(regexp_extract_all(text, '[{MATH_SYMBOLS}]'))"
@@ -1949,7 +1799,7 @@ FROM decisions GROUP BY 1, 2, 3
 """
 
 
-_DEFS["routing_distribution"] = (_routing_fn, _routing_duck_sql())
+_def("routing_distribution", _routing_fn, _routing_duck_sql(), "documents")
 
 
 # -- 27. content-type sniffing distribution (operators/sniff.py regex
@@ -1992,8 +1842,8 @@ def _sniff_sql(engine: str) -> str:
 WITH dec AS ({dec})
 SELECT {case} AS content_type, count(*) AS n FROM dec GROUP BY 1
 """
-_def("content_type_distribution", _q(_sniff_sql("spark"), _sniff_sql("duckdb"),
-                                     ("documents",)))
+_def("content_type_distribution", _sniff_sql("spark"), _sniff_sql("duckdb"),
+     "documents")
 
 # -- 28. PDF doc-type detector (document_detector.py extractible-ratio
 #        classifier on paragraph blocks; decorated multi-paragraph corpus)
@@ -2007,12 +1857,7 @@ FROM documents
 """
 
 
-def _pdftype_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import routing as routing_op
-
-    _register(spark, sf_dir, "documents")
+def _pdftype_fn(spark: SparkSession) -> DataFrame:
     dec = spark.sql(_PDFTYPE_DECORATE.replace("chr(10)", "'\\n'"))
     cols = routing_op.pdf_type_cols(F.col("text"))
     return (
@@ -2040,7 +1885,7 @@ SELECT CASE WHEN n = 0 THEN 'EMPTY'
        count(*) AS n
 FROM r GROUP BY 1
 """
-_DEFS["pdf_type_distribution"] = (_pdftype_fn, _pdftype_duck_sql())
+_def("pdf_type_distribution", _pdftype_fn, _pdftype_duck_sql(), "documents")
 
 
 # -- 29. tool-call payload mining (operators/toolcalls.py over the
@@ -2063,12 +1908,7 @@ FROM documents
 """
 
 
-def _toolcalls_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import toolcalls
-
-    _register(spark, sf_dir, "documents")
+def _toolcalls_fn(spark: SparkSession) -> DataFrame:
     dec = spark.sql(_tool_decorate("spark"))
     calls = toolcalls.parse_tool_calls(dec, id_cols=("doc_id",))
     stats = toolcalls.tool_call_stats(calls)
@@ -2099,7 +1939,7 @@ FROM calls GROUP BY tool_name, tool_status
 """
 
 
-_def("tool_payload_extraction", (_toolcalls_fn, _toolcalls_duck_sql()))
+_def("tool_payload_extraction", _toolcalls_fn, _toolcalls_duck_sql(), "documents")
 
 
 # -- 30. skew-safe conversation assembly (operators/skew.py two-phase
@@ -2115,12 +1955,7 @@ FROM documents GROUP BY source
 """
 
 
-def _assembly_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import skew
-
-    _register(spark, sf_dir, "documents")
+def _assembly_fn(spark: SparkSession) -> DataFrame:
     shaped = spark.table("documents").select(
         F.col("source").alias("conv_id"),
         F.col("doc_id").cast("int").alias("turn_idx"),
@@ -2133,7 +1968,7 @@ def _assembly_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_def("conversation_assembly", (_assembly_fn, _assembly_duck_sql()))
+_def("conversation_assembly", _assembly_fn, _assembly_duck_sql(), "documents")
 
 
 # -- 31. multimodal plumbing (operators/multimodal.py): documents decorated
@@ -2147,8 +1982,6 @@ _MEDIA_DUR = "CASE WHEN doc_id % 3 = 2 THEN (CAST(doc_id % 7 AS INT) + 1) * 1500
 
 
 def _media_df(spark: SparkSession):
-    from pyspark.sql import functions as F
-
     return spark.table("documents").select(
         F.col("doc_id").alias("media_id"),
         F.expr(_MEDIA_TYPES).alias("media_type"),
@@ -2159,12 +1992,7 @@ def _media_df(spark: SparkSession):
     )
 
 
-def _multimodal_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import multimodal
-
-    _register(spark, sf_dir, "documents")
+def _multimodal_fn(spark: SparkSession) -> DataFrame:
     media = _media_df(spark)
     feats = multimodal.extract_features(media, fake_decode=True)
     frames = multimodal.frame_sample(media, every_ms=1000, fake_decode=True)
@@ -2197,7 +2025,7 @@ FROM media GROUP BY media_type
 """
 
 
-_def("multimodal_accounting", (_multimodal_fn, _multimodal_duck_sql()))
+_def("multimodal_accounting", _multimodal_fn, _multimodal_duck_sql(), "documents")
 
 
 # -- 32. feedback-loop analytics (reference FeedbackCollector,
@@ -2224,8 +2052,6 @@ _FB_DOCK = "CAST(regexp_extract(props, '([0-9]+)', 1) AS INT)"
 
 
 def _feedback_df(spark: SparkSession):
-    from pyspark.sql import functions as F
-
     ev = spark.table("events")
     shown = F.expr(
         f"transform(sequence(0, 2), i -> 'd' || CAST(({_FB_DOCK}) + i AS STRING))")
@@ -2260,10 +2086,7 @@ feedback AS (
 )"""
 
 
-def _fb_stats_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import feedback
-
-    _register(spark, sf_dir, "events")
+def _fb_stats_fn(spark: SparkSession) -> DataFrame:
     return feedback.feedback_statistics(_feedback_df(spark))
 
 
@@ -2284,15 +2107,10 @@ FROM feedback
 """
 
 
-_def("feedback_statistics", (_fb_stats_fn, _fb_stats_duck_sql()))
+_def("feedback_statistics", _fb_stats_fn, _fb_stats_duck_sql(), "events")
 
 
-def _fb_problem_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import feedback
-
-    _register(spark, sf_dir, "events")
+def _fb_problem_fn(spark: SparkSession) -> DataFrame:
     # rating rows only: diluting the groups with score-less click/flag rows
     # keeps every rate ~0.1 and the gate would compare 0 rows to 0 rows
     ratings = _feedback_df(spark).filter(
@@ -2320,13 +2138,10 @@ ORDER BY negative_rate DESC, query_id ASC
 """
 
 
-_def("feedback_problem_queries", (_fb_problem_fn, _fb_problem_duck_sql()))
+_def("feedback_problem_queries", _fb_problem_fn, _fb_problem_duck_sql(), "events")
 
 
-def _fb_ctr_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import feedback
-
-    _register(spark, sf_dir, "events")
+def _fb_ctr_fn(spark: SparkSession) -> DataFrame:
     return feedback.document_ctr(_feedback_df(spark), min_impressions=5)
 
 
@@ -2354,7 +2169,7 @@ WHERE i.impressions >= 5
 """
 
 
-_def("feedback_doc_ctr", (_fb_ctr_fn, _fb_ctr_duck_sql()))
+_def("feedback_doc_ctr", _fb_ctr_fn, _fb_ctr_duck_sql(), "events")
 
 
 # -- 33. deterministic stratified sampling (operators/sampling.py): keep a
@@ -2365,10 +2180,7 @@ _def("feedback_doc_ctr", (_fb_ctr_fn, _fb_ctr_duck_sql()))
 _SAMPLE_RATES = {"fr": 0.5, "en": 0.25, "de": 0.1}
 
 
-def _sample_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _sample_fn(spark: SparkSession) -> DataFrame:
     return sampling.stratified_sample(
         spark.table("documents"), strata_col="lang", rates=_SAMPLE_RATES,
         default_rate=0.0, key_cols=("doc_id",), salt="r3",
@@ -2386,7 +2198,7 @@ WHERE ({frac}) < ({rate})
 """
 
 
-_def("sample_stratified", (_sample_fn, _sample_duck_sql()))
+_def("sample_stratified", _sample_fn, _sample_duck_sql(), "documents")
 
 
 # -- 34. token-stream sequence packing (operators/packing.py): concat-and-
@@ -2396,12 +2208,7 @@ _def("sample_stratified", (_sample_fn, _sample_duck_sql()))
 _PACK_BUDGET = 2048
 
 
-def _pack_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import packing
-
-    _register(spark, sf_dir, "documents")
+def _pack_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select(
         "doc_id", "lang",
         F.floor(F.col("n_chars") / 4).cast("bigint").alias("token_count"))
@@ -2432,7 +2239,7 @@ FROM cum
 """
 
 
-_def("pack_sequences", (_pack_fn, _pack_duck_sql()))
+_def("pack_sequences", _pack_fn, _pack_duck_sql(), "documents")
 
 
 # -- 35c. PII redaction (operators/redact.py): the corpus has no PII, so
@@ -2446,12 +2253,7 @@ _PII_SNIPPET_A = (" contact jean.dupont+spam@example.org or call "
 _PII_SNIPPET_B = " card 4111111111111111 from host 192.168.0.1 today"
 
 
-def _redact_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import redact
-
-    _register(spark, sf_dir, "documents")
+def _redact_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 7 == 0,
@@ -2466,8 +2268,6 @@ def _redact_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _redact_duck_sql() -> str:
-    from ragstudio_spark.operators.redact import REDACTIONS
-
     staged = "text"
     counts = []
     for cat, pat, repl in REDACTIONS:
@@ -2489,7 +2289,7 @@ FROM enriched
 """
 
 
-_def("pii_redaction", (_redact_fn, _redact_duck_sql()))
+_def("pii_redaction", _redact_fn, _redact_duck_sql(), "documents")
 
 
 # -- 35a. vector store end-to-end (operators/vectorstore.py): build a
@@ -2497,12 +2297,7 @@ _def("pii_redaction", (_redact_fn, _redact_duck_sql()))
 #         ids v0..v9 (latest version wins), then epsilon-cosine search
 #         with vec 0's ORIGINAL embedding — the upserted rows must rank by
 #         their NEW vectors. Rank-only output.
-def _vstore_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import vectorstore
-
-    _register(spark, sf_dir, "embeddings")
+def _vstore_fn(spark: SparkSession) -> DataFrame:
     emb = spark.table("embeddings")
     store = emb.select(
         F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("id"),
@@ -2524,12 +2319,9 @@ def _vstore_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _vstore_duck_sql() -> str:
-    def dot(a: str, b: str) -> str:
-        return _dot_duck(a, b)
-
-    cos = (f"({dot('r.embedding', 'q.embedding')}) / "
-           f"((sqrt({dot('r.embedding', 'r.embedding')}) + 1e-10) * "
-           f"(sqrt({dot('q.embedding', 'q.embedding')}) + 1e-10))")
+    cos = (f"({_dot_duck('r.embedding', 'q.embedding')}) / "
+           f"((sqrt({_dot_duck('r.embedding', 'r.embedding')}) + 1e-10) * "
+           f"(sqrt({_dot_duck('q.embedding', 'q.embedding')}) + 1e-10))")
     return f"""
 WITH store AS (
   SELECT 'v' || CAST(vec_id AS VARCHAR) AS id, embedding, 0 AS version
@@ -2551,7 +2343,7 @@ LIMIT 10
 """
 
 
-_def("vectorstore_upsert_search", (_vstore_fn, _vstore_duck_sql()))
+_def("vectorstore_upsert_search", _vstore_fn, _vstore_duck_sql(), "embeddings")
 
 
 # -- 35b. mathematical-schema extraction (operators/schema_extract.py ↔
@@ -2567,12 +2359,7 @@ _MATH_SNIPPET_B = (" Voir Figure 3 et le tableau. "
                    "\\\\x = y + 2 longer equation\\\\ et la courbe C")
 
 
-def _schema_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import schema_extract
-
-    _register(spark, sf_dir, "documents")
+def _schema_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select("doc_id", "text")
     enriched = docs.select(
         "doc_id",
@@ -2585,11 +2372,6 @@ def _schema_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _schema_duck_sql() -> str:
-    from ragstudio_spark.operators.schema_extract import (
-        CIRCLE_RE, CURVE_RE, FIGURE_RE, LATEX_RE, LINE_RE, SEGMENT_RE,
-        TRIANGLE_RE,
-    )
-
     def refs(inst: str) -> str:
         return ("CAST(len(list_filter(string_split(text, chr(10)), "
                 f"ln -> contains(lower(ln), lower({inst})))) AS INT)")
@@ -2654,7 +2436,7 @@ WITH enriched AS (
 """
 
 
-_def("math_schema_extraction", (_schema_fn, _schema_duck_sql()))
+_def("math_schema_extraction", _schema_fn, _schema_duck_sql(), "documents")
 
 
 # -- 35. ML strategy trainer end-to-end (rows-only: iterative training is
@@ -2662,12 +2444,7 @@ _def("math_schema_extraction", (_schema_fn, _schema_duck_sql()))
 #        the unit suite pins semantics). Labels come from the published
 #        model over documents; the trained weights must reproduce that
 #        labeling, so every row reports correct == n.
-def _trainer_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import ml_strategy, ml_trainer
-
-    _register(spark, sf_dir, "documents")
+def _trainer_fn(spark: SparkSession) -> DataFrame:
     # the raw docs all land in one class — synthesize structural variety
     # deterministically so training sees all three labels
     base = spark.table("documents").select("doc_id", "text")
@@ -2687,7 +2464,7 @@ def _trainer_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ml_trainer.evaluate(labeled, weights)
 
 
-_def("ml_trainer_eval", (_trainer_fn, None))
+_def("ml_trainer_eval", _trainer_fn, None, "documents")
 
 
 # -- 36. BPE trainer pair-count round (operators/bpe_trainer.py): the
@@ -2698,12 +2475,7 @@ _def("ml_trainer_eval", (_trainer_fn, None))
 #        Python kernel by tests instead). The Spark side routes through
 #        the real operator (char symbol arrays → pair_counts); the DuckDB
 #        twin re-derives pairs as 2-char substrings.
-def _bpe_pairs_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import bpe_trainer
-
-    _register(spark, sf_dir, "documents")
+def _bpe_pairs_fn(spark: SparkSession) -> DataFrame:
     words = spark.table("documents").select(
         F.explode(F.regexp_extract_all(F.lower(F.col("text")),
                                        F.lit("[a-z]+"), F.lit(0))).alias("w"))
@@ -2732,17 +2504,14 @@ ORDER BY n DESC, pair ASC
 LIMIT 20
 """
 
-_def("bpe_pair_counts", (_bpe_pairs_fn, _BPE_PAIRS_DUCK))
+_def("bpe_pair_counts", _bpe_pairs_fn, _BPE_PAIRS_DUCK, "documents")
 
 
 # -- 36b. BPE trainer end-to-end (rows-only: iterative argmax-per-round
 #         training is not SQL-expressible; unit tests pin the exact merge
 #         sequence on a known corpus + partition independence). Returns
 #         the ordered merges trained from the documents corpus.
-def _bpe_train_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import bpe_trainer
-
-    _register(spark, sf_dir, "documents")
+def _bpe_train_fn(spark: SparkSession) -> DataFrame:
     merges = bpe_trainer.train_from_corpus(
         spark.table("documents"), n_merges=12)
     return spark.createDataFrame(
@@ -2750,7 +2519,7 @@ def _bpe_train_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank int, a string, b string")
 
 
-_def("bpe_train_merges", (_bpe_train_fn, None))
+_def("bpe_train_merges", _bpe_train_fn, None, "documents")
 
 
 # -- 37. error-taxonomy rollup (operators/metrics.py error_taxonomy): the
@@ -2771,22 +2540,15 @@ _ERROR_SEEDS = (
 )
 
 
-def _error_taxonomy_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import metrics as m
-
-    _register(spark, sf_dir, "documents")
+def _error_taxonomy_fn(spark: SparkSession) -> DataFrame:
     seeded = F.when(F.col("doc_id") % 5 == 0,
                     F.element_at(F.array(*[F.lit(s) for s in _ERROR_SEEDS]),
                                  (F.col("doc_id") % 8 + 1).cast("int")))
     df = spark.table("documents").select(seeded.alias("error"))
-    return m.error_taxonomy(df).orderBy("category")
+    return metrics.error_taxonomy(df).orderBy("category")
 
 
 def _error_taxonomy_duck_sql() -> str:
-    from ragstudio_spark.operators.metrics import ERROR_OTHER, ERROR_TAXONOMY
-
     seeds = ", ".join("'" + s.replace("'", "''") + "'" for s in _ERROR_SEEDS)
     ladder = " ".join(
         "WHEN " + " OR ".join(f"contains(lower(error), '{n}')"
@@ -2809,7 +2571,7 @@ ORDER BY category
 """
 
 
-_def("error_taxonomy", (_error_taxonomy_fn, _error_taxonomy_duck_sql()))
+_def("error_taxonomy", _error_taxonomy_fn, _error_taxonomy_duck_sql(), "documents")
 
 
 # -- 38. composed corpus curation (operators/curation.py): exact dedup →
@@ -2821,12 +2583,7 @@ _def("error_taxonomy", (_error_taxonomy_fn, _error_taxonomy_duck_sql()))
 _CURATE_BUDGET = 1024
 
 
-def _curate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import curation
-
-    _register(spark, sf_dir, "documents")
+def _curate_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").alias("d")
     donors = spark.table("documents").select(
         F.col("doc_id").alias("_donor_id"), F.col("text").alias("_donor_text"))
@@ -2850,9 +2607,6 @@ def _curate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curate_duck_sql() -> str:
-    from ragstudio_spark.operators.curation import CHARS_PER_TOKEN
-    from ragstudio_spark.operators.redact import REDACTIONS
-
     staged = "text"
     counts = []
     for cat, pat, repl in REDACTIONS:
@@ -2897,7 +2651,7 @@ FROM cum
 """
 
 
-_def("curate_corpus", (_curate_fn, _curate_duck_sql()))
+_def("curate_corpus", _curate_fn, _curate_duck_sql(), "documents")
 
 
 # -- 39. exact n-gram eval-decontamination (operators/dedupe.py
@@ -2919,12 +2673,7 @@ def _gram_list_expr_duck(n: int, words: str = "w") -> str:
             f"i -> {cat}) ELSE [] END")
 
 
-def _ngram_decon_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _ngram_decon_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     bench = docs.filter("doc_id % 50 = 3")
     return dedupe.ngram_decontaminate(docs, bench, n=_DECON_N).orderBy(
@@ -2951,16 +2700,14 @@ ORDER BY corpus_id, benchmark_id
 """
 
 
-_def("decontaminate_ngram_overlap", (_ngram_decon_fn, _ngram_decon_duck_sql()))
+_def("decontaminate_ngram_overlap", _ngram_decon_fn, _ngram_decon_duck_sql(),
+     "documents")
 
 
 # -- 40. per-source quota cap (operators/sampling.py cap_per_key): at most
 #        n docs per source, kept rows = the n smallest salted hashes
 #        within the key — deterministic, reproducible, order-independent.
-def _cap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _cap_fn(spark: SparkSession) -> DataFrame:
     return sampling.cap_per_key(
         spark.table("documents"), key_col="source", n=5,
         order_cols=("doc_id",), salt="r4").select("doc_id", "source")
@@ -2977,7 +2724,7 @@ SELECT doc_id, source FROM (
 WHERE rn <= 5
 """
 
-_def("sample_cap_per_source", (_cap_fn, _CAP_DUCK))
+_def("sample_cap_per_source", _cap_fn, _CAP_DUCK, "documents")
 
 
 # -- 41. Gopher-style repetition signals (operators/quality_signals.py):
@@ -2988,12 +2735,7 @@ _def("sample_cap_per_source", (_cap_fn, _CAP_DUCK))
 _REP_SEED = "\nrepeated line alpha\nrepeated line alpha"
 
 
-def _repsig_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import quality_signals
-
-    _register(spark, sf_dir, "documents")
+def _repsig_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 6 == 0,
@@ -3058,7 +2800,7 @@ LEFT JOIN top ON b.doc_id = top.doc_id
 """
 
 
-_def("repetition_signals", (_repsig_fn, _repsig_duck_sql()))
+_def("repetition_signals", _repsig_fn, _repsig_duck_sql(), "documents")
 
 
 # -- 42. domain-mixture sampling (operators/sampling.py mixture_sample):
@@ -3070,10 +2812,7 @@ _MIX_SHARES = {"fr": 0.5, "en": 0.4}
 _MIX_BUDGET = 200
 
 
-def _mix_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _mix_fn(spark: SparkSession) -> DataFrame:
     return sampling.mixture_sample(
         spark.table("documents"), key_col="lang", shares=_MIX_SHARES,
         budget=_MIX_BUDGET, key_cols=("doc_id",), salt="r4mix",
@@ -3098,7 +2837,7 @@ WHERE ({frac}) < least(1.0, ({float(_MIX_BUDGET)} * ({case})) / n)
 """
 
 
-_def("sample_mixture", (_mix_fn, _mix_duck_sql()))
+_def("sample_mixture", _mix_fn, _mix_duck_sql(), "documents")
 
 
 # -- 43. repeated-span mining (operators/dedupe.py repeated_spans): locate
@@ -3113,12 +2852,7 @@ _SPAN_SEED = ("this document is provided as is without warranty of any "
 _SPAN_N = 20
 
 
-def _spans_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _spans_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 9 == 2,
@@ -3158,7 +2892,7 @@ ORDER BY doc_id, word_pos, gram_md5
 """
 
 
-_def("repeated_span_mining", (_spans_fn, _spans_duck_sql()))
+_def("repeated_span_mining", _spans_fn, _spans_duck_sql(), "documents")
 
 
 # -- 43b. span cutting (operators/dedupe.py cut_repeated_spans): the
@@ -3167,12 +2901,7 @@ _def("repeated_span_mining", (_spans_fn, _spans_duck_sql()))
 #         kept corpus-wide. Gate compares md5 of the rebuilt text
 #         (byte-exact). Struct MIN picks the canonical occurrence —
 #         lexicographic (doc_id, word_pos) in both engines.
-def _spans_cut_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _spans_cut_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 9 == 2,
@@ -3198,7 +2927,7 @@ WITH seeded AS (
   -- w = lowered stream (span matching); wo = original-case stream
   -- (reconstruction) — position-aligned, lower() never moves whitespace
   SELECT doc_id, {words} AS w,
-         list_filter(regexp_split_to_array(text, '\s+'), x -> x != '') AS wo
+         list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS wo
   FROM seeded
 ), occ AS (
   SELECT doc_id, s['p'] AS word_pos, md5(s['g']) AS gram_md5
@@ -3242,7 +2971,7 @@ FROM wrds w LEFT JOIN cuts ON w.doc_id = cuts.doc_id
 """
 
 
-_def("repeated_span_cut", (_spans_cut_fn, _spans_cut_duck_sql()))
+_def("repeated_span_cut", _spans_cut_fn, _spans_cut_duck_sql(), "documents")
 
 
 # -- 44. C4-style cleaning (operators/quality_signals.py c4_clean): the
@@ -3250,12 +2979,7 @@ _def("repeated_span_cut", (_spans_cut_fn, _spans_cut_duck_sql()))
 #        'lorem ipsum' / '{' page poisons are seeded deterministically.
 #        Dialect: last-char extraction is substring(s,-1,1) in Spark but
 #        right(s,1) in DuckDB (negative substr start is Postgres-empty).
-def _c4_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import quality_signals
-
-    _register(spark, sf_dir, "documents")
+def _c4_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 13 == 5,
@@ -3269,10 +2993,6 @@ def _c4_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _c4_duck_sql() -> str:
-    from ragstudio_spark.operators.quality_signals import (
-        C4_MIN_LINE_WORDS, C4_MIN_SENTENCES, C4_TERMINALS,
-    )
-
     terms = ", ".join("'" + t.replace("'", "''") + "'" for t in C4_TERMINALS)
     line_ok = (
         f"right(trim(ln), 1) IN ({terms}) "
@@ -3315,7 +3035,7 @@ FROM shaped
 """
 
 
-_def("c4_clean", (_c4_fn, _c4_duck_sql()))
+_def("c4_clean", _c4_fn, _c4_duck_sql(), "documents")
 
 
 # -- 45. SFT pair mining (operators/sft.py): documents shaped into
@@ -3327,10 +3047,7 @@ _def("c4_clean", (_c4_fn, _c4_duck_sql()))
 #        is single-sourced (one Spark helper + one SQL CTE) across the
 #        pair and multi-turn entries — four hand-synced copies is how
 #        twins silently diverge.
-def _sft_turns_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    _register(spark, sf_dir, "documents")
+def _sft_turns_df(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     return spark.table("documents").select(
         F.col("source").alias("conv_id"),
@@ -3353,12 +3070,8 @@ turns AS (
 )"""
 
 
-def _sft_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sft
-
-    pairs = sft.sft_pairs(_sft_turns_df(spark, sf_dir))
+def _sft_fn(spark: SparkSession) -> DataFrame:
+    pairs = sft.sft_pairs(_sft_turns_df(spark))
     return pairs.select(
         "conv_id", "turn_idx",
         F.md5("prompt").alias("prompt_hash"),
@@ -3383,7 +3096,7 @@ FROM cand
 WHERE role = 'user' AND nrole = 'assistant' AND nidx = turn_idx + 1
 """
 
-_def("sft_pairs", (_sft_fn, _SFT_DUCK))
+_def("sft_pairs", _sft_fn, _SFT_DUCK, "documents")
 
 
 # -- 45b. multi-turn SFT assembly (operators/sft.py sft_multiturn): the
@@ -3394,12 +3107,8 @@ _def("sft_pairs", (_sft_fn, _SFT_DUCK))
 _SFT_CTX = 4
 
 
-def _sft_mt_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sft
-
-    out = sft.sft_multiturn(_sft_turns_df(spark, sf_dir),
+def _sft_mt_fn(spark: SparkSession) -> DataFrame:
+    out = sft.sft_multiturn(_sft_turns_df(spark),
                             max_context_turns=_SFT_CTX)
     return out.select("conv_id", "turn_idx",
                       F.md5("prompt").alias("prompt_hash"),
@@ -3428,7 +3137,7 @@ WHERE role = 'assistant' AND len(ctx) >= 1
   AND ctx[-1]['r'] = 'user' AND ctx[-1]['i'] = turn_idx - 1
 """
 
-_def("sft_multiturn", (_sft_mt_fn, _SFT_MT_DUCK))
+_def("sft_multiturn", _sft_mt_fn, _SFT_MT_DUCK, "documents")
 
 
 # -- 45c. composed SFT curation (operators/curation.py curate_sft): the
@@ -3443,14 +3152,9 @@ _CSFT_BUDGET = 512
 _CSFT_N = 13
 
 
-def _curate_sft_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import curation
-
-    _register(spark, sf_dir, "documents")
+def _curate_sft_fn(spark: SparkSession) -> DataFrame:
     bench = spark.table("documents").filter("doc_id % 31 = 7")
-    out = curation.curate_sft(_sft_turns_df(spark, sf_dir), bench,
+    out = curation.curate_sft(_sft_turns_df(spark), bench,
                               ngram_n=_CSFT_N, budget=_CSFT_BUDGET)
     return out.select(
         "conv_id", "turn_idx",
@@ -3560,20 +3264,18 @@ FROM cum
 """
 
 
-_def("curate_sft", (_curate_sft_fn, _curate_sft_duck_sql()))
+_def("curate_sft", _curate_sft_fn, _curate_sft_duck_sql(), "documents")
 
 
 # -- 45c-bis. SFT curation manifest (operators/curation.py
 #             sft_curation_report): the per-shard audit rollup of 45c —
 #             the twin AGGREGATES the full curate_sft twin as a
 #             subquery (one source, the semantic_dedup embedding rule).
-def _curate_sft_report_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import curation
-
+def _curate_sft_report_fn(spark: SparkSession) -> DataFrame:
     # REUSE the curate_sft entry verbatim (its projection keeps every
     # column the report needs) — a parameter change there must grade
     # this manifest too, never a silently different pipeline
-    return curation.sft_curation_report(_curate_sft_fn(spark, sf_dir))
+    return curation.sft_curation_report(_curate_sft_fn(spark))
 
 
 def _curate_sft_report_duck_sql() -> str:
@@ -3588,8 +3290,8 @@ GROUP BY shard
 """
 
 
-_def("curate_sft_report",
-     (_curate_sft_report_fn, _curate_sft_report_duck_sql()))
+_def("curate_sft_report", _curate_sft_report_fn, _curate_sft_report_duck_sql(),
+     "documents")
 
 
 # -- 45d. conversation lint (operators/convlint.py lint_conversations):
@@ -3599,10 +3301,7 @@ _def("curate_sft_report",
 #         validity against the documented chat state machine (the
 #         user→assistant→tool cycle makes tool→user transitions bad by
 #         construction, so the branch is non-vacuous corpus-wide).
-def _lint_turns_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    _register(spark, sf_dir, "documents")
+def _lint_turns_df(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     idx = (F.row_number().over(w) - 1).cast("int")
     role = F.when(F.col("doc_id") % 41 == 2, F.lit(None).cast("string")) \
@@ -3619,15 +3318,11 @@ def _lint_turns_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("doc_id"))
 
 
-def _lint_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import convlint
-
-    return convlint.lint_conversations(_lint_turns_df(spark, sf_dir))
+def _lint_fn(spark: SparkSession) -> DataFrame:
+    return convlint.lint_conversations(_lint_turns_df(spark))
 
 
 def _lint_duck_sql() -> str:
-    from ragstudio_spark.operators.convlint import ROLES, VALID_TRANSITIONS
-
     roles = ", ".join(f"'{r}'" for r in ROLES)
     pairs = ", ".join(f"'{a}>{b}'" for a, b in VALID_TRANSITIONS)
     return f"""
@@ -3681,7 +3376,7 @@ FROM agg
 """
 
 
-_def("conversation_lint", (_lint_fn, _lint_duck_sql()))
+_def("conversation_lint", _lint_fn, _lint_duck_sql(), "documents")
 
 
 # -- 45e. context-budget truncation (operators/convlint.py
@@ -3692,10 +3387,8 @@ _def("conversation_lint", (_lint_fn, _lint_duck_sql()))
 _TRUNC_BUDGET = 96
 
 
-def _trunc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import convlint
-
-    out = convlint.truncate_history(_sft_turns_df(spark, sf_dir),
+def _trunc_fn(spark: SparkSession) -> DataFrame:
+    out = convlint.truncate_history(_sft_turns_df(spark),
                                     budget_tokens=_TRUNC_BUDGET)
     return out.select("conv_id", "turn_idx", "turn_tokens",
                       "suffix_tokens", "kept")
@@ -3717,7 +3410,7 @@ WINDOW w3 AS (PARTITION BY conv_id ORDER BY turn_idx DESC
 """
 
 
-_def("truncate_history", (_trunc_fn, _trunc_duck_sql()))
+_def("truncate_history", _trunc_fn, _trunc_duck_sql(), "documents")
 
 
 # -- 45f. learned quality filter (operators/quality_model.py): the
@@ -3730,12 +3423,7 @@ _QM_NOISE = " 0x9A$@! 77##%% 123456 @@@)(*&^ 999 $$$"
 _QM_LONGTOK = " pneumonoultramicroscopicsilicovolcanoconiosis" * 3
 
 
-def _qm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import quality_model
-
-    _register(spark, sf_dir, "documents")
+def _qm_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 23 == 6,
@@ -3748,10 +3436,6 @@ def _qm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qm_duck_sql() -> str:
-    from ragstudio_spark.operators.quality_model import (
-        PUBLISHED_WEIGHTS, QM_STOPWORDS,
-    )
-
     stop_body = "|".join(QM_STOPWORDS)
     w = PUBLISHED_WEIGHTS
     noise = (_QM_NOISE * 4).replace("'", "''")
@@ -3789,7 +3473,7 @@ FROM base
 """
 
 
-_def("quality_model_scores", (_qm_fn, _qm_duck_sql()))
+_def("quality_model_scores", _qm_fn, _qm_duck_sql(), "documents")
 
 
 # -- 45g. reference-corpus familiarity (operators/lm_filter.py): the
@@ -3800,12 +3484,7 @@ _def("quality_model_scores", (_qm_fn, _qm_duck_sql()))
 _LM_GARBAGE = "zqx9 vvk2 qqj7 xxp3 zzr8 wwm1 kkt4 yyn6"
 
 
-def _lmfam_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import lm_filter
-
-    _register(spark, sf_dir, "documents")
+def _lmfam_fn(spark: SparkSession) -> DataFrame:
     seeded = spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 19 == 4, F.lit(_LM_GARBAGE))
@@ -3851,7 +3530,7 @@ LEFT JOIN sc ON s.doc_id = sc.doc_id
 """
 
 
-_def("lm_familiarity", (_lmfam_fn, _lmfam_duck_sql()))
+_def("lm_familiarity", _lmfam_fn, _lmfam_duck_sql(), "documents")
 
 
 # -- 45h. mixture epoch plan (operators/sampling.py mixture_plan): the
@@ -3863,12 +3542,7 @@ _PLAN_WEIGHTS = {"en": 500000, "fr": 200000, "es": 200000, "de": 100000}
 _PLAN_BUDGET = 40_000
 
 
-def _plan_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _plan_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select(
         "doc_id", "lang",
         F.expr("length(text) div 4").cast("bigint").alias("token_count"))
@@ -3909,7 +3583,7 @@ FROM alloc
 """
 
 
-_def("mixture_plan", (_plan_fn, _plan_duck_sql()))
+_def("mixture_plan", _plan_fn, _plan_duck_sql(), "documents")
 
 
 # -- 45c. preference-pair mining (operators/sft.py preference_pairs): the
@@ -3917,10 +3591,7 @@ _def("mixture_plan", (_plan_fn, _plan_duck_sql()))
 #         query, chosen = max-rated candidate, rejected = min-rated,
 #         emitted when the DECIMAL gap ≥ 1.0; ties resolve to the lowest
 #         feedback_id via the portable max-then-min-among-ties shape.
-def _dpo_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import sft
-
-    _register(spark, sf_dir, "events")
+def _dpo_fn(spark: SparkSession) -> DataFrame:
     return sft.preference_pairs(_feedback_df(spark)).orderBy("query_id")
 
 
@@ -3953,7 +3624,7 @@ WHERE chosen_rating - rejected_rating >= CAST(1.0 AS DECIMAL(18,2))
 ORDER BY query_id
 """
 
-_def("preference_pairs", (_dpo_fn, _DPO_DUCK))
+_def("preference_pairs", _dpo_fn, _DPO_DUCK, "events")
 
 
 # -- 46. engine-native retrieval cache (pipeline/cache.py ↔ reference
@@ -3964,14 +3635,7 @@ _def("preference_pairs", (_dpo_fn, _DPO_DUCK))
 #        pure SQL (latest-event-per-key window with the del>set tie
 #        rank, TTL bound, clear/revive join). Values are md5 hex — no
 #        encoding or float hazards.
-def _cache_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.pipeline import cache
-
-    _register(spark, sf_dir, "documents")
+def _cache_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     path = os.path.join(tempfile.mkdtemp(prefix="rs_cache_oracle_"),
                         "store")
@@ -4058,7 +3722,7 @@ ORDER BY key
 """
 
 
-_def("cache_asof_read", (_cache_fn, _cache_duck_sql()))
+_def("cache_asof_read", _cache_fn, _cache_duck_sql(), "documents")
 
 
 # -- 47. deterministic RAG context assembly (operators/rag_chain.py ↔
@@ -4070,12 +3734,7 @@ _RAG_K = 4
 _RAG_BUDGET = 120
 
 
-def _ragctx_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import rag_chain
-
-    _register(spark, sf_dir, "documents")
+def _ragctx_fn(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy(F.col("doc_id") % 19).orderBy("doc_id")
     hits = spark.table("documents").select(
         (F.col("doc_id") % 19).alias("query_id"), "text",
@@ -4093,8 +3752,6 @@ def _ragctx_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ragctx_duck_sql() -> str:
-    from ragstudio_spark.operators.rag_chain import DEFAULT_RAG_PROMPT
-
     head, _, rest = DEFAULT_RAG_PROMPT.partition("{context}")
     mid, _, tail = rest.partition("{question}")
 
@@ -4134,18 +3791,13 @@ ORDER BY query_id
 """
 
 
-_def("rag_context_assembly", (_ragctx_fn, _ragctx_duck_sql()))
+_def("rag_context_assembly", _ragctx_fn, _ragctx_duck_sql(), "documents")
 
 
 # -- 48. format_answer parity at scale (chain.py:183-228): the full
 #        RÉPONSE/SOURCES/STATISTIQUES block per query over the same
 #        synthetic hits, literal timings, md5 output.
-def _ragfmt_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import rag_chain
-
-    _register(spark, sf_dir, "documents")
+def _ragfmt_fn(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy(F.col("doc_id") % 19).orderBy("doc_id")
     hits = spark.table("documents").select(
         (F.col("doc_id") % 19).alias("query_id"), "text",
@@ -4206,19 +3858,14 @@ ORDER BY query_id
 """
 
 
-_def("rag_answer_format", (_ragfmt_fn, _ragfmt_duck_sql()))
+_def("rag_answer_format", _ragfmt_fn, _ragfmt_duck_sql(), "documents")
 
 
 # -- 49. multi-query retrieval, rank-fused (rag_extras.multi_query_search
 #        ↔ reference retrievers.py:79-104 + RRF): deduped union of
 #        per-expansion BM25 top-k lists under integer-quantized
 #        reciprocal rank. Same fixed query/expansions as entry 23b.
-def _mq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import rag_extras
-
-    _register(spark, sf_dir, "documents")
+def _mq_fn(spark: SparkSession) -> DataFrame:
     out = rag_extras.multi_query_search(
         spark.table("documents"), _EXPANSION_QUERY,
         rag_extras.QueryExpander(
@@ -4232,8 +3879,6 @@ def _mq_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mq_duck_sql() -> str:
-    from ragstudio_spark.operators.rag_extras import RRF_SCALE
-
     expansions = _expanded_terms()
 
     def tf(t):
@@ -4282,7 +3927,7 @@ LIMIT {_EXPANSION_FINAL_K}
 """
 
 
-_def("rag_multi_query_fused", (_mq_fn, _mq_duck_sql()))
+_def("rag_multi_query_fused", _mq_fn, _mq_duck_sql(), "documents")
 
 
 # -- 50. contextual-compression retrieval (rag_extras.compression_retrieve
@@ -4298,12 +3943,7 @@ _CMP_SIM = 0.05
 _CMP_RED = 0.25
 
 
-def _compress_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import rag_extras
-
-    _register(spark, sf_dir, "embeddings")
+def _compress_fn(spark: SparkSession) -> DataFrame:
     emb = spark.table("embeddings")
     queries_df = emb.filter("vec_id < 4").select(
         F.col("vec_id").alias("query_id"),
@@ -4320,10 +3960,6 @@ def _compress_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _compress_duck_sql() -> str:
-    def cos(a, b):
-        return (f"({_dot_duck(a, b)}) / "
-                f"(sqrt({_dot_duck(a, a)}) * sqrt({_dot_duck(b, b)}))")
-
     return f"""
 WITH RECURSIVE cand AS (
   SELECT e.vec_id % 4 AS query_id, e.vec_id AS doc_id,
@@ -4334,11 +3970,11 @@ WITH RECURSIVE cand AS (
   WHERE e.vec_id >= 4 AND e.vec_id < 200
 ), scored AS (
   SELECT query_id, doc_id, rank, emb,
-         {cos('emb', 'qemb')} AS qsim
+         {_cosine('emb', 'qemb')} AS qsim
   FROM cand
 ), pairs AS (
   SELECT a.query_id, a.rank AS r_hi, b.rank AS r_lo,
-         {cos('a.emb', 'b.emb')} AS cs
+         {_cosine('a.emb', 'b.emb')} AS cs
   FROM scored a JOIN scored b
     ON a.query_id = b.query_id AND b.rank < a.rank
 ), maxr AS (
@@ -4373,7 +4009,7 @@ ORDER BY c.query_id, rank
 """
 
 
-_def("rag_compression_retrieve", (_compress_fn, _compress_duck_sql()))
+_def("rag_compression_retrieve", _compress_fn, _compress_duck_sql(), "embeddings")
 
 
 # -- 51. distributed ingestion guard (pipeline/guards.guard_listing_df ↔
@@ -4382,12 +4018,7 @@ _def("rag_compression_retrieve", (_compress_fn, _compress_duck_sql()))
 #        quarantine reason — relative paths, traversal, outside-base,
 #        oversized, bad extension, NULL size — and the fail-closed
 #        NULL handling. The twin replays the same rules in SQL.
-def _guard_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.pipeline import guards
-
-    _register(spark, sf_dir, "documents")
+def _guard_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     listing = docs.select(
         F.when(F.col("doc_id") % 11 == 0,
@@ -4463,7 +4094,7 @@ ORDER BY coalesce(reason, '~live')
 """
 
 
-_def("ingest_guard_listing", (_guard_fn, _guard_duck_sql()))
+_def("ingest_guard_listing", _guard_fn, _guard_duck_sql(), "documents")
 
 
 # -- 52. corpus-wide line dedup (operators/dedupe.py line_dedup): C4/CCNet
@@ -4480,12 +4111,7 @@ _LD_K = 12          # words per shaped line
 _LD_MIN_WORDS = 5   # exemption threshold inside line_dedup
 
 
-def _line_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _line_dedup_fn(spark: SparkSession) -> DataFrame:
     k = _LD_K
     # bind the words array once (the 58× inlining lesson) before the
     # per-line transform references it k times
@@ -4509,8 +4135,8 @@ def _line_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _line_dedup_duck_sql() -> str:
     k, mw = _LD_K, _LD_MIN_WORDS
-    words = _words_expr("text", "duck")
-    line_words = _words_expr("line", "duck")
+    words = _words_expr("text", "duckdb")
+    line_words = _words_expr("line", "duckdb")
     return f"""
 WITH w AS (
   SELECT doc_id, {words} AS w FROM documents
@@ -4554,7 +4180,7 @@ GROUP BY doc_id
 """
 
 
-_def("line_dedup", (_line_dedup_fn, _line_dedup_duck_sql()))
+_def("line_dedup", _line_dedup_fn, _line_dedup_duck_sql(), "documents")
 
 
 # -- 53. per-conversation dialogue statistics (operators/convlint.py
@@ -4565,10 +4191,7 @@ _def("line_dedup", (_line_dedup_fn, _line_dedup_duck_sql()))
 #        (2 user / 2 assistant / 1 tool) so runs and switches are both
 #        non-trivial (consecutive doc_ids within a source repeat residues
 #        often enough for multi-turn runs).
-def _conv_stats_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    _register(spark, sf_dir, "documents")
+def _conv_stats_shaped(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     role = (F.when(F.col("doc_id") % 5 < 2, "user")
             .when(F.col("doc_id") % 5 < 4, "assistant")
@@ -4579,14 +4202,12 @@ def _conv_stats_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
                     role.alias("role"), "text"))
 
 
-def _conv_stats_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import convlint
-
-    return convlint.conversation_stats(_conv_stats_shaped(spark, sf_dir))
+def _conv_stats_fn(spark: SparkSession) -> DataFrame:
+    return convlint.conversation_stats(_conv_stats_shaped(spark))
 
 
 def _conv_stats_duck_sql() -> str:
-    words = _words_expr("COALESCE(text, '')", "duck")
+    words = _words_expr("COALESCE(text, '')", "duckdb")
     role_sums = ",\n       ".join(
         f"CAST(sum(CASE WHEN run_role = '{r}' THEN run_len ELSE 0 END) "
         f"AS BIGINT) AS n_{r}"
@@ -4634,7 +4255,7 @@ GROUP BY conv_id
 """
 
 
-_def("conversation_stats", (_conv_stats_fn, _conv_stats_duck_sql()))
+_def("conversation_stats", _conv_stats_fn, _conv_stats_duck_sql(), "documents")
 
 
 # -- 54. SQ8 scalar-quantized ANN (operators/similarity.py sq8_topk):
@@ -4645,10 +4266,7 @@ _def("conversation_stats", (_conv_stats_fn, _conv_stats_duck_sql()))
 #        repeats the identical IEEE-double expression shape, and the dot
 #        is the pinned left-fold — so ranks match; output is rank-only
 #        (the float-tier convention).
-def _sq8_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _sq8_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     return similarity.sq8_topk(vectors, vectors.filter("vec_id < 8"), k=5)
 
@@ -4693,7 +4311,7 @@ WHERE rank <= 5
 """
 
 
-_def("ann_sq8_topk", (_sq8_fn, _sq8_duck_sql()))
+_def("ann_sq8_topk", _sq8_fn, _sq8_duck_sql(), "embeddings")
 
 
 # -- 55. topic segmentation (operators/convlint.py topic_segments):
@@ -4703,12 +4321,7 @@ _def("ann_sq8_topk", (_sq8_fn, _sq8_duck_sql()))
 #        float Jaccard crosses the engine boundary. pct=50 splits this
 #        corpus's adjacent-turn cohesion distribution ~1:3 (measured),
 #        so both branches are exercised conversation-wide.
-def _topic_seg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import convlint
-
-    _register(spark, sf_dir, "documents")
+def _topic_seg_fn(spark: SparkSession) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     shaped = (spark.table("documents")
               .select(F.col("source").alias("conv_id"),
@@ -4719,7 +4332,7 @@ def _topic_seg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _topic_seg_duck_sql() -> str:
-    words = _words_expr("COALESCE(text, '')", "duck")
+    words = _words_expr("COALESCE(text, '')", "duckdb")
     return f"""
 WITH shaped AS (
   SELECT source AS conv_id,
@@ -4752,7 +4365,7 @@ GROUP BY conv_id
 """
 
 
-_def("topic_segments", (_topic_seg_fn, _topic_seg_duck_sql()))
+_def("topic_segments", _topic_seg_fn, _topic_seg_duck_sql(), "documents")
 
 
 # -- 56. MMR diversified reranking (rag_extras.mmr_rerank — langchain
@@ -4768,12 +4381,7 @@ _MMR_LAM = 0.5
 _MMR_K = 5
 
 
-def _mmr_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import rag_extras
-
-    _register(spark, sf_dir, "embeddings")
+def _mmr_fn(spark: SparkSession) -> DataFrame:
     emb = spark.table("embeddings")
     queries_df = emb.filter("vec_id < 4").select(
         F.col("vec_id").alias("query_id"),
@@ -4791,10 +4399,6 @@ def _mmr_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mmr_duck_sql() -> str:
     lam, k = _MMR_LAM, _MMR_K
 
-    def cos(a, b):
-        return (f"({_dot_duck(a, b)}) / "
-                f"(sqrt({_dot_duck(a, a)}) * sqrt({_dot_duck(b, b)}))")
-
     parts = [f"""
 WITH cand AS (
   SELECT e.vec_id % 4 AS query_id, e.vec_id AS doc_id,
@@ -4805,11 +4409,11 @@ WITH cand AS (
   WHERE e.vec_id >= 4 AND e.vec_id < 200
 ), scored AS (
   SELECT query_id, doc_id, rank, emb,
-         {cos('emb', 'qemb')} AS qsim
+         {_cosine('emb', 'qemb')} AS qsim
   FROM cand
 ), pairs AS (
   SELECT a.query_id, a.rank AS r_a, b.rank AS r_b,
-         {cos('a.emb', 'b.emb')} AS cs
+         {_cosine('a.emb', 'b.emb')} AS cs
   FROM scored a JOIN scored b
     ON a.query_id = b.query_id AND a.rank <> b.rank
 ), k1 AS (
@@ -4846,7 +4450,7 @@ ORDER BY s.query_id, rank
     return "".join(parts)
 
 
-_def("rag_mmr_rerank", (_mmr_fn, _mmr_duck_sql()))
+_def("rag_mmr_rerank", _mmr_fn, _mmr_duck_sql(), "embeddings")
 
 
 # -- 57. HLL distinct sketch (operators/sketches.py): per-source
@@ -4857,12 +4461,7 @@ _def("rag_mmr_rerank", (_mmr_fn, _mmr_duck_sql()))
 #        floor (correctly-rounded IEEE, identical both engines). The
 #        non-twin check is the hashlib replica + accuracy bound in
 #        tests/test_sketches.py.
-def _hll_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sketches
-
-    _register(spark, sf_dir, "documents")
+def _hll_fn(spark: SparkSession) -> DataFrame:
     words = (spark.table("documents")
              .select("source",
                      F.explode(F.expr(
@@ -4873,13 +4472,10 @@ def _hll_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_duck_sql() -> str:
-    from ragstudio_spark.operators.sketches import (_RHO_BITS, _alpha,
-                                                    lz4_case_sql)
-
     m, scale = 256, _RHO_BITS + 1
     alpha_num = _alpha(m) * m * m * float(1 << scale)
     lz4 = lz4_case_sql("_f")
-    words = _words_expr("COALESCE(text, '')", "duck")
+    words = _words_expr("COALESCE(text, '')", "duckdb")
     return f"""
 WITH w AS (
   SELECT source, md5(CAST(u.w AS VARCHAR)) AS _h
@@ -4916,7 +4512,7 @@ ORDER BY source
 """
 
 
-_def("distinct_hll", (_hll_fn, _hll_duck_sql()))
+_def("distinct_hll", _hll_fn, _hll_duck_sql(), "documents")
 
 
 # -- 58. corpus snapshot diff (operators/snapshot.py): row-level
@@ -4926,12 +4522,7 @@ _def("distinct_hll", (_hll_fn, _hll_duck_sql()))
 #        engine-specific string semantics enter the fixture). The twin
 #        replays the digest (md5 of null-tagged per-column md5s) and the
 #        full outer join verbatim.
-def _snapdiff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import snapshot
-
-    _register(spark, sf_dir, "documents")
+def _snapdiff_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     old = docs.filter("doc_id < 400").select("doc_id", "text")
     new = (docs.filter("doc_id >= 100")
@@ -4965,7 +4556,7 @@ ORDER BY doc_id
 """
 
 
-_def("corpus_diff", (_snapdiff_fn, _SNAPDIFF_DUCK))
+_def("corpus_diff", _snapdiff_fn, _SNAPDIFF_DUCK, "documents")
 
 
 # -- 59. rank-aware retrieval evaluation (retrieval.ranked_eval): MRR@k
@@ -4979,12 +4570,7 @@ _def("corpus_diff", (_snapdiff_fn, _SNAPDIFF_DUCK))
 _REVAL_K = 10
 
 
-def _reval_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import retrieval
-
-    _register(spark, sf_dir, "documents")
+def _reval_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select("doc_id")
     qs = spark.range(8).select(F.col("id").alias("query_id"))
     w = Window.partitionBy("query_id").orderBy("_m", "doc_id")
@@ -5049,7 +4635,7 @@ ORDER BY query_id
 """
 
 
-_def("retrieval_eval", (_reval_fn, _REVAL_DUCK))
+_def("retrieval_eval", _reval_fn, _REVAL_DUCK, "documents")
 
 
 # -- 60. budgeted greedy selection (sampling.select_to_budget): per-
@@ -5057,12 +4643,7 @@ _def("retrieval_eval", (_reval_fn, _REVAL_DUCK))
 #        walk — quality proxy = n_chars % 97 (pseudo-random but engine-
 #        identical), tokens = n_chars // 4 (the pack oracle's proxy),
 #        budget 900 (binds: per-source totals run ~2,000). Pure window cumsum; all integers.
-def _budget_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _budget_fn(spark: SparkSession) -> DataFrame:
     shaped = (spark.table("documents")
               .select("source", "doc_id",
                       (F.col("n_chars") % 97).cast("bigint").alias("q"),
@@ -5087,7 +4668,7 @@ ORDER BY source, cum_tokens
 """
 
 
-_def("budget_select", (_budget_fn, _BUDGET_DUCK))
+_def("budget_select", _budget_fn, _BUDGET_DUCK, "documents")
 
 
 # -- 61. bloom-prefiltered decontamination (dedupe.bloom_decontaminate):
@@ -5103,10 +4684,7 @@ _def("budget_select", (_budget_fn, _BUDGET_DUCK))
 _BLOOM_M, _BLOOM_K = 1 << 12, 3
 
 
-def _bloom_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _bloom_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     bench = docs.filter("doc_id % 50 = 3")
     return (dedupe.bloom_decontaminate(
@@ -5115,8 +4693,6 @@ def _bloom_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_duck_sql() -> str:
-    from ragstudio_spark.operators.dedupe import _hex_positions
-
     grams = _gram_list_expr_duck(_DECON_N)
     words = _words_expr("text", "duckdb")
     p = _hex_positions("_h", _BLOOM_M, _BLOOM_K)
@@ -5158,7 +4734,7 @@ ORDER BY c.corpus_id
 """
 
 
-_def("bloom_decontaminate", (_bloom_fn, _bloom_duck_sql()))
+_def("bloom_decontaminate", _bloom_fn, _bloom_duck_sql(), "documents")
 
 
 # -- 62. count-min word-frequency sketch (sketches.cms_build/cms_query):
@@ -5172,12 +4748,7 @@ _def("bloom_decontaminate", (_bloom_fn, _bloom_duck_sql()))
 _CMS_W, _CMS_D = 1024, 3
 
 
-def _cms_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sketches
-
-    _register(spark, sf_dir, "documents")
+def _cms_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     words = docs.select(F.explode(F.expr(
         _words_expr("COALESCE(text, '')", "spark"))).alias("w"))
@@ -5195,9 +4766,7 @@ def _cms_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_duck_sql() -> str:
-    from ragstudio_spark.operators.dedupe import _hex_positions
-
-    words = _words_expr("COALESCE(text, '')", "duck")
+    words = _words_expr("COALESCE(text, '')", "duckdb")
     p = _hex_positions("_h", _CMS_W, _CMS_D)
     pos_union = " UNION ALL ".join(
         f"SELECT value, {i} AS row_idx, {p[i]} AS bucket FROM qh"
@@ -5231,7 +4800,7 @@ ORDER BY value
 """
 
 
-_def("cms_word_counts", (_cms_fn, _cms_duck_sql()))
+_def("cms_word_counts", _cms_fn, _cms_duck_sql(), "documents")
 
 
 # -- 63. hard-negative mining (similarity.hard_negatives): top-20 exact
@@ -5239,10 +4808,7 @@ _def("cms_word_counts", (_cms_fn, _cms_duck_sql()))
 #        keeping the 5 most similar NON-relevant docs per query — the
 #        contrastive-training negatives. Rank-only output; the twin
 #        replays ranking + anti-join + re-rank.
-def _hardneg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import similarity
-
-    _register(spark, sf_dir, "embeddings")
+def _hardneg_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     queries_df = vectors.filter("vec_id < 8")
     ranked = similarity.brute_force_topk(vectors, queries_df, k=20).select(
@@ -5255,7 +4821,7 @@ def _hardneg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hardneg_duck_sql() -> str:
-    cos = _cosine("duckdb")
+    cos = _cosine()
     return f"""
 WITH sims AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -5288,7 +4854,7 @@ ORDER BY query_id, neg_rank
 """
 
 
-_def("hard_negatives", (_hardneg_fn, _hardneg_duck_sql()))
+_def("hard_negatives", _hardneg_fn, _hardneg_duck_sql(), "embeddings")
 
 
 # -- 64. PMI collocations (lm_filter.pmi_collocations): top-50 bigrams
@@ -5296,10 +4862,7 @@ _def("hard_negatives", (_hardneg_fn, _hardneg_duck_sql()))
 #        value is two correctly-rounded IEEE ops (divide, multiply) on
 #        exactly-representable integer products + floor — bit-identical
 #        across engines; ranking ties break on the bigram string.
-def _pmi_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import lm_filter
-
-    _register(spark, sf_dir, "documents")
+def _pmi_fn(spark: SparkSession) -> DataFrame:
     return lm_filter.pmi_collocations(
         spark.table("documents"), min_count=5, top_n=50)
 
@@ -5352,7 +4915,7 @@ LIMIT 50
 """
 
 
-_def("pmi_collocations", (_pmi_fn, _pmi_duck_sql()))
+_def("pmi_collocations", _pmi_fn, _pmi_duck_sql(), "documents")
 
 
 # -- 65. as-of join (operators/asof.py): latest prior view per click,
@@ -5367,12 +4930,7 @@ _def("pmi_collocations", (_pmi_fn, _pmi_duck_sql()))
 #        after normalize) while DuckDB stays datetime64 — integer
 #        micros sidestep the representation trap entirely (the NTZ →
 #        TIMESTAMP cast is identity under the session's pinned UTC).
-def _asof_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators.asof import asof_join
-
-    _register(spark, sf_dir, "events")
+def _asof_fn(spark: SparkSession) -> DataFrame:
     ev = spark.table("events")
     clicks = ev.filter("event_type = 'click'").select(
         "event_id", "ts", "user_id")
@@ -5402,7 +4960,7 @@ ORDER BY l.event_id
 """
 
 
-_def("asof_click_view", (_asof_fn, _ASOF_DUCK))
+_def("asof_click_view", _asof_fn, _ASOF_DUCK, "events")
 
 
 # -- 66. exact phrase search over the positional inverted index
@@ -5417,10 +4975,7 @@ _def("asof_click_view", (_asof_fn, _ASOF_DUCK))
 _PHRASE = ("slow", "hash", "batch")
 
 
-def _phrase_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.index import phrase_search
-
-    _register(spark, sf_dir, "documents")
+def _phrase_fn(spark: SparkSession) -> DataFrame:
     # explicit top_n ≥ any SF's hit count (fixture hits are single-digit
     # per 5k docs; the bound engages the partial-top-k plan shape without
     # changing a row — r6 VERDICT task 1)
@@ -5462,7 +5017,7 @@ ORDER BY rank
 """
 
 
-_def("phrase_search", (_phrase_fn, _phrase_duck_sql()))
+_def("phrase_search", _phrase_fn, _phrase_duck_sql(), "documents")
 
 
 # -- 67. turn grounding (operators/grounding.py): per assistant turn, the
@@ -5472,10 +5027,8 @@ _def("phrase_search", (_phrase_fn, _phrase_duck_sql()))
 #        Exactness: integer gram counts; ppm = floor of one double
 #        division of exact integers (correctly rounded identically in
 #        both engines); zero-bigram turns emit NULL ppm in both.
-def _grounding_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.grounding import turn_grounding
-
-    return turn_grounding(_conv_stats_shaped(spark, sf_dir))
+def _grounding_fn(spark: SparkSession) -> DataFrame:
+    return turn_grounding(_conv_stats_shaped(spark))
 
 
 def _grounding_duck_sql() -> str:
@@ -5529,7 +5082,7 @@ ORDER BY aa.conv_id, aa.turn_idx
 """
 
 
-_def("turn_grounding", (_grounding_fn, _grounding_duck_sql()))
+_def("turn_grounding", _grounding_fn, _grounding_duck_sql(), "documents")
 
 
 # -- 68. directed n-gram containment (operators/dedupe.py
@@ -5540,7 +5093,7 @@ _def("turn_grounding", (_grounding_fn, _grounding_duck_sql()))
 #        exact ppm; top-20 by strongest direction.
 def _containment_duck_sql() -> str:
     words = _words_expr("text", "duckdb")
-    sh = _shingles_expr("words", "duckdb")
+    sh = _shingles_expr("words")
     return f"""
 WITH docs AS (
   SELECT doc_id, shingles, len(shingles) AS n_sh FROM
@@ -5567,19 +5120,14 @@ LIMIT 20
 """
 
 
-def _containment_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _containment_fn(spark: SparkSession) -> DataFrame:
     pairs = dedupe.containment_pairs(spark.table("documents"))
     return (pairs.orderBy(
         F.desc(F.greatest("contain_a_in_b_ppm", "contain_b_in_a_ppm")),
         F.asc("doc_a"), F.asc("doc_b")).limit(20))
 
 
-_def("dedup_containment", (_containment_fn, _containment_duck_sql()))
+_def("dedup_containment", _containment_fn, _containment_duck_sql(), "documents")
 
 
 # -- 69. SCD2 dimension history (operators/snapshot.py scd2_history):
@@ -5590,12 +5138,7 @@ _def("dedup_containment", (_containment_fn, _containment_duck_sql()))
 #        join representation lesson). Total per-key order via the
 #        event_id tiebreak; attribute comparisons are NULL-safe
 #        (IS DISTINCT FROM) in both engines.
-def _scd2_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators.snapshot import scd2_history
-
-    _register(spark, sf_dir, "events")
+def _scd2_fn(spark: SparkSession) -> DataFrame:
     src = (spark.table("events").filter("event_type = 'click'")
            .select("user_id", "ts", "event_id",
                    F.expr("CAST(floor(value / 25.0) AS INT)").alias("state")))
@@ -5625,7 +5168,7 @@ ORDER BY user_id, valid_from_us
 """
 
 
-_def("scd2_user_state", (_scd2_fn, _SCD2_DUCK))
+_def("scd2_user_state", _scd2_fn, _SCD2_DUCK, "events")
 
 
 # -- 70. curriculum schedule (operators/sampling.py curriculum_order):
@@ -5639,10 +5182,7 @@ _CURR_FRAC = ("CAST(CAST('0x' || substr(md5(concat_ws('|', '{salt}', "
               f"/ {float(16 ** 8)}")
 
 
-def _curriculum_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _curriculum_fn(spark: SparkSession) -> DataFrame:
     return sampling.curriculum_order(
         spark.table("documents").select("doc_id", "n_chars"),
         "n_chars", n_buckets=8)
@@ -5668,7 +5208,7 @@ ORDER BY schedule_pos
 """
 
 
-_def("curriculum_schedule", (_curriculum_fn, _curriculum_duck_sql()))
+_def("curriculum_schedule", _curriculum_fn, _curriculum_duck_sql(), "documents")
 
 
 # -- 71. systematic weighted sampling (operators/sampling.py
@@ -5681,12 +5221,7 @@ _def("curriculum_schedule", (_curriculum_fn, _curriculum_duck_sql()))
 _SWS_N = 50
 
 
-def _sws_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators import sampling
-
-    _register(spark, sf_dir, "documents")
+def _sws_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select(
         "doc_id", (F.col("n_chars") + 1).cast("bigint").alias("w"))
     return (sampling.systematic_weighted_sample(docs, _SWS_N, "w")
@@ -5718,7 +5253,7 @@ ORDER BY doc_id
 """
 
 
-_def("weighted_sample_sus", (_sws_fn, _sws_duck_sql()))
+_def("weighted_sample_sus", _sws_fn, _sws_duck_sql(), "documents")
 
 
 # -- 72. boundary stitching (operators/dedupe.py stitch_pairs): shard-
@@ -5730,10 +5265,7 @@ _def("weighted_sample_sus", (_sws_fn, _sws_duck_sql()))
 _STITCH_K, _STITCH_CAP = 3, 20
 
 
-def _stitch_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _stitch_fn(spark: SparkSession) -> DataFrame:
     return (dedupe.stitch_pairs(spark.table("documents"), k=_STITCH_K,
                                 max_boundary_df=_STITCH_CAP)
             .orderBy("doc_a", "doc_b", "boundary"))
@@ -5768,7 +5300,7 @@ ORDER BY t2.doc_a, h2.doc_b, t2.boundary
 """
 
 
-_def("stitch_boundaries", (_stitch_fn, _stitch_duck_sql()))
+_def("stitch_boundaries", _stitch_fn, _stitch_duck_sql(), "documents")
 
 
 # -- 73. exact grouped percentiles (operators/metrics.py exact_quantiles):
@@ -5778,10 +5310,7 @@ _def("stitch_boundaries", (_stitch_fn, _stitch_duck_sql()))
 #        the same rank construction, NOT DuckDB's quantile_disc builtin —
 #        builtin interpolation conventions differ; the rank math is the
 #        portable contract.
-def _quantiles_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.metrics import exact_quantiles
-
-    _register(spark, sf_dir, "documents")
+def _quantiles_fn(spark: SparkSession) -> DataFrame:
     return exact_quantiles(spark.table("documents"), "n_chars",
                            group_cols=("lang",), percents=(50, 90, 99))
 
@@ -5803,7 +5332,7 @@ ORDER BY lang
 """
 
 
-_def("length_quantiles", (_quantiles_fn, _QUANTILES_DUCK))
+_def("length_quantiles", _quantiles_fn, _QUANTILES_DUCK, "documents")
 
 
 # -- 74. right-to-be-forgotten rewrite (pipeline/maintenance.py
@@ -5812,14 +5341,7 @@ _def("length_quantiles", (_quantiles_fn, _QUANTILES_DUCK))
 #        the maintenance crash contract, then aggregate the SURVIVING
 #        table — the oracle recomputes the survivors in SQL, so a
 #        logical-only delete (or an over-delete) hash-mismatches.
-def _forget_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.pipeline.maintenance import forget_rewrite
-
-    _register(spark, sf_dir, "events")
+def _forget_fn(spark: SparkSession) -> DataFrame:
     path = os.path.join(tempfile.mkdtemp(prefix="rs_forget_oracle_"), "t")
     spark.table("events").write.parquet(path)
     forget = (spark.table("events")
@@ -5855,7 +5377,7 @@ ORDER BY event_type
 """
 
 
-_def("forget_rewrite_accounting", (_forget_fn, _FORGET_DUCK))
+_def("forget_rewrite_accounting", _forget_fn, _FORGET_DUCK, "events")
 
 
 # -- 75. composed pretraining-stream curation (operators/curation.py
@@ -5869,10 +5391,7 @@ _def("forget_rewrite_accounting", (_forget_fn, _FORGET_DUCK))
 _PRETRAIN_CAP, _PRETRAIN_MIN, _PRETRAIN_NB, _PRETRAIN_BUDGET = 15, 20, 8, 2048
 
 
-def _pretrain_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.curation import curate_pretrain_stream
-
-    _register(spark, sf_dir, "documents")
+def _pretrain_fn(spark: SparkSession) -> DataFrame:
     return curate_pretrain_stream(
         spark.table("documents").select("doc_id", "text", "lang", "source"),
         min_tokens=_PRETRAIN_MIN, per_source_cap=_PRETRAIN_CAP,
@@ -5880,7 +5399,6 @@ def _pretrain_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pretrain_duck_sql() -> str:
-    from ragstudio_spark.operators.curation import CHARS_PER_TOKEN
     frac = _CURR_FRAC.format(salt="curriculum")
     return f"""
 WITH canon AS (
@@ -5928,7 +5446,7 @@ FROM cum
 """
 
 
-_def("curate_pretrain_stream", (_pretrain_fn, _pretrain_duck_sql()))
+_def("curate_pretrain_stream", _pretrain_fn, _pretrain_duck_sql(), "documents")
 
 
 # -- 76. skew diagnostic (operators/skew.py skew_report + heavy_keys):
@@ -5940,12 +5458,7 @@ _def("curate_pretrain_stream", (_pretrain_fn, _pretrain_duck_sql()))
 #        exceeds 1e6·max_count (the naive 1e6·max·n_keys wraps bigint
 #        at trillion-row scale — same family as the mixture_plan and
 #        SUS guards).
-def _skew_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ragstudio_spark.operators.skew import heavy_keys, skew_report
-
-    _register(spark, sf_dir, "events")
+def _skew_fn(spark: SparkSession) -> DataFrame:
     # quadratic residue shaping: key = (user_id*user_id) % 101 — a
     # deterministic non-uniform key distribution (residues collide)
     shaped = spark.table("events").select(
@@ -5994,7 +5507,7 @@ ORDER BY c.key_count DESC, c.conv_id ASC
 """
 
 
-_def("skew_diagnostic", (_skew_fn, _SKEW_DUCK))
+_def("skew_diagnostic", _skew_fn, _SKEW_DUCK, "events")
 
 
 # -- 77. boolean term search (operators/index.py terms_search): AND
@@ -6002,10 +5515,7 @@ _def("skew_diagnostic", (_skew_fn, _SKEW_DUCK))
 #        cheap pre-screen a phrase query runs at scale. Same terms as
 #        the phrase fixture so the two tiers are directly comparable
 #        (AND matches ⊇ phrase matches).
-def _terms_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.index import terms_search
-
-    _register(spark, sf_dir, "documents")
+def _terms_fn(spark: SparkSession) -> DataFrame:
     # explicit top_n ≥ any SF's hit count (same rationale as _phrase_fn)
     return terms_search(spark.table("documents"), list(_PHRASE),
                         top_n=1_000_000)
@@ -6033,7 +5543,7 @@ ORDER BY rank
 """
 
 
-_def("terms_search_all", (_terms_fn, _terms_duck_sql()))
+_def("terms_search_all", _terms_fn, _terms_duck_sql(), "documents")
 
 
 # -- 78. ordered funnel (operators/sessions.py funnel): per user, the
@@ -6042,10 +5552,7 @@ _def("terms_search_all", (_terms_fn, _terms_duck_sql()))
 #        timestamp at each step maximizes remaining options). One
 #        filtered min-aggregate per step joined back on the user key;
 #        epoch-micro outputs.
-def _funnel_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.sessions import funnel
-
-    _register(spark, sf_dir, "events")
+def _funnel_fn(spark: SparkSession) -> DataFrame:
     return funnel(spark.table("events"), ["view", "click", "purchase"])
 
 
@@ -6082,7 +5589,7 @@ ORDER BY u.user_id
 """
 
 
-_def("funnel_view_click_purchase", (_funnel_fn, _FUNNEL_DUCK))
+_def("funnel_view_click_purchase", _funnel_fn, _FUNNEL_DUCK, "events")
 
 
 # -- 79. cohort retention (operators/sessions.py cohort_retention):
@@ -6090,10 +5597,7 @@ _def("funnel_view_click_purchase", (_funnel_fn, _FUNNEL_DUCK))
 #        7·86400·1e6) — never calendar date_trunc, whose week-start and
 #        timezone conventions differ across engines. Offset 0 is the
 #        cohort definition (always 1e6 ppm).
-def _cohort_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.sessions import cohort_retention
-
-    _register(spark, sf_dir, "events")
+def _cohort_fn(spark: SparkSession) -> DataFrame:
     return cohort_retention(spark.table("events"), period_days=7)
 
 
@@ -6123,17 +5627,14 @@ ORDER BY cohort_period, period_offset
 """
 
 
-_def("cohort_retention_weekly", (_cohort_fn, _COHORT_DUCK))
+_def("cohort_retention_weekly", _cohort_fn, _COHORT_DUCK, "events")
 
 
 # -- 80. event transition matrix (operators/sessions.py
 #        transition_matrix): first-order Markov counts between
 #        consecutive same-user events, row-normalized in exact integer
 #        ppm; |types|² output regardless of corpus size.
-def _trans_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.sessions import transition_matrix
-
-    _register(spark, sf_dir, "events")
+def _trans_fn(spark: SparkSession) -> DataFrame:
     return transition_matrix(spark.table("events"))
 
 
@@ -6159,7 +5660,7 @@ ORDER BY c.from_type, c.to_type
 """
 
 
-_def("event_transition_matrix", (_trans_fn, _TRANS_DUCK))
+_def("event_transition_matrix", _trans_fn, _TRANS_DUCK, "events")
 
 
 # -- 81. nDCG@k (operators/retrieval.py ndcg_eval): the graded rank
@@ -6172,12 +5673,7 @@ _def("event_transition_matrix", (_trans_fn, _TRANS_DUCK))
 _NDCG_K = 10
 
 
-def _ndcg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window, functions as F
-
-    from ragstudio_spark.operators import retrieval
-
-    _register(spark, sf_dir, "documents")
+def _ndcg_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents").select("doc_id")
     qs = spark.range(8).select(F.col("id").alias("query_id"))
     w = Window.partitionBy("query_id").orderBy("_m", "doc_id")
@@ -6195,8 +5691,6 @@ def _ndcg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_duck_sql() -> str:
-    import math
-
     discounts = [1.0 / math.log2(i + 1) for i in range(1, _NDCG_K + 1)]
     prefix = []
     acc = 0.0
@@ -6255,7 +5749,7 @@ ORDER BY query_id
 """
 
 
-_def("ndcg_at_k", (_ndcg_fn, _ndcg_duck_sql()))
+_def("ndcg_at_k", _ndcg_fn, _ndcg_duck_sql(), "documents")
 
 
 # -- 82. distribution drift (operators/snapshot.py distribution_drift):
@@ -6263,10 +5757,7 @@ _def("ndcg_at_k", (_ndcg_fn, _ndcg_duck_sql()))
 #        full refresh — total variation in exact ppm (PSI needs runtime
 #        ln; TV is the integer-exact drift alarm). Vanished/appeared
 #        buckets survive the full outer join with share 0.
-def _drift_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.snapshot import distribution_drift
-
-    _register(spark, sf_dir, "documents")
+def _drift_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
     return distribution_drift(docs.filter("doc_id % 2 = 0"), docs, "lang")
 
@@ -6310,17 +5801,14 @@ ORDER BY lang
 """
 
 
-_def("distribution_drift_langs", (_drift_fn, _DRIFT_DUCK))
+_def("distribution_drift_langs", _drift_fn, _DRIFT_DUCK, "documents")
 
 
 # -- 83. join-cardinality prediction (operators/snapshot.py
 #        join_cardinality): exact |A ⋈ B| = Σ cA(k)·cB(k) from per-key
 #        counts BEFORE any row shuffles — the skew-planning number —
 #        with the top contributing keys. clicks ⋈ views on user_id.
-def _joincard_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.snapshot import join_cardinality
-
-    _register(spark, sf_dir, "events")
+def _joincard_fn(spark: SparkSession) -> DataFrame:
     ev = spark.table("events")
     return join_cardinality(ev.filter("event_type = 'click'"),
                             ev.filter("event_type = 'view'"),
@@ -6348,7 +5836,7 @@ LIMIT 10
 """
 
 
-_def("join_cardinality_topkeys", (_joincard_fn, _JOINCARD_DUCK))
+_def("join_cardinality_topkeys", _joincard_fn, _JOINCARD_DUCK, "events")
 
 
 # -- 84. edit-distance near-dup (operators/dedupe.py
@@ -6362,10 +5850,7 @@ _def("join_cardinality_topkeys", (_joincard_fn, _JOINCARD_DUCK))
 #        agree exactly; a non-ASCII corpus refresh therefore narrows
 #        the gate instead of hash-breaking it. 25 close pairs at
 #        sf0.01, 256 at sf0.1 (probed; the fixture is all-ASCII today).
-def _editdist_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators import dedupe
-
-    _register(spark, sf_dir, "documents")
+def _editdist_fn(spark: SparkSession) -> DataFrame:
     ascii_docs = spark.table("documents").filter(
         "length(text) = octet_length(text)")
     return (dedupe.edit_distance_pairs(ascii_docs)
@@ -6388,7 +5873,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-_def("dedup_edit_distance", (_editdist_fn, _EDITDIST_DUCK))
+_def("dedup_edit_distance", _editdist_fn, _EDITDIST_DUCK, "documents")
 
 
 # -- 85. data-quality expectations (operators/expectations.py): the
@@ -6408,10 +5893,7 @@ _EXPECT_RULES = [
 ]
 
 
-def _expect_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.expectations import expectations_report
-
-    _register(spark, sf_dir, "events")
+def _expect_fn(spark: SparkSession) -> DataFrame:
     return expectations_report(spark.table("events"), _EXPECT_RULES)
 
 
@@ -6452,7 +5934,7 @@ ORDER BY rule_id
 """
 
 
-_def("expectations_events", (_expect_fn, _EXPECT_DUCK))
+_def("expectations_events", _expect_fn, _EXPECT_DUCK, "events")
 
 
 # -- 86. rolling active users (operators/sessions.py rolling_active):
@@ -6461,10 +5943,7 @@ _def("expectations_events", (_expect_fn, _EXPECT_DUCK))
 #        votes for the 7 report days it covers (bounded W× expansion of
 #        the already-collapsed day table, never the event stream).
 #        Epoch-integer days, the cohort convention.
-def _rolling_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ragstudio_spark.operators.sessions import rolling_active
-
-    _register(spark, sf_dir, "events")
+def _rolling_fn(spark: SparkSession) -> DataFrame:
     return rolling_active(spark.table("events"), window_days=7)
 
 
@@ -6499,7 +5978,7 @@ ORDER BY day
 """
 
 
-_def("rolling_active_users", (_rolling_fn, _ROLLING_DUCK))
+_def("rolling_active_users", _rolling_fn, _ROLLING_DUCK, "events")
 
 
 # --------------------------------------------------------------------------

@@ -1,6 +1,7 @@
-"""Local replica of the driver's correctness gate: run each entry query on
-Spark and its oracle on DuckDB at sf0.01, compare row count + column names +
-order-insensitive values.
+"""Local replica of the driver's correctness gate: run each
+``__spark_entry__.queries()`` entry on Spark and its oracle on DuckDB at
+sf0.01, compare row count + column names + order-insensitive values; an
+entry without an oracle (rows-only) must build and collect.
 
 Usage: python scripts/check_oracle.py [--sf 0.1] [--json OUT.json] [names...]
 
@@ -23,7 +24,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-from ragstudio_spark import entry_queries
+import __spark_entry__ as entry
 from ragstudio_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -75,8 +76,8 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs = entry_queries.queries()
-    oracles = entry_queries.oracle_sql()
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
     unknown = only - set(qs)
     if unknown:  # a typo must not yield a vacuous green gate
         sys.exit(f"unknown query names: {sorted(unknown)}")

@@ -1,0 +1,62 @@
+"""The driver contract of ``__spark_entry__``: the oracle text and the query
+key set are pinned by hash, and every entry builds on sf0.001 with the
+column set its DuckDB oracle describes (the driver compares columns by
+name, not position)."""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import os
+import tempfile
+
+import pytest
+
+import __spark_entry__ as entry
+from ragstudio_spark import entry_queries
+
+SF_DIR = "/root/testdata/sf0.001"
+ORACLE_SHA = "52eaf0e55fcfc160d476465eb0b6710e6516ffd78d1f32cdc1390fa59bfc5fa8"
+KEYS_SHA = "7d43647d5ecf60dda44d8546e8589b923e6b78bd95ae93fbef22382442665e43"
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+
+
+def _sha(obj) -> str:
+    return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
+
+
+def test_oracle_sql_text_pinned():
+    oracles = entry_queries.oracle_sql()
+    assert len(oracles) == 115
+    assert _sha(list(oracles.items())) == ORACLE_SHA
+    assert entry.oracle_sql() == oracles
+
+
+def test_query_keys_pinned():
+    keys = list(entry.queries())
+    assert len(keys) == 124
+    assert _sha(keys) == KEYS_SHA
+    assert set(entry.oracle_sql()) <= set(keys)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 testdata absent")
+def test_every_entry_builds_with_oracle_columns(spark, tmp_path, monkeypatch):
+    import duckdb
+
+    # entries that stage a table (cache, forget-rewrite, vector store) do
+    # so under tempfile's directory; keep those stores inside tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    oracles = entry.oracle_sql()
+    mismatches = {}
+    for name, fn in entry.queries().items():
+        cols = sorted(fn(spark, SF_DIR).columns)
+        if name in oracles:
+            want = sorted(r[0] for r in
+                          con.execute(f"DESCRIBE {oracles[name]}").fetchall())
+            if cols != want:
+                mismatches[name] = (cols, want)
+    assert not mismatches
