@@ -15,9 +15,11 @@ values):
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
 import re
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -3635,10 +3637,17 @@ _def("preference_pairs", _dpo_fn, _DPO_DUCK, "events")
 #        pure SQL (latest-event-per-key window with the del>set tie
 #        rank, TTL bound, clear/revive join). Values are md5 hex — no
 #        encoding or float hazards.
+def _scratch_dir(prefix: str) -> str:
+    """A temp directory for an entry's staged table, removed when the
+    process exits (the returned frame reads from it until then)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _cache_fn(spark: SparkSession) -> DataFrame:
     docs = spark.table("documents")
-    path = os.path.join(tempfile.mkdtemp(prefix="rs_cache_oracle_"),
-                        "store")
+    path = os.path.join(_scratch_dir("rs_cache_oracle_"), "store")
     # all four set families land in ONE multi-prefix append (per-row
     # prefix/ts columns) — the event replay is oracle setup, and six
     # sequential write jobs dominated the query's bench cost (r6)
@@ -5342,7 +5351,7 @@ _def("length_quantiles", _quantiles_fn, _QUANTILES_DUCK, "documents")
 #        table — the oracle recomputes the survivors in SQL, so a
 #        logical-only delete (or an over-delete) hash-mismatches.
 def _forget_fn(spark: SparkSession) -> DataFrame:
-    path = os.path.join(tempfile.mkdtemp(prefix="rs_forget_oracle_"), "t")
+    path = os.path.join(_scratch_dir("rs_forget_oracle_"), "t")
     spark.table("events").write.parquet(path)
     forget = (spark.table("events")
               .filter("user_id % 97 = 0").select("user_id").distinct())

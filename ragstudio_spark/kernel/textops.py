@@ -6,6 +6,7 @@ operator — citations point at the reference file:line each function matches:
 * ``clean_text``                 — src/workflows/ingest/normalize.py:20-43
 * ``detect_ocr_quality``         — src/workflows/ingest/ocr_repair.py:217-259
 * ``ocr_rule_based_repair``      — src/workflows/ingest/ocr_repair.py:99-134
+* ``normalize``                  — src/workflows/ingest/normalize.py:58-120
 * ``clean_pdf_text``             — src/workflows/ingest/pdf_cleaner.py:18-67
 * ``fix_vertical_text``          — src/workflows/ingest/pdf_cleaner.py:70-125
 * ``clean_table_artifacts``      — src/workflows/ingest/pdf_cleaner.py:144-163
@@ -24,6 +25,8 @@ from __future__ import annotations
 
 import re
 import unicodedata
+
+from ragstudio_spark.kernel import langid
 
 # --- normalize.py semantics -------------------------------------------------
 
@@ -149,6 +152,25 @@ def repair_text(text: str) -> tuple[str, dict]:
         "repair_score": corrections / max(len(original), 1),
         "method": "rule_based",
     }
+
+
+def normalize(text: str, apply_repair: bool = False) -> tuple:
+    """``normalize_document`` without its language allow-list verdict:
+    clean → OCR-quality check → optional rule-based repair → language ID.
+    Returns (text, language, quality_score, needs_repair, repair_applied,
+    corrections_applied); text that cleans to empty scores 1.0 with no
+    language."""
+    cleaned = clean_text(text or "")
+    if not cleaned:
+        return cleaned, None, 1.0, False, False, 0
+    q = detect_ocr_quality(cleaned)
+    needs_repair = bool(q["needs_repair"])
+    repaired, corrections = False, 0
+    if apply_repair and needs_repair:
+        cleaned, metrics = repair_text(cleaned)
+        repaired, corrections = True, int(metrics["corrections_applied"])
+    return (cleaned, langid.detect_language(cleaned), float(q["quality_score"]),
+            needs_repair, repaired, corrections)
 
 
 # --- pdf_cleaner.py semantics -------------------------------------------------

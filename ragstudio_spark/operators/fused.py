@@ -36,7 +36,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ragstudio_spark.kernel import bpe
 from ragstudio_spark.kernel import chunk as kchunk
-from ragstudio_spark.kernel import html_extract, langid
+from ragstudio_spark.kernel import html_extract
 from ragstudio_spark.kernel import profile as kprofile
 from ragstudio_spark.kernel import textops
 
@@ -75,6 +75,9 @@ FUSED_SCHEMA = (
     "chunking_strategy:string,requested_strategy:string,chunk_size:int,"
     "chunk_overlap:int,b_start:int,b_len:int>>"
 )
+
+# top-level column names (the struct field list has no ", " in it)
+_FUSED_COLUMNS = [c.split(" ", 1)[0] for c in FUSED_SCHEMA.split(", ")]
 
 _ENGINES = {"html": "html_readability", "pdf": "pdf_cleaner",
             "markdown": "identity", "plain": "identity", "empty": "none"}
@@ -120,7 +123,7 @@ def process_turns(
     ``materialize_text=False`` returns the raw wire form: chunk ``text`` is
     NULL wherever it equals its byte-span slice of the ``base_utf8`` column
     (kept in the output) — consumers slice it back themselves with
-    ``chunk_text_expr``/``sliced_chunk_text``. The pipeline uses this to
+    ``chunk_text_expr``/``public_chunk_cols``. The pipeline uses this to
     defer slicing to AFTER the quality gate and the explode, so the chunk
     strings are copied exactly once; the default form rebuilds the public
     chunk structs immediately (convenient, but Catalyst inlines the rebuild
@@ -142,6 +145,7 @@ def process_turns(
         # of the default hot path
         schema += (", stage_trace array<struct<"
                    "stage:string,engine:string,duration_ms:double>>")
+    columns = _FUSED_COLUMNS + (["stage_trace"] if with_trace else [])
 
     def process_one(conv_id, turn_idx, text, ctype):
         from time import perf_counter
@@ -153,26 +157,18 @@ def process_turns(
                 trace.append((stage, engine, (perf_counter() - t0) * 1000.0))
 
         raw = text or ""
+        engine = _ENGINES.get(ctype, "identity")
         t0 = perf_counter() if with_trace else 0.0
         extracted = _extract_one(raw, ctype)
-        mark("ingestion", _ENGINES.get(ctype, "identity"), t0)
+        mark("ingestion", engine, t0)
 
-        language = None
-        quality_score = 1.0
-        needs_repair = False
-        repaired = False
+        language, quality_score, needs_repair, repaired = None, 1.0, False, False
         if with_normalize:
             t0 = perf_counter() if with_trace else 0.0
-            cleaned = textops.clean_text(extracted)
-            if cleaned:
-                q = textops.detect_ocr_quality(cleaned)
-                quality_score = float(q["quality_score"])
-                needs_repair = bool(q["needs_repair"])
-                if apply_repair and needs_repair:
-                    cleaned, _m = textops.repair_text(cleaned)
-                    repaired = True
-                    extracted = cleaned
-                language = langid.detect_language(cleaned)
+            (cleaned, language, quality_score, needs_repair, repaired,
+             _corrections) = textops.normalize(extracted, apply_repair)
+            if repaired:
+                extracted = cleaned
             mark("ocr_detection", "rule_based", t0)
 
         reason = None
@@ -259,57 +255,35 @@ def process_turns(
                          c["sentence_count"], c["total_chunks"],
                          c["chunking_strategy"], c["requested_strategy"],
                          c["chunk_size"], c["chunk_overlap"], bs, bl))
-        return (language, quality_score, needs_repair, repaired,
-                len(extracted), stats, rows, base if chunks else None,
-                reason, trace)
+        return (conv_id, turn_idx, ctype, engine, raw[:200], language,
+                quality_score, needs_repair, repaired, len(extracted),
+                stats["extraction_fixes"], stats["page_numbers_removed"], None,
+                reason, base.encode("utf-8") if chunks else None, rows,
+                *((trace,) if with_trace else ()))
+
+    def fault_row(conv_id, turn_idx, text, ctype, exc):
+        """The row a turn gets when it raises under skip/quarantine: the
+        error text, no chunks, neutral metrics."""
+        error = f"{type(exc).__name__}: {exc}"[:500]
+        return (conv_id, turn_idx, ctype, _ENGINES.get(ctype, "identity"),
+                (text or "")[:200], None, 0.0, False, False, 0, 0, 0, error,
+                None, None, [], *(([],) if with_trace else ()))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "conv_id", "turn_idx", "content_type", "extraction_engine",
-                "text_head", "language", "quality_score", "needs_repair",
-                "repair_applied", "extracted_chars", "extraction_fixes",
-                "page_numbers_removed", "error", "chunking_reason",
-                "base_utf8", "chunks",
-                *(["stage_trace"] if with_trace else []))}
-            for conv_id, turn_idx, text, ctype in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["content_type"]
-            ):
-                error = None
+            rows = []
+            for turn in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"],
+                            pdf["content_type"]):
                 try:
-                    (language, quality_score, needs_repair, repaired,
-                     n_extracted, stats, chunks, base, reason,
-                     trace) = process_one(conv_id, turn_idx, text, ctype)
+                    rows.append(process_one(*turn))
                 except Exception as exc:  # noqa: BLE001 — row-level fault barrier
                     if on_error == "fail_fast":
                         raise
-                    error = f"{type(exc).__name__}: {exc}"[:500]
-                    language, quality_score = None, 0.0
-                    needs_repair, repaired, n_extracted = False, False, 0
-                    stats = {"extraction_fixes": 0, "page_numbers_removed": 0}
-                    chunks, base, reason = [], None, None
-                    trace = [] if with_trace else None
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["content_type"].append(ctype)
-                out["extraction_engine"].append(_ENGINES.get(ctype, "identity"))
-                out["text_head"].append((text or "")[:200])
-                out["language"].append(language)
-                out["quality_score"].append(quality_score)
-                out["needs_repair"].append(needs_repair)
-                out["repair_applied"].append(repaired)
-                out["extracted_chars"].append(n_extracted)
-                out["extraction_fixes"].append(stats["extraction_fixes"])
-                out["page_numbers_removed"].append(stats["page_numbers_removed"])
-                out["error"].append(error)
-                out["chunking_reason"].append(reason)
-                out["base_utf8"].append(base.encode("utf-8") if base is not None else None)
-                out["chunks"].append(chunks)
-                if with_trace:
-                    out["stage_trace"].append(trace)
+                    rows.append(fault_row(*turn, exc))
+            out = pd.DataFrame(rows, columns=columns)
             if carry_ts:
                 out["ts"] = list(pdf["ts"])
-            yield pd.DataFrame(out)
+            yield out
 
     out = df.mapInPandas(run, schema=schema)
     return _materialize_chunk_text(out) if materialize_text else out
@@ -332,24 +306,14 @@ def _wire_text(c: Column, base: Column) -> Column:
     )
 
 
-def sliced_chunk_text(chunk_col: str = "chunk",
-                      base_col: str = "base_utf8") -> Column:
-    """Column form of :func:`chunk_text_expr` for post-explode rows."""
-    return _wire_text(F.col(chunk_col), F.col(base_col))
-
-
-def public_chunk_cols(chunk_col: str = "chunk",
-                      base_col: str = "base_utf8") -> list:
-    """Post-explode projection of the PUBLIC chunk fields from the wire
-    form (text sliced from base, transport-only b_* fields dropped). The
-    single source for every consumer of the wire format — batch
-    (pipeline/job.py) and streaming (streaming/jobs.py) must project
-    identically or their outputs silently diverge."""
-    return [
-        sliced_chunk_text(chunk_col, base_col).alias("text")
-        if f.name == "text" else F.col(f"{chunk_col}.{f.name}")
-        for f in CHUNK_STRUCT.fields
-    ]
+def public_chunk_cols() -> list:
+    """Post-explode projection of the PUBLIC chunk fields of a ``chunk``
+    wire struct (text sliced from ``base_utf8``, transport-only b_* fields
+    dropped) — the one projection every published chunk row goes through
+    (pipeline/job._published_chunks)."""
+    return [_wire_text(F.col("chunk"), F.col("base_utf8")).alias("text")
+            if f.name == "text" else F.col(f"chunk.{f.name}")
+            for f in CHUNK_STRUCT.fields]
 
 
 def _materialize_chunk_text(df: DataFrame) -> DataFrame:

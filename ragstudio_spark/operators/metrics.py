@@ -113,16 +113,26 @@ def error_taxonomy(metrics: DataFrame, error_col: str = "error") -> DataFrame:
     )
 
 
+#: turn status → (its run counter, re-run by a retry): the one taxonomy
+#: behind run_counters, the lineage table, run.json and history's retry keys
+TURN_STATUSES = {"success": ("success", False),
+                 "failed_quality": ("failed", True), "failed_error": ("failed", True),
+                 "empty": ("skipped", False), "skipped": ("skipped", True)}
+STATUS_COUNTERS = ("success", "failed", "skipped")
+RETRYABLE_STATUSES = [s for s, (_c, retry) in TURN_STATUSES.items() if retry]
+
+
+def status_counts() -> list:
+    """The success / failed / skipped turn counts of the status column."""
+    return [F.sum(F.when(F.col("status").isin(
+                [s for s, (c, _r) in TURN_STATUSES.items() if c == counter]), 1)
+                  .otherwise(0)).alias(counter)
+            for counter in STATUS_COUNTERS]
+
+
 def run_counters(metrics: DataFrame) -> DataFrame:
     """One-row status pivot with success rate (PipelineStats analogue)."""
-    agg = metrics.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("status") == "success", 1).otherwise(0)).alias("success"),
-        F.sum(F.when(F.col("status").isin("failed_quality", "failed_error"), 1)
-              .otherwise(0)).alias("failed"),
-        F.sum(F.when(F.col("status").isin("empty", "skipped"), 1).otherwise(0))
-        .alias("skipped"),
-    )
+    agg = metrics.agg(F.count("*").alias("total"), *status_counts())
     return agg.withColumn(
         "success_rate",
         F.when(F.col("total") > 0, F.col("success") / F.col("total")).otherwise(0.0),

@@ -2,8 +2,9 @@
 
 Implements ``normalize_document`` (reference: src/workflows/ingest/
 normalize.py:58-120) as a pandas UDF returning a typed struct instead of a
-mutated object: NFKC clean → OCR-issue detection → optional rule-based
-repair → language detection → allow-list verdict. The *filter* itself is a
+mutated object: ``kernel.textops.normalize`` (NFKC clean → OCR-issue
+detection → optional rule-based repair → language detection, the same call
+the fused hop makes) → allow-list verdict. The *filter* itself is a
 separate JVM-side ``filter()`` on the struct field so Catalyst can push it.
 
 By default the extract+chunk hot path only uses the metrics (the reference's
@@ -20,7 +21,7 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-from ragstudio_spark.kernel import langid, textops
+from ragstudio_spark.kernel import textops
 
 NORMALIZE_SCHEMA = StructType(
     [
@@ -34,25 +35,10 @@ NORMALIZE_SCHEMA = StructType(
 )
 
 
-def _normalize_one(text: str, apply_repair: bool) -> tuple:
-    cleaned = textops.clean_text(text or "")
-    q = textops.detect_ocr_quality(cleaned) if cleaned else {
-        "quality_score": 1.0, "needs_repair": False}
-    repaired = False
-    corrections = 0
-    if apply_repair and cleaned and q["needs_repair"]:
-        cleaned, metrics = textops.repair_text(cleaned)
-        repaired = True
-        corrections = int(metrics["corrections_applied"])
-    language = langid.detect_language(cleaned) if cleaned else None
-    return (cleaned, language, float(q["quality_score"]), bool(q["needs_repair"]),
-            repaired, corrections)
-
-
 def make_normalize_udf(apply_repair: bool = False):
     @F.pandas_udf(NORMALIZE_SCHEMA)
     def _normalize_udf(text: pd.Series) -> pd.DataFrame:
-        rows = [_normalize_one(t, apply_repair) for t in text]
+        rows = [textops.normalize(t, apply_repair) for t in text]
         return pd.DataFrame(rows, columns=[f.name for f in NORMALIZE_SCHEMA.fields])
 
     return _normalize_udf

@@ -12,26 +12,17 @@ DataFrame, mirroring the reference's error-table semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ragstudio_spark import sqlspec
 
 
-def text_quality_cols(text_expr: str, min_ratio: float = 0.4) -> dict[str, Column]:
-    """(valid_word_ratio, is_readable) columns for a SQL text expression."""
-    spec = sqlspec.readability_exprs(text_expr, "spark", min_ratio=min_ratio)
-    return {
-        "valid_word_ratio": F.expr(spec["valid_word_ratio"]),
-        "is_readable": F.expr(spec["is_readable"]),
-    }
-
-
 def with_text_quality(df: DataFrame, text_col: str = "extracted_text",
                       min_ratio: float = 0.4) -> DataFrame:
-    cols = text_quality_cols(text_col, min_ratio)
-    return df.withColumn("valid_word_ratio", cols["valid_word_ratio"]).withColumn(
-        "is_readable", cols["is_readable"]
-    )
+    """Add (valid_word_ratio, is_readable) for a SQL text expression."""
+    spec = sqlspec.readability_exprs(text_col, "spark", min_ratio=min_ratio)
+    return (df.withColumn("valid_word_ratio", F.expr(spec["valid_word_ratio"]))
+            .withColumn("is_readable", F.expr(spec["is_readable"])))
 
 
 def with_chunks_gate(

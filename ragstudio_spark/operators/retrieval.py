@@ -28,6 +28,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ragstudio_spark.operators import similarity
+
 
 @dataclass
 class HybridConfig:
@@ -144,18 +146,11 @@ def cosine_scores(vectors: DataFrame, query: DataFrame,
                   id_col: str = "vec_id",
                   vec_col: str = "embedding") -> DataFrame:
     """Cosine similarity of every vector against ONE broadcast query row
-    (sequential left-fold dot product — fixed accumulation order)."""
-
-    def dot(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0).cast("double"), lambda acc, v: acc + v)
-
+    (``similarity.cosine``: sequential left-fold dot products — fixed
+    accumulation order)."""
     q = F.broadcast(query.select(F.col(vec_col).alias("_qvec")))
-    joined = vectors.crossJoin(q)
-    a, b = F.col(vec_col), F.col("_qvec")
-    cos = dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-    return joined.select(F.col(id_col), cos.alias("vec_score"))
+    cos = similarity.cosine(F.col(vec_col), F.col("_qvec"))
+    return vectors.crossJoin(q).select(F.col(id_col), cos.alias("vec_score"))
 
 
 def rrf_fuse(bm25_ranks: DataFrame, vec_ranks: DataFrame,

@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ragstudio_spark.operators.similarity import dot
+
 FORMAT_VERSION = 1
 
 STORE_SCHEMA = ("id string, text string, metadata map<string,string>, "
@@ -122,12 +124,6 @@ def search(store: DataFrame, query_embedding: list[float], k: int = 4) -> DataFr
     279-284): embeddings are caller-supplied, and one zero-norm row would
     otherwise kill the whole query under ANSI-mode division."""
     q = F.array(*[F.lit(float(x)).cast("float") for x in query_embedding])
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0).cast("double"), lambda acc, v: acc + v)
-
     e = F.col("embedding")
     score = dot(e, q) / ((F.sqrt(dot(e, e)) + 1e-10) * (F.sqrt(dot(q, q)) + 1e-10))
     scored = store.withColumn("score", score)

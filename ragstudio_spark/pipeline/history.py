@@ -25,6 +25,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window
 
+from ragstudio_spark.operators.metrics import RETRYABLE_STATUSES
 from ragstudio_spark.pipeline import lineage as _lineage
 
 
@@ -93,11 +94,10 @@ def last_failed_run(root: str) -> dict | None:
     return None
 
 
-def retry_turn_keys(spark: SparkSession, root: str,
-                    statuses: tuple[str, ...] = ("failed_quality", "failed_error",
-                                                 "skipped")) -> DataFrame | None:
-    """(conv_id, turn_idx) whose *latest* status is retryable. A turn's
-    newest metrics row wins (runs are ordered by run directory name)."""
+def retry_turn_keys(spark: SparkSession, root: str) -> DataFrame | None:
+    """(conv_id, turn_idx) whose *latest* status is retryable
+    (``metrics.RETRYABLE_STATUSES``). A turn's newest metrics row wins
+    (runs are ordered by run directory name)."""
     runs = _lineage.committed_runs(root)
     if not runs:
         return None
@@ -120,7 +120,7 @@ def retry_turn_keys(spark: SparkSession, root: str,
         metrics.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    return latest.filter(F.col("status").isin(list(statuses))).select(
+    return latest.filter(F.col("status").isin(RETRYABLE_STATUSES)).select(
         "conv_id", "turn_idx"
     )
 

@@ -10,6 +10,10 @@ IngestionPipelineWithMetadata.ingest_document):
       → quality gate on the chunk array    (JVM exprs, zero shuffle)
       → split: chunks (exploded) / quarantine / per-turn metrics
 
+Everything up to the turn status is ``_gated_turns`` and the chunk
+explode is ``_published_chunks``; ``streaming.transform_stream`` runs the
+same two on a stream, so batch and stream publish the same chunks.
+
 Adaptive mode (profile-driven strategy selection) runs inside the same
 fused hop using the kernel profiler/selector (identical formulas to the
 JVM column-expression operators in operators/profiler.py + strategy.py,
@@ -64,9 +68,6 @@ class PipelineOutput:
     tool_calls: DataFrame | None = None  # parsed tool payloads (opt-in)
 
 
-TURN_KEY = ("conv_id", "turn_idx")
-
-
 def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -> PipelineOutput:
     cfg = config or PipelineConfig()
 
@@ -78,46 +79,7 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
 
         tool_calls = toolcalls.parse_tool_calls(transcripts)
 
-    df = sniff.with_content_type(transcripts)
-
-    # wire form: spans-only chunks + base_utf8 (fused.py) — the gate folds
-    # over the slice expression and the chunk strings are copied exactly
-    # once, in the final post-explode projection below
-    turns = fused.process_turns(
-        df.select("conv_id", "turn_idx", "text", "content_type"),
-        strategy=cfg.strategy,
-        max_tokens=cfg.max_tokens,
-        overlap=cfg.overlap,
-        do_preprocess=cfg.preprocess,
-        with_normalize=cfg.with_normalize,
-        apply_repair=cfg.apply_repair,
-        on_error=cfg.on_error,
-        adaptive=cfg.adaptive,
-        with_trace=cfg.with_trace,
-        materialize_text=False,
-        bpe_merges_path=cfg.bpe_merges_path,
-        python_engine=cfg.python_engine,
-    )
-
-    if cfg.language_filter:
-        allowed = [x.lower() for x in cfg.language_filter]
-        turns = turns.filter(F.lower(F.col("language")).isin(allowed))
-
-    turns = quality_gate.with_chunks_gate(
-        turns,
-        chunks_col="chunks",
-        min_readable_ratio=cfg.min_readable_ratio,
-        chunk_min_ratio=cfg.chunk_min_ratio,
-        chunk_text=fused.chunk_text_expr("c"),
-    )
-    turns = turns.withColumn(
-        "status",
-        F.when(F.col("error").isNotNull(),
-               F.lit("skipped" if cfg.on_error == "skip" else "failed_error"))
-        .when(F.col("content_type") == "empty", F.lit("empty"))
-        .when(F.col("gate_passed"), F.lit("success"))
-        .otherwise(F.lit("failed_quality")),
-    )
+    turns = _gated_turns(transcripts, cfg)
 
     metrics = turns.select(
         "conv_id", "turn_idx", "content_type", "extraction_engine",
@@ -134,17 +96,10 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
         "error", "text_head",
     )
 
-    passing = turns.filter(F.col("status") == "success")
     meta = ["chunking_reason"] if cfg.adaptive else []
-    chunk_cols = fused.public_chunk_cols()
-    chunks = passing.select(
-        "conv_id", "turn_idx", "content_type", "extraction_engine",
-        "extraction_fixes", "page_numbers_removed", *meta, "base_utf8",
-        F.explode("chunks").alias("chunk"),
-    ).select(
-        "conv_id", "turn_idx", "content_type", "extraction_engine",
-        "extraction_fixes", "page_numbers_removed", *meta, *chunk_cols,
-    )
+    chunks = _published_chunks(
+        turns, "conv_id", "turn_idx", "content_type", "extraction_engine",
+        "extraction_fixes", "page_numbers_removed", *meta)
 
     if cfg.dedupe_chunks in (True, "exact", "near"):
         # corpus-wide exact dedup (training-data hygiene): one shuffle on
@@ -189,3 +144,61 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
 
     return PipelineOutput(chunks=chunks, metrics=metrics, quarantine=quarantine,
                           tool_calls=tool_calls)
+
+
+def _gated_turns(transcripts: DataFrame, cfg: PipelineConfig,
+                 carry_ts: bool = False) -> DataFrame:
+    """One row per turn: sniff → fused hop → language filter → chunk gate,
+    plus the turn's ``status`` (success / empty / failed_quality /
+    failed_error / skipped). ``carry_ts`` passes the input ``ts`` through
+    (event-time streaming)."""
+    df = sniff.with_content_type(transcripts)
+
+    # wire form: spans-only chunks + base_utf8 (fused.py) — the gate folds
+    # over the slice expression and the chunk strings are copied exactly
+    # once, in the post-explode projection of _published_chunks
+    turns = fused.process_turns(
+        df.select("conv_id", "turn_idx", "text", "content_type",
+                  *(["ts"] if carry_ts else [])),
+        strategy=cfg.strategy,
+        max_tokens=cfg.max_tokens,
+        overlap=cfg.overlap,
+        do_preprocess=cfg.preprocess,
+        with_normalize=cfg.with_normalize,
+        apply_repair=cfg.apply_repair,
+        carry_ts=carry_ts,
+        on_error=cfg.on_error,
+        adaptive=cfg.adaptive,
+        with_trace=cfg.with_trace,
+        materialize_text=False,
+        bpe_merges_path=cfg.bpe_merges_path,
+        python_engine=cfg.python_engine,
+    )
+
+    if cfg.language_filter:
+        allowed = [x.lower() for x in cfg.language_filter]
+        turns = turns.filter(F.lower(F.col("language")).isin(allowed))
+
+    turns = quality_gate.with_chunks_gate(
+        turns,
+        chunks_col="chunks",
+        min_readable_ratio=cfg.min_readable_ratio,
+        chunk_min_ratio=cfg.chunk_min_ratio,
+        chunk_text=fused.chunk_text_expr("c"),
+    )
+    return turns.withColumn(
+        "status",
+        F.when(F.col("error").isNotNull(),
+               F.lit("skipped" if cfg.on_error == "skip" else "failed_error"))
+        .when(F.col("content_type") == "empty", F.lit("empty"))
+        .when(F.col("gate_passed"), F.lit("success"))
+        .otherwise(F.lit("failed_quality")),
+    )
+
+
+def _published_chunks(turns: DataFrame, *cols: str) -> DataFrame:
+    """One row per chunk of every ``success`` turn: the turn columns
+    ``cols``, then the public chunk fields sliced from the wire form."""
+    return turns.filter(F.col("status") == "success").select(
+        *cols, "base_utf8", F.explode("chunks").alias("chunk"),
+    ).select(*cols, *fused.public_chunk_cols())

@@ -35,6 +35,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ragstudio_spark.operators import metrics as metrics_op
 from ragstudio_spark.pipeline.job import PipelineConfig, PipelineOutput, run_pipeline
 
 COMMIT_MARKER = "_COMMITTED"
@@ -150,31 +151,17 @@ def run_with_lineage(
     lineage = (
         spark.read.parquet(os.path.join(run_dir, "metrics"))
         .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("total_turns"),
-            F.sum(F.when(F.col("status") == "success", 1).otherwise(0)).alias("success"),
-            F.sum(F.when(F.col("status").isin("failed_quality", "failed_error"), 1)
-                  .otherwise(0)).alias("failed"),
-            F.sum(F.when(F.col("status").isin("empty", "skipped"), 1)
-                  .otherwise(0)).alias("skipped"),
-        )
+        .agg(F.count("*").alias("total_turns"), *metrics_op.status_counts())
         .withColumn("run_id", F.lit(run_id))
         .withColumn("ts", F.current_timestamp())
     )
     lineage.write.mode("overwrite").parquet(os.path.join(run_dir, "lineage"))
 
-    summary_rows = lineage.agg(
-        F.sum("total_turns").alias("total"),
-        F.sum("success").alias("success"),
-        F.sum("failed").alias("failed"),
-        F.sum("skipped").alias("skipped"),
-    ).collect()[0]
+    counters = ("total_turns", *metrics_op.STATUS_COUNTERS)
+    totals = lineage.agg(*(F.sum(c).alias(c) for c in counters)).collect()[0]
     summary = {
         "run_id": run_id,
-        "total_turns": summary_rows["total"] or 0,
-        "success": summary_rows["success"] or 0,
-        "failed": summary_rows["failed"] or 0,
-        "skipped": summary_rows["skipped"] or 0,
+        **{c: totals[c] or 0 for c in counters},
         "duration_s": round(time.time() - t0, 3),
         "status": "completed",
     }

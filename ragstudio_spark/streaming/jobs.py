@@ -1,9 +1,10 @@
 """Structured Streaming variant of the extract+chunk pipeline.
 
 The reference is strictly batch (sequential per-file loop, SURVEY.md §2.10);
-this module is the engine's forward-looking streaming tier: the same
-per-turn operators (sniff → extract → chunk → gate) are row-local, so they
-lift unchanged onto a streaming DataFrame. Adds:
+this module is the engine's forward-looking streaming tier. The per-turn
+pipeline is row-local, so ``transform_stream`` runs ``run_pipeline``'s own
+core (sniff → fused extract+chunk → gate → status → explode) on a
+streaming DataFrame. Adds:
 
 * ``streaming_pipeline``  — readStream(parquet dir) → transform → chunks
   stream (append mode, checkpointed; resume = restart with the same
@@ -23,7 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ragstudio_spark.operators import fused, quality_gate, sniff
+from ragstudio_spark.pipeline.job import (
+    PipelineConfig, _gated_turns, _published_chunks,
+)
 from ragstudio_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -61,32 +64,15 @@ def _sum_tagged_log(raw: DataFrame, keys: list[str],
 def transform_stream(stream_df: DataFrame, max_tokens: int = 400,
                      overlap: int = 50) -> DataFrame:
     """Apply the per-turn pipeline to a (possibly streaming) DataFrame;
-    returns the exploded chunks frame. Stateless row-local ops only — no
-    watermark needed. Uses the fused single-Python-hop operator."""
-    df = sniff.with_content_type(stream_df)
-    # same spans-only wire form + deferred slice as the batch pipeline
-    # (pipeline/job.py): the gate folds over the slice expression and chunk
-    # strings are materialized once, post-explode
-    turns = fused.process_turns(
-        df.select("conv_id", "turn_idx", "text", "content_type", "ts"),
-        max_tokens=max_tokens,
-        overlap=overlap,
-        carry_ts=True,
-        materialize_text=False,
-    )
-    turns = quality_gate.with_chunks_gate(
-        turns, chunks_col="chunks", chunk_text=fused.chunk_text_expr("c"))
-    passing = turns.filter(
-        F.col("gate_passed") & (F.col("content_type") != "empty")
-    )
-    chunk_cols = fused.public_chunk_cols()
-    return passing.select(
-        "conv_id", "turn_idx", "ts", "content_type", "extraction_engine",
-        "base_utf8", F.explode("chunks").alias("chunk"),
-    ).select(
-        "conv_id", "turn_idx", "ts", "content_type", "extraction_engine",
-        *chunk_cols,
-    )
+    returns the exploded chunks frame. This is ``run_pipeline``'s core
+    (pipeline/job.py) with the default config and ``ts`` carried through:
+    the same turns publish (status ``success``), the same chunks come out.
+    Stateless row-local ops only — no watermark needed."""
+    turns = _gated_turns(
+        stream_df, PipelineConfig(max_tokens=max_tokens, overlap=overlap),
+        carry_ts=True)
+    return _published_chunks(turns, "conv_id", "turn_idx", "ts",
+                             "content_type", "extraction_engine")
 
 
 def streaming_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
@@ -618,13 +604,6 @@ def session_stats_stream(stream_df: DataFrame, gap_minutes: int = 30,
                     (F.unix_micros(F.col("session_window.end")) - gap_us)
                     .alias("session_last_us"),
                     "n_events"))
-
-
-#: streamed key-count monitoring input: rows carrying a prospective key
-#: (the default key_col; the stream schema is derived from key_col, so a
-#: caller monitoring user_id reads "user_id string" — review-found: a
-#: hardcoded schema made every non-default key_col unresolvable)
-SKEW_INGEST_SCHEMA = "conv_id string"
 
 
 def skew_monitor_stream(spark: SparkSession, input_dir: str, store_dir: str,

@@ -60,3 +60,31 @@ def test_every_entry_builds_with_oracle_columns(spark, tmp_path, monkeypatch):
             if cols != want:
                 mismatches[name] = (cols, want)
     assert not mismatches
+
+
+_STAGING_SCRIPT = """
+import __spark_entry__ as entry
+from ragstudio_spark.session import get_spark
+
+spark = get_spark("staging-cleanup", master="local[2]", shuffle_partitions=2)
+for name in ("cache_asof_read", "forget_rewrite_accounting"):
+    entry.queries()[name](spark, {sf!r}).collect()
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 testdata absent")
+def test_staging_entries_leave_no_temp_dirs(tmp_path):
+    """The cache and forget-rewrite entries stage a table in a temp
+    directory; it must be gone once the process that built them exits."""
+    import glob
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path),
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    subprocess.run([sys.executable, "-c", _STAGING_SCRIPT.format(sf=SF_DIR)],
+                   cwd=repo, env=env, check=True, timeout=600)
+    assert glob.glob(str(tmp_path / "rs_*_oracle_*")) == []

@@ -5,8 +5,10 @@ The kernel is deliberately *total* on str inputs (never raises), so the
 row-level fault barrier in operators/fused.py is defense in depth for
 executor-side surprises (codec bugs, pathological regex behavior on future
 operators). We verify: (a) mode validation, (b) healthy rows carry a null
-error, (c) the kernel really is total under adversarial fuzz — the property
-that makes the barrier's untriggered path acceptable.
+error, (c) the kernel really is total under adversarial fuzz, and (d) the
+barrier itself, triggered by a missing BPE merges file (every row raises
+FileNotFoundError inside it): the row it emits, the status the pipeline
+gives it, and the fail_fast re-raise.
 """
 
 import pytest
@@ -37,6 +39,52 @@ class TestErrorModes:
             out = fused.process_turns(_input(spark), on_error=mode).toPandas()
             assert out["error"].isna().all()
             assert len(out) == 3
+
+
+class TestFaultBarrier:
+    @pytest.mark.parametrize("mode", ["quarantine", "skip"])
+    def test_failed_rows_carry_error_and_defaults(self, spark, tmp_path, mode):
+        missing = str(tmp_path / "missing.txt")
+        out = fused.process_turns(_input(spark), on_error=mode,
+                                  with_trace=True,
+                                  bpe_merges_path=missing).toPandas()
+        assert len(out) == 3
+        for r in out.itertuples():
+            assert r.error.startswith("FileNotFoundError")
+            assert list(r.chunks) == []
+            assert list(r.stage_trace) == []
+            assert r.quality_score == 0.0
+            assert r.language is None
+            assert r.extracted_chars == 0
+            assert r.extraction_fixes == 0 and r.page_numbers_removed == 0
+            assert not r.needs_repair and not r.repair_applied
+            assert r.chunking_reason is None
+        wire = fused.process_turns(_input(spark), on_error=mode,
+                                   materialize_text=False,
+                                   bpe_merges_path=missing).toPandas()
+        assert wire["base_utf8"].isna().all()
+
+    @pytest.mark.parametrize("mode,status",
+                             [("quarantine", "failed_error"), ("skip", "skipped")])
+    def test_pipeline_routes_failed_rows(self, spark, tmp_path, mode, status):
+        from ragstudio_spark.pipeline.job import PipelineConfig, run_pipeline
+
+        cfg = PipelineConfig(on_error=mode,
+                             bpe_merges_path=str(tmp_path / "missing.txt"))
+        out = run_pipeline(_input(spark), cfg)
+        metrics = out.metrics.toPandas()
+        assert list(metrics["status"]) == [status] * 3
+        assert metrics["error"].str.startswith("FileNotFoundError").all()
+        quarantined = out.quarantine.toPandas()
+        assert sorted(quarantined["turn_idx"]) == [0, 1, 2]
+        assert list(quarantined["status"]) == [status] * 3
+        assert out.chunks.count() == 0
+
+    def test_fail_fast_raises(self, spark, tmp_path):
+        df = fused.process_turns(_input(spark), on_error="fail_fast",
+                                 bpe_merges_path=str(tmp_path / "missing.txt"))
+        with pytest.raises(Exception, match="FileNotFoundError"):
+            df.collect()
 
 
 class TestKernelTotality:

@@ -12,10 +12,9 @@ class TestStreaming:
     def test_file_stream_matches_batch(self, spark, tmp_path):
         """availableNow streaming run over a parquet dir produces the same
         chunks as the batch transform over the same input, and the stream
-        transform publishes the same chunks as the batch pipeline: the two
-        pick publishing turns with different predicates (gate_passed and
-        not empty vs status == 'success'), so an empty and a NULL turn
-        ride along."""
+        transform publishes the same chunks as the batch pipeline: both
+        run the run_pipeline core and publish by its one predicate
+        (status == 'success'); an empty and a NULL turn ride along."""
         from datetime import datetime
 
         inp = str(tmp_path / "in")
