@@ -22,7 +22,7 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ragstudio_spark import sqlspec
 from ragstudio_spark.operators import (
@@ -44,6 +44,9 @@ from ragstudio_spark.operators.index import phrase_search, terms_search
 from ragstudio_spark.operators.metrics import (
     ERROR_OTHER, ERROR_TAXONOMY, exact_quantiles,
 )
+from ragstudio_spark.operators.profiler import (
+    _HEADING_RE, _LIST_RE, _MD_HEADER_RE, _NUM_SECTION_RE,
+)
 from ragstudio_spark.operators.quality_model import (
     PUBLISHED_WEIGHTS, QM_STOPWORDS,
 )
@@ -52,6 +55,7 @@ from ragstudio_spark.operators.quality_signals import (
 )
 from ragstudio_spark.operators.rag_chain import DEFAULT_RAG_PROMPT
 from ragstudio_spark.operators.rag_extras import RRF_SCALE
+from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.operators.redact import REDACTIONS
 from ragstudio_spark.operators.routing import (
     EQUATION_PATTERNS, FRENCH_CHARS, MATH_SYMBOLS, SCIENTIFIC_KEYWORDS,
@@ -65,6 +69,7 @@ from ragstudio_spark.operators.sessions import (
 )
 from ragstudio_spark.operators.sketches import _RHO_BITS, _alpha, lz4_case_sql
 from ragstudio_spark.operators.skew import heavy_keys, skew_report
+from ragstudio_spark.operators.sniff import _HTML_RE, _MD_RE, _PDF_RE
 from ragstudio_spark.operators.snapshot import (
     distribution_drift, join_cardinality, scd2_history,
 )
@@ -128,6 +133,34 @@ def _dot_duck(a: str, b: str) -> str:
 
 def _cosine(a: str = "a.embedding", b: str = "b.embedding") -> str:
     return f"({_dot_duck(a, b)}) / (sqrt({_dot_duck(a, a)}) * sqrt({_dot_duck(b, b)}))"
+
+
+def _nearest_duck(order: str, vecs: str, cents: str, cid: str = "cid",
+                  carry: str = "") -> str:
+    """Each vector of ``vecs`` with its first centroid of ``cents`` by
+    ``order``, ties on the lower cid — the oracle twin of
+    ``top_k(..., 1, [order, cid], by=[vec_id])``; ``carry`` keeps one more
+    vector column."""
+    keep, vkeep = (f"{carry}, ", f"v.{carry}, ") if carry else ("", "")
+    return f"""  SELECT vec_id, {keep}{cid} FROM (
+    SELECT v.vec_id, {vkeep}c.cid,
+           row_number() OVER (PARTITION BY v.vec_id
+                              ORDER BY {order}, c.cid ASC) AS rn
+    FROM {vecs} v CROSS JOIN {cents} c) a
+  WHERE rn = 1"""
+
+
+def _topk_per_query_duck(src: str, score: str, k: int) -> str:
+    """(query_id, neighbor_id, rank): the first ``k`` rows of ``src`` per
+    query by ``score``, ties on neighbor_id — the oracle twin of
+    ``top_k(..., by=["query_id"], rank="rank")``."""
+    return f"""SELECT query_id, neighbor_id, rank FROM (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY {score}, neighbor_id ASC) AS rank
+  FROM {src}) r
+WHERE rank <= {k}
+"""
 
 
 # --------------------------------------------------------------------------
@@ -324,11 +357,14 @@ _def("dedup_clusters", _clusters_fn, _clusters_duck_sql(), "documents")
 
 
 # -- 7. exact n-gram Jaccard top pairs (ground truth for LSH)
-def _jaccard_sql() -> str:
+def _shingle_sets_duck() -> str:
+    """``WITH`` docs (distinct 3-word shingles + their count) and ex (one
+    row per shingle): the candidate side of the Jaccard and containment
+    oracles. The distinct-shingle array is computed once in an inner
+    subquery and sized in the outer one (inlined expression reuse would
+    recompute it)."""
     words = _words_expr("text", "duckdb")
     sh = _shingles_expr("words")
-    # compute the distinct-shingle array once in an inner subquery; size it
-    # in the outer one (inlined expression reuse would recompute it)
     return f"""
 WITH docs AS (
   SELECT doc_id, shingles, len(shingles) AS n_sh FROM
@@ -336,7 +372,11 @@ WITH docs AS (
      FROM (SELECT doc_id, {words} AS words FROM documents) w) s
 ), ex AS (
   SELECT doc_id, n_sh, unnest(shingles) AS shingle FROM docs
-)
+)"""
+
+
+def _jaccard_sql() -> str:
+    return f"""{_shingle_sets_duck()}
 , pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          count(*) AS inter,
@@ -411,20 +451,26 @@ _def("winnow_fingerprint_overlap", _winnow_fn, _winnow_duck_sql(), "documents")
 
 
 # -- 8. SimHash (16-bit, md5-nibble bits, ±1 votes per distinct token)
-def _simhash_sql() -> str:
+def _simhash_votes_duck(src: str, n_bits: int) -> str:
+    """w/bits/votes CTEs: each doc's per-bit majority vote over the md5
+    bits of its distinct words (bit b = bit b % 4 of hex digit b // 4)."""
     words = _words_expr("text", "duckdb")
     nibble = "strpos('0123456789abcdef', substring(h, CAST(floor(b / 4) AS INT) + 1, 1)) - 1"
     bit = f"(({nibble}) >> CAST(b % 4 AS INT)) & 1"
-    return f"""
-WITH w AS (
-  SELECT doc_id, unnest(list_distinct({words})) AS word FROM documents
+    return f"""w AS (
+  SELECT doc_id, unnest(list_distinct({words})) AS word FROM {src}
 ), bits AS (
   SELECT doc_id, b, CASE WHEN ({bit}) = 1 THEN 1 ELSE -1 END AS v
-  FROM (SELECT doc_id, md5(word) AS h FROM w) x, LATERAL (SELECT unnest(range(0, 16)) AS b)
+  FROM (SELECT doc_id, md5(word) AS h FROM w) x, LATERAL (SELECT unnest(range(0, {n_bits})) AS b)
 ), votes AS (
   SELECT doc_id, b, CASE WHEN sum(v) > 0 THEN 1 ELSE 0 END AS vote_sign
   FROM bits GROUP BY doc_id, b
-)
+)"""
+
+
+def _simhash_sql() -> str:
+    return f"""
+WITH {_simhash_votes_duck("documents", 16)}
 SELECT doc_id, CAST(sum(CAST(vote_sign AS BIGINT) * CAST(pow(2, b) AS BIGINT)) AS BIGINT) AS simhash16
 FROM votes GROUP BY doc_id
 """
@@ -449,9 +495,6 @@ FROM documents WHERE doc_id % 50 = 0
 
 
 def _simhash64_sql_duck() -> str:
-    words = _words_expr("text", "duckdb")
-    nibble = "strpos('0123456789abcdef', substring(h, CAST(floor(b / 4) AS INT) + 1, 1)) - 1"
-    bit = f"(({nibble}) >> CAST(b % 4 AS INT)) & 1"
     band_sums = ",\n    ".join(
         f"CAST(sum(CASE WHEN b // 16 = {i} THEN vote_sign * CAST(pow(2, b % 16) AS BIGINT) "
         f"ELSE 0 END) AS BIGINT) AS s{i}"
@@ -464,15 +507,7 @@ def _simhash64_sql_duck() -> str:
     ham = " + ".join(f"bit_count(xor(a.s{i}, b.s{i}))" for i in range(4))
     return f"""
 WITH dec AS ({_SIMHASH64_DECORATE}),
-w AS (
-  SELECT doc_id, unnest(list_distinct({words})) AS word FROM dec
-), bits AS (
-  SELECT doc_id, b, CASE WHEN ({bit}) = 1 THEN 1 ELSE -1 END AS v
-  FROM (SELECT doc_id, md5(word) AS h FROM w) x, LATERAL (SELECT unnest(range(0, 64)) AS b)
-), votes AS (
-  SELECT doc_id, b, CASE WHEN sum(v) > 0 THEN 1 ELSE 0 END AS vote_sign
-  FROM bits GROUP BY doc_id, b
-), sketch AS (
+{_simhash_votes_duck("dec", 64)}, sketch AS (
   SELECT doc_id,
     {band_sums}
   FROM votes GROUP BY doc_id
@@ -504,13 +539,7 @@ WITH sims AS (
          {_cosine()} AS sim
   FROM embeddings a JOIN embeddings b ON a.vec_id < 8 AND b.vec_id <> a.vec_id
 )
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, neighbor_id ASC) AS rank
-  FROM sims) r
-WHERE rank <= 5
-"""
+{_topk_per_query_duck("sims", "sim DESC", 5)}"""
 def _ann_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
     queries_df = vectors.filter("vec_id < 8")
@@ -530,12 +559,7 @@ def _ivf_sql() -> str:
 WITH centroids AS (
   SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 16
 ), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY {cos} DESC, c.cid ASC) AS rn
-    FROM embeddings v CROSS JOIN centroids c) a
-  WHERE rn = 1
+{_nearest_duck(f"{cos} DESC", "embeddings", "centroids")}
 ), q AS (
   SELECT a.vec_id AS query_id, a.cid FROM assign a WHERE a.vec_id < 8
 )
@@ -628,6 +652,7 @@ def _km_duck_sql() -> str:
           "* (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))), (acc, x) -> acc + x)")
     fold = ("list_reduce(list_prepend(list_transform(ms[1], x -> CAST(0.0 AS DOUBLE)), ms), "
             "(acc, m) -> list_transform(list_zip(acc, m), p -> p[1] + CAST(p[2] AS DOUBLE)))")
+    near = f"({d2}) ASC"
     parts = [f"""
 cent0 AS (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cid,
@@ -637,12 +662,7 @@ cent0 AS (
     for i in range(_KM_ITERS):
         parts.append(f"""
 assign{i} AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT v.vec_id, v.embedding, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({d2}) ASC, c.cid ASC) AS rn
-    FROM embeddings v CROSS JOIN cent{i} c) a
-  WHERE rn = 1
+{_nearest_duck(near, "embeddings", f"cent{i}", carry="embedding")}
 ),
 new{i} AS (
   SELECT cid, list_transform({fold}, s -> s / n) AS c_vec FROM (
@@ -656,12 +676,7 @@ cent{i + 1} AS (
 )""")
     final_assign = f"""
 final_assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({d2}) ASC, c.cid ASC) AS rn
-    FROM embeddings v CROSS JOIN cent{_KM_ITERS} c) a
-  WHERE rn = 1
+{_nearest_duck(near, "embeddings", f"cent{_KM_ITERS}")}
 )"""
     return f"""
 WITH {','.join(parts)},{final_assign}
@@ -678,9 +693,8 @@ def _km_fn(spark: SparkSession) -> DataFrame:
     scored = vectors.crossJoin(
         F.broadcast(cents.select("cid", F.col("embedding").alias("c_vec")))
     ).withColumn("d", similarity._l2sq(F.col("embedding"), F.col("c_vec")))
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
-    assign = (scored.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") == 1).select("vec_id", "cid"))
+    assign = top_k(scored, 1, [F.asc("d"), F.asc("cid")], by=["vec_id"],
+                   rank="rn").select("vec_id", "cid")
     return (assign.groupBy("cid")
             .agg(F.count("*").cast("bigint").alias("n_members"),
                  F.sum("vec_id").cast("bigint").alias("id_sum")))
@@ -714,7 +728,7 @@ def _pq_train_parts_duck(m: int, k: int, sub_w: int,
     the residual oracle substitutes its residual CTE here."""
     fold = ("list_reduce(list_prepend(list_transform(ms[1], x -> CAST(0.0 AS DOUBLE)), ms), "
             "(acc, m) -> list_transform(list_zip(acc, m), p -> p[1] + CAST(p[2] AS DOUBLE)))")
-    d2 = _pq_d2_duck
+    near = f"({_pq_d2_duck('v.sv', 'c.c_vec')}) ASC"
     parts = []
     for j in range(m):
         lo, hi = j * sub_w + 1, (j + 1) * sub_w
@@ -729,12 +743,7 @@ cent{j}_0 AS (
   FROM sub{j} ORDER BY vec_id LIMIT {k}
 ),
 assign{j}_0 AS (
-  SELECT vec_id, sv, cid FROM (
-    SELECT v.vec_id, v.sv, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({d2('v.sv', 'c.c_vec')}) ASC, c.cid ASC) AS rn
-    FROM sub{j} v CROSS JOIN cent{j}_0 c) a
-  WHERE rn = 1
+{_nearest_duck(near, f"sub{j}", f"cent{j}_0", carry="sv")}
 ),
 new{j}_0 AS (
   SELECT cid, list_transform({fold}, s -> s / n) AS c_vec FROM (
@@ -746,12 +755,7 @@ cent{j}_1 AS (
   FROM cent{j}_0 o LEFT JOIN new{j}_0 n USING (cid)
 ),
 code{j} AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({d2('v.sv', 'c.c_vec')}) ASC, c.cid ASC) AS rn
-    FROM sub{j} v CROSS JOIN cent{j}_1 c) a
-  WHERE rn = 1
+{_nearest_duck(near, f"sub{j}", f"cent{j}_1")}
 )""")
     return parts
 
@@ -806,10 +810,15 @@ _def("ann_pq_topk", _pq_fn, _pq_duck_sql(), "embeddings")
 _IVFPQ_NPROBE, _IVFPQ_TOPK, _IVFPQ_NQ = 2, 5, 4
 
 
+def _ivfpq_coarse(vectors: DataFrame) -> DataFrame:
+    """The fixed coarse centroids of both IVF-PQ entries: vec_id < 8."""
+    return vectors.filter("vec_id < 8").select(
+        F.col("vec_id").cast("int").alias("cid"), "embedding")
+
+
 def _ivfpq_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
-    coarse = vectors.filter("vec_id < 8").select(
-        F.col("vec_id").cast("int").alias("cid"), "embedding")
+    coarse = _ivfpq_coarse(vectors)
     books = similarity.pq_train(vectors, m=_PQ_M, k=_PQ_K, iters=1, exact=True)
     index = similarity.ivfpq_index(vectors, coarse, books, m=_PQ_M)
     return similarity.ivfpq_topk(
@@ -817,21 +826,16 @@ def _ivfpq_fn(spark: SparkSession) -> DataFrame:
         k=_IVFPQ_TOPK, nprobe=_IVFPQ_NPROBE, m=_PQ_M)
 
 
-def _ivfpq_duck_sql() -> str:
-    d2 = _pq_d2_duck
+def _ivfpq_probe_ctes() -> str:
+    """The coarse/cellassign/probes CTEs of both IVF-PQ oracles."""
     cos_vc = _cosine("v.embedding", "c.embedding")
     cos_qc = _cosine("q.embedding", "c.embedding")
-    parts = [f"""
+    return f"""
 coarse AS (
   SELECT CAST(vec_id AS INT) AS cid, embedding FROM embeddings WHERE vec_id < 8
 ),
 cellassign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({cos_vc}) DESC, c.cid ASC) AS rn
-    FROM embeddings v CROSS JOIN coarse c) a
-  WHERE rn = 1
+{_nearest_duck(f"({cos_vc}) DESC", "embeddings", "coarse", "cid AS cell")}
 ),
 probes AS (
   SELECT query_id, cid AS cell FROM (
@@ -840,7 +844,12 @@ probes AS (
                               ORDER BY ({cos_qc}) DESC, c.cid ASC) AS rn
     FROM embeddings q CROSS JOIN coarse c WHERE q.vec_id < {_IVFPQ_NQ}) p
   WHERE rn <= {_IVFPQ_NPROBE}
-)"""]
+)"""
+
+
+def _ivfpq_duck_sql() -> str:
+    d2 = _pq_d2_duck
+    parts = [_ivfpq_probe_ctes()]
     parts += _pq_train_parts_duck(_PQ_M, _PQ_K, _PQ_SUB)
     for j in range(_PQ_M):
         lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
@@ -863,13 +872,7 @@ dist AS (
   JOIN qd0 q0 ON q0.query_id = p.query_id AND q0.cid = c0.cid
   JOIN qd1 q1 ON q1.query_id = p.query_id AND q1.cid = c1.cid
 )
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM dist) r
-WHERE rank <= {_IVFPQ_TOPK}
-"""
+{_topk_per_query_duck("dist", "adist ASC", _IVFPQ_TOPK)}"""
 
 
 _def("ann_ivfpq_topk", _ivfpq_fn, _ivfpq_duck_sql(), "embeddings")
@@ -887,8 +890,7 @@ _def("ann_ivfpq_topk", _ivfpq_fn, _ivfpq_duck_sql(), "embeddings")
 #         codebook doubles stay bit-identical.
 def _ivfpq_res_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
-    coarse = vectors.filter("vec_id < 8").select(
-        F.col("vec_id").cast("int").alias("cid"), "embedding")
+    coarse = _ivfpq_coarse(vectors)
     books = similarity.ivfpq_train_residual(
         vectors, coarse, m=_PQ_M, k=_PQ_K, iters=1, exact=True)
     index = similarity.ivfpq_index_residual(vectors, coarse, books, m=_PQ_M)
@@ -899,28 +901,7 @@ def _ivfpq_res_fn(spark: SparkSession) -> DataFrame:
 
 def _ivfpq_res_duck_sql() -> str:
     d2 = _pq_d2_duck
-    cos_vc = _cosine("v.embedding", "c.embedding")
-    cos_qc = _cosine("q.embedding", "c.embedding")
-    parts = [f"""
-coarse AS (
-  SELECT CAST(vec_id AS INT) AS cid, embedding FROM embeddings WHERE vec_id < 8
-),
-cellassign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-                              ORDER BY ({cos_vc}) DESC, c.cid ASC) AS rn
-    FROM embeddings v CROSS JOIN coarse c) a
-  WHERE rn = 1
-),
-probes AS (
-  SELECT query_id, cid AS cell FROM (
-    SELECT q.vec_id AS query_id, c.cid,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY ({cos_qc}) DESC, c.cid ASC) AS rn
-    FROM embeddings q CROSS JOIN coarse c WHERE q.vec_id < {_IVFPQ_NQ}) p
-  WHERE rn <= {_IVFPQ_NPROBE}
-),
+    parts = [_ivfpq_probe_ctes() + """,
 res AS (
   SELECT v.vec_id,
          list_transform(list_zip(v.embedding, c.embedding),
@@ -961,13 +942,7 @@ dist AS (
   JOIN qd1 q1 ON q1.query_id = p.query_id AND q1.cell = p.cell
              AND q1.cid = c1.cid
 )
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM dist) r
-WHERE rank <= {_IVFPQ_TOPK}
-"""
+{_topk_per_query_duck("dist", "adist ASC", _IVFPQ_TOPK)}"""
 
 
 _def("ann_ivfpq_residual_topk", _ivfpq_res_fn, _ivfpq_res_duck_sql(), "embeddings")
@@ -1134,37 +1109,38 @@ FROM documents
 """
 
 
-def _strategy_sql(engine: str) -> str:
-    dec = _STRATEGY_DECORATE
+def _profile_sql(engine: str) -> dict[str, str]:
+    """The profiler's structural features (operators/profiler.py, same
+    regexes) as SQL over ``text``: the heading test, the table-marker
+    count and the heading depth."""
     if engine == "spark":
-        md_depths = "transform(regexp_extract_all(text, '(?m)^(#{1,6})\\\\s+', 1), h -> length(h))"
-        num_depths = ("transform(regexp_extract_all(text, '(?m)^(\\\\d+(?:\\\\.\\\\d+)*)\\\\.\\\\s+', 1), "
+        def rx(p):  # Spark SQL string literals eat single backslashes
+            return p.replace("\\", "\\\\")
+        md_depths = f"transform(regexp_extract_all(text, '{rx(_MD_HEADER_RE)}', 1), h -> length(h))"
+        num_depths = (f"transform(regexp_extract_all(text, '{rx(_NUM_SECTION_RE)}', 1), "
                       "s -> size(split(s, '\\\\.')))")
         depth = (f"CASE WHEN size(concat({md_depths}, {num_depths})) > 0 "
                  f"THEN array_max(concat({md_depths}, {num_depths})) ELSE 1 END")
-        pipe_count = "(length(text) - length(replace(text, '|', '')))"
-        tab_count = "(length(text) - length(replace(text, '\\t', '')))"
-        col_count = "(length(text) - length(replace(text, 'colonne', ''))) / 7"
-        lig_count = "(length(text) - length(replace(text, 'ligne', ''))) / 5"
+        tab = "'\\t'"
+        has_head = f"text RLIKE '{rx(_HEADING_RE)}'"
     else:
-        md_depths = r"list_transform(regexp_extract_all(text, '(?m)^(#{1,6})\s+', 1), h -> length(h))"
-        num_depths = (r"list_transform(regexp_extract_all(text, '(?m)^(\d+(?:\.\d+)*)\.\s+', 1), "
-                      r"s -> len(string_split(s, '.')))")
+        md_depths = f"list_transform(regexp_extract_all(text, '{_MD_HEADER_RE}', 1), h -> length(h))"
+        num_depths = (f"list_transform(regexp_extract_all(text, '{_NUM_SECTION_RE}', 1), "
+                      "s -> len(string_split(s, '.')))")
         depth = (f"CASE WHEN len(list_concat({md_depths}, {num_depths})) > 0 "
                  f"THEN list_max(list_concat({md_depths}, {num_depths})) ELSE 1 END")
-        pipe_count = "(length(text) - length(replace(text, '|', '')))"
-        tab_count = "(length(text) - length(replace(text, chr(9), '')))"
-        col_count = "(length(text) - length(replace(text, 'colonne', ''))) / 7"
-        lig_count = "(length(text) - length(replace(text, 'ligne', ''))) / 5"
+        tab = "chr(9)"
+        has_head = f"regexp_matches(text, '{_HEADING_RE}')"
+    marks = ("((length(text) - length(replace(text, '|', ''))) + "
+             f"(length(text) - length(replace(text, {tab}, ''))) + "
+             "(length(text) - length(replace(text, 'colonne', ''))) / 7 + "
+             "(length(text) - length(replace(text, 'ligne', ''))) / 5)")
+    return {"depth": depth, "has_head": has_head, "marks": marks}
 
-    if engine == "spark":
-        # backslashes doubled for Spark SQL string-literal escaping
-        heading_re = r"(?m)^\\s*#{1,6}\\s+|^\\s*\\d+\\.\\s+|^\\s*[A-Z][A-Z\\s]+$|^\\s*[IVX]+\\.\\s+"
-        has_head = f"text RLIKE '{heading_re}'"
-    else:
-        heading_re = r"(?m)^\s*#{1,6}\s+|^\s*\d+\.\s+|^\s*[A-Z][A-Z\s]+$|^\s*[IVX]+\.\s+"
-        has_head = f"regexp_matches(text, '{heading_re}')"
 
+def _strategy_sql(engine: str) -> str:
+    dec = _STRATEGY_DECORATE
+    feat = _profile_sql(engine)
     return f"""
 WITH dec AS ({dec}),
 prof AS (
@@ -1180,9 +1156,9 @@ prof AS (
       WHEN length(text) > 1000 THEN 'article'
       ELSE 'document_court' END AS doc_type,
     CAST(floor(length(text) / 4) AS BIGINT) AS length_tokens,
-    {has_head} AS has_headings,
-    ({pipe_count} + {tab_count} + {col_count} + {lig_count}) > 5 AS has_tables,
-    {depth} AS hdepth
+    {feat['has_head']} AS has_headings,
+    {feat['marks']} > 5 AS has_tables,
+    {feat['depth']} AS hdepth
   FROM dec
 ),
 sel AS (
@@ -1215,27 +1191,17 @@ _def("strategy_distribution", _strategy_sql("spark"), _strategy_sql("duckdb"),
 #         double is one exact division and is NOT emitted (sums of doubles
 #         are order-dependent) — sum_best/sum_total pin it instead.
 def _ml_strategy_duck_sql() -> str:
-    md_depths = r"list_transform(regexp_extract_all(text, '(?m)^(#{1,6})\s+', 1), h -> length(h))"
-    num_depths = (r"list_transform(regexp_extract_all(text, '(?m)^(\d+(?:\.\d+)*)\.\s+', 1), "
-                  r"s -> len(string_split(s, '.')))")
-    depth = (f"CASE WHEN len(list_concat({md_depths}, {num_depths})) > 0 "
-             f"THEN list_max(list_concat({md_depths}, {num_depths})) ELSE 1 END")
-    pipe_count = "(length(text) - length(replace(text, '|', '')))"
-    tab_count = "(length(text) - length(replace(text, chr(9), '')))"
-    col_count = "(length(text) - length(replace(text, 'colonne', ''))) / 7"
-    lig_count = "(length(text) - length(replace(text, 'ligne', ''))) / 5"
-    heading_re = r"(?m)^\s*#{1,6}\s+|^\s*\d+\.\s+|^\s*[A-Z][A-Z\s]+$|^\s*[IVX]+\.\s+"
-    list_re = r"(?m)^\s*[-*•]\s+|^\s*\d+\.\s+|^\s*[a-z]\.\s+"
+    feat = _profile_sql("duckdb")
     return f"""
 WITH dec AS ({_STRATEGY_DECORATE}),
 feat AS (
   SELECT doc_id,
     CAST(floor(length(text) / 4) AS BIGINT) AS t,
-    CASE WHEN regexp_matches(text, '{heading_re}') THEN 1 ELSE 0 END AS h,
-    CASE WHEN ({pipe_count} + {tab_count} + {col_count} + {lig_count}) > 5
+    CASE WHEN {feat['has_head']} THEN 1 ELSE 0 END AS h,
+    CASE WHEN {feat['marks']} > 5
          THEN 1 ELSE 0 END AS tb,
-    CASE WHEN regexp_matches(text, '{list_re}') THEN 1 ELSE 0 END AS ls,
-    CAST({depth} AS BIGINT) AS d
+    CASE WHEN regexp_matches(text, '{_LIST_RE}') THEN 1 ELSE 0 END AS ls,
+    CAST({feat['depth']} AS BIGINT) AS d
   FROM dec
 ),
 scores AS (
@@ -1347,20 +1313,16 @@ _def("pricing_summary", _PRICING, _PRICING, "lineitem")
 def _window_chunks_sql(engine: str) -> str:
     if engine == "spark":
         starts = "explode(sequence(0, CAST(length(text) - 1 AS BIGINT), 160))"
-        return f"""
+        src = f"(SELECT doc_id, text, {starts} AS start FROM documents WHERE length(text) > 0) t"
+    else:
+        src = ("(SELECT doc_id, text, unnest(range(0, CAST(length(text) AS BIGINT), 160)) AS start\n"
+               "      FROM documents WHERE length(text) > 0) t")
+    return f"""
 SELECT doc_id, CAST(start / 160 AS BIGINT) AS chunk_index,
        CAST(start AS BIGINT) AS char_start,
        CAST(least(start + 200, length(text)) AS BIGINT) AS char_end,
        substring(text, CAST(start AS INT) + 1, 200) AS chunk_text
-FROM (SELECT doc_id, text, {starts} AS start FROM documents WHERE length(text) > 0) t
-"""
-    return """
-SELECT doc_id, CAST(start / 160 AS BIGINT) AS chunk_index,
-       CAST(start AS BIGINT) AS char_start,
-       CAST(least(start + 200, length(text)) AS BIGINT) AS char_end,
-       substring(text, CAST(start AS INT) + 1, 200) AS chunk_text
-FROM (SELECT doc_id, text, unnest(range(0, CAST(length(text) AS BIGINT), 160)) AS start
-      FROM documents WHERE length(text) > 0) t
+FROM {src}
 """
 _def("window_chunks_sql", _window_chunks_sql("spark"),
      _window_chunks_sql("duckdb"), "documents")
@@ -1374,19 +1336,26 @@ _def("window_chunks_sql", _window_chunks_sql("spark"),
 _BM25_TERMS = ("spark", "query", "fast", "table")
 
 
+def _bm25_duck(terms, keys) -> tuple[str, str, str]:
+    """DuckDB BM25 (k1=1.5, b=0.75) pieces for ``terms``, columns suffixed
+    by ``keys``: the per-doc tf columns, the df aggregates, and the score
+    over ``d`` (tf_*, dl) and ``s`` (n_docs, avgdl, df_*)."""
+    tf_cols = ", ".join(
+        f"len(regexp_extract_all(lower(text), '\\b{t}\\b')) AS tf_{k}"
+        for t, k in zip(terms, keys))
+    df_cols = ", ".join(
+        f"sum(CASE WHEN tf_{k} > 0 THEN 1 ELSE 0 END) AS df_{k}" for k in keys)
+    # idf = ln((N - df + 0.5)/(df + 0.5) + 1); score contribution per term
+    score = " + ".join(
+        f"(ln((s.n_docs - s.df_{k} + 0.5) / (s.df_{k} + 0.5) + 1) "
+        f"* d.tf_{k} * 2.5 / (d.tf_{k} + 1.5 * (0.25 + 0.75 * d.dl / s.avgdl)))"
+        for k in keys)
+    return tf_cols, df_cols, score
+
+
 def _bm25_hybrid_sql() -> str:
     dl = f"len({_words_expr('text', 'duckdb')})"
-    tf_cols = ", ".join(f"len(regexp_extract_all(lower(text), '\\b{t}\\b')) AS tf_{t}"
-                        for t in _BM25_TERMS)
-    df_cols = ", ".join(
-        f"sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS df_{t}" for t in _BM25_TERMS
-    )
-    # idf = ln((N - df + 0.5)/(df + 0.5) + 1); score contribution per term
-    score_terms = " + ".join(
-        f"(ln((s.n_docs - s.df_{t} + 0.5) / (s.df_{t} + 0.5) + 1) "
-        f"* d.tf_{t} * 2.5 / (d.tf_{t} + 1.5 * (0.25 + 0.75 * d.dl / s.avgdl)))"
-        for t in _BM25_TERMS
-    )
+    tf_cols, df_cols, score_terms = _bm25_duck(_BM25_TERMS, _BM25_TERMS)
     cos = _cosine("q.embedding", "e.embedding")
     return f"""
 WITH docs AS (
@@ -1441,42 +1410,41 @@ _EXPANSION_K_PER = 4
 _EXPANSION_FINAL_K = 8
 
 
-def _expanded_terms() -> list[list[str]]:
-    expander = rag_extras.QueryExpander(
+def _expander() -> rag_extras.QueryExpander:
+    return rag_extras.QueryExpander(
         rag_extras.QueryExpansionConfig(strategy="synonyms", num_queries=3))
-    return [rag_extras._query_terms(q) for q in expander.expand(_EXPANSION_QUERY)]
 
 
-def _expansion_duck_sql() -> str:
+def _expanded_terms() -> list[list[str]]:
+    return [rag_extras._query_terms(q)
+            for q in _expander().expand(_EXPANSION_QUERY)]
+
+
+def _expansion_legs_duck(top) -> str:
+    """``WITH`` one BM25 leg per expansion of the fixed query (d{i}/s{i}
+    CTEs, then t{i} = ``top(i, score)``), merged by UNION ALL."""
     expansions = _expanded_terms()
-
-    def tf(t):
-        return f"len(regexp_extract_all(lower(text), '\\b{t}\\b'))"
-
-    def bm25_cte(i, terms):
-        words = _words_expr("text", "duckdb")
-        tf_cols = ", ".join(f"{tf(t)} AS tf_{j}" for j, t in enumerate(terms))
-        df_cols = ", ".join(
-            f"sum(CASE WHEN tf_{j} > 0 THEN 1 ELSE 0 END) AS df_{j}"
-            for j in range(len(terms)))
-        score = " + ".join(
-            f"(ln((s.n_docs - s.df_{j} + 0.5) / (s.df_{j} + 0.5) + 1) "
-            f"* d.tf_{j} * 2.5 / (d.tf_{j} + 1.5 * (0.25 + 0.75 * d.dl / s.avgdl)))"
-            for j in range(len(terms)))
-        return f"""
+    words = _words_expr("text", "duckdb")
+    legs = []
+    for i, terms in enumerate(expansions):
+        tf_cols, df_cols, score = _bm25_duck(terms, range(len(terms)))
+        legs.append(f"""
 d{i} AS (SELECT doc_id, {tf_cols}, len({words}) AS dl FROM documents),
 s{i} AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl, {df_cols} FROM d{i}),
-t{i} AS (
-  SELECT doc_id, {i} AS expansion_idx FROM d{i} d CROSS JOIN s{i} s
-  ORDER BY ({score}) DESC, doc_id ASC LIMIT {_EXPANSION_K_PER}
-)"""
-
-    ctes = ",".join(bm25_cte(i, terms) for i, terms in enumerate(expansions))
+t{i} AS ({top(i, score)})""")
     union = "\nUNION ALL\n".join(
         f"SELECT * FROM t{i}" for i in range(len(expansions)))
     return f"""
-WITH {ctes},
-merged AS ({union}),
+WITH {','.join(legs)},
+merged AS ({union})"""
+
+
+def _expansion_duck_sql() -> str:
+    legs = _expansion_legs_duck(lambda i, score: f"""
+  SELECT doc_id, {i} AS expansion_idx FROM d{i} d CROSS JOIN s{i} s
+  ORDER BY ({score}) DESC, doc_id ASC LIMIT {_EXPANSION_K_PER}
+""")
+    return f"""{legs},
 dedup AS (
   SELECT doc_id, min(expansion_idx) AS expansion_idx
   FROM merged GROUP BY doc_id
@@ -1493,9 +1461,7 @@ FROM final
 
 def _expansion_fn(spark: SparkSession) -> DataFrame:
     out = rag_extras.expansion_search(
-        spark.table("documents"), _EXPANSION_QUERY,
-        rag_extras.QueryExpander(
-            rag_extras.QueryExpansionConfig(strategy="synonyms", num_queries=3)),
+        spark.table("documents"), _EXPANSION_QUERY, _expander(),
         k_per_query=_EXPANSION_K_PER, final_k=_EXPANSION_FINAL_K)
     return out.select(
         "doc_id", F.col("expansion_idx").cast("int").alias("expansion_idx"),
@@ -1550,29 +1516,39 @@ _def("rerank_lexical", _rerank_fn, _rerank_duck_sql(), "documents")
 # -- 24. random-hyperplane LSH bucketing over embeddings (sign-bit sketch;
 #        planes = vectors 8..15, deterministic). The scale path for
 #        embedding near-dup: candidates only within a bucket.
-def _hyperplane_sql() -> str:
-    cos = _cosine("v.embedding", "p.embedding")
-    # sign bit of the raw dot product (denominator > 0 never flips sign,
-    # so cosine vs dot is equivalent for the bit)
+def _plane_buckets_duck(sign: str) -> str:
+    """``WITH`` bits/buckets: each vector's sign-bit bucket over the
+    fixture planes (vec_id 8..15, see ``_emb_planes``), ``sign`` being the
+    vector·plane expression whose sign sets the bit."""
     return f"""
 WITH bits AS (
   SELECT v.vec_id, p.vec_id - 8 AS plane,
-         CASE WHEN ({cos}) > 0 THEN 1 ELSE 0 END AS bit
+         CASE WHEN ({sign}) > 0 THEN 1 ELSE 0 END AS bit
   FROM embeddings v JOIN embeddings p ON p.vec_id BETWEEN 8 AND 15
 ), buckets AS (
   SELECT vec_id,
          CAST(sum(bit * CAST(pow(2, plane) AS BIGINT)) AS BIGINT) AS bucket
   FROM bits GROUP BY vec_id
-)
+)"""
+
+
+def _hyperplane_sql() -> str:
+    # sign bit of the raw dot product (denominator > 0 never flips sign,
+    # so cosine vs dot is equivalent for the bit)
+    return f"""{_plane_buckets_duck(_cosine("v.embedding", "p.embedding"))}
 SELECT bucket, count(*) AS n_vectors
 FROM buckets GROUP BY bucket HAVING count(*) > 1
 """
+def _emb_planes(vectors: DataFrame) -> DataFrame:
+    """The fixture hyperplane set (vec_id 8..15) — single-sourced across
+    the bucket, near-dup pair and semantic-dedup entries."""
+    return vectors.filter("vec_id BETWEEN 8 AND 15").select(
+        (F.col("vec_id") - 8).alias("plane"), "embedding")
+
+
 def _lsh_buckets_fn(spark: SparkSession) -> DataFrame:
     vectors = spark.table("embeddings")
-    planes = vectors.filter("vec_id BETWEEN 8 AND 15").select(
-        (F.col("vec_id") - 8).alias("plane"), "embedding"
-    )
-    buckets = similarity.hyperplane_buckets(vectors, planes)
+    buckets = similarity.hyperplane_buckets(vectors, _emb_planes(vectors))
     return (
         buckets.groupBy("bucket").agg(F.count("*").alias("n_vectors"))
         .filter(F.col("n_vectors") > 1)
@@ -1593,18 +1569,8 @@ _EMB_NEAR_THRESHOLD = 0.25
 
 
 def _emb_near_sql() -> str:
-    dot_vp = _dot_duck("v.embedding", "p.embedding")
     cos = _cosine("a2.embedding", "b2.embedding")
-    return f"""
-WITH bits AS (
-  SELECT v.vec_id, p.vec_id - 8 AS plane,
-         CASE WHEN ({dot_vp}) > 0 THEN 1 ELSE 0 END AS bit
-  FROM embeddings v JOIN embeddings p ON p.vec_id BETWEEN 8 AND 15
-), buckets AS (
-  SELECT vec_id,
-         CAST(sum(bit * CAST(pow(2, plane) AS BIGINT)) AS BIGINT) AS bucket
-  FROM bits GROUP BY vec_id
-), cand AS (
+    return f"""{_plane_buckets_duck(_dot_duck("v.embedding", "p.embedding"))}, cand AS (
   SELECT x.vec_id AS id_a, y.vec_id AS id_b
   FROM buckets x JOIN buckets y
     ON x.bucket = y.bucket AND x.vec_id < y.vec_id
@@ -1615,13 +1581,6 @@ JOIN embeddings a2 ON a2.vec_id = id_a
 JOIN embeddings b2 ON b2.vec_id = id_b
 WHERE ({cos}) >= {_EMB_NEAR_THRESHOLD}
 """
-
-
-def _emb_planes(vectors: DataFrame) -> DataFrame:
-    """The fixture hyperplane set (vec_id 8..15) — single-sourced across
-    the near-dup pair and semantic-dedup entries."""
-    return vectors.filter("vec_id BETWEEN 8 AND 15").select(
-        (F.col("vec_id") - 8).alias("plane"), "embedding")
 
 
 def _emb_near_fn(spark: SparkSession) -> DataFrame:
@@ -1822,12 +1781,7 @@ CASE WHEN text IS NULL OR trim(text) = '' THEN 'empty'
      WHEN {pdf} THEN 'pdf'
      ELSE 'plain' END
 """
-_SNIFF_RES = {
-    "html": r"(?is)<html|<body|<head|<article|<div[\s>]|<p[\s>]",
-    "md": r"(?m)^#{1,6}\s+\S|^\|[^\n]*\|[^\n]*\|",
-    "pdf": (r"(?m)-\s*Page \d+\s*-|\w-\n\w|^[ \t]*[\|\-_=+][ \t\|\-_=+]*$"
-            r"|^\S{1,2}\n\S{1,2}\n\S{1,2}$"),
-}
+_SNIFF_RES = {"html": _HTML_RE, "md": _MD_RE, "pdf": _PDF_RE}
 
 
 def _sniff_sql(engine: str) -> str:
@@ -2269,13 +2223,20 @@ def _redact_fn(spark: SparkSession) -> DataFrame:
         F.md5(F.col("redacted_text")).alias("redacted_hash"))
 
 
-def _redact_duck_sql() -> str:
+def _redaction_duck() -> tuple[str, str]:
+    """DuckDB twin of redact.with_redaction over ``text``: the n_<cat>
+    count columns and the fully redacted expression."""
     staged = "text"
     counts = []
     for cat, pat, repl in REDACTIONS:
         counts.append(
             f"CAST(len(regexp_extract_all({staged}, '{pat}')) AS INT) AS n_{cat}")
         staged = f"regexp_replace({staged}, '{pat}', '{repl}', 'g')"
+    return ", ".join(counts), staged
+
+
+def _redact_duck_sql() -> str:
+    counts, staged = _redaction_duck()
     return f"""
 WITH enriched AS (
   SELECT doc_id,
@@ -2285,7 +2246,7 @@ WITH enriched AS (
   FROM documents
 )
 SELECT doc_id,
-       {', '.join(counts)},
+       {counts},
        md5({staged}) AS redacted_hash
 FROM enriched
 """
@@ -2609,12 +2570,7 @@ def _curate_fn(spark: SparkSession) -> DataFrame:
 
 
 def _curate_duck_sql() -> str:
-    staged = "text"
-    counts = []
-    for cat, pat, repl in REDACTIONS:
-        counts.append(
-            f"CAST(len(regexp_extract_all({staged}, '{pat}')) AS INT) AS n_{cat}")
-        staged = f"regexp_replace({staged}, '{pat}', '{repl}', 'g')"
+    counts, staged = _redaction_duck()
     return f"""
 WITH seeded AS (
   SELECT d.doc_id, d.lang,
@@ -2631,7 +2587,7 @@ WITH seeded AS (
     FROM seeded) t
   WHERE rn = 1
 ), red AS (
-  SELECT doc_id, lang, {', '.join(counts)}, {staged} AS redacted_text
+  SELECT doc_id, lang, {counts}, {staged} AS redacted_text
   FROM canon
 ), toks AS (
   SELECT *, CAST(length(redacted_text) // {CHARS_PER_TOKEN} AS BIGINT)
@@ -2854,35 +2810,44 @@ _SPAN_SEED = ("this document is provided as is without warranty of any "
 _SPAN_N = 20
 
 
-def _spans_fn(spark: SparkSession) -> DataFrame:
-    seeded = spark.table("documents").select(
+def _span_seeded(spark: SparkSession) -> DataFrame:
+    """documents with the seed sentence appended to doc_id % 9 == 2."""
+    return spark.table("documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 9 == 2,
                F.concat(F.col("text"), F.lit(" " + _SPAN_SEED)))
         .otherwise(F.col("text")).alias("text"))
-    return dedupe.repeated_spans(seeded, n=_SPAN_N).orderBy(
-        "doc_id", "word_pos", "gram_md5")
 
 
-def _spans_duck_sql() -> str:
-    words = _words_expr("text", "duckdb")
-    struct = (f"list_transform(range(1, len(w) - {_SPAN_N - 2}), "
-              f"i -> {{'p': i - 1, 'g': array_to_string("
-              f"list_slice(w, i, i + {_SPAN_N - 1}), ' ')}})")
-    return f"""
+# the twins of _span_seeded and of repeated_spans' occurrence table
+_SPAN_SEEDED_CTE = f"""
 WITH seeded AS (
   SELECT doc_id,
          CASE WHEN doc_id % 9 = 2 THEN text || ' {_SPAN_SEED}'
               ELSE text END AS text
   FROM documents
-), wrds AS (
-  SELECT doc_id, {words} AS w FROM seeded
-), occ AS (
+)"""
+_SPAN_GRAMS = (f"list_transform(range(1, len(w) - {_SPAN_N - 2}), "
+               f"i -> {{'p': i - 1, 'g': array_to_string("
+               f"list_slice(w, i, i + {_SPAN_N - 1}), ' ')}})")
+_SPAN_OCC_CTE = f"""occ AS (
   SELECT doc_id, s['p'] AS word_pos, md5(s['g']) AS gram_md5
   FROM (SELECT doc_id, unnest(CASE WHEN len(w) >= {_SPAN_N}
-                              THEN {struct} ELSE [] END) AS s
+                              THEN {_SPAN_GRAMS} ELSE [] END) AS s
         FROM wrds) t
-), dfreq AS (
+)"""
+
+
+def _spans_fn(spark: SparkSession) -> DataFrame:
+    return dedupe.repeated_spans(_span_seeded(spark), n=_SPAN_N).orderBy(
+        "doc_id", "word_pos", "gram_md5")
+
+
+def _spans_duck_sql() -> str:
+    words = _words_expr("text", "duckdb")
+    return f"""{_SPAN_SEEDED_CTE}, wrds AS (
+  SELECT doc_id, {words} AS w FROM seeded
+), {_SPAN_OCC_CTE}, dfreq AS (
   SELECT gram_md5, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
   FROM occ GROUP BY gram_md5
   HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND 1000
@@ -2904,11 +2869,7 @@ _def("repeated_span_mining", _spans_fn, _spans_duck_sql(), "documents")
 #         (byte-exact). Struct MIN picks the canonical occurrence —
 #         lexicographic (doc_id, word_pos) in both engines.
 def _spans_cut_fn(spark: SparkSession) -> DataFrame:
-    seeded = spark.table("documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 9 == 2,
-               F.concat(F.col("text"), F.lit(" " + _SPAN_SEED)))
-        .otherwise(F.col("text")).alias("text"))
+    seeded = _span_seeded(spark)
     spans = dedupe.repeated_spans(seeded, n=_SPAN_N)
     out = dedupe.cut_repeated_spans(seeded, spans, n=_SPAN_N)
     return out.select("doc_id", F.md5("text").alias("cut_hash"))
@@ -2916,27 +2877,13 @@ def _spans_cut_fn(spark: SparkSession) -> DataFrame:
 
 def _spans_cut_duck_sql() -> str:
     words = _words_expr("text", "duckdb")
-    struct = (f"list_transform(range(1, len(w) - {_SPAN_N - 2}), "
-              f"i -> {{'p': i - 1, 'g': array_to_string("
-              f"list_slice(w, i, i + {_SPAN_N - 1}), ' ')}})")
-    return f"""
-WITH seeded AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 9 = 2 THEN text || ' {_SPAN_SEED}'
-              ELSE text END AS text
-  FROM documents
-), wrds AS (
+    return f"""{_SPAN_SEEDED_CTE}, wrds AS (
   -- w = lowered stream (span matching); wo = original-case stream
   -- (reconstruction) — position-aligned, lower() never moves whitespace
   SELECT doc_id, {words} AS w,
          list_filter(regexp_split_to_array(text, '\\s+'), x -> x != '') AS wo
   FROM seeded
-), occ AS (
-  SELECT doc_id, s['p'] AS word_pos, md5(s['g']) AS gram_md5
-  FROM (SELECT doc_id, unnest(CASE WHEN len(w) >= {_SPAN_N}
-                              THEN {struct} ELSE [] END) AS s
-        FROM wrds) t
-), dfreq AS (
+), {_SPAN_OCC_CTE}, dfreq AS (
   SELECT gram_md5 FROM occ GROUP BY gram_md5
   HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND 1000
 ), spans AS (
@@ -3049,15 +2996,29 @@ _def("c4_clean", _c4_fn, _c4_duck_sql(), "documents")
 #        is single-sourced (one Spark helper + one SQL CTE) across the
 #        pair and multi-turn entries — four hand-synced copies is how
 #        twins silently diverge.
-def _sft_turns_df(spark: SparkSession) -> DataFrame:
+def _turn_idx() -> Column:
+    """0-based turn index of a document within its source, by doc_id."""
     w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
+    return (F.row_number().over(w) - 1).cast("int")
+
+
+def _doc_turns(spark: SparkSession, *cols) -> DataFrame:
+    """The documents table shaped as transcripts: conv_id = source,
+    turn_idx = ``_turn_idx()``, then ``cols``."""
     return spark.table("documents").select(
-        F.col("source").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-            ((F.row_number().over(w) - 1) % 3 + 1).cast("int")).alias("role"),
-        "text")
+        F.col("source").alias("conv_id"), _turn_idx().alias("turn_idx"),
+        *cols)
+
+
+def _cycled_role() -> Column:
+    """user → assistant → tool by turn index."""
+    return F.element_at(
+        F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
+        (_turn_idx() % 3 + 1).cast("int"))
+
+
+def _sft_turns_df(spark: SparkSession) -> DataFrame:
+    return _doc_turns(spark, _cycled_role().alias("role"), "text")
 
 
 _SFT_TURNS_CTE = """
@@ -3072,6 +3033,18 @@ turns AS (
 )"""
 
 
+# candidate pairs: each turn with the next turn's role, text and index
+_SFT_PAIR_CTES = f"""
+WITH {_SFT_TURNS_CTE}, cand AS (
+  SELECT conv_id, turn_idx, role, text AS prompt,
+         lead(role) OVER w2 AS nrole,
+         lead(text) OVER w2 AS response,
+         lead(turn_idx) OVER w2 AS nidx
+  FROM turns
+  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx ASC)
+)"""
+
+
 def _sft_fn(spark: SparkSession) -> DataFrame:
     pairs = sft.sft_pairs(_sft_turns_df(spark))
     return pairs.select(
@@ -3081,15 +3054,7 @@ def _sft_fn(spark: SparkSession) -> DataFrame:
         "prompt_chars", "response_chars")
 
 
-_SFT_DUCK = f"""
-WITH {_SFT_TURNS_CTE}, cand AS (
-  SELECT conv_id, turn_idx, role, text AS prompt,
-         lead(role) OVER w2 AS nrole,
-         lead(text) OVER w2 AS response,
-         lead(turn_idx) OVER w2 AS nidx
-  FROM turns
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx ASC)
-)
+_SFT_DUCK = f"""{_SFT_PAIR_CTES}
 SELECT conv_id, turn_idx, md5(prompt) AS prompt_hash,
        md5(response) AS response_hash,
        CAST(COALESCE(length(prompt), 0) AS BIGINT) AS prompt_chars,
@@ -3175,15 +3140,7 @@ def _curate_sft_duck_sql() -> str:
     grams2 = ("CASE WHEN len(w) >= 2 THEN "
               "list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) "
               "ELSE [] END")
-    return f"""
-WITH {_SFT_TURNS_CTE}, cand AS (
-  SELECT conv_id, turn_idx, role, text AS prompt,
-         lead(role) OVER w2 AS nrole,
-         lead(text) OVER w2 AS response,
-         lead(turn_idx) OVER w2 AS nidx
-  FROM turns
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx ASC)
-), ex AS (
+    return f"""{_SFT_PAIR_CTES}, ex AS (
   SELECT conv_id, turn_idx,
          conv_id || ':' || lpad(CAST(turn_idx AS VARCHAR), 6, '0')
            AS example_id,
@@ -3304,18 +3261,11 @@ _def("curate_sft_report", _curate_sft_report_fn, _curate_sft_report_duck_sql(),
 #         user→assistant→tool cycle makes tool→user transitions bad by
 #         construction, so the branch is non-vacuous corpus-wide).
 def _lint_turns_df(spark: SparkSession) -> DataFrame:
-    w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
-    idx = (F.row_number().over(w) - 1).cast("int")
     role = F.when(F.col("doc_id") % 41 == 2, F.lit(None).cast("string")) \
-        .otherwise(F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-            (idx % 3 + 1).cast("int")))
+        .otherwise(_cycled_role())
     text = F.when(F.col("doc_id") % 43 == 3,
                   F.lit(None).cast("string")).otherwise(F.col("text"))
-    return (spark.table("documents")
-            .select(F.col("source").alias("conv_id"),
-                    idx.alias("turn_idx"), role.alias("role"),
-                    text.alias("text"), "doc_id")
+    return (_doc_turns(spark, role.alias("role"), text.alias("text"), "doc_id")
             .filter(F.col("doc_id") % 37 != 1)     # index gaps
             .drop("doc_id"))
 
@@ -3743,11 +3693,17 @@ _RAG_K = 4
 _RAG_BUDGET = 120
 
 
-def _ragctx_fn(spark: SparkSession) -> DataFrame:
+def _rag_hits(spark: SparkSession, *cols) -> DataFrame:
+    """Synthetic retrieval output: query_id = doc_id % 19, text, ``cols``,
+    rank by doc_id."""
     w = Window.partitionBy(F.col("doc_id") % 19).orderBy("doc_id")
-    hits = spark.table("documents").select(
-        (F.col("doc_id") % 19).alias("query_id"), "text",
+    return spark.table("documents").select(
+        (F.col("doc_id") % 19).alias("query_id"), "text", *cols,
         F.row_number().over(w).alias("rank"))
+
+
+def _ragctx_fn(spark: SparkSession) -> DataFrame:
+    hits = _rag_hits(spark)
     ctx = rag_chain.assemble_context(
         hits, k=_RAG_K, token_budget=_RAG_BUDGET)
     question = F.concat(F.lit("question "), F.col("query_id"))
@@ -3807,12 +3763,9 @@ _def("rag_context_assembly", _ragctx_fn, _ragctx_duck_sql(), "documents")
 #        RÉPONSE/SOURCES/STATISTIQUES block per query over the same
 #        synthetic hits, literal timings, md5 output.
 def _ragfmt_fn(spark: SparkSession) -> DataFrame:
-    w = Window.partitionBy(F.col("doc_id") % 19).orderBy("doc_id")
-    hits = spark.table("documents").select(
-        (F.col("doc_id") % 19).alias("query_id"), "text",
-        F.concat(F.lit("doc_"), F.col("doc_id")).alias("source_name"),
-        (F.col("doc_id") % 7).alias("page"),
-        F.row_number().over(w).alias("rank"))
+    hits = _rag_hits(
+        spark, F.concat(F.lit("doc_"), F.col("doc_id")).alias("source_name"),
+        (F.col("doc_id") % 7).alias("page"))
     cits = (rag_chain.citations(hits, k=_RAG_K)
             .groupBy("query_id")
             .agg(F.array_sort(F.collect_list(F.struct(
@@ -3876,10 +3829,7 @@ _def("rag_answer_format", _ragfmt_fn, _ragfmt_duck_sql(), "documents")
 #        reciprocal rank. Same fixed query/expansions as entry 23b.
 def _mq_fn(spark: SparkSession) -> DataFrame:
     out = rag_extras.multi_query_search(
-        spark.table("documents"), _EXPANSION_QUERY,
-        rag_extras.QueryExpander(
-            rag_extras.QueryExpansionConfig(strategy="synonyms",
-                                            num_queries=3)),
+        spark.table("documents"), _EXPANSION_QUERY, _expander(),
         k_per_query=_EXPANSION_K_PER, final_k=_EXPANSION_FINAL_K)
     return out.select(
         "doc_id", F.col("n_lists").cast("int").alias("n_lists"),
@@ -3888,40 +3838,13 @@ def _mq_fn(spark: SparkSession) -> DataFrame:
 
 
 def _mq_duck_sql() -> str:
-    expansions = _expanded_terms()
-
-    def tf(t):
-        return f"len(regexp_extract_all(lower(text), '\\b{t}\\b'))"
-
-    def bm25_cte(i, terms):
-        words = _words_expr("text", "duckdb")
-        tf_cols = ", ".join(f"{tf(t)} AS tf_{j}"
-                            for j, t in enumerate(terms))
-        df_cols = ", ".join(
-            f"sum(CASE WHEN tf_{j} > 0 THEN 1 ELSE 0 END) AS df_{j}"
-            for j in range(len(terms)))
-        score = " + ".join(
-            f"(ln((s.n_docs - s.df_{j} + 0.5) / (s.df_{j} + 0.5) + 1) "
-            f"* d.tf_{j} * 2.5 / "
-            f"(d.tf_{j} + 1.5 * (0.25 + 0.75 * d.dl / s.avgdl)))"
-            for j in range(len(terms)))
-        return f"""
-d{i} AS (SELECT doc_id, {tf_cols}, len({words}) AS dl FROM documents),
-s{i} AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl, {df_cols} FROM d{i}),
-t{i} AS (
+    legs = _expansion_legs_duck(lambda i, score: f"""
   SELECT doc_id,
          row_number() OVER (ORDER BY ({score}) DESC, doc_id ASC) AS r
   FROM d{i} d CROSS JOIN s{i} s
   ORDER BY ({score}) DESC, doc_id ASC LIMIT {_EXPANSION_K_PER}
-)"""
-
-    ctes = ",".join(bm25_cte(i, terms)
-                    for i, terms in enumerate(expansions))
-    union = "\nUNION ALL\n".join(
-        f"SELECT * FROM t{i}" for i in range(len(expansions)))
-    return f"""
-WITH {ctes},
-merged AS ({union}),
+""")
+    return f"""{legs},
 fused AS (
   SELECT doc_id, CAST(count(*) AS INT) AS n_lists,
          CAST(sum({RRF_SCALE} // (60 + r)) AS BIGINT) AS fused_score
@@ -3952,25 +3875,30 @@ _CMP_SIM = 0.05
 _CMP_RED = 0.25
 
 
-def _compress_fn(spark: SparkSession) -> DataFrame:
+def _rerank_cands(spark: SparkSession) -> DataFrame:
+    """The candidate set of the compression and MMR entries: queries are
+    vec 0..3, candidates vec_id % 4 ranked by vec_id."""
     emb = spark.table("embeddings")
     queries_df = emb.filter("vec_id < 4").select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"))
     w = Window.partitionBy(F.col("vec_id") % 4).orderBy("vec_id")
-    cands = (emb.filter("vec_id >= 4 AND vec_id < 200")
-             .select((F.col("vec_id") % 4).alias("query_id"),
-                     F.col("vec_id").alias("doc_id"), "embedding",
-                     F.row_number().over(w).alias("rank"))
-             .join(queries_df, on="query_id"))
+    return (emb.filter("vec_id >= 4 AND vec_id < 200")
+            .select((F.col("vec_id") % 4).alias("query_id"),
+                    F.col("vec_id").alias("doc_id"), "embedding",
+                    F.row_number().over(w).alias("rank"))
+            .join(queries_df, on="query_id"))
+
+
+def _compress_fn(spark: SparkSession) -> DataFrame:
     return (rag_extras.compression_retrieve(
-        cands, sim_threshold=_CMP_SIM, redundancy_threshold=_CMP_RED)
+        _rerank_cands(spark), sim_threshold=_CMP_SIM,
+        redundancy_threshold=_CMP_RED)
         .orderBy("query_id", "rank"))
 
 
-def _compress_duck_sql() -> str:
-    return f"""
-WITH RECURSIVE cand AS (
+# the twin of _rerank_cands plus each candidate's cosine to its query
+_RERANK_CAND_CTES = f"""cand AS (
   SELECT e.vec_id % 4 AS query_id, e.vec_id AS doc_id,
          e.embedding AS emb, q.embedding AS qemb,
          row_number() OVER (PARTITION BY e.vec_id % 4
@@ -3981,7 +3909,12 @@ WITH RECURSIVE cand AS (
   SELECT query_id, doc_id, rank, emb,
          {_cosine('emb', 'qemb')} AS qsim
   FROM cand
-), pairs AS (
+)"""
+
+
+def _compress_duck_sql() -> str:
+    return f"""
+WITH RECURSIVE {_RERANK_CAND_CTES}, pairs AS (
   SELECT a.query_id, a.rank AS r_hi, b.rank AS r_lo,
          {_cosine('a.emb', 'b.emb')} AS cs
   FROM scored a JOIN scored b
@@ -4201,14 +4134,10 @@ _def("line_dedup", _line_dedup_fn, _line_dedup_duck_sql(), "documents")
 #        non-trivial (consecutive doc_ids within a source repeat residues
 #        often enough for multi-turn runs).
 def _conv_stats_shaped(spark: SparkSession) -> DataFrame:
-    w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
     role = (F.when(F.col("doc_id") % 5 < 2, "user")
             .when(F.col("doc_id") % 5 < 4, "assistant")
             .otherwise("tool"))
-    return (spark.table("documents")
-            .select(F.col("source").alias("conv_id"),
-                    (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-                    role.alias("role"), "text"))
+    return _doc_turns(spark, role.alias("role"), "text")
 
 
 def _conv_stats_fn(spark: SparkSession) -> DataFrame:
@@ -4311,13 +4240,7 @@ WITH dims AS (
   FROM deq q JOIN deq v
     ON q.vec_id < 8 AND v.vec_id <> q.vec_id
 )
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id ASC) AS rank
-  FROM scored) r
-WHERE rank <= 5
-"""
+{_topk_per_query_duck("scored", "score DESC", 5)}"""
 
 
 _def("ann_sq8_topk", _sq8_fn, _sq8_duck_sql(), "embeddings")
@@ -4331,13 +4254,7 @@ _def("ann_sq8_topk", _sq8_fn, _sq8_duck_sql(), "embeddings")
 #        corpus's adjacent-turn cohesion distribution ~1:3 (measured),
 #        so both branches are exercised conversation-wide.
 def _topic_seg_fn(spark: SparkSession) -> DataFrame:
-    w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
-    shaped = (spark.table("documents")
-              .select(F.col("source").alias("conv_id"),
-                      (F.row_number().over(w) - 1).cast("int")
-                      .alias("turn_idx"),
-                      "text"))
-    return convlint.topic_segments(shaped, threshold_pct=50)
+    return convlint.topic_segments(_doc_turns(spark, "text"), threshold_pct=50)
 
 
 def _topic_seg_duck_sql() -> str:
@@ -4391,17 +4308,8 @@ _MMR_K = 5
 
 
 def _mmr_fn(spark: SparkSession) -> DataFrame:
-    emb = spark.table("embeddings")
-    queries_df = emb.filter("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_embedding"))
-    w = Window.partitionBy(F.col("vec_id") % 4).orderBy("vec_id")
-    cands = (emb.filter("vec_id >= 4 AND vec_id < 200")
-             .select((F.col("vec_id") % 4).alias("query_id"),
-                     F.col("vec_id").alias("doc_id"), "embedding",
-                     F.row_number().over(w).alias("rank"))
-             .join(queries_df, on="query_id"))
-    return (rag_extras.mmr_rerank(cands, lambda_mult=_MMR_LAM, k=_MMR_K)
+    return (rag_extras.mmr_rerank(_rerank_cands(spark), lambda_mult=_MMR_LAM,
+                                  k=_MMR_K)
             .orderBy("query_id", "rank"))
 
 
@@ -4409,18 +4317,7 @@ def _mmr_duck_sql() -> str:
     lam, k = _MMR_LAM, _MMR_K
 
     parts = [f"""
-WITH cand AS (
-  SELECT e.vec_id % 4 AS query_id, e.vec_id AS doc_id,
-         e.embedding AS emb, q.embedding AS qemb,
-         row_number() OVER (PARTITION BY e.vec_id % 4
-                            ORDER BY e.vec_id) AS rank
-  FROM embeddings e JOIN embeddings q ON q.vec_id = e.vec_id % 4
-  WHERE e.vec_id >= 4 AND e.vec_id < 200
-), scored AS (
-  SELECT query_id, doc_id, rank, emb,
-         {_cosine('emb', 'qemb')} AS qsim
-  FROM cand
-), pairs AS (
+WITH {_RERANK_CAND_CTES}, pairs AS (
   SELECT a.query_id, a.rank AS r_a, b.rank AS r_b,
          {_cosine('a.emb', 'b.emb')} AS cs
   FROM scored a JOIN scored b
@@ -4579,25 +4476,32 @@ _def("corpus_diff", _snapdiff_fn, _SNAPDIFF_DUCK, "documents")
 _REVAL_K = 10
 
 
-def _reval_fn(spark: SparkSession) -> DataFrame:
+def _eval_fixture(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """(results, qrels) of the rank-metric entries: 8 queries, each
+    ranking 15 of doc_id < 120 in md5 order; a doc_id < 150 is relevant
+    when (3·doc_id + query_id) % 11 == 0."""
     docs = spark.table("documents").select("doc_id")
     qs = spark.range(8).select(F.col("id").alias("query_id"))
-    w = Window.partitionBy("query_id").orderBy("_m", "doc_id")
-    results = (qs.crossJoin(docs.filter("doc_id < 120"))
-               .withColumn("_m", F.expr(
-                   "md5(concat(CAST(query_id AS STRING), ':', "
-                   "CAST(doc_id AS STRING)))"))
-               .withColumn("rank", F.row_number().over(w))
-               .filter("rank <= 15")
-               .select("query_id", "doc_id", "rank"))
+    results = top_k(
+        qs.crossJoin(docs.filter("doc_id < 120")).withColumn("_m", F.expr(
+            "md5(concat(CAST(query_id AS STRING), ':', "
+            "CAST(doc_id AS STRING)))")),
+        15, ["_m", "doc_id"], by=["query_id"], rank="rank",
+    ).select("query_id", "doc_id", "rank")
     qrels = (qs.crossJoin(docs.filter("doc_id < 150"))
              .filter("(doc_id * 3 + query_id) % 11 = 0")
              .select("query_id", "doc_id"))
+    return results, qrels
+
+
+def _reval_fn(spark: SparkSession) -> DataFrame:
+    results, qrels = _eval_fixture(spark)
     return (retrieval.ranked_eval(results, qrels, k=_REVAL_K)
             .orderBy("query_id"))
 
 
-_REVAL_DUCK = f"""
+# the twin of _eval_fixture
+_EVAL_FIXTURE_CTES = """
 WITH qs AS (
   SELECT CAST(i AS BIGINT) AS query_id FROM range(0, 8) t(i)
 ), results AS (
@@ -4614,7 +4518,10 @@ WITH qs AS (
   SELECT q.query_id, d.doc_id
   FROM qs q, documents d
   WHERE d.doc_id < 150 AND (d.doc_id * 3 + q.query_id) % 11 = 0
-), hits AS (
+)"""
+
+
+_REVAL_DUCK = f"""{_EVAL_FIXTURE_CTES}, hits AS (
   SELECT r.query_id,
          CAST(sum(CASE WHEN j.doc_id IS NOT NULL THEN 1 ELSE 0 END)
               AS BIGINT) AS n_rel_ret,
@@ -5101,16 +5008,7 @@ _def("turn_grounding", _grounding_fn, _grounding_duck_sql(), "documents")
 #        candidate join as ngram_jaccard_top_pairs; both directions in
 #        exact ppm; top-20 by strongest direction.
 def _containment_duck_sql() -> str:
-    words = _words_expr("text", "duckdb")
-    sh = _shingles_expr("words")
-    return f"""
-WITH docs AS (
-  SELECT doc_id, shingles, len(shingles) AS n_sh FROM
-    (SELECT doc_id, list_distinct({sh}) AS shingles
-     FROM (SELECT doc_id, {words} AS words FROM documents) w) s
-), ex AS (
-  SELECT doc_id, n_sh, unnest(shingles) AS shingle FROM docs
-), pairs AS (
+    return f"""{_shingle_sets_duck()}, pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(count(*) AS BIGINT) AS inter,
          CAST(min(a.n_sh) AS BIGINT) AS na,
@@ -5683,19 +5581,7 @@ _NDCG_K = 10
 
 
 def _ndcg_fn(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents").select("doc_id")
-    qs = spark.range(8).select(F.col("id").alias("query_id"))
-    w = Window.partitionBy("query_id").orderBy("_m", "doc_id")
-    results = (qs.crossJoin(docs.filter("doc_id < 120"))
-               .withColumn("_m", F.expr(
-                   "md5(concat(CAST(query_id AS STRING), ':', "
-                   "CAST(doc_id AS STRING)))"))
-               .withColumn("rank", F.row_number().over(w))
-               .filter("rank <= 15")
-               .select("query_id", "doc_id", "rank"))
-    qrels = (qs.crossJoin(docs.filter("doc_id < 150"))
-             .filter("(doc_id * 3 + query_id) % 11 = 0")
-             .select("query_id", "doc_id"))
+    results, qrels = _eval_fixture(spark)
     return retrieval.ndcg_eval(results, qrels, k=_NDCG_K)
 
 
@@ -5708,24 +5594,7 @@ def _ndcg_duck_sql() -> str:
         prefix.append(acc)
     disc = "[" + ", ".join(repr(d) for d in discounts) + "]"
     ideal = "[" + ", ".join(repr(p) for p in prefix) + "]"
-    return f"""
-WITH qs AS (
-  SELECT CAST(i AS BIGINT) AS query_id FROM range(0, 8) t(i)
-), results AS (
-  SELECT query_id, doc_id, rank FROM (
-    SELECT q.query_id, d.doc_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY md5(CAST(q.query_id AS VARCHAR) || ':'
-                          || CAST(d.doc_id AS VARCHAR)), d.doc_id)
-             AS rank
-    FROM qs q, documents d WHERE d.doc_id < 120)
-  WHERE rank <= 15
-), qrels AS (
-  SELECT q.query_id, d.doc_id
-  FROM qs q, documents d
-  WHERE d.doc_id < 150 AND (d.doc_id * 3 + q.query_id) % 11 = 0
-), hits AS (
+    return f"""{_EVAL_FIXTURE_CTES}, hits AS (
   SELECT r.query_id,
          CAST(count(*) AS BIGINT) AS n_rel_ret,
          list_sort(list(r.rank)) AS ranks

@@ -23,7 +23,7 @@ import re
 # Compact, high-frequency function-word profiles. Word-boundary matched,
 # lowercase. Chosen to discriminate the table languages on short
 # snippets. The nl/sv/da/ro/pl rows are the round-5 table extension: the
-# measured divergence (scripts/langid_divergence.py) showed every
+# measured divergence (the tests/test_langid.py fixture) showed every
 # out-of-table Germanic/Romance/Slavic fixture misattributed — Dutch to
 # 'en' and Danish/Polish partly to 'en', which the default fr/en
 # allow-list then WRONGLY KEEPS. Their profiles deliberately avoid

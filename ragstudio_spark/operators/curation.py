@@ -24,10 +24,11 @@ no collect, no broadcast needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ragstudio_spark.operators import packing
 from ragstudio_spark.operators import redact as redact_op
+from ragstudio_spark.operators.ranking import top_k
 
 #: chars-per-token heuristic shared with the pack_sequences entry
 CHARS_PER_TOKEN = 4
@@ -41,9 +42,7 @@ def curate_corpus(df: DataFrame, text_col: str = "text",
     sequence assignment (``seq_index``/``seq_token_offset`` within the
     document's shard). Ties in the dedup window break on lowest id —
     deterministic across partitionings."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.asc(id_col))
-    canonical = (df.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
+    canonical = top_k(df, 1, [F.asc(id_col)], by=[F.md5(F.col(text_col))])
     red = redact_op.with_redaction(canonical, text_col)
     toks = red.withColumn(
         "token_count",
@@ -214,9 +213,7 @@ def curate_pretrain_stream(df: DataFrame, text_col: str = "text",
     """
     from ragstudio_spark.operators import sampling
 
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.asc(id_col))
-    canonical = (df.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
+    canonical = top_k(df, 1, [F.asc(id_col)], by=[F.md5(F.col(text_col))])
     toks = (canonical
             .withColumn("token_count",
                         F.expr(f"length({text_col}) div {CHARS_PER_TOKEN}")

@@ -62,6 +62,9 @@ CHUNK_STRUCT = StructType(
 
 _CHUNK_FIELDS = [f.name for f in CHUNK_STRUCT.fields]
 
+_WIRE_CHUNK = StructType(CHUNK_STRUCT.fields + [
+    StructField("b_start", IntegerType()), StructField("b_len", IntegerType())])
+
 FUSED_SCHEMA = (
     "conv_id string, turn_idx int, content_type string, "
     "extraction_engine string, text_head string, "
@@ -69,11 +72,7 @@ FUSED_SCHEMA = (
     "repair_applied boolean, extracted_chars int, "
     "extraction_fixes int, page_numbers_removed int, error string, "
     "chunking_reason string, base_utf8 binary, "
-    "chunks array<struct<"
-    "chunk_index:int,chunk_id:string,text:string,char_start:int,char_end:int,"
-    "char_length:int,token_count:int,sentence_count:int,total_chunks:int,"
-    "chunking_strategy:string,requested_strategy:string,chunk_size:int,"
-    "chunk_overlap:int,b_start:int,b_len:int>>"
+    f"chunks array<{_WIRE_CHUNK.simpleString()}>"
 )
 
 # top-level column names (the struct field list has no ", " in it)

@@ -37,6 +37,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ragstudio_spark.operators.ranking import top_k
+
 # reference query_expansion.py:210-219 — verbatim semantics, small table;
 # "in production use WordNet or a custom thesaurus" per the reference
 SYNONYMS: dict[str, list[str]] = {
@@ -173,18 +175,9 @@ def expansion_search(docs: DataFrame, query: str,
         merged = topk if merged is None else merged.unionByName(topk)
     if merged is None:
         raise ValueError("no expandable terms in query")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("expansion_idx")
-    dedup = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1).drop("_rn")
-    )
-    w_all = Window.orderBy("expansion_idx", F.asc(id_col))
-    return (
-        dedup.orderBy("expansion_idx", F.asc(id_col)).limit(final_k)
-        .select(id_col, "expansion_idx", F.row_number().over(w_all).alias("rank"))
-    )
+    dedup = top_k(merged, 1, ["expansion_idx"], by=[id_col])
+    return top_k(dedup, final_k, ["expansion_idx", F.asc(id_col)],
+                 rank="rank").select(id_col, "expansion_idx", "rank")
 
 
 #: integer-quantized reciprocal-rank unit: 1e12 div (k + rank). Exact in
@@ -251,13 +244,9 @@ def multi_query_search(docs: DataFrame, query: str,
     merged = None
     for i, scores in _shared_bm25_legs(docs, query, expander,
                                        text_col, id_col):
-        topk = (scores
-                .orderBy(F.desc("bm25_score"), F.asc(id_col))
-                .limit(k_per_query))
-        w = Window.orderBy(F.desc("bm25_score"), F.asc(id_col))
-        ranked = topk.select(
-            F.col(id_col),
-            F.row_number().over(w).alias("_r"))  # ≤ k rows: tiny window
+        ranked = top_k(scores, k_per_query,
+                       [F.desc("bm25_score"), F.asc(id_col)],
+                       rank="_r").select(id_col, "_r")  # ≤ k rows: tiny window
         merged = ranked if merged is None else merged.unionByName(ranked)
     if merged is None:
         raise ValueError("no expandable terms in query")
@@ -465,11 +454,8 @@ def rerank(candidates: DataFrame, score: Column,
     scored = candidates.withColumn("rerank_score", score)
     if cfg.min_score is not None:
         scored = scored.filter(F.col("rerank_score") >= cfg.min_score)
-    from pyspark.sql import Window
-
-    top = scored.orderBy(F.desc("rerank_score"), F.asc(id_col)).limit(cfg.top_k)
-    w = Window.orderBy(F.desc("rerank_score"), F.asc(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    return top_k(scored, cfg.top_k, [F.desc("rerank_score"), F.asc(id_col)],
+                 rank="rank")
 
 
 def lexical_overlap_score(query: str, text_col: str = "text") -> Column:

@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ragstudio_spark.operators import similarity
+from ragstudio_spark.operators.ranking import top_k
 
 
 @dataclass
@@ -136,10 +137,8 @@ def _ranked(scored: DataFrame, id_col: str, score_col: str, rank_name: str,
     """score → dense integer ranks (desc score, asc id). With a candidate
     limit the total order is computed as a distributed partial top-k
     (TakeOrderedAndProject) before the small rank window."""
-    if candidate_limit is not None:
-        scored = scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(candidate_limit)
-    w = Window.orderBy(F.desc(score_col), F.asc(id_col))
-    return scored.select(F.col(id_col), F.row_number().over(w).alias(rank_name))
+    return top_k(scored, candidate_limit, [F.desc(score_col), F.asc(id_col)],
+                 rank=rank_name).select(id_col, rank_name)
 
 
 def cosine_scores(vectors: DataFrame, query: DataFrame,
@@ -169,11 +168,8 @@ def rrf_fuse(bm25_ranks: DataFrame, vec_ranks: DataFrame,
     contrib_v = F.when(F.col("vec_rank").isNotNull(),
                        cfg.vector_weight / (cfg.rrf_k + F.col("vec_rank"))).otherwise(0.0)
     scored = fused.select(F.col(id_col), (contrib_b + contrib_v).alias("rrf"))
-    w = Window.orderBy(F.desc("rrf"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("rrf"), F.asc(id_col)).limit(cfg.k)
-        .select(F.col(id_col), F.row_number().over(w).alias("rank"))
-    )
+    return top_k(scored, cfg.k, [F.desc("rrf"), F.asc(id_col)],
+                 rank="rank").select(id_col, "rank")
 
 
 def hybrid_search(docs: DataFrame, vectors: DataFrame, terms: list[str],

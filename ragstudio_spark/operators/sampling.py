@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ragstudio_spark.operators.ranking import top_k
+
 _DENOM = float(16 ** 8)  # 8 hex digits
 
 
@@ -102,10 +104,8 @@ def cap_per_key(df: DataFrame, key_col: str, n: int,
     if n <= 0:
         raise ValueError(f"n must be positive: {n}")
     h = F.md5(_key_col(list(order_cols), salt))
-    w = Window.partitionBy(key_col).orderBy(
-        F.asc(h), *[F.asc(c) for c in order_cols])
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n).drop("_rn"))
+    return top_k(df, n, [F.asc(h), *[F.asc(c) for c in order_cols]],
+                 by=[key_col])
 
 
 def mixture_plan(df: DataFrame, key_col: str, weights_ppm: dict[str, int],

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ragstudio_spark.operators.ranking import top_k
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product in double precision."""
@@ -104,12 +106,9 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
         on="cid",
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     scored = cand.withColumn("similarity", cosine(F.col("q_vec"), F.col("v_vec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "similarity")
-    )
+    return top_k(scored, k, [F.desc("similarity"), F.asc("neighbor_id")],
+                 by=["query_id"], rank="rank").select(
+        "query_id", "neighbor_id", "rank", "similarity")
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -150,11 +149,8 @@ def kmeans_centroids(vectors: DataFrame, k: int = 16, iters: int = 2,
     for _ in range(iters):
         scored = v.crossJoin(F.broadcast(cents)).withColumn(
             "d", _l2sq(F.col(vec_col), F.col("c_vec")))
-        w = Window.partitionBy(id_col).orderBy(F.asc("d"), F.asc("cid"))
-        assign = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).select(id_col, vec_col, "cid")
-        )
+        assign = top_k(scored, 1, [F.asc("d"), F.asc("cid")], by=[id_col],
+                       rank="rn").select(id_col, vec_col, "cid")
         if exact:
             grouped = assign.groupBy("cid").agg(
                 F.count("*").alias("n"),
@@ -304,10 +300,8 @@ def pq_topk(codes: DataFrame, codebooks: DataFrame, query_vec: list[float],
         exploded.join(F.broadcast(table), on=["subspace", "cid"])
         .groupBy("neighbor_id").agg(F.sum("qd").alias("adist"))
     )
-    w = Window.orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (dist.orderBy(F.asc("adist"), F.asc("neighbor_id")).limit(k)
-            .withColumn("rank", F.row_number().over(w))
-            .select("neighbor_id", "rank"))
+    return top_k(dist, k, [F.asc("adist"), F.asc("neighbor_id")],
+                 rank="rank").select("neighbor_id", "rank")
 
 
 def ivfpq_index(vectors: DataFrame, centroids: DataFrame,
@@ -349,15 +343,22 @@ def ivfpq_train_residual(vectors: DataFrame, centroids: DataFrame,
     codebooks in pq_train's (subspace, cid, sub_vec) shape. ``exact``
     selects pq_train's order-fixed-fold oracle mode (the
     ``ann_ivfpq_residual_topk`` correctness gate), never the scale path."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col)
-    cents = centroids.select(F.col("cid"), F.col(vec_col).alias("_c_vec"))
-    res = (vectors.join(assign, on=id_col)
-           .join(F.broadcast(cents), on="cid")
-           .select(F.col(id_col),
-                   _residual(F.col(vec_col), F.col("_c_vec"))
-                   .alias(vec_col)))
+    res = _cell_residuals(vectors, centroids, id_col, vec_col).drop("cell")
     return pq_train(res, m=m, k=k, iters=iters, id_col=id_col,
                     vec_col=vec_col, exact=exact)
+
+
+def _cell_residuals(vectors: DataFrame, centroids: DataFrame, id_col: str,
+                    vec_col: str) -> DataFrame:
+    """(id, cell, v − cell centroid): each vector's residual against the
+    centroid ivf_assign gives it."""
+    assign = ivf_assign(vectors, centroids, id_col, vec_col)
+    cents = centroids.select(F.col("cid"), F.col(vec_col).alias("_c_vec"))
+    return (vectors.join(assign, on=id_col)
+            .join(F.broadcast(cents), on="cid")
+            .select(F.col(id_col), F.col("cid").alias("cell"),
+                    _residual(F.col(vec_col), F.col("_c_vec"))
+                    .alias(vec_col)))
 
 
 def ivfpq_index_residual(vectors: DataFrame, centroids: DataFrame,
@@ -373,13 +374,7 @@ def ivfpq_index_residual(vectors: DataFrame, centroids: DataFrame,
     twice per index build. localCheckpoint is the single-job equivalent
     of what a real 10⁹-vector build does anyway: persist the assignment/
     residual table before encoding."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col)
-    cents = centroids.select(F.col("cid"), F.col(vec_col).alias("_c_vec"))
-    res = (vectors.join(assign, on=id_col)
-           .join(F.broadcast(cents), on="cid")
-           .select(F.col(id_col), F.col("cid").alias("cell"),
-                   _residual(F.col(vec_col), F.col("_c_vec"))
-                   .alias(vec_col))).localCheckpoint()
+    res = _cell_residuals(vectors, centroids, id_col, vec_col).localCheckpoint()
     codes = pq_encode(res.drop("cell"), codebooks, m, id_col, vec_col)
     return res.select(id_col, "cell").join(codes, on=id_col)
 
@@ -400,12 +395,10 @@ def ivfpq_topk_residual(index: DataFrame, centroids: DataFrame,
         centroids.select("cid", F.col(vec_col).alias("c_vec")))
     probed = q.crossJoin(cents_b).withColumn(
         "sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    w_cell = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (probed.withColumn("rn", F.row_number().over(w_cell))
-              .filter(F.col("rn") <= nprobe)
-              .select("query_id", F.col("cid").alias("cell"),
-                      _residual(F.col("q_vec"), F.col("c_vec"))
-                      .alias("q_res")))
+    probes = top_k(probed, nprobe, [F.desc("sim"), F.asc("cid")],
+                   by=["query_id"], rank="rn").select(
+        "query_id", F.col("cid").alias("cell"),
+        _residual(F.col("q_vec"), F.col("c_vec")).alias("q_res"))
     q_subs = probes.select(
         "query_id", "cell",
         F.explode(F.array(*[
@@ -426,11 +419,9 @@ def ivfpq_topk_residual(index: DataFrame, centroids: DataFrame,
                       on=["query_id", "cell", "subspace", "cid"])
             .groupBy("query_id", "neighbor_id")
             .agg(F.sum("qd").alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                               F.asc("neighbor_id"))
-    return (dist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return top_k(dist, k, [F.asc("adist"), F.asc("neighbor_id")],
+                 by=["query_id"], rank="rank").select(
+        "query_id", "neighbor_id", "rank")
 
 
 def ann_recall_report(approx: DataFrame, exact: DataFrame,
@@ -501,10 +492,9 @@ def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
     probed = q.crossJoin(
         F.broadcast(centroids.select("cid", F.col(vec_col).alias("c_vec")))
     ).withColumn("sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    w_cell = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    probes = (probed.withColumn("rn", F.row_number().over(w_cell))
-              .filter(F.col("rn") <= nprobe)
-              .select("query_id", F.col("cid").alias("cell")))
+    probes = top_k(probed, nprobe, [F.desc("sim"), F.asc("cid")],
+                   by=["query_id"], rank="rn").select(
+        "query_id", F.col("cid").alias("cell"))
     # per-query asymmetric distance table: query sub-vector → every
     # codebook centroid (|Q|·m·k rows); same explode shape as pq_encode
     q_subs = q.select(
@@ -527,11 +517,10 @@ def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
     dist = (cand.join(F.broadcast(qd), on=["query_id", "subspace", "cid"])
             .groupBy("query_id", "neighbor_id")
             .agg(F.sum("qd").alias("adist")))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                               F.asc("neighbor_id"))
-    return (dist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return top_k(dist, k, [F.asc("adist"), F.asc("neighbor_id")],
+                 by=["query_id"], rank="rank").select(
+        "query_id", "neighbor_id", "rank")
+
 
 
 def hyperplane_buckets(vectors: DataFrame, planes: DataFrame,
@@ -647,11 +636,9 @@ def sq8_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", dot(F.col("q_hat"), F.col("v_hat")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return top_k(scored, k, [F.desc("score"), F.asc("neighbor_id")],
+                 by=["query_id"], rank="rank").select(
+        "query_id", "neighbor_id", "rank")
 
 
 def hard_negatives(ranked: DataFrame, qrels: DataFrame, k: int = 5,

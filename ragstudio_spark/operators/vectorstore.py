@@ -27,8 +27,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.operators.similarity import dot
 
 FORMAT_VERSION = 1
@@ -84,11 +85,8 @@ def _latest(df: DataFrame) -> DataFrame:
     # content-hash tie-break: duplicate ids WITHIN one version (a batch
     # that carried the same id twice) must still resolve deterministically,
     # never by shuffle order
-    w = Window.partitionBy("id").orderBy(
-        F.desc("version"),
-        F.asc(F.md5(F.to_json(F.struct("text", "embedding")))))
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    return top_k(df, 1, [F.desc("version"), F.asc(
+        F.md5(F.to_json(F.struct("text", "embedding"))))], by=["id"])
 
 
 def upsert(store: DataFrame, new: DataFrame) -> DataFrame:
@@ -127,10 +125,8 @@ def search(store: DataFrame, query_embedding: list[float], k: int = 4) -> DataFr
     e = F.col("embedding")
     score = dot(e, q) / ((F.sqrt(dot(e, e)) + 1e-10) * (F.sqrt(dot(q, q)) + 1e-10))
     scored = store.withColumn("score", score)
-    top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "id", "text", "metadata", "score", "rank")
+    return top_k(scored, k, [F.desc("score"), F.asc("id")],
+                 rank="rank").select("id", "text", "metadata", "score", "rank")
 
 
 def ingest_chunks(chunks: DataFrame, path: str,

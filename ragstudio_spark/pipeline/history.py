@@ -19,13 +19,14 @@ only what a previous run left failed, with the reference's pacing.
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, Window
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ragstudio_spark.operators.metrics import RETRYABLE_STATUSES
+from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.pipeline import lineage as _lineage
 
 
@@ -98,28 +99,15 @@ def retry_turn_keys(spark: SparkSession, root: str) -> DataFrame | None:
     """(conv_id, turn_idx) whose *latest* status is retryable
     (``metrics.RETRYABLE_STATUSES``). A turn's newest metrics row wins
     (runs are ordered by run directory name)."""
-    runs = _lineage.committed_runs(root)
-    if not runs:
-        return None
-    frames = []
-    for order, run_id in enumerate(runs):
-        path = os.path.join(root, "runs", run_id, "metrics")
-        if os.path.isdir(path):
-            frames.append(
-                spark.read.parquet(path).select(
-                    "conv_id", "turn_idx", "status"
-                ).withColumn("run_order", F.lit(order))
-            )
+    frames = [
+        spark.read.parquet(path).select("conv_id", "turn_idx", "status")
+        .withColumn("run_order", F.lit(order))
+        for order, path in _lineage._committed_paths(root, "metrics")
+    ]
     if not frames:
         return None
-    metrics = frames[0]
-    for f_ in frames[1:]:
-        metrics = metrics.unionByName(f_)
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(F.desc("run_order"))
-    latest = (
-        metrics.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
+    latest = top_k(reduce(DataFrame.unionByName, frames), 1,
+                   [F.desc("run_order")], by=["conv_id", "turn_idx"], rank="rn")
     return latest.filter(F.col("status").isin(RETRYABLE_STATUSES)).select(
         "conv_id", "turn_idx"
     )
@@ -140,8 +128,8 @@ def retry_subset(spark: SparkSession, transcripts: DataFrame,
     keys = retry_turn_keys(spark, root)
     if keys is None:
         return None
-    keys = _lineage.maybe_broadcast(keys, estimated_retry_turns(root))
-    return transcripts.join(keys, on=["conv_id", "turn_idx"], how="left_semi")
+    return _lineage._guarded_join(transcripts, keys,
+                                  estimated_retry_turns(root), "left_semi")
 
 
 def retry_failed(spark: SparkSession, transcripts: DataFrame, root: str,

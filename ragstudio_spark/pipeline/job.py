@@ -15,9 +15,11 @@ explode is ``_published_chunks``; ``streaming.transform_stream`` runs the
 same two on a stream, so batch and stream publish the same chunks.
 
 Adaptive mode (profile-driven strategy selection) runs inside the same
-fused hop using the kernel profiler/selector (identical formulas to the
-JVM column-expression operators in operators/profiler.py + strategy.py,
-which serve the SQL/oracle tier — parity-tested against the kernel).
+fused hop using the kernel profiler/selector. The JVM column-expression
+twins in operators/profiler.py + strategy.py are parity-tested against
+the kernel; profiler.py's feature columns feed the ML strategy classifier
+(operators/ml_strategy.py), strategy.py has no product caller, and the
+strategy_distribution entry runs its own SQL (entry_queries._strategy_sql).
 
 The hot path is a single narrow stage: no joins, no aggregations, no
 shuffles — each turn is independent, so the plan scales linearly with
@@ -32,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from ragstudio_spark.operators import fused, quality_gate, sniff
+from ragstudio_spark.operators.ranking import top_k
 
 
 @dataclass
@@ -108,16 +111,8 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
         # "near" mode ALSO runs this first — MinHash shingling needs ≥3
         # words, so short exact dups would otherwise survive near mode
         # (near-dedup must be a superset of exact-dedup).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.md5(F.col("text"))).orderBy(
-            "conv_id", "turn_idx", "chunk_index"
-        )
-        chunks = (
-            chunks.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        chunks = top_k(chunks, 1, ["conv_id", "turn_idx", "chunk_index"],
+                       by=[F.md5(F.col("text"))])
     elif cfg.dedupe_chunks is not False:
         raise ValueError(f"dedupe_chunks: {cfg.dedupe_chunks!r}")
     if cfg.dedupe_chunks == "near":

@@ -78,8 +78,16 @@ def resume_filter(spark: SparkSession, transcripts: DataFrame,
     done = committed_turn_keys(spark, root)
     if done is None:
         return transcripts
-    done = maybe_broadcast(done, estimated_committed_turns(root))
-    return transcripts.join(done, on=["conv_id", "turn_idx"], how="left_anti")
+    return _guarded_join(transcripts, done, estimated_committed_turns(root),
+                         "left_anti")
+
+
+def _guarded_join(transcripts: DataFrame, keys: DataFrame,
+                  estimated_keys: int, how: str) -> DataFrame:
+    """Join the input to a (conv_id, turn_idx) key set; the keys are
+    broadcast-hinted only under the size guard (``maybe_broadcast``)."""
+    keys = maybe_broadcast(keys, estimated_keys)
+    return transcripts.join(keys, on=["conv_id", "turn_idx"], how=how)
 
 
 def _run_dir(root: str, run_id: str) -> str:
@@ -98,14 +106,18 @@ def committed_runs(root: str) -> list[str]:
 
 def read_table(spark: SparkSession, root: str, table: str) -> DataFrame | None:
     """Union of a table across all committed runs."""
-    paths = [
-        os.path.join(_run_dir(root, r), table)
-        for r in committed_runs(root)
-        if os.path.isdir(os.path.join(_run_dir(root, r), table))
-    ]
+    paths = [path for _, path in _committed_paths(root, table)]
     if not paths:
         return None
     return spark.read.parquet(*paths)
+
+
+def _committed_paths(root: str, table: str) -> list[tuple[int, str]]:
+    """(run order, path) of ``table`` in every committed run that wrote
+    it, oldest first; the order counts all committed runs."""
+    paths = (os.path.join(_run_dir(root, r), table) for r in committed_runs(root))
+    return [(order, path) for order, path in enumerate(paths)
+            if os.path.isdir(path)]
 
 
 def committed_turn_keys(spark: SparkSession, root: str) -> DataFrame | None:

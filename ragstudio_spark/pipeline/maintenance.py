@@ -49,9 +49,10 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, AtomicType, StructType
 
+from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.pipeline.lineage import COMMIT_MARKER
 
 
@@ -133,10 +134,8 @@ def compact_parquet_dir(
 
     if dedup_keys:
         others = orderable([c for c in df.columns if c not in dedup_keys])
-        w = Window.partitionBy(*dedup_keys).orderBy(
-            *[F.asc_nulls_first(c) for c in others] or [F.lit(1)])
-        df = (df.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1).drop("_rn"))
+        df = top_k(df, 1, [F.asc_nulls_first(c) for c in others] or [F.lit(1)],
+                   by=dedup_keys)
 
     def write_tmp(tmp):
         _write_layout(spark, df, tmp, target_files, partition_by, orderable)

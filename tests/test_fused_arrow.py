@@ -68,3 +68,21 @@ class TestArrowEngineEquality:
             untraced = traced.drop(F.col("stage_trace"))
             assert untraced.schema == ref.schema, base
             assert _rows(untraced) == want, base
+
+
+def test_fused_schema_wire_format_pinned():
+    """FUSED_SCHEMA is derived from CHUNK_STRUCT; the Arrow wire format it
+    declares must stay exactly this string."""
+    assert fused.FUSED_SCHEMA == (
+        "conv_id string, turn_idx int, content_type string, "
+        "extraction_engine string, text_head string, "
+        "language string, quality_score double, needs_repair boolean, "
+        "repair_applied boolean, extracted_chars int, "
+        "extraction_fixes int, page_numbers_removed int, error string, "
+        "chunking_reason string, base_utf8 binary, "
+        "chunks array<struct<"
+        "chunk_index:int,chunk_id:string,text:string,char_start:int,char_end:int,"
+        "char_length:int,token_count:int,sentence_count:int,total_chunks:int,"
+        "chunking_strategy:string,requested_strategy:string,chunk_size:int,"
+        "chunk_overlap:int,b_start:int,b_len:int>>"
+    )

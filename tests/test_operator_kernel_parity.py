@@ -1,9 +1,11 @@
 """JVM column-expression operators vs the Python kernel — parity tests.
 
-The pipeline's fused UDF uses the kernel; the SQL/oracle tier uses the
-column-expression operators (profiler, strategy ladder, quality gate).
-These tests pin the two implementations to each other on the synthetic
-corpus, so neither can drift.
+The pipeline's fused UDF uses the kernel. Of the column-expression
+operators, the quality gate runs in the pipeline, the profiler's feature
+columns feed the ML strategy classifier (operators/ml_strategy.py), and
+the strategy ladder has no product caller; the strategy_distribution entry
+runs its own SQL. These tests pin each operator to the kernel on the
+synthetic corpus, so neither can drift.
 """
 
 import pandas as pd
