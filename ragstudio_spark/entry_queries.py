@@ -27,10 +27,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from ragstudio_spark import sqlspec
 from ragstudio_spark.operators import (
     bpe_trainer, convlint, curation, dedupe, feedback, lm_filter, metrics,
-    ml_strategy, ml_trainer, multimodal, packing, quality_model,
+    ml_strategy, ml_trainer, multimodal, packing, profiler, quality_model,
     quality_signals, rag_chain, rag_extras, redact, retrieval, sampling,
-    schema_extract, sessions, sft, similarity, sketches, skew, snapshot,
-    toolcalls, vectorstore, routing as routing_op,
+    schema_extract, sessions, sft, similarity, sketches, skew, sniff,
+    snapshot, strategy, toolcalls, vectorstore, routing as routing_op,
 )
 from ragstudio_spark.operators.asof import asof_join
 from ragstudio_spark.operators.convlint import ROLES, VALID_TRANSITIONS
@@ -1092,7 +1092,9 @@ _def("text_quality_features", _quality_features_sql("spark"),
 # -- 16. profile → adaptive strategy distribution (decorated corpus hits
 #        every reachable branch of the selector decision tree; the
 #        high_structure_score branch is unreachable from real text — any
-#        profile scoring >0.6 also trips an earlier branch)
+#        profile scoring >0.6 also trips an earlier branch). Spark runs
+#        the operators (profiler.with_profile → strategy.with_strategy);
+#        DuckDB re-derives the ladder.
 # dialect-neutral decoration (chr/repeat/|| work in both engines) reused by
 # strategy_distribution and strategy_distribution_ml
 _NL = "chr(10)"
@@ -1109,40 +1111,27 @@ FROM documents
 """
 
 
-def _profile_sql(engine: str) -> dict[str, str]:
+def _profile_sql() -> dict[str, str]:
     """The profiler's structural features (operators/profiler.py, same
-    regexes) as SQL over ``text``: the heading test, the table-marker
-    count and the heading depth."""
-    if engine == "spark":
-        def rx(p):  # Spark SQL string literals eat single backslashes
-            return p.replace("\\", "\\\\")
-        md_depths = f"transform(regexp_extract_all(text, '{rx(_MD_HEADER_RE)}', 1), h -> length(h))"
-        num_depths = (f"transform(regexp_extract_all(text, '{rx(_NUM_SECTION_RE)}', 1), "
-                      "s -> size(split(s, '\\\\.')))")
-        depth = (f"CASE WHEN size(concat({md_depths}, {num_depths})) > 0 "
-                 f"THEN array_max(concat({md_depths}, {num_depths})) ELSE 1 END")
-        tab = "'\\t'"
-        has_head = f"text RLIKE '{rx(_HEADING_RE)}'"
-    else:
-        md_depths = f"list_transform(regexp_extract_all(text, '{_MD_HEADER_RE}', 1), h -> length(h))"
-        num_depths = (f"list_transform(regexp_extract_all(text, '{_NUM_SECTION_RE}', 1), "
-                      "s -> len(string_split(s, '.')))")
-        depth = (f"CASE WHEN len(list_concat({md_depths}, {num_depths})) > 0 "
-                 f"THEN list_max(list_concat({md_depths}, {num_depths})) ELSE 1 END")
-        tab = "chr(9)"
-        has_head = f"regexp_matches(text, '{_HEADING_RE}')"
+    regexes) as DuckDB SQL over ``text``: the heading test, the
+    table-marker count and the heading depth."""
+    md_depths = f"list_transform(regexp_extract_all(text, '{_MD_HEADER_RE}', 1), h -> length(h))"
+    num_depths = (f"list_transform(regexp_extract_all(text, '{_NUM_SECTION_RE}', 1), "
+                  "s -> len(string_split(s, '.')))")
+    depth = (f"CASE WHEN len(list_concat({md_depths}, {num_depths})) > 0 "
+             f"THEN list_max(list_concat({md_depths}, {num_depths})) ELSE 1 END")
+    has_head = f"regexp_matches(text, '{_HEADING_RE}')"
     marks = ("((length(text) - length(replace(text, '|', ''))) + "
-             f"(length(text) - length(replace(text, {tab}, ''))) + "
+             "(length(text) - length(replace(text, chr(9), ''))) + "
              "(length(text) - length(replace(text, 'colonne', ''))) / 7 + "
              "(length(text) - length(replace(text, 'ligne', ''))) / 5)")
     return {"depth": depth, "has_head": has_head, "marks": marks}
 
 
-def _strategy_sql(engine: str) -> str:
-    dec = _STRATEGY_DECORATE
-    feat = _profile_sql(engine)
+def _strategy_sql() -> str:
+    feat = _profile_sql()
     return f"""
-WITH dec AS ({dec}),
+WITH dec AS ({_STRATEGY_DECORATE}),
 prof AS (
   SELECT doc_id,
     CASE
@@ -1181,8 +1170,16 @@ sel AS (
 )
 SELECT strategy, reason, count(*) AS n FROM sel GROUP BY strategy, reason
 """
-_def("strategy_distribution", _strategy_sql("spark"), _strategy_sql("duckdb"),
-     "documents")
+
+
+def _strategy_fn(spark: SparkSession) -> DataFrame:
+    prof = profiler.with_profile(spark.sql(_STRATEGY_DECORATE), text_col="text")
+    return (strategy.with_strategy(prof)
+            .groupBy("strategy", F.col("strategy_reason").alias("reason"))
+            .agg(F.count("*").alias("n")))
+
+
+_def("strategy_distribution", _strategy_fn, _strategy_sql(), "documents")
 
 # -- 16b. ML strategy classifier distribution (reference auto mode,
 #         chunk.py:677-717). Spark runs the column-expression operator
@@ -1191,7 +1188,7 @@ _def("strategy_distribution", _strategy_sql("spark"), _strategy_sql("duckdb"),
 #         double is one exact division and is NOT emitted (sums of doubles
 #         are order-dependent) — sum_best/sum_total pin it instead.
 def _ml_strategy_duck_sql() -> str:
-    feat = _profile_sql("duckdb")
+    feat = _profile_sql()
     return f"""
 WITH dec AS ({_STRATEGY_DECORATE}),
 feat AS (
@@ -1763,8 +1760,10 @@ FROM decisions GROUP BY 1, 2, 3
 _def("routing_distribution", _routing_fn, _routing_duck_sql(), "documents")
 
 
-# -- 27. content-type sniffing distribution (operators/sniff.py regex
-#        ladder; corpus decorated with each payload flavor)
+# -- 27. content-type sniffing distribution (corpus decorated with each
+#        payload flavor). Spark runs the pipeline's operator
+#        (sniff.with_content_type, contains() prescans included); DuckDB
+#        re-derives its regex ladder from the same regexes.
 _SNIFF_DECORATE = """
 SELECT doc_id, CASE CAST(doc_id % 5 AS INT)
   WHEN 0 THEN text
@@ -1784,22 +1783,22 @@ CASE WHEN text IS NULL OR trim(text) = '' THEN 'empty'
 _SNIFF_RES = {"html": _HTML_RE, "md": _MD_RE, "pdf": _PDF_RE}
 
 
-def _sniff_sql(engine: str) -> str:
-    if engine == "spark":
-        dec = _SNIFF_DECORATE.replace("chr(10)", "'\\n'")
-        def m(p):
-            return "text RLIKE '" + p.replace("\\", "\\\\") + "'"
-    else:
-        dec = _SNIFF_DECORATE
-        def m(p):
-            return f"regexp_matches(text, '{p}')"
+def _sniff_sql() -> str:
+    def m(p):
+        return f"regexp_matches(text, '{p}')"
     case = _SNIFF_CASE.format(**{k: m(p) for k, p in _SNIFF_RES.items()})
     return f"""
-WITH dec AS ({dec})
+WITH dec AS ({_SNIFF_DECORATE})
 SELECT {case} AS content_type, count(*) AS n FROM dec GROUP BY 1
 """
-_def("content_type_distribution", _sniff_sql("spark"), _sniff_sql("duckdb"),
-     "documents")
+
+
+def _sniff_fn(spark: SparkSession) -> DataFrame:
+    return (sniff.with_content_type(spark.sql(_SNIFF_DECORATE))
+            .groupBy("content_type").agg(F.count("*").alias("n")))
+
+
+_def("content_type_distribution", _sniff_fn, _sniff_sql(), "documents")
 
 # -- 28. PDF doc-type detector (document_detector.py extractible-ratio
 #        classifier on paragraph blocks; decorated multi-paragraph corpus)

@@ -30,9 +30,10 @@ dropped from the report).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ragstudio_spark.operators.dedupe import _bound_words, shingles_col
+from ragstudio_spark.operators.ranking import top_k
 
 
 def _bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -164,10 +165,7 @@ def pmi_collocations(df: DataFrame, text_col: str = "text",
                          "* CAST(n_total AS DOUBLE) "
                          "/ (CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE)) "
                          "* 1000000.0) AS BIGINT)")))
-    w = Window.orderBy(F.desc("pmi_ratio_ppm"), F.asc("bigram"))
-    return (scored
-            .orderBy(F.desc("pmi_ratio_ppm"), F.asc("bigram"))
-            .limit(int(top_n))
-            .withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .select("rank", "bigram", F.col("cnt").alias("c_xy"),
-                    "c1", "c2", "pmi_ratio_ppm"))
+    return (top_k(scored, int(top_n),
+                  [F.desc("pmi_ratio_ppm"), F.asc("bigram")], rank="rank")
+            .select(F.col("rank").cast("bigint"), "bigram",
+                    F.col("cnt").alias("c_xy"), "c1", "c2", "pmi_ratio_ppm"))

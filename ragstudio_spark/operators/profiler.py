@@ -18,7 +18,6 @@ _NUM_SECTION_RE = r"(?m)^(\d+(?:\.\d+)*)\.\s+"
 
 
 def _count_occurrences(text: Column, token: str) -> Column:
-    esc = token.replace("\\", "\\\\")
     return (F.length(text) - F.length(F.replace(text, F.lit(token)))) / len(token)
 
 

@@ -255,10 +255,9 @@ def multi_query_search(docs: DataFrame, query: str,
              .agg(F.count("*").cast("int").alias("n_lists"),
                   F.sum(F.expr(f"{RRF_SCALE} div ({int(rrf_k)} + _r)"))
                   .cast("bigint").alias("fused_score")))
-    w_all = Window.orderBy(F.desc("fused_score"), F.asc(id_col))
-    return (fused
-            .orderBy(F.desc("fused_score"), F.asc(id_col)).limit(final_k)
-            .withColumn("rank", F.row_number().over(w_all).cast("bigint")))
+    return (top_k(fused, final_k, [F.desc("fused_score"), F.asc(id_col)],
+                  rank="rank")
+            .withColumn("rank", F.col("rank").cast("bigint")))
 
 
 #: element type of the per-query rank-sorted hit list built by

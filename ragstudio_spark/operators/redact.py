@@ -28,7 +28,7 @@ lookaround) — the DuckDB oracle twin compiles the same strings.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 #: (category, regex, replacement) — applied in order, most-specific first.
 REDACTIONS: tuple[tuple[str, str, str], ...] = (
@@ -40,14 +40,6 @@ REDACTIONS: tuple[tuple[str, str, str], ...] = (
      r"|\(?\b\d{3}\)?[ .-]?\d{3}[ .-]?\d{4}\b",
      "<PHONE>"),
 )
-
-
-def redact_text(text: Column) -> Column:
-    """The redacted text column (ordered regexp_replace chain)."""
-    out = text
-    for _cat, pattern, repl in REDACTIONS:
-        out = F.regexp_replace(out, pattern, repl)
-    return out
 
 
 def with_redaction(df: DataFrame, text_col: str = "text",

@@ -55,14 +55,9 @@ def brute_force_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("similarity", cosine(F.col("q_vec"), F.col("v_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("similarity"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "similarity")
-    )
+    return top_k(sims, k, [F.desc("similarity"), F.asc("neighbor_id")],
+                 by=["query_id"], rank="rank").select(
+        "query_id", "neighbor_id", "rank", "similarity")
 
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame,
@@ -666,9 +661,6 @@ def hard_negatives(ranked: DataFrame, qrels: DataFrame, k: int = 5,
     if broadcast_qrels:
         judged = F.broadcast(judged)
     neg = ranked.join(judged, on=[query_col, id_col], how="left_anti")
-    w = (Window.partitionBy(query_col)
-         .orderBy(F.asc(rank_col), F.asc(id_col)))
-    return (neg.withColumn("neg_rank",
-                           F.row_number().over(w).cast("bigint"))
-            .filter(F.col("neg_rank") <= int(k))
-            .select(query_col, id_col, "neg_rank"))
+    return (top_k(neg, int(k), [F.asc(rank_col), F.asc(id_col)],
+                  by=[query_col], rank="neg_rank")
+            .select(query_col, id_col, F.col("neg_rank").cast("bigint")))

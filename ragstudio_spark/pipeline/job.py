@@ -18,8 +18,9 @@ Adaptive mode (profile-driven strategy selection) runs inside the same
 fused hop using the kernel profiler/selector. The JVM column-expression
 twins in operators/profiler.py + strategy.py are parity-tested against
 the kernel; profiler.py's feature columns feed the ML strategy classifier
-(operators/ml_strategy.py), strategy.py has no product caller, and the
-strategy_distribution entry runs its own SQL (entry_queries._strategy_sql).
+(operators/ml_strategy.py), and the strategy_distribution entry runs
+profiler.with_profile → strategy.with_strategy, so its DuckDB oracle
+checks the same ladder the parity tests pin.
 
 The hot path is a single narrow stage: no joins, no aggregations, no
 shuffles — each turn is independent, so the plan scales linearly with

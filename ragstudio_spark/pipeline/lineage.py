@@ -11,9 +11,10 @@ history.py:22-106,311-328; retry.py:27-140) with table-native primitives:
   atomic Iceberg snapshot commit. On a real deployment these writes are
   Iceberg ``append`` snapshots and the marker is the snapshot itself;
 * **resume** = LEFT ANTI JOIN of the input against the union of committed
-  runs' successful turn keys — a restarted job processes only uncommitted
-  ``(conv_id, turn_idx)``, and the final chunks table equals a single-run
-  output (verified in tests).
+  runs' turn keys, whatever their status — a restarted job processes only
+  uncommitted ``(conv_id, turn_idx)``, and the final chunks table equals a
+  single-run output (verified in tests). Re-running failed or skipped turns
+  is ``history.retry_failed``'s job, not resume's.
 
 The anti-join is the only shuffle the resume path adds. The committed-keys
 side is **unbounded** at the 100 TB design point (a crash at 60% of a 10¹²-
@@ -121,9 +122,13 @@ def _committed_paths(root: str, table: str) -> list[tuple[int, str]]:
 
 
 def committed_turn_keys(spark: SparkSession, root: str) -> DataFrame | None:
-    """(conv_id, turn_idx) of turns already processed (any terminal status:
-    success / empty / failed_quality — matching the reference, which retries
-    only FAILED/SKIPPED transient errors, not quality rejections)."""
+    """(conv_id, turn_idx) of every turn with a committed metrics row,
+    whatever its status: resume skips success, empty, failed_quality,
+    failed_error and skipped turns alike. Re-running the failed and skipped
+    ones is ``history.retry_failed``'s job (``metrics.TURN_STATUSES`` marks
+    them retryable); it re-runs failed_quality too, as the reference's
+    retry re-runs every FAILED file and an unreadable document is FAILED
+    there (SURVEY.md §3 and §2 row 57)."""
     metrics = read_table(spark, root, "metrics")
     if metrics is None:
         return None

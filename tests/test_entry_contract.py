@@ -40,16 +40,30 @@ def test_query_keys_pinned():
     assert set(entry.oracle_sql()) <= set(keys)
 
 
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 testdata absent")
-def test_every_entry_builds_with_oracle_columns(spark, tmp_path, monkeypatch):
+# Entries whose Spark side runs a pipeline operator (sniff, profiler →
+# strategy) or reaches a ranking.top_k site: their rows, not only their
+# columns, are compared with the oracle's.
+ROW_CHECKED = ("content_type_distribution", "strategy_distribution",
+               "ann_cosine_topk", "embedding_nearest_neighbor",
+               "hard_negatives", "pmi_collocations", "rag_multi_query_fused",
+               "phrase_search", "terms_search_all")
+
+
+def _duckdb():
     import duckdb
 
-    # entries that stage a table (cache, forget-rewrite, vector store) do
-    # so under tempfile's directory; keep those stores inside tmp_path
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    return con
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 testdata absent")
+def test_every_entry_builds_with_oracle_columns(spark, tmp_path, monkeypatch):
+    # entries that stage a table (cache, forget-rewrite, vector store) do
+    # so under tempfile's directory; keep those stores inside tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    con = _duckdb()
     oracles = entry.oracle_sql()
     mismatches = {}
     for name, fn in entry.queries().items():
@@ -60,6 +74,24 @@ def test_every_entry_builds_with_oracle_columns(spark, tmp_path, monkeypatch):
             if cols != want:
                 mismatches[name] = (cols, want)
     assert not mismatches
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 testdata absent")
+@pytest.mark.parametrize("name", ROW_CHECKED)
+def test_operator_entry_rows_equal_oracle(spark, name):
+    """The check_oracle.py comparison (sorted columns, order-insensitive,
+    exact values) for one entry on sf0.001."""
+    import pandas as pd
+
+    from scripts.check_oracle import normalize
+
+    got = normalize(entry.queries()[name](spark, SF_DIR).toPandas())
+    want = normalize(_duckdb().execute(entry.oracle_sql()[name]).fetchdf())
+    # no phrase occurrence at sf0.001; terms_search_all reaches the same
+    # ranking site with rows
+    assert len(want) > 0 or name == "phrase_search"
+    pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                  check_exact=True)
 
 
 _STAGING_SCRIPT = """

@@ -41,7 +41,9 @@ class TestResume:
         n = 80
         full = tsrc.transcripts_df(spark, n, seed=13, partitions=4)
         root = str(tmp_path / "noop")
-        lineage.run_with_lineage(spark, full, root, "run_1")
+        s1 = lineage.run_with_lineage(spark, full, root, "run_1")
+        # resume skips committed turns of every status, not only successes
+        assert s1["failed"] + s1["skipped"] > 0
         s2 = lineage.run_with_lineage(spark, full, root, "run_2")
         assert s2["total_turns"] == 0
 

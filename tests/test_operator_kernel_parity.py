@@ -3,9 +3,9 @@
 The pipeline's fused UDF uses the kernel. Of the column-expression
 operators, the quality gate runs in the pipeline, the profiler's feature
 columns feed the ML strategy classifier (operators/ml_strategy.py), and
-the strategy ladder has no product caller; the strategy_distribution entry
-runs its own SQL. These tests pin each operator to the kernel on the
-synthetic corpus, so neither can drift.
+the strategy_distribution entry runs the profiler then the strategy
+ladder, checked against its DuckDB oracle. These tests pin each operator
+to the kernel on the synthetic corpus, so neither can drift.
 """
 
 import pandas as pd

@@ -1,59 +1,10 @@
-"""Standalone normalizer operator (the reference's normalize_document
-ingest tier) — pinned to the fused hop's metrics so it can't rot — plus the
-Iceberg adapter and exact quantiles."""
+"""Operators without a home of their own: the Iceberg table adapter
+(fails loud without its runtime; DDL bucket spec) and exact per-group
+quantiles (hand-computed discrete percentiles)."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from ragstudio_spark.operators import fused, normalizer, sniff
 from ragstudio_spark.pipeline import iceberg
-from ragstudio_spark.sources import transcripts as tsrc
-
-
-@pytest.fixture(scope="module")
-def turns(spark):
-    return sniff.with_content_type(
-        tsrc.transcripts_df(spark, 150, seed=101, partitions=4)
-    ).cache()
-
-
-@pytest.fixture(scope="module")
-def extracted(spark, turns):
-    """extracted_text computed on the driver by the fused hop's own
-    extractor, so the normalizer is checked without a second extract UDF."""
-    rows = [(r["conv_id"], r["turn_idx"],
-             fused._extract_one(r["text"] or "", r["content_type"]))
-            for r in turns.select("conv_id", "turn_idx", "text",
-                                  "content_type").collect()]
-    return spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, extracted_text string")
-
-
-class TestStagedEqualsFused:
-    def test_staged_normalizer_matches_fused_metrics(self, spark, turns, extracted):
-        staged = normalizer.with_normalization(extracted).select(
-            "conv_id", "turn_idx",
-            F.col("norm.language").alias("language"),
-            F.col("norm.quality_score").alias("quality_score"),
-        ).toPandas().set_index(["conv_id", "turn_idx"]).sort_index()
-
-        fd = fused.process_turns(
-            turns.select("conv_id", "turn_idx", "text", "content_type")
-        ).select("conv_id", "turn_idx", "language", "quality_score").toPandas(
-        ).set_index(["conv_id", "turn_idx"]).sort_index()
-
-        assert len(staged) == len(fd) == 150
-        assert (staged.index == fd.index).all()
-        assert (staged["quality_score"].values == fd["quality_score"].values).all()
-        assert (staged["language"].fillna("∅").values == fd["language"].fillna("∅").values).all()
-
-    def test_language_filter_operator(self, spark, extracted):
-        df = normalizer.with_normalization(extracted)
-        kept = normalizer.filter_languages(df, allowed=("fr", "en"))
-        langs = {r["l"] for r in kept.select(
-            F.lower(F.col("norm.language")).alias("l")).distinct().collect()}
-        assert langs <= {"fr", "en"}
 
 
 class TestIcebergAdapter:
