@@ -691,7 +691,7 @@ def _km_fn(spark: SparkSession) -> DataFrame:
     cents = similarity.kmeans_centroids(vectors, k=_KM_K, iters=_KM_ITERS,
                                         exact=True)
     scored = vectors.crossJoin(
-        F.broadcast(cents.select("cid", F.col("embedding").alias("c_vec")))
+        cents.select("cid", F.col("embedding").alias("c_vec"))
     ).withColumn("d", similarity._l2sq(F.col("embedding"), F.col("c_vec")))
     assign = top_k(scored, 1, [F.asc("d"), F.asc("cid")], by=["vec_id"],
                    rank="rn").select("vec_id", "cid")
@@ -5372,7 +5372,7 @@ def _skew_fn(spark: SparkSession) -> DataFrame:
         .alias("conv_id"))
     hot = heavy_keys(shaped, multiplier=1)
     report = skew_report(shaped)
-    return (hot.crossJoin(F.broadcast(report))
+    return (hot.crossJoin(report)
             .select("conv_id", "key_count", "mean_x_ppm", "n_rows",
                     "n_keys", "max_count", "p50_count", "p99_count",
                     "skew_factor_ppm", "recommended_salts")

@@ -88,11 +88,6 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
            "những", "với", "này", "cho", "các", "là", "đã", "một"),
 }
 
-_PATTERNS = {
-    lang: re.compile(r"\b(?:" + "|".join(map(re.escape, words)) + r")\b")
-    for lang, words in STOPWORDS.items()
-}
-
 # single-tokenization scorer: because every stopword is a pure word-char
 # token, \b-delimited matching over the lowered snippet is equivalent to
 # exact-matching \w+ tokens — one regex pass + dict lookups instead of six

@@ -145,8 +145,7 @@ def _minhash_bands(df: DataFrame, text_col: str, id_col: str, k: int,
 def cross_corpus_minhash_pairs(left: DataFrame, right: DataFrame,
                                text_col: str = "text", id_col: str = "doc_id",
                                k: int = 3, n_hashes: int = N_HASHES,
-                               n_bands: int = N_BANDS,
-                               broadcast_side: str | None = None) -> DataFrame:
+                               n_bands: int = N_BANDS) -> DataFrame:
     """Near-duplicate candidates BETWEEN two corpora — the benchmark-
     decontamination / incremental-dedup join: which ``left`` docs share a
     MinHash band with any ``right`` doc (e.g. left = training corpus,
@@ -156,23 +155,11 @@ def cross_corpus_minhash_pairs(left: DataFrame, right: DataFrame,
     Scale shape: both sides band independently (one explode each); the
     join is left-bands × right-bands on (band_idx, band_key) — NEVER the
     O(N²) self-join, and when ``right`` is a small benchmark suite Spark
-    broadcasts its bands. An asymmetric corpus-vs-index run shuffles only
-    on band keys, so the committed index can stay partitioned by band.
-
-    ``broadcast_side`` ("left"/"right") pins the broadcast hint on that
-    side's BANDS when the caller knows the asymmetry statically — e.g.
-    the streaming incremental path, where the left side is one
-    micro-batch and the right side is the whole committed corpus (AQE
-    can't see the batch's size before planning the first join)."""
-    if broadcast_side not in (None, "left", "right"):
-        raise ValueError(f"broadcast_side: {broadcast_side}")
-    lb = _minhash_bands(left, text_col, id_col, k, n_hashes, n_bands)
-    rb = _minhash_bands(right, text_col, id_col, k, n_hashes, n_bands)
-    if broadcast_side == "left":
-        lb = F.broadcast(lb)
-    elif broadcast_side == "right":
-        rb = F.broadcast(rb)
-    lb, rb = lb.alias("l"), rb.alias("r")
+    broadcasts its bands; so it does for one streaming micro-batch against
+    the committed corpus. An asymmetric corpus-vs-index run shuffles only
+    on band keys, so the committed index can stay partitioned by band."""
+    lb = _minhash_bands(left, text_col, id_col, k, n_hashes, n_bands).alias("l")
+    rb = _minhash_bands(right, text_col, id_col, k, n_hashes, n_bands).alias("r")
     return (
         lb.join(rb, (F.col("l.band_idx") == F.col("r.band_idx"))
                 & (F.col("l.band_key") == F.col("r.band_key")))
@@ -223,7 +210,7 @@ def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame | None,
                              out_id="benchmark_id")
     else:
         raise ValueError("one of benchmark / benchmark_grams is required")
-    return (cg.join(F.broadcast(bg), on="gram")
+    return (cg.join(bg, on="gram")
             .groupBy("corpus_id", "benchmark_id")
             .agg(F.count("*").cast("bigint").alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared))
@@ -716,9 +703,10 @@ def _shingle_pair_counts(df: DataFrame, text_col: str, id_col: str, k: int,
     114M at sf1.0 — carries ONLY (doc_a, doc_b) [16 bytes] instead of the
     join shape's (doc_a, doc_b, na, nb, partial-min state) [~40 bytes].
     Exact set sizes re-attach afterwards via two joins against the
-    doc-count-sized ``sizes`` table (broadcast-hinted: |docs| rows versus
-    a 114M-row shuffle; at extreme corpus size swap the hint for a shuffle
-    join, or rather set ``max_shingle_df`` which bounds everything here).
+    doc-count-sized ``sizes`` table (|docs| rows versus a 114M-row
+    shuffle: Spark's planner broadcasts it while it fits the broadcast
+    threshold and shuffle-joins it past that; ``max_shingle_df`` bounds
+    everything else here).
     Per-shingle doc lists are bounded by ``max_shingle_df`` when set — the
     same cap that bounds the retired join's O(Σ df²) fan-out.
 
@@ -770,12 +758,10 @@ def _shingle_pair_counts(df: DataFrame, text_col: str, id_col: str, k: int,
                 F.size(F.array_distinct(shingles_col(F.col("_w"), k)))
                 .alias("n_sh")))
     return (inter
-            .join(F.broadcast(sizes.select(F.col(id_col).alias("doc_a"),
-                                           F.col("n_sh").alias("na"))),
-                  on="doc_a")
-            .join(F.broadcast(sizes.select(F.col(id_col).alias("doc_b"),
-                                           F.col("n_sh").alias("nb"))),
-                  on="doc_b"))
+            .join(sizes.select(F.col(id_col).alias("doc_a"),
+                               F.col("n_sh").alias("na")), on="doc_a")
+            .join(sizes.select(F.col(id_col).alias("doc_b"),
+                               F.col("n_sh").alias("nb")), on="doc_b"))
 
 
 def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -1006,7 +992,7 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     by contract) and shipped as an expression literal, so the corpus
     gram stream is screened MAP-SIDE — zero shuffle, zero join for the
     overwhelmingly-common miss path. Only bloom survivors (true hits +
-    the filter's false positives) enter the exact broadcast join.
+    the filter's false positives) enter the exact join.
 
     Returns per flagged doc: (corpus_id, n_candidate_grams [bloom
     survivors], n_exact_shared [verified against the benchmark gram
@@ -1026,7 +1012,7 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     cg, pos_cols = bind_bloom_positions(cg, "_h", m_bits, k)
     cand = cg.filter(bloom_member_col(pos_cols, words))
     exact = bg.withColumn("_hit", F.lit(1))
-    return (cand.join(F.broadcast(exact), on="gram", how="left")
+    return (cand.join(exact, on="gram", how="left")
             .groupBy("corpus_id")
             .agg(F.count("*").cast("bigint").alias("n_candidate_grams"),
                  F.sum(F.coalesce("_hit", F.lit(0))).cast("bigint")

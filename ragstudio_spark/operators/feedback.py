@@ -32,7 +32,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 FEEDBACK_TYPES = ("explicit_rating", "click_through", "dwell_time",
                   "correction", "flag")
-SCORES = ("positive", "negative", "neutral")
 
 
 def _n(score: str) -> Column:

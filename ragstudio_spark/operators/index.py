@@ -22,7 +22,8 @@ Scale shape (the 100-TB story):
   predicate is pushed down and prunes term-hash buckets);
 * the single shuffle groups by (doc, anchor) — cardinality is bounded by
   occurrences of the phrase's RAREST term, not corpus size;
-* the phrase table (k rows) is a literal broadcast; no per-row Python.
+* the phrase table (k rows) is a literal the planner broadcasts; no
+  per-row Python.
 
 Exactness: counts are exact integers; ranking ties break on doc id.
 """
@@ -116,7 +117,7 @@ def phrase_search(docs_or_postings: DataFrame, phrase: list[str],
     k = len(phrase)
     post = (docs_or_postings if postings
             else positional_postings(docs_or_postings, text_col, id_col))
-    # literal broadcast side: k rows of (term, offset)
+    # literal side: k rows of (term, offset)
     pairs = F.array(*[
         F.struct(F.lit(w).alias("term"), F.lit(i).alias("i"))
         for i, w in enumerate(phrase)])
@@ -124,7 +125,7 @@ def phrase_search(docs_or_postings: DataFrame, phrase: list[str],
     phrase_df = (spark.range(1)
                  .select(F.explode(pairs).alias("p"))
                  .select("p.term", "p.i"))
-    votes = (post.join(F.broadcast(phrase_df), "term")
+    votes = (post.join(phrase_df, "term")
              .select(id_col, (F.col("pos") - F.col("i")).alias("anchor"),
                      "i")
              .filter(F.col("anchor") >= 0))

@@ -22,8 +22,8 @@ min_known_frac`` with 6-decimal scaling), the repetition_filter
 convention — no float near a keep boundary.
 
 Scale shape: the reference table is model-like side data (CCNet ships a
-trained LM the same way) — broadcast when small, hash-join otherwise
-(``broadcast_ref``); the corpus streams through ONE explode. Documents
+trained LM the same way); Spark's planner broadcasts it when small and
+shuffle-joins it otherwise. The corpus streams through ONE explode. Documents
 with fewer than 2 words have no bigrams and zero-fill (never NULL, never
 dropped from the report).
 """
@@ -54,16 +54,13 @@ def bigram_counts(reference: DataFrame, text_col: str = "text",
 
 
 def _familiarity_scores(df: DataFrame, ref_bigrams: DataFrame,
-                        text_col: str, id_col: str, hit_cap: int,
-                        broadcast_ref: bool) -> DataFrame:
+                        text_col: str, id_col: str, hit_cap: int) -> DataFrame:
     """The grouped accounting WITHOUT the zero-fill join — docs with no
     bigrams are simply absent. The filter consumes this directly (it
     drops zero-bigram docs anyway, so paying a corpus-wide distinct +
     left join to materialize rows it would immediately discard is pure
     waste on the hot path); the reporting entry wraps it with zero-fill."""
     ref = ref_bigrams.select("bigram", F.col("cnt").alias("_ref_cnt"))
-    if broadcast_ref:
-        ref = F.broadcast(ref)
     return (_bigrams(df, text_col, id_col)
             .join(ref, on="bigram", how="left")
             .groupBy(id_col)
@@ -84,13 +81,11 @@ def _familiarity_scores(df: DataFrame, ref_bigrams: DataFrame,
 
 def lm_familiarity(df: DataFrame, ref_bigrams: DataFrame,
                    text_col: str = "text", id_col: str = "doc_id",
-                   hit_cap: int = 1000,
-                   broadcast_ref: bool = True) -> DataFrame:
+                   hit_cap: int = 1000) -> DataFrame:
     """Per-doc familiarity accounting vs the reference table:
     (id, n_bigrams, n_known, known_hits) — all bigint, zero-filled (the
     REPORT keeps every document, including bigram-less ones)."""
-    scored = _familiarity_scores(df, ref_bigrams, text_col, id_col,
-                                 hit_cap, broadcast_ref)
+    scored = _familiarity_scores(df, ref_bigrams, text_col, id_col, hit_cap)
     zero = F.lit(0).cast("bigint")
     return (df.select(id_col).distinct()
             .join(scored, on=id_col, how="left")
@@ -102,8 +97,7 @@ def lm_familiarity(df: DataFrame, ref_bigrams: DataFrame,
 def familiarity_filter(df: DataFrame, ref_bigrams: DataFrame,
                        text_col: str = "text", id_col: str = "doc_id",
                        min_known_frac: float = 0.5,
-                       hit_cap: int = 1000,
-                       broadcast_ref: bool = True) -> DataFrame:
+                       hit_cap: int = 1000) -> DataFrame:
     """Rows of ``df`` whose known-bigram fraction reaches the threshold
     (docs with zero bigrams are DROPPED — no evidence of familiarity;
     the CCNet convention sends unknown-language/too-short text to the
@@ -112,8 +106,7 @@ def familiarity_filter(df: DataFrame, ref_bigrams: DataFrame,
     absent (bigram-less) docs are exactly the ones the filter drops, so
     the report's distinct + left-join zero-fill is skipped."""
     scale = 1_000_000
-    sig = _familiarity_scores(df, ref_bigrams, text_col, id_col,
-                              hit_cap, broadcast_ref)
+    sig = _familiarity_scores(df, ref_bigrams, text_col, id_col, hit_cap)
     keep = sig.filter(
         F.col("n_known") * scale
         >= F.lit(round(min_known_frac * scale)) * F.col("n_bigrams")
@@ -158,7 +151,7 @@ def pmi_collocations(df: DataFrame, text_col: str = "text",
                     .withColumnRenamed("c", "c1"), on="w1")
               .join(uni.withColumnRenamed("w", "w2")
                     .withColumnRenamed("c", "c2"), on="w2")
-              .crossJoin(F.broadcast(total))
+              .crossJoin(total)
               .withColumn(
                   "pmi_ratio_ppm",
                   F.expr("CAST(floor(CAST(cnt AS DOUBLE) "

@@ -106,7 +106,7 @@ def bm25_scores_from(per_doc: DataFrame, stats: DataFrame,
     given order — float-identical to a dedicated ``bm25_scores`` call for
     those terms (same tf/df/dl/avgdl values, same per-term part, same
     addition order)."""
-    scored = per_doc.crossJoin(F.broadcast(stats))
+    scored = per_doc.crossJoin(stats)
     score = None
     for i in term_idx:
         idf = F.log((F.col("n_docs") - F.col(f"df_{i}") + 0.5)
@@ -146,7 +146,9 @@ def cosine_scores(vectors: DataFrame, query: DataFrame,
                   vec_col: str = "embedding") -> DataFrame:
     """Cosine similarity of every vector against ONE broadcast query row
     (``similarity.cosine``: sequential left-fold dot products — fixed
-    accumulation order)."""
+    accumulation order). The query side is query-sized, so it keeps its
+    hint: a Python-built query has no size estimate, and unhinted the
+    cross join against a large corpus plans as a CartesianProduct."""
     q = F.broadcast(query.select(F.col(vec_col).alias("_qvec")))
     cos = similarity.cosine(F.col(vec_col), F.col("_qvec"))
     return vectors.crossJoin(q).select(F.col(id_col), cos.alias("vec_score"))

@@ -197,7 +197,7 @@ def mixture_sample(df: DataFrame, key_col: str, shares: dict[str, float],
     Sizes are expected values, not exact counts (membership is per-row
     independent); compose with cap_per_key when exactness matters.
 
-    Shape: one tiny per-key count aggregate broadcast back onto the
+    Shape: one tiny per-key count aggregate joined back onto the
     corpus, then a codegen'd filter — no windows, no collect. The rate
     arithmetic is written to be bit-identical in the DuckDB oracle twin
     (same literals, same operation order)."""
@@ -212,7 +212,7 @@ def mixture_sample(df: DataFrame, key_col: str, shares: dict[str, float],
         share = F.when(F.col(key_col) == k, F.lit(float(s))).otherwise(share)
     rate = F.least(F.lit(1.0),
                    (F.lit(float(budget)) * share) / F.col("_n"))
-    return (df.join(F.broadcast(counts), on=key_col)
+    return (df.join(counts, on=key_col)
             .filter(hash_fraction(list(key_cols), salt) < rate)
             .drop("_n"))
 

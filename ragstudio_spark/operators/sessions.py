@@ -216,8 +216,7 @@ def rolling_active(df: DataFrame, window_days: int = 7,
             F.col("_d"), F.col("_d") + (window_days - 1))).alias("_rd"))
         .distinct())
     bounds = daily.agg(F.min("_d").alias("_lo"), F.max("_d").alias("_hi"))
-    wau = (votes.join(F.broadcast(bounds),
-                      (F.col("_rd") >= F.col("_lo"))
+    wau = (votes.join(bounds, (F.col("_rd") >= F.col("_lo"))
                       & (F.col("_rd") <= F.col("_hi")))
            .groupBy("_rd")
            .agg(F.count("*").cast("bigint").alias("n_active_wd")))

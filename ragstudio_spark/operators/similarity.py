@@ -639,8 +639,7 @@ def sq8_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
 def hard_negatives(ranked: DataFrame, qrels: DataFrame, k: int = 5,
                    query_col: str = "query_id",
                    id_col: str = "neighbor_id",
-                   rank_col: str = "rank",
-                   broadcast_qrels: bool = True) -> DataFrame:
+                   rank_col: str = "rank") -> DataFrame:
     """Hard-negative mining for contrastive training: from a ranked
     similarity table (any of this module's ANN outputs — brute force,
     IVF, SQ8 — over a candidate pool LARGER than ``k``), drop the
@@ -652,14 +651,10 @@ def hard_negatives(ranked: DataFrame, qrels: DataFrame, k: int = 5,
     window over k-bounded per-query lists. Output (query_col, id_col,
     neg_rank), rank-only (the oracle discipline). At scale the ranked
     input comes from the cell-pruned index scan, never a full cross
-    join; ``broadcast_qrels=False`` drops the hint when the judgment
-    set is itself corpus-sized (the lm_filter broadcast_ref
-    convention) and lets AQE pick the join strategy."""
+    join. The judgment set is query-sized, so it is broadcast-hinted."""
     if k <= 0:
         raise ValueError("k must be positive")
-    judged = qrels.select(query_col, id_col).distinct()
-    if broadcast_qrels:
-        judged = F.broadcast(judged)
+    judged = F.broadcast(qrels.select(query_col, id_col).distinct())
     neg = ranked.join(judged, on=[query_col, id_col], how="left_anti")
     return (top_k(neg, int(k), [F.asc(rank_col), F.asc(id_col)],
                   by=[query_col], rank="neg_rank")

@@ -170,7 +170,7 @@ def heavy_keys(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",),
     stats = (counts.agg(F.sum("key_count").cast("bigint").alias("_total"),
                         F.count("*").cast("bigint").alias("_nk"))
              .withColumn("_mean", F.expr("greatest(1L, _total DIV _nk)")))
-    return (counts.crossJoin(F.broadcast(stats))
+    return (counts.crossJoin(stats)
             .filter(F.col("key_count") > F.lit(multiplier) * F.col("_mean"))
             .withColumn("mean_x_ppm",
                         F.expr("(1000000 * key_count) DIV _mean")

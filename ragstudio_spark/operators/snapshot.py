@@ -195,7 +195,7 @@ def join_cardinality(left: DataFrame, right: DataFrame, on: str,
                .withColumn("pairs", (F.col("c_left") * F.col("c_right"))
                            .cast("bigint")))
     total = per_key.agg(F.sum("pairs").cast("bigint").alias("total_pairs"))
-    return (per_key.crossJoin(F.broadcast(total))
+    return (per_key.crossJoin(total)
             .withColumn("share_ppm",
                         F.floor(F.lit(1_000_000.0)
                                 * F.col("pairs").cast("double")
@@ -231,7 +231,7 @@ def distribution_drift_from_counts(old_counts: DataFrame,
         share = F.floor(F.lit(1_000_000.0)
                         * F.col(f"n_{side}").cast("double")
                         / F.col("_t").cast("double"))
-        return (df.crossJoin(F.broadcast(total))
+        return (df.crossJoin(total)
                 .withColumn(f"share_{side}_ppm", share.cast("bigint"))
                 .drop("_t"))
 
@@ -256,7 +256,7 @@ def distribution_drift_from_counts(old_counts: DataFrame,
                                 - F.col("share_old_ppm")).cast("bigint"))
               .localCheckpoint())
     tv = merged.agg(F.expr("sum(abs_delta_ppm) DIV 2").alias("_tv"))
-    return (merged.crossJoin(F.broadcast(tv))
+    return (merged.crossJoin(tv)
             .withColumn("tv_ppm", F.col("_tv").cast("bigint")).drop("_tv")
             .select(bucket_col, "n_old", "n_new", "share_old_ppm",
                     "share_new_ppm", "abs_delta_ppm", "tv_ppm")

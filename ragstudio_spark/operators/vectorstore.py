@@ -34,9 +34,6 @@ from ragstudio_spark.operators.similarity import dot
 
 FORMAT_VERSION = 1
 
-STORE_SCHEMA = ("id string, text string, metadata map<string,string>, "
-                "embedding array<float>, version bigint")
-
 
 def fake_embedding_col(text: Column, dim: int = 8) -> Column:
     """Deterministic hash-derived embedding (test stand-in for a model):
@@ -93,14 +90,14 @@ def upsert(store: DataFrame, new: DataFrame) -> DataFrame:
     """Id-keyed overwrite: rows in ``new`` replace same-id rows in
     ``store`` (Qdrant upsert semantics). Resolved with one version window
     — append-friendly, no read-modify-write. Fully lazy: the version bump
-    is a broadcast single-row aggregate inside the plan, not a driver
+    is a single-row aggregate inside the plan, not a driver
     action, so building an upsert never scans the store at call time."""
     if "version" not in store.columns:
         store = store.withColumn("version", F.lit(0).cast("bigint"))
     bump = store.agg(
         (F.coalesce(F.max("version"), F.lit(0)) + 1).alias("_newv"))
     new = (
-        new.crossJoin(F.broadcast(bump))
+        new.crossJoin(bump)
         .withColumn("version", F.col("_newv").cast("bigint"))
         .drop("_newv")
     )
@@ -108,9 +105,13 @@ def upsert(store: DataFrame, new: DataFrame) -> DataFrame:
 
 
 def delete(store: DataFrame, ids: list[str]) -> DataFrame:
-    """Drop the given ids (delete(), json_vector_store.py:374-410)."""
-    ids_df = store.sparkSession.createDataFrame([(i,) for i in ids], "id string")
-    return store.join(F.broadcast(ids_df), on="id", how="left_anti")
+    """Drop the given ids (delete(), json_vector_store.py:374-410). The
+    id list is built JVM-side, so the planner knows its size and
+    broadcasts it (a createDataFrame relation has no size estimate)."""
+    ids_df = (store.sparkSession.range(1)
+              .select(F.explode(F.array(*[F.lit(i) for i in ids])).alias("id"))
+              .select(F.col("id").cast("string")))
+    return store.join(ids_df, on="id", how="left_anti")
 
 
 def search(store: DataFrame, query_embedding: list[float], k: int = 4) -> DataFrame:

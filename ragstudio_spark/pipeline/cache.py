@@ -175,7 +175,7 @@ def resolve(spark: SparkSession, path: str, now: int,
     Latest event per key via ONE partial-aggregable max(struct) —
     op_rank breaks equal-ts ties toward 'del', value last keeps the
     pick total and deterministic. Prefix-clear marks are a per-prefix
-    max joined broadcast (there are as many rows as prefixes).
+    max joined back (there are as many rows as prefixes).
 
     AS-OF means as-of: events stamped AFTER ``now`` do not exist for
     this read (a backfilled future delete must not hide a key that is
@@ -201,7 +201,7 @@ def resolve(spark: SparkSession, path: str, now: int,
     clears = (events.filter(F.col("op") == "clear")
               .groupBy("prefix").agg(F.max("ts").alias("clear_ts")))
     return (latest
-            .join(F.broadcast(clears), on="prefix", how="left")
+            .join(clears, on="prefix", how="left")
             .filter((F.col("op_rank") == 0)
                     & (F.col("ts") + F.col("ttl") > F.lit(int(now)))
                     & (F.col("clear_ts").isNull()

@@ -113,23 +113,13 @@ def retry_turn_keys(spark: SparkSession, root: str) -> DataFrame | None:
     )
 
 
-def estimated_retry_turns(root: str) -> int:
-    """Upper bound on retryable keys: failed+skipped counters summed across
-    committed run.json summaries (pure file reads, no Spark job)."""
-    return sum(r.get("failed", 0) + r.get("skipped", 0)
-               for r in _lineage.run_summaries(root))
-
-
 def retry_subset(spark: SparkSession, transcripts: DataFrame,
                  root: str) -> DataFrame | None:
-    """Semi-join the input to the retryable key set, size-guarding the
-    broadcast hint — after a large-scale partial failure the retry set can
-    be arbitrarily big, so the hint is applied only under the estimate."""
+    """Semi-join the input to the retryable key set."""
     keys = retry_turn_keys(spark, root)
     if keys is None:
         return None
-    return _lineage._guarded_join(transcripts, keys,
-                                  estimated_retry_turns(root), "left_semi")
+    return transcripts.join(keys, on=["conv_id", "turn_idx"], how="left_semi")
 
 
 def retry_failed(spark: SparkSession, transcripts: DataFrame, root: str,

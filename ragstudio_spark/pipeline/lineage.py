@@ -16,16 +16,18 @@ history.py:22-106,311-328; retry.py:27-140) with table-native primitives:
   single-run output (verified in tests). Re-running failed or skipped turns
   is ``history.retry_failed``'s job, not resume's.
 
-The anti-join is the only shuffle the resume path adds. The committed-keys
+The anti-join is the only join the resume path adds. The committed-keys
 side is **unbounded** at the 100 TB design point (a crash at 60% of a 10¹²-
-turn run leaves ~10¹¹ committed keys), so we never force a broadcast blindly:
-the key count is estimated for free from the committed runs' ``run.json``
-summaries (no Spark job), and the broadcast hint is applied only when the
-estimate is under ``BROADCAST_MAX_KEYS`` — above it the join is a plain
-shuffle anti-join and AQE may still choose broadcast at runtime from actual
-sizes. Mirrors the reference's retry-set semantics
-(src/core/pipeline/history.py:311-328) with a scale guard it never needed
-single-node.
+turn run leaves ~10¹¹ committed keys), so it carries no broadcast hint:
+Spark's planner broadcasts it from the metrics files' size while it fits
+the broadcast threshold and runs a shuffle anti-join past that, and AQE
+re-decides from measured sizes at runtime. Mirrors the reference's
+retry-set semantics (src/core/pipeline/history.py:311-328).
+
+A committed run id is never re-run: its directory is the snapshot that
+later resumes read, so ``run_with_lineage`` refuses it and a re-submitted
+job needs a new run id. An uncommitted (crashed) run directory is
+overwritten.
 """
 
 from __future__ import annotations
@@ -41,12 +43,6 @@ from ragstudio_spark.pipeline.job import PipelineConfig, PipelineOutput, run_pip
 
 COMMIT_MARKER = "_COMMITTED"
 
-# Broadcasting the committed/retry key set is only safe when it is small.
-# 1M (conv_id, turn_idx) keys ≈ tens of MB serialized — comfortably inside
-# executor broadcast budgets; past that the anti-join runs as a shuffle
-# join (AQE can still downgrade it to broadcast from *measured* sizes).
-BROADCAST_MAX_KEYS = 1_000_000
-
 
 def run_summaries(root: str) -> list[dict]:
     """run.json summaries of committed runs, oldest first (pure file reads)."""
@@ -59,36 +55,13 @@ def run_summaries(root: str) -> list[dict]:
     return out
 
 
-def estimated_committed_turns(root: str) -> int:
-    """Upper bound on committed (conv_id, turn_idx) keys, from run.json
-    counters — free (no Spark job), and an over-estimate when runs overlap
-    (distinct() shrinks the real set), which errs on the safe side."""
-    return sum(r.get("total_turns", 0) for r in run_summaries(root))
-
-
-def maybe_broadcast(keys: DataFrame, estimated_keys: int) -> DataFrame:
-    """Broadcast-hint ``keys`` only when the estimate fits
-    ``BROADCAST_MAX_KEYS`` (read at call time)."""
-    return F.broadcast(keys) if estimated_keys <= BROADCAST_MAX_KEYS else keys
-
-
 def resume_filter(spark: SparkSession, transcripts: DataFrame,
                   root: str) -> DataFrame:
-    """Anti-join the input against committed turn keys (the resume step),
-    size-guarding the broadcast hint."""
+    """Anti-join the input against committed turn keys (the resume step)."""
     done = committed_turn_keys(spark, root)
     if done is None:
         return transcripts
-    return _guarded_join(transcripts, done, estimated_committed_turns(root),
-                         "left_anti")
-
-
-def _guarded_join(transcripts: DataFrame, keys: DataFrame,
-                  estimated_keys: int, how: str) -> DataFrame:
-    """Join the input to a (conv_id, turn_idx) key set; the keys are
-    broadcast-hinted only under the size guard (``maybe_broadcast``)."""
-    keys = maybe_broadcast(keys, estimated_keys)
-    return transcripts.join(keys, on=["conv_id", "turn_idx"], how=how)
+    return transcripts.join(done, on=["conv_id", "turn_idx"], how="left_anti")
 
 
 def _run_dir(root: str, run_id: str) -> str:
@@ -143,14 +116,19 @@ def run_with_lineage(
     config: PipelineConfig | None = None,
     resume: bool = True,
 ) -> dict:
-    """Execute the pipeline with lineage + resume; returns run summary."""
+    """Execute the pipeline with lineage + resume; returns run summary.
+    Raises ``ValueError`` when ``run_id`` is already committed under
+    ``root``, before anything is read or written."""
+    run_dir = _run_dir(root, run_id)
+    if os.path.exists(os.path.join(run_dir, COMMIT_MARKER)):
+        raise ValueError(f"run id {run_id!r} is already committed under "
+                         f"{root}; resume with a new run id")
     t0 = time.time()
     df = transcripts
     if resume:
         df = resume_filter(spark, df, root)
 
     out: PipelineOutput = run_pipeline(df, config)
-    run_dir = _run_dir(root, run_id)
 
     # stamp partition id before the write so lineage reflects physical layout
     metrics_with_pid = out.metrics.withColumn("partition_id", F.spark_partition_id())

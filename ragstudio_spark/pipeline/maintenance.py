@@ -190,7 +190,7 @@ def swap_in(spark: SparkSession, path: str, write_tmp,
 def forget_kept_frame(spark: SparkSession, df: DataFrame, key_col: str,
                       forget_keys) -> DataFrame:
     """The survivor frame forget_rewrite writes: ``df`` anti-joined
-    against the deletion-request keys, forget side broadcast. Factored
+    against the deletion-request keys. Factored
     out so the plan contract test asserts on the OPERATOR's join, not a
     hand-rebuilt copy (review-found). Literal keys ship JVM-side
     (range(1) + explode(array(lit…))) — a createDataFrame relation on a
@@ -203,7 +203,7 @@ def forget_kept_frame(spark: SparkSession, df: DataFrame, key_col: str,
                        .select(F.col(key_col).cast(
                            df.schema[key_col].dataType)))
     forget = forget_keys.select(key_col).distinct()
-    return df.join(F.broadcast(forget), key_col, "left_anti")
+    return df.join(forget, key_col, "left_anti")
 
 
 def forget_rewrite(spark: SparkSession, path: str, key_col: str,

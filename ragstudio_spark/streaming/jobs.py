@@ -275,9 +275,9 @@ def incremental_near_dedup_stream(spark: SparkSession, input_dir: str,
     """Streaming incremental NEAR-dedup: each micro-batch of new documents
     is MinHash-banded against the already-committed corpus (the
     decontamination join shape, operators/dedupe.py
-    cross_corpus_minhash_pairs — small side = the batch, broadcast
-    pinned); rows with no near-dup in the committed corpus are APPENDED
-    to it, so later batches dedup against everything accepted so far.
+    cross_corpus_minhash_pairs — small side = the batch); rows with no
+    near-dup in the committed corpus are APPENDED to it, so later batches
+    dedup against everything accepted so far.
     Flagged (new_id, committed_id) candidate pairs append to
     ``pairs_dir`` as the audit table.
 
@@ -320,9 +320,7 @@ def incremental_near_dedup_stream(spark: SparkSession, input_dir: str,
             committed = sess.read.parquet(corpus_dir)
         else:
             committed = sess.createDataFrame([], DEDUP_DOC_SCHEMA)
-        pairs = dedupe.cross_corpus_minhash_pairs(
-            batch, committed, k=k, broadcast_side="left",
-        ).filter(
+        pairs = dedupe.cross_corpus_minhash_pairs(batch, committed, k=k).filter(
             # crash-retry guard: a re-run batch whose rows already landed
             # in the corpus must not flag itself against its own copies
             F.col("left_id") != F.col("right_id")
@@ -351,7 +349,7 @@ def curate_stream_batch(df: DataFrame, text_col: str = "text",
     repetition keep-flag, C4 page signals, and — when a ``benchmark``
     table is supplied — the 13-gram contamination flag (``contaminated``:
     the document shares a verbatim n-gram with the STATIC benchmark
-    suite; the benchmark side is broadcast, so this stage is also a pure
+    suite; the benchmark side is fixed, so this stage is also a pure
     per-document function and stays fold-exact). Every stage is a
     function of the single document row against fixed side data, so
     applying this per micro-batch is EXACT — the streamed output over
@@ -399,7 +397,7 @@ def curation_stream(spark: SparkSession, input_dir: str, output_dir: str,
     additionally stamps the 13-gram ``contaminated`` flag against that
     fixed benchmark suite — its DISTINCT-GRAM explode is computed and
     localCheckpointed ONCE at query start (dedupe.distinct_ngrams), so
-    per batch only the broadcast-join against the materialized gram
+    per batch only the join against the materialized gram
     table runs, never the benchmark's split/shingle work.
     Offsets are checkpointed: a restarted query never
     re-reads processed files; the parquet append is at-least-once under

@@ -17,8 +17,9 @@ Local smoke:
     python scripts/run_job.py --synthetic 5000 --output /tmp/rsout --run-id t1
 
 On a cluster the session comes from spark-submit (no master override); the
-job is a pure function of its inputs, so retry/rerun with the same --output
-resumes from the last committed snapshot (lineage anti-join).
+job is a pure function of its inputs, so a rerun with the same --output and
+a new --run-id resumes from the last committed snapshot (lineage anti-join).
+A --run-id that is already committed under --output is refused.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@ kill after partial commit → rerun processes only uncommitted turns →
 final table equals single-run output)."""
 
 import pandas as pd
+import pytest
 
 from ragstudio_spark.pipeline import lineage
 from ragstudio_spark.pipeline.job import PipelineConfig
@@ -13,6 +14,22 @@ KEY = ["conv_id", "turn_idx", "chunk_index"]
 
 def _sorted(pdf):
     return pdf.sort_values(KEY).reset_index(drop=True)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def committed_root(spark, tmp_path_factory):
+    """(root, input): one committed run "run_1" over part of the input;
+    some of its turns are failed or skipped, so the retry set is
+    non-empty."""
+    full = tsrc.transcripts_df(spark, 80, seed=13, partitions=4)
+    root = str(tmp_path_factory.mktemp("committed"))
+    lineage.run_with_lineage(spark, full.filter("turn_idx % 2 = 0"), root,
+                             "run_1")
+    return root, full
 
 
 class TestResume:
@@ -61,61 +78,69 @@ class TestResume:
         s = lineage.run_with_lineage(spark, full, root, "run_2")
         assert s["total_turns"] == n
 
-    def test_broadcast_size_guard(self, spark, tmp_path, monkeypatch):
-        """VERDICT r1 #1: the resume anti-join must broadcast-hint the
-        committed-key set only under the size threshold. Above it (a crash
-        deep into a 10¹²-turn run) the join must stay a shuffle anti-join —
-        forcing a broadcast there OOMs the cluster. Asserted on the physical
-        plan with auto-broadcast disabled so only the explicit hint decides."""
-        n = 80
-        full = tsrc.transcripts_df(spark, n, seed=23, partitions=4)
-        root = str(tmp_path / "guard")
-        lineage.run_with_lineage(spark, full.filter("turn_idx < 3"), root, "run_1")
-        assert lineage.estimated_committed_turns(root) > 0
+    def test_committed_run_id_is_refused(self, spark, committed_root):
+        """Re-submitting a committed run id must not overwrite the
+        snapshot its own resume anti-join reads: it fails before any read
+        or write, and the committed tables keep their rows."""
+        root, full = committed_root
 
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try:
-            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 10**9)
-            small = lineage.resume_filter(spark, full, root)
-            plan_small = small._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastHashJoin" in plan_small
+        def rows():
+            return (lineage.read_table(spark, root, "metrics").count(),
+                    lineage.read_chunks(spark, root).count())
 
-            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 0)
-            big = lineage.resume_filter(spark, full, root)
-            plan_big = big._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastHashJoin" not in plan_big
-            # result equality regardless of join strategy
-            assert small.count() == big.count()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        before = rows()
+        with pytest.raises(ValueError, match="run_1"):
+            lineage.run_with_lineage(spark, full, root, "run_1")
+        assert rows() == before
 
-    def test_retry_broadcast_size_guard(self, spark, tmp_path, monkeypatch):
-        """Same guard on the retry semi-join (history.retry_subset)."""
+    def test_planner_chooses_broadcasts(self, spark, committed_root):
+        """Corpus-sized joins carry no broadcast hint: with
+        auto-broadcast off every plan below is a shuffle join, and
+        with the default thresholds the planner still broadcasts the
+        small side, with the same rows either way. The documents are
+        built from range(), so the planner knows their size (a
+        createDataFrame relation has no size estimate)."""
+        from ragstudio_spark.operators import dedupe, lm_filter
         from ragstudio_spark.pipeline import history
 
-        n = 150
-        full = tsrc.transcripts_df(spark, n, seed=61, partitions=4)
-        root = str(tmp_path / "retryguard")
-        lineage.run_with_lineage(spark, full, root, "run_1")
-        assert history.estimated_retry_turns(root) > 0
+        root, full = committed_root
+        docs = spark.range(12).selectExpr(
+            "id AS doc_id",
+            "concat('alpha beta gamma delta epsilon zeta eta theta iota "
+            "kappa w', id % 4, ' tail ', id % 3) AS text")
+        bench = docs.filter("doc_id < 3")
+        frames = {
+            "resume_filter": lineage.resume_filter(spark, full, root),
+            "retry_subset": history.retry_subset(spark, full, root),
+            "jaccard_pairs": dedupe.jaccard_pairs(docs),
+            "lm_familiarity": lm_filter.lm_familiarity(
+                docs, lm_filter.bigram_counts(bench)),
+            "ngram_decontaminate": dedupe.ngram_decontaminate(docs, bench, n=3),
+            "bloom_decontaminate": dedupe.bloom_decontaminate(docs, bench, n=3),
+            "cross_corpus_minhash_pairs":
+                dedupe.cross_corpus_minhash_pairs(bench, docs),
+        }
 
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        def plans_and_counts():
+            # select("*") is a fresh Dataset, planned under the current
+            # settings
+            return {name: (_plan(df.select("*")), df.count())
+                    for name, df in frames.items()}
+
+        keys = ("spark.sql.autoBroadcastJoinThreshold",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold")
+        for key in keys:
+            spark.conf.set(key, "-1")
         try:
-            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 10**9)
-            small = history.retry_subset(spark, full, root)
-            assert "BroadcastHashJoin" in (
-                small._jdf.queryExecution().executedPlan().toString())
-            monkeypatch.setattr(lineage, "BROADCAST_MAX_KEYS", 0)
-            big = history.retry_subset(spark, full, root)
-            plan_big = big._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastHashJoin" not in plan_big
-            assert small.count() == big.count()
+            forced = plans_and_counts()
         finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+            for key in keys:
+                spark.conf.unset(key)
+        default = plans_and_counts()
+        for name in frames:
+            assert "BroadcastExchange" not in forced[name][0], name
+            assert "BroadcastHashJoin" in default[name][0], name
+            assert default[name][1] == forced[name][1] > 0, name
 
     def test_lineage_table_shape(self, spark, tmp_path):
         n = 60
