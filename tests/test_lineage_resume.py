@@ -20,6 +20,32 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_planner_broadcasts(spark, frames):
+    """With auto-broadcast off every plan in `frames` is a shuffle join;
+    with the default thresholds the planner broadcasts the small side;
+    the rows are the same either way."""
+    def plans_and_counts():
+        # select("*") is a fresh Dataset, planned under the current
+        # settings
+        return {name: (_plan(df.select("*")), df.count())
+                for name, df in frames.items()}
+
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    for key in keys:
+        spark.conf.set(key, "-1")
+    try:
+        forced = plans_and_counts()
+    finally:
+        for key in keys:
+            spark.conf.unset(key)
+    default = plans_and_counts()
+    for name in frames:
+        assert "BroadcastExchange" not in forced[name][0], name
+        assert "BroadcastHashJoin" in default[name][0], name
+        assert default[name][1] == forced[name][1] > 0, name
+
+
 @pytest.fixture(scope="module")
 def committed_root(spark, tmp_path_factory):
     """(root, input): one committed run "run_1" over part of the input;
@@ -93,25 +119,37 @@ class TestResume:
             lineage.run_with_lineage(spark, full, root, "run_1")
         assert rows() == before
 
-    def test_planner_chooses_broadcasts(self, spark, committed_root):
-        """Corpus-sized joins carry no broadcast hint: with
-        auto-broadcast off every plan below is a shuffle join, and
-        with the default thresholds the planner still broadcasts the
-        small side, with the same rows either way. The documents are
-        built from range(), so the planner knows their size (a
-        createDataFrame relation has no size estimate)."""
-        from ragstudio_spark.operators import dedupe, lm_filter
+    def test_broadcast_size_guard(self, spark, committed_root):
+        """The resume anti-join carries no broadcast hint, so a large
+        committed-key set (a crash deep into a long run) is never forced
+        into a broadcast: above the planner's size threshold (here,
+        auto-broadcast off) it is a shuffle anti-join, below it the
+        planner broadcasts the key set, with the same rows either way."""
+        root, full = committed_root
+        _assert_planner_broadcasts(spark, {
+            "resume_filter": lineage.resume_filter(spark, full, root)})
+
+    def test_retry_broadcast_size_guard(self, spark, committed_root):
+        """Same size rule on the retry semi-join (history.retry_subset)."""
         from ragstudio_spark.pipeline import history
 
         root, full = committed_root
+        _assert_planner_broadcasts(spark, {
+            "retry_subset": history.retry_subset(spark, full, root)})
+
+    def test_planner_chooses_broadcasts(self, spark):
+        """The corpus-sized dedupe and LM-filter joins carry no broadcast
+        hint either. The documents are built from range(), so the
+        planner knows their size (a createDataFrame relation has no size
+        estimate)."""
+        from ragstudio_spark.operators import dedupe, lm_filter
+
         docs = spark.range(12).selectExpr(
             "id AS doc_id",
             "concat('alpha beta gamma delta epsilon zeta eta theta iota "
             "kappa w', id % 4, ' tail ', id % 3) AS text")
         bench = docs.filter("doc_id < 3")
-        frames = {
-            "resume_filter": lineage.resume_filter(spark, full, root),
-            "retry_subset": history.retry_subset(spark, full, root),
+        _assert_planner_broadcasts(spark, {
             "jaccard_pairs": dedupe.jaccard_pairs(docs),
             "lm_familiarity": lm_filter.lm_familiarity(
                 docs, lm_filter.bigram_counts(bench)),
@@ -119,28 +157,7 @@ class TestResume:
             "bloom_decontaminate": dedupe.bloom_decontaminate(docs, bench, n=3),
             "cross_corpus_minhash_pairs":
                 dedupe.cross_corpus_minhash_pairs(bench, docs),
-        }
-
-        def plans_and_counts():
-            # select("*") is a fresh Dataset, planned under the current
-            # settings
-            return {name: (_plan(df.select("*")), df.count())
-                    for name, df in frames.items()}
-
-        keys = ("spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.adaptive.autoBroadcastJoinThreshold")
-        for key in keys:
-            spark.conf.set(key, "-1")
-        try:
-            forced = plans_and_counts()
-        finally:
-            for key in keys:
-                spark.conf.unset(key)
-        default = plans_and_counts()
-        for name in frames:
-            assert "BroadcastExchange" not in forced[name][0], name
-            assert "BroadcastHashJoin" in default[name][0], name
-            assert default[name][1] == forced[name][1] > 0, name
+        })
 
     def test_lineage_table_shape(self, spark, tmp_path):
         n = 60
