@@ -74,7 +74,13 @@ class PipelineOutput:
 
 def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -> PipelineOutput:
     cfg = config or PipelineConfig()
+    return _outputs(transcripts, _gated_turns(transcripts, cfg), cfg)
 
+
+def _outputs(transcripts: DataFrame, turns: DataFrame,
+             cfg: PipelineConfig) -> PipelineOutput:
+    """The output tables of ``turns`` (``_gated_turns`` of
+    ``transcripts``); ``transcripts`` feeds only the tool-call branch."""
     tool_calls = None
     if cfg.extract_tools and "tool" in transcripts.columns:
         # independent JVM-only branch off the same scan — never rides
@@ -82,8 +88,6 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
         from ragstudio_spark.operators import toolcalls
 
         tool_calls = toolcalls.parse_tool_calls(transcripts)
-
-    turns = _gated_turns(transcripts, cfg)
 
     metrics = turns.select(
         "conv_id", "turn_idx", "content_type", "extraction_engine",
@@ -122,10 +126,12 @@ def run_pipeline(transcripts: DataFrame, config: PipelineConfig | None = None) -
         # Survivor choice is deterministic (lexicographic min of the
         # zero-padded (conv_id, turn_idx, chunk_index) key). 16 hashes /
         # 4 bands per the measured recall/cost sweep (BASELINE.md).
-        # localCheckpoint materializes the (deduped) chunk table ONCE: the
-        # iterative clustering and the final anti-join both read it, so the
-        # fused Python hop never re-executes. NB this makes the "near"
-        # branch eager — run_pipeline triggers the pipeline jobs here.
+        # localCheckpoint materializes the (deduped) chunk table ONCE for
+        # the iterative clustering and the final anti-join, which both
+        # read it. Under run_with_lineage its job is the one that fills
+        # the persisted turns (pipeline/lineage.py), so the fused hop
+        # still runs once per run. NB this makes the "near" branch eager
+        # — run_pipeline triggers the pipeline jobs here.
         from ragstudio_spark.operators import dedupe
 
         keyed = chunks.withColumn(

@@ -160,6 +160,10 @@ class TestResume:
         })
 
     def test_lineage_table_shape(self, spark, tmp_path):
+        from ragstudio_spark.operators.metrics import (
+            STATUS_COUNTERS, TURN_STATUSES,
+        )
+
         n = 60
         full = tsrc.transcripts_df(spark, n, seed=19, partitions=3)
         root = str(tmp_path / "shape")
@@ -169,5 +173,67 @@ class TestResume:
             "run_id", "partition_id", "total_turns", "success", "failed",
             "skipped", "ts",
         }
+        # the persisted turns keep the scan's partitions, which are the
+        # hop's tasks
+        assert set(lin["partition_id"]) == {0, 1, 2}
         assert lin["total_turns"].sum() == n
         assert summary["success"] + summary["failed"] + summary["skipped"] == n
+        # the summary's totals (an Observation on the lineage write) match
+        # the committed metrics table
+        statuses = lineage.read_table(spark, root, "metrics").toPandas()["status"]
+        counted = statuses.map(lambda s: TURN_STATUSES[s][0]).value_counts()
+        for counter in STATUS_COUNTERS:
+            assert summary[counter] == counted.get(counter, 0), counter
+
+    def test_fused_hop_runs_once(self, spark, tmp_path, monkeypatch):
+        """The three table writes read the persisted gated turns, so the
+        fused hop runs one task per input partition, fresh or resumed."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        full = tsrc.transcripts_df(spark, 160, seed=23, partitions=2)
+        tasks = spark.sparkContext.accumulator(0)
+        map_in_pandas = DataFrame.mapInPandas
+
+        def counted(self, func, schema, *args, **kwargs):
+            def run(batches):
+                tasks.add(1)
+                yield from func(batches)
+            return map_in_pandas(self, run, schema, *args, **kwargs)
+
+        # patched after the input is built: only the fused hop is counted
+        monkeypatch.setattr(DataFrame, "mapInPandas", counted)
+        root = str(tmp_path / "once")
+        s1 = lineage.run_with_lineage(
+            spark, full.filter("conv_id < 'conv_00000010'"), root, "run_1",
+            resume=False)
+        assert s1["total_turns"] > 0
+        assert tasks.value == 2
+        tasks.value = 0
+        s2 = lineage.run_with_lineage(spark, full, root, "run_2")
+        assert s1["total_turns"] + s2["total_turns"] == 160
+        assert tasks.value == 2
+
+    def test_crashed_run_releases_and_claims_nothing(self, spark, tmp_path):
+        """A run that fails mid-write unpersists its turns and leaves no
+        run.json and no commit marker."""
+        import os
+
+        cfg = PipelineConfig(on_error="fail_fast",
+                             bpe_merges_path=str(tmp_path / "missing.txt"))
+        root = str(tmp_path / "crashed")
+
+        def persisted_rdds():
+            # the session is shared: earlier tests' local checkpoints may
+            # still be registered, so compare with the set before the run
+            rdds = spark.sparkContext._jsc.getPersistentRDDs()
+            return set(rdds.keySet().toArray())
+
+        before = persisted_rdds()
+        with pytest.raises(Exception, match="FileNotFoundError"):
+            lineage.run_with_lineage(
+                spark, tsrc.transcripts_df(spark, 20, seed=29, partitions=2),
+                root, "run_1", cfg)
+        run_dir = os.path.join(root, "runs", "run_1")
+        assert not os.path.exists(os.path.join(run_dir, lineage.COMMIT_MARKER))
+        assert not os.path.exists(os.path.join(run_dir, "run.json"))
+        assert persisted_rdds() <= before
