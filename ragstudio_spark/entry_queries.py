@@ -75,6 +75,7 @@ from ragstudio_spark.operators.snapshot import (
 )
 from ragstudio_spark.pipeline import cache, guards
 from ragstudio_spark.pipeline.maintenance import forget_rewrite
+from ragstudio_spark.session import literal_table
 
 # --------------------------------------------------------------------------
 # helpers
@@ -2476,9 +2477,9 @@ _def("bpe_pair_counts", _bpe_pairs_fn, _BPE_PAIRS_DUCK, "documents")
 def _bpe_train_fn(spark: SparkSession) -> DataFrame:
     merges = bpe_trainer.train_from_corpus(
         spark.table("documents"), n_merges=12)
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank int, a string, b string")
+    return literal_table(spark,
+                         [(i, a, b) for i, (a, b) in enumerate(merges)],
+                         "rank int, a string, b string")
 
 
 _def("bpe_train_merges", _bpe_train_fn, None, "documents")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ragstudio_spark.operators.dedupe import _bound_words
 from ragstudio_spark.operators.ranking import top_k
+from ragstudio_spark.session import literal_table
 
 
 def positional_postings(docs: DataFrame, text_col: str = "text",
@@ -117,14 +118,9 @@ def phrase_search(docs_or_postings: DataFrame, phrase: list[str],
     k = len(phrase)
     post = (docs_or_postings if postings
             else positional_postings(docs_or_postings, text_col, id_col))
-    # literal side: k rows of (term, offset)
-    pairs = F.array(*[
-        F.struct(F.lit(w).alias("term"), F.lit(i).alias("i"))
-        for i, w in enumerate(phrase)])
-    spark = post.sparkSession
-    phrase_df = (spark.range(1)
-                 .select(F.explode(pairs).alias("p"))
-                 .select("p.term", "p.i"))
+    phrase_df = literal_table(post.sparkSession,
+                              [(w, i) for i, w in enumerate(phrase)],
+                              "term string, i int")
     votes = (post.join(phrase_df, "term")
              .select(id_col, (F.col("pos") - F.col("i")).alias("anchor"),
                      "i")

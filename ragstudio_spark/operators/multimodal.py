@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ragstudio_spark.session import literal_table
+
 MEDIA_SCHEMA = (
     "media_id bigint, media_type string, mime string, width int, height int, "
     "duration_ms int, payload binary"
@@ -161,12 +163,9 @@ def resize_images(media: DataFrame, target_w: int = 224, target_h: int = 224,
 
 def synthetic_media_df(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table for plumbing tests."""
-    rows = []
-    for i in range(n):
-        mtype = ("image", "audio", "video")[i % 3]
-        payload = hashlib.sha256(f"media:{i}".encode()).digest() * (4 + i % 5)
-        rows.append(
-            (i, mtype, f"{mtype}/x-fake", 64 + i, 48 + i,
-             (i % 7 + 1) * 1500 if mtype == "video" else 0, bytearray(payload))
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    kinds = [("image", "audio", "video")[i % 3] for i in range(n)]
+    rows = [(i, t, f"{t}/x-fake", 64 + i, 48 + i,
+             (i % 7 + 1) * 1500 if t == "video" else 0,
+             hashlib.sha256(f"media:{i}".encode()).digest() * (4 + i % 5))
+            for i, t in enumerate(kinds)]
+    return literal_table(spark, rows, MEDIA_SCHEMA)

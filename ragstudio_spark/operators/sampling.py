@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ragstudio_spark.operators.ranking import top_k
+from ragstudio_spark.session import literal_table
 
 _DENOM = float(16 ** 8)  # 8 hex digits
 
@@ -152,7 +153,8 @@ def mixture_plan(df: DataFrame, key_col: str, weights_ppm: dict[str, int],
         F.sum(F.coalesce(F.col(token_col), F.lit(0))).cast("bigint")
         .alias("n_tokens"))
     if weights_ppm:
-        wtable = df.sparkSession.createDataFrame(
+        wtable = literal_table(
+            df.sparkSession,
             sorted((k, int(v)) for k, v in weights_ppm.items()),
             f"{key_col} string, weight_ppm bigint")
         totals = (totals.join(wtable, on=key_col, how="full_outer")

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ragstudio_spark.session import literal_table
+
 #: diff statuses, in output order.
 STATUSES = ("added", "removed", "changed", "unchanged")
 
@@ -74,13 +76,11 @@ def snapshot_diff_summary(old: DataFrame, new: DataFrame,
                           content_cols: Sequence[str]) -> DataFrame:
     """(status, n) counts — every status present (zero-filled), so
     dashboards and assertions see a stable 4-row shape."""
-    spark = old.sparkSession
     counts = (snapshot_diff(old, new, key_cols, content_cols)
               .groupBy("status").agg(F.count("*").cast("bigint")
                                      .alias("n")))
-    shape = spark.range(len(STATUSES)).select(
-        F.element_at(F.array(*[F.lit(s) for s in STATUSES]),
-                     (F.col("id") + 1).cast("int")).alias("status"))
+    shape = literal_table(old.sparkSession, [(s,) for s in STATUSES],
+                          "status string")
     return (shape.join(counts, on="status", how="left")
             .select("status", F.coalesce(F.col("n"), F.lit(0))
                     .cast("bigint").alias("n")))

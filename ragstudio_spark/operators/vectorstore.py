@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.operators.similarity import dot
+from ragstudio_spark.session import literal_table
 
 FORMAT_VERSION = 1
 
@@ -105,12 +106,9 @@ def upsert(store: DataFrame, new: DataFrame) -> DataFrame:
 
 
 def delete(store: DataFrame, ids: list[str]) -> DataFrame:
-    """Drop the given ids (delete(), json_vector_store.py:374-410). The
-    id list is built JVM-side, so the planner knows its size and
-    broadcasts it (a createDataFrame relation has no size estimate)."""
-    ids_df = (store.sparkSession.range(1)
-              .select(F.explode(F.array(*[F.lit(i) for i in ids])).alias("id"))
-              .select(F.col("id").cast("string")))
+    """Drop the given ids (delete(), json_vector_store.py:374-410)."""
+    ids_df = literal_table(store.sparkSession, [(i,) for i in ids],
+                           "id string")
     return store.join(ids_df, on="id", how="left_anti")
 
 

@@ -54,6 +54,7 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ragstudio_spark.pipeline import maintenance
+from ragstudio_spark.session import literal_table
 
 _NS = "rs"
 #: event-log columns (documentation; _append builds rows JVM-side)
@@ -106,25 +107,9 @@ def bulk_key_col(prefix: str | Column, *cols: Column | str) -> Column:
 
 
 def _append(spark: SparkSession, path: str, rows: list[tuple]) -> None:
-    """Append literal event rows. Built JVM-side (range + lit columns),
-    NOT via createDataFrame: a Python-local relation pays a ~5 s
-    pickle-RDD round trip per write on this stack (measured — 5.2 s vs
-    1.0 s for the identical one-row write), which made every
-    set/delete/clear driver call pathologically slow."""
-    frames = []
-    for key, prefix, value, ts, ttl, op in rows:
-        frames.append(spark.range(1).select(
-            F.lit(key).cast("string").alias("key"),
-            F.lit(prefix).cast("string").alias("prefix"),
-            F.lit(value).cast("string").alias("value"),
-            F.lit(int(ts)).cast("bigint").alias("ts"),
-            F.lit(int(ttl)).cast("bigint").alias("ttl"),
-            F.lit(op).cast("string").alias("op")))
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    (df.coalesce(1).write.partitionBy("prefix").mode("append")
-     .parquet(path))
+    """Append literal event rows, fields in _SCHEMA order."""
+    (literal_table(spark, rows, _SCHEMA).write.partitionBy("prefix")
+     .mode("append").parquet(path))
 
 
 def _stamp(v: int | Column) -> Column:

@@ -54,6 +54,7 @@ from pyspark.sql.types import ArrayType, AtomicType, StructType
 
 from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.pipeline.lineage import COMMIT_MARKER
+from ragstudio_spark.session import literal_table
 
 
 def _siblings(path: str, kind: str) -> list[str]:
@@ -192,16 +193,11 @@ def forget_kept_frame(spark: SparkSession, df: DataFrame, key_col: str,
     """The survivor frame forget_rewrite writes: ``df`` anti-joined
     against the deletion-request keys. Factored
     out so the plan contract test asserts on the OPERATOR's join, not a
-    hand-rebuilt copy (review-found). Literal keys ship JVM-side
-    (range(1) + explode(array(lit…))) — a createDataFrame relation on a
-    write path pays the ~5 s pickle-RDD round trip
-    (pipeline/cache._append lesson)."""
+    hand-rebuilt copy."""
     if not isinstance(forget_keys, DataFrame):
-        lits = F.array(*[F.lit(k) for k in forget_keys])
-        forget_keys = (spark.range(1)
-                       .select(F.explode(lits).alias(key_col))
-                       .select(F.col(key_col).cast(
-                           df.schema[key_col].dataType)))
+        forget_keys = literal_table(
+            spark, [(k,) for k in forget_keys],
+            f"`{key_col}` {df.schema[key_col].dataType.simpleString()}")
     forget = forget_keys.select(key_col).distinct()
     return df.join(forget, key_col, "left_anti")
 

@@ -1,16 +1,34 @@
-"""SparkSession factory with scale-appropriate defaults.
-
-Settings chosen for the 100 TB design point (and harmless locally):
-* AQE on (runtime coalescing + skew splitting),
-* Arrow self-destruct + batch sizing for the pandas-UDF hot path,
-* shuffle partitions sized to cores locally (cluster deploys override).
-"""
+"""SparkSession factories with the engine's settings (SQL_CONF: AQE with
+skew splitting, bounded Arrow batches, UTC; local shuffle partitions sized
+to cores), and literal_table, which builds tables of Python values."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, StructType
+
+# spark.sql.* settings of every engine session (get_spark, submit_session)
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.selfDestruct.enabled": "true",
+    # multi-KB turn payloads: keep Arrow batches bounded so a batch of
+    # long transcripts fits executor memory
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.session.timeZone": "UTC",
+    # InferFiltersFromGenerate synthesizes size(expr)>0 below explode()
+    # and pushdown then inlines the generator's (interpreted, higher-
+    # order) expression several times per row — measured 6× slowdown on
+    # shingle explosion. The inferred filter is a minor skip-empty
+    # heuristic; dropping it is strictly cheaper for lambda-built arrays.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+}
 
 
 def get_spark(
@@ -20,35 +38,39 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
-
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.selfDestruct.enabled", "true")
-        # multi-KB turn payloads: keep Arrow batches bounded so a batch of
-        # long transcripts fits executor memory
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.session.timeZone", "UTC")
-        # InferFiltersFromGenerate synthesizes size(expr)>0 below explode()
-        # and pushdown then inlines the generator's (interpreted, higher-
-        # order) expression several times per row — measured 6× slowdown on
-        # shingle explosion. The inferred filter is a minor skip-empty
-        # heuristic; dropping it is strictly cheaper for lambda-built arrays.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .master(master or f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions",
+                str(shuffle_partitions or max(cpus, 8)))
+        .config(map=SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=extra_conf or {})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+
+
+def submit_session(app_name: str) -> SparkSession:
+    """The session of a spark-submit job: each SQL_CONF key keeps the
+    value the submit command gave it (--conf wins), else takes SQL_CONF's."""
+    spark = SparkSession.builder.appName(app_name).getOrCreate()
+    submitted = dict(spark.sparkContext.getConf().getAll())
+    for k, v in SQL_CONF.items():
+        spark.conf.set(k, submitted.get(k, v))
+    return spark
+
+
+def literal_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """The table of Python ``rows`` with schema ``ddl`` (empty ``rows``:
+    typed, zero rows), built JVM-side as one ``Range`` of one split plus
+    ``inline(array(struct(lit…)))``. Never use ``createDataFrame`` for
+    one: its relation has no size estimate, so an equi-join cannot
+    broadcast it and shuffles the other side, and it ships as a pickled
+    Python RDD (~5 s per write measured, against ~1 s JVM-side)."""
+    schema = StructType.fromDDL(ddl)
+    structs = [F.struct(*[F.lit(v).cast(f.dataType)
+                          for v, f in zip(row, schema.fields, strict=True)])
+               for row in rows]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(ArrayType(schema))))

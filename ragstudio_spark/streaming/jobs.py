@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ragstudio_spark.pipeline.job import (
     PipelineConfig, _gated_turns, _published_chunks,
 )
+from ragstudio_spark.session import literal_table
 from ragstudio_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -319,7 +320,7 @@ def incremental_near_dedup_stream(spark: SparkSession, input_dir: str,
         ):
             committed = sess.read.parquet(corpus_dir)
         else:
-            committed = sess.createDataFrame([], DEDUP_DOC_SCHEMA)
+            committed = literal_table(sess, [], DEDUP_DOC_SCHEMA)
         pairs = dedupe.cross_corpus_minhash_pairs(batch, committed, k=k).filter(
             # crash-retry guard: a re-run batch whose rows already landed
             # in the corpus must not flag itself against its own copies

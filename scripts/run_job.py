@@ -5,7 +5,6 @@ Cluster usage (the north-rule deployment shape):
     python scripts/package.py          # builds dist/ragstudio_spark.zip
     spark-submit \
         --py-files dist/ragstudio_spark.zip \
-        --conf spark.sql.adaptive.enabled=true \
         scripts/run_job.py \
         --input  <parquet dir | table> \
         --output <root dir for runs/> \
@@ -16,9 +15,11 @@ Local smoke:
 
     python scripts/run_job.py --synthetic 5000 --output /tmp/rsout --run-id t1
 
-On a cluster the session comes from spark-submit (no master override); the
-job is a pure function of its inputs, so a rerun with the same --output and
-a new --run-id resumes from the last committed snapshot (lineage anti-join).
+On a cluster the session comes from spark-submit (no master override) and
+takes the engine's spark.sql.* settings (session.SQL_CONF) wherever no
+--conf sets them. The job is a pure function of its inputs, so a rerun
+with the same --output and a new --run-id resumes from the last committed
+snapshot (lineage anti-join).
 A --run-id that is already committed under --output is refused.
 """
 
@@ -65,11 +66,10 @@ def main() -> None:
                         "RAGSTUDIO_* env vars)")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from ragstudio_spark.pipeline import guards
     from ragstudio_spark.pipeline.config import resolve_config
     from ragstudio_spark.pipeline.lineage import run_with_lineage
+    from ragstudio_spark.session import submit_session
     from ragstudio_spark.sources import transcripts as tsrc
 
     guarded_files = None        # None = gate off or nothing filtered
@@ -92,7 +92,7 @@ def main() -> None:
                     sys.exit("guard: no valid input files remain")
                 guarded_files = [str(f) for f in valid]
 
-    spark = SparkSession.builder.appName("ragstudio-extract-chunk").getOrCreate()
+    spark = submit_session("ragstudio-extract-chunk")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ragstudio_spark.operators import bucketing, ml_strategy, retrieval, toolcalls
 from ragstudio_spark.pipeline.job import PipelineConfig, run_pipeline
+from ragstudio_spark.session import literal_table
 from ragstudio_spark.sources import transcripts as tsrc
 
 
@@ -303,3 +304,83 @@ class TestContinuation2PlanShapes:
         plan = _plan(kept)
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
         assert "SortMergeJoin" not in plan
+
+
+class TestLiteralTable:
+    """session.literal_table, which builds every relation of Python
+    values (the forget list above is one of its callers)."""
+
+    def test_schema_follows_the_ddl(self, spark):
+        df = literal_table(spark, [(1, "a", 0.5, bytearray(b"\x00\xff"))],
+                           "k bigint, s string, d double, b binary")
+        assert df.schema.simpleString() == \
+            "struct<k:bigint,s:string,d:double,b:binary>"
+        assert [tuple(r) for r in df.collect()] == \
+            [(1, "a", 0.5, bytearray(b"\x00\xff"))]
+
+    def test_rows_keep_order_and_nulls_and_empty_is_typed(self, spark):
+        rows = [(3, None), (None, "x"), (1, "y"), (None, None)]
+        df = literal_table(spark, rows, "k int, s string")
+        assert [tuple(r) for r in df.collect()] == rows
+        empty = literal_table(spark, [], "k int, s string")
+        assert empty.schema == df.schema
+        assert empty.collect() == []
+
+    def test_joined_side_broadcasts_statically(self, spark, tmp_path):
+        """Past the broadcast threshold on the parquet side, the helper's
+        side still broadcasts in the initial plan (AQE on): it has a size
+        estimate. The same rows from createDataFrame have none and plan a
+        shuffle join."""
+        path = str(tmp_path / "big")
+        (spark.range(5000)
+         .selectExpr("id % 5 AS k", "md5(CAST(id AS string)) AS v")
+         .write.parquet(path))
+        big = spark.read.parquet(path)
+        rows, ddl = [(1, "a"), (3, "c")], "k bigint, s string"
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(64 << 10))
+        try:
+            stats = big._jdf.queryExecution().optimizedPlan().stats()
+            assert int(stats.sizeInBytes()) > 64 << 10
+            plan = _plan(big.join(literal_table(spark, rows, ddl), "k"))
+            local = _plan(big.join(spark.createDataFrame(rows, ddl), "k"))
+        finally:
+            spark.conf.set(key, old)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert "isFinalPlan=false" in plan
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+        assert "SortMergeJoin" in local
+
+
+def test_no_python_local_relation_outside_literal_table():
+    """Product code builds every relation from Python values through
+    session.literal_table: no createDataFrame, and no hand-built
+    one-row range (or range(len(...)) spine) to explode literals from."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "ragstudio_spark"
+    found, helper_ranges = [], 0
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        helper = {id(n) for f in ast.walk(tree)
+                  if isinstance(f, ast.FunctionDef)
+                  and f.name == "literal_table" for n in ast.walk(f)}
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            args = [a.value if isinstance(a, ast.Constant) else a
+                    for a in node.args]
+            one_row = args[:2] in ([1], [0, 1])
+            by_len = (len(args) == 1 and isinstance(args[0], ast.Call)
+                      and getattr(args[0].func, "id", None) == "len")
+            if node.func.attr == "createDataFrame" or (
+                    node.func.attr == "range" and (one_row or by_len)):
+                if id(node) in helper:
+                    helper_ranges += 1
+                else:
+                    found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == [], found
+    assert helper_ranges == 1   # the guard still recognizes the idiom

@@ -86,3 +86,51 @@ class TestSparkSubmitPackaging:
             timeout=600)
         assert "WORKER_TOKENIZER_OK" in r.stdout, (r.returncode,
                                                    r.stderr[-3000:])
+
+    def test_submitted_session_takes_engine_sql_conf(self, tmp_path):
+        """run_job.py's session (session.submit_session) carries the
+        engine's spark.sql.* settings under spark-submit, and an explicit
+        --conf still overrides them."""
+        subprocess.run([sys.executable, "scripts/package.py"],
+                       check=True, cwd=REPO)
+        staged = tmp_path / "app"
+        staged.mkdir()
+        shutil.copy(os.path.join(REPO, "dist", "ragstudio_spark.zip"),
+                    staged / "pkg.zip")
+        probe = staged / "probe.py"
+        probe.write_text(
+            "import json\n"
+            "from ragstudio_spark.session import submit_session\n"
+            "spark = submit_session('conf-probe')\n"
+            "keys = ['spark.sql.optimizer.excludedRules',\n"
+            "        'spark.sql.execution.arrow.maxRecordsPerBatch',\n"
+            "        'spark.sql.shuffle.partitions']\n"
+            "print('CONF ' + json.dumps({k: spark.conf.get(k) "
+            "for k in keys}))\n")
+        env = dict(os.environ)
+        env.pop("PYTHONPATH", None)
+
+        def submitted_conf(*conf):
+            r = subprocess.run(
+                ["spark-submit", "--master", "local[1]",
+                 "--conf", "spark.sql.shuffle.partitions=4", *conf,
+                 "--py-files", str(staged / "pkg.zip"), str(probe)],
+                cwd=str(staged), env=env, capture_output=True, text=True,
+                timeout=600)
+            lines = [ln[5:] for ln in r.stdout.splitlines()
+                     if ln.startswith("CONF ")]
+            assert lines, (r.returncode, r.stderr[-3000:])
+            return json.loads(lines[-1])
+
+        default = submitted_conf()
+        assert default["spark.sql.optimizer.excludedRules"] == (
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+        assert default["spark.sql.execution.arrow.maxRecordsPerBatch"] \
+            == "2048"
+        assert default["spark.sql.shuffle.partitions"] == "4"
+        capped = submitted_conf(
+            "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=512")
+        assert capped["spark.sql.execution.arrow.maxRecordsPerBatch"] \
+            == "512"
+        assert capped["spark.sql.optimizer.excludedRules"] \
+            == default["spark.sql.optimizer.excludedRules"]
