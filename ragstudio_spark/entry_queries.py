@@ -2170,7 +2170,7 @@ def _pack_fn(spark: SparkSession) -> DataFrame:
         F.floor(F.col("n_chars") / 4).cast("bigint").alias("token_count"))
     packed = packing.pack_chunks(
         docs, budget=_PACK_BUDGET, partition_col="lang",
-        order_cols=("doc_id",), token_col="token_count")
+        order_cols=("doc_id",))
     return packed.select("doc_id", "lang", "seq_index", "seq_token_offset")
 
 
@@ -4057,7 +4057,7 @@ def _line_dedup_fn(spark: SparkSession) -> DataFrame:
     k = _LD_K
     # bind the words array once (the 58× inlining lesson) before the
     # per-line transform references it k times
-    bound = dedupe._bound_words(spark.table("documents"), "text", "doc_id")
+    bound = dedupe._bound_words(spark.table("documents"), "doc_id")
     lines = F.when(
         F.size("_w") > 0,
         F.transform(

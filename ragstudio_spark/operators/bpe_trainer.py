@@ -53,12 +53,13 @@ from pyspark.sql import Column, DataFrame, functions as F
 PRETOKEN_JAVA = r"(?U)'s|'t|'re|'ve|'m|'ll|'d| ?\w+| ?[^\s\w]+|\s+"
 
 
-def pretokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pretokenize(df: DataFrame) -> DataFrame:
     """(piece, cnt) vocabulary — the single corpus-wide pass. One explode
-    + one groupBy; everything downstream runs on this (small) frame."""
+    + one groupBy; everything downstream runs on this (small) frame.
+    ``df`` carries ``text``."""
     return (
         df.select(F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(PRETOKEN_JAVA),
+            F.regexp_extract_all(F.col("text"), F.lit(PRETOKEN_JAVA),
                                  F.lit(0))).alias("piece"))
         .groupBy("piece")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -72,21 +73,21 @@ def _chars(piece: Column) -> Column:
     return F.filter(F.split(piece, ""), lambda c: c != F.lit(""))
 
 
-def pair_counts(vocab: DataFrame, symbols_col: str = "symbols",
-                count_col: str = "cnt") -> DataFrame:
+def pair_counts(vocab: DataFrame) -> DataFrame:
     """(a, b, n): adjacent-pair totals weighted by piece count — the
     per-round aggregate. Overlapping pairs both count ("aaa" contributes
     (a,a) twice), the standard BPE counting rule. One explode, one
-    shuffle on the pair key."""
-    sym = F.col(symbols_col)
+    shuffle on the pair key.
+    ``vocab`` carries ``symbols`` (array<string>) and ``cnt``."""
+    sym = F.col("symbols")
     pairs = F.zip_with(
         sym, F.slice(sym, 2, F.greatest(F.size(sym), F.lit(1))),
         lambda x, y: F.struct(x.alias("a"), y.alias("b")))
     return (
-        vocab.select(F.explode(pairs).alias("p"), F.col(count_col))
+        vocab.select(F.explode(pairs).alias("p"), F.col("cnt"))
         .filter(F.col("p.b").isNotNull())
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum(count_col).cast("bigint").alias("n"))
+        .agg(F.sum("cnt").cast("bigint").alias("n"))
     )
 
 
@@ -108,16 +109,15 @@ def _apply_merge(symbols: Column, a: str, b: str) -> Column:
 
 
 def bpe_train(pieces: DataFrame, n_merges: int = 50, min_count: int = 2,
-              piece_col: str = "piece", count_col: str = "cnt",
               on_merge=None) -> list[tuple[str, str]]:
-    """Train up to ``n_merges`` merges from a (piece, cnt) vocabulary;
+    """Train up to ``n_merges`` merges from a (``piece``, ``cnt``) vocabulary;
     stops early when no pair reaches ``min_count``. Returns the ordered
     merge list (rank = position), ready for ``save_merges`` /
     ``BPETokenizer``. ``on_merge(rank, a, b, count)`` is called after
     each accepted merge (progress reporting on long offline runs)."""
     vocab = pieces.select(
-        _chars(F.col(piece_col)).alias("symbols"),
-        F.col(count_col).cast("bigint").alias("cnt"),
+        _chars(F.col("piece")).alias("symbols"),
+        F.col("cnt").cast("bigint").alias("cnt"),
     ).filter(F.size("symbols") >= 2).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -136,11 +136,11 @@ def bpe_train(pieces: DataFrame, n_merges: int = 50, min_count: int = 2,
     return merges
 
 
-def train_from_corpus(df: DataFrame, text_col: str = "text",
-                      n_merges: int = 50,
+def train_from_corpus(df: DataFrame, n_merges: int = 50,
                       min_count: int = 2) -> list[tuple[str, str]]:
-    """corpus → merges, end to end (pretokenize + bpe_train)."""
-    return bpe_train(pretokenize(df, text_col), n_merges=n_merges,
+    """corpus → merges, end to end (pretokenize + bpe_train).
+    ``df`` carries ``text``."""
+    return bpe_train(pretokenize(df), n_merges=n_merges,
                      min_count=min_count)
 
 

@@ -16,19 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 16,
-    bucket_cols: tuple[str, ...] = ("conv_id",),
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    mode: str = "overwrite",
-) -> None:
+def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16,
+                   mode: str = "overwrite") -> None:
+    """Write ``df`` as a parquet table bucketed by ``conv_id`` and
+    sorted by (``conv_id``, ``turn_idx``) within each bucket."""
     (
         df.write.mode(mode)
         .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*sort_cols)
+        .bucketBy(n_buckets, "conv_id")
+        .sortBy("conv_id", "turn_idx")
         .saveAsTable(table)
     )
 

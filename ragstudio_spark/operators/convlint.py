@@ -52,9 +52,7 @@ VALID_TRANSITIONS = (
     ("tool", "tool"),
 )
 
-def lint_conversations(df: DataFrame, conv_col: str = "conv_id",
-                       idx_col: str = "turn_idx", role_col: str = "role",
-                       text_col: str = "text") -> DataFrame:
+def lint_conversations(df: DataFrame) -> DataFrame:
     """Per-conversation integrity report: (conv_id, n_turns, n_dup_idx,
     index_gaps, n_null_text, n_bad_role, n_bad_transitions,
     starts_valid, lint_ok).
@@ -63,14 +61,15 @@ def lint_conversations(df: DataFrame, conv_col: str = "conv_id",
     contiguous conversation regardless of its starting index);
     ``n_dup_idx`` counts rows beyond the first per index. ``lint_ok``
     is the conjunction every miner wants: contiguous, no dups, no NULL
-    text, known roles, valid start, zero invalid transitions."""
-    w = Window.partitionBy(conv_col).orderBy(
-        F.asc(idx_col), F.asc_nulls_first(role_col),
-        F.asc_nulls_first(text_col))
+    text, known roles, valid start, zero invalid transitions.
+    ``df`` carries ``conv_id``, ``turn_idx``, ``role`` and ``text``."""
+    w = Window.partitionBy("conv_id").orderBy(
+        F.asc("turn_idx"), F.asc_nulls_first("role"),
+        F.asc_nulls_first("text"))
     valid_pairs = F.array(*[
         F.lit(f"{a}>{b}") for a, b in VALID_TRANSITIONS])
-    role_known = F.col(role_col).isin(*ROLES)
-    prev_role = F.lag(role_col).over(w)
+    role_known = F.col("role").isin(*ROLES)
+    prev_role = F.lag("role").over(w)
     # a transition exists for every row but the first; it is bad when
     # either side is NULL/unknown or the pair is not in the allowed set.
     # First-row detection is by row_number, NOT prev_role.isNull() — a
@@ -82,12 +81,12 @@ def lint_conversations(df: DataFrame, conv_col: str = "conv_id",
             role_known & prev_role.isin(*ROLES)
             & F.array_contains(
                 valid_pairs, F.concat(prev_role, F.lit(">"),
-                                      F.col(role_col))),
+                                      F.col("role"))),
             F.lit(0),
         ).otherwise(F.lit(1)))
     turns = df.select(
-        F.col(conv_col), F.col(idx_col),
-        F.col(text_col).isNull().cast("int").alias("_null_text"),
+        F.col("conv_id"), F.col("turn_idx"),
+        F.col("text").isNull().cast("int").alias("_null_text"),
         # when/otherwise, NOT (~isin).cast: a NULL role makes ~isin NULL
         # and the sum would silently skip it (the ml_trainer NULL-label
         # lesson applied to counting)
@@ -96,16 +95,16 @@ def lint_conversations(df: DataFrame, conv_col: str = "conv_id",
         # NULL-role first turn → 0 (invalid start), never NULL-poisoned
         F.when(F.row_number().over(w) == 1,
                F.coalesce(
-                   F.col(role_col).isin("system", "user").cast("int"),
+                   F.col("role").isin("system", "user").cast("int"),
                    F.lit(0)))
         .otherwise(None).alias("_starts_valid"),
     )
-    return (turns.groupBy(conv_col).agg(
+    return (turns.groupBy("conv_id").agg(
         F.count("*").cast("bigint").alias("n_turns"),
-        (F.count("*") - F.countDistinct(idx_col)).cast("bigint")
+        (F.count("*") - F.countDistinct("turn_idx")).cast("bigint")
         .alias("n_dup_idx"),
-        (F.max(idx_col) - F.min(idx_col) + 1
-         - F.countDistinct(idx_col)).cast("bigint").alias("index_gaps"),
+        (F.max("turn_idx") - F.min("turn_idx") + 1
+         - F.countDistinct("turn_idx")).cast("bigint").alias("index_gaps"),
         F.sum("_null_text").cast("bigint").alias("n_null_text"),
         F.sum("_bad_role").cast("bigint").alias("n_bad_role"),
         F.sum("_bad_trans").cast("bigint").alias("n_bad_transitions"),
@@ -117,9 +116,7 @@ def lint_conversations(df: DataFrame, conv_col: str = "conv_id",
         & (F.col("n_bad_transitions") == 0) & F.col("starts_valid")))
 
 
-def truncate_history(df: DataFrame, budget_tokens: int = 2048,
-                     conv_col: str = "conv_id", idx_col: str = "turn_idx",
-                     text_col: str = "text") -> DataFrame:
+def truncate_history(df: DataFrame, budget_tokens: int = 2048) -> DataFrame:
     """Context-window enforcement: per conversation, keep the suffix of
     turns whose cumulative token estimate (newest-first, len/4) fits
     ``budget_tokens``; the newest turn always survives even if it alone
@@ -129,33 +126,33 @@ def truncate_history(df: DataFrame, budget_tokens: int = 2048,
 
     Shape: one descending per-conversation running sum — the same single
     window family as the linter; rows are annotated, not dropped, so the
-    caller can audit what a budget costs before filtering on ``kept``."""
+    caller can audit what a budget costs before filtering on ``kept``.
+    ``df`` carries ``conv_id``, ``turn_idx`` and ``text``."""
     if budget_tokens <= 0:
         raise ValueError(f"budget_tokens must be positive: {budget_tokens}")
     # integral `div`, never a double division + cast (the packing
     # operator's documented portability rule)
     toks = F.expr(
-        f"coalesce(length({text_col}), 0) div {CHARS_PER_TOKEN}"
+        f"coalesce(length(text), 0) div {CHARS_PER_TOKEN}"
     ).cast("bigint")
-    order = (F.desc(idx_col), F.desc_nulls_last(text_col))
-    w_desc = (Window.partitionBy(conv_col).orderBy(*order)
+    order = (F.desc("turn_idx"), F.desc_nulls_last("text"))
+    w_desc = (Window.partitionBy("conv_id").orderBy(*order)
               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     out = (df.withColumn("turn_tokens", toks)
            .withColumn("suffix_tokens",
                        F.sum("turn_tokens").over(w_desc).cast("bigint")))
-    newest = Window.partitionBy(conv_col).orderBy(*order)
+    newest = Window.partitionBy("conv_id").orderBy(*order)
     return out.withColumn(
         "kept",
         (F.col("suffix_tokens") <= budget_tokens)
         | (F.row_number().over(newest) == 1))
 
 
-def conversation_stats(df: DataFrame, conv_col: str = "conv_id",
-                       idx_col: str = "turn_idx", role_col: str = "role",
-                       text_col: str = "text") -> DataFrame:
+def conversation_stats(df: DataFrame) -> DataFrame:
     """Per-conversation turn-taking metrics: ``(conv_id, n_turns, n_user,
     n_assistant, n_tool, n_system, n_words, n_role_switches, longest_run,
-    first_role, last_role, avg_words)``.
+    first_role, last_role, avg_words)``. ``df`` carries ``conv_id``,
+    ``turn_idx``, ``role`` and ``text``.
 
     The dialogue-shape profile a transcript curation pass filters on
     (degenerate single-speaker logs, tool-spam loops, monologue scrapes).
@@ -177,12 +174,11 @@ def conversation_stats(df: DataFrame, conv_col: str = "conv_id",
     """
     wq = (Window.partitionBy("conv_id")
           .orderBy(F.asc("turn_idx"), F.asc_nulls_first("role")))
-    words = F.size(F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")),
+    words = F.size(F.filter(F.split(F.coalesce(F.col("text"), F.lit("")),
                                     r"\s+"),
                             lambda t: t != ""))
     turns = df.select(
-        F.col(conv_col).alias("conv_id"), F.col(idx_col).alias("turn_idx"),
-        F.col(role_col).alias("role"), words.alias("n_words_turn"))
+        "conv_id", "turn_idx", "role", words.alias("n_words_turn"))
     prev = F.lag("role").over(wq)
     turns = turns.withColumn(
         "changed",
@@ -220,9 +216,7 @@ def conversation_stats(df: DataFrame, conv_col: str = "conv_id",
     )
 
 
-def topic_segments(df: DataFrame, conv_col: str = "conv_id",
-                   idx_col: str = "turn_idx", text_col: str = "text",
-                   threshold_pct: int = 50) -> DataFrame:
+def topic_segments(df: DataFrame, threshold_pct: int = 50) -> DataFrame:
     """TextTiling-style topic segmentation over a transcript (Hearst 1997,
     public technique, adjacent-block instantiation with block size 1):
     a segment boundary opens before turn *i* when the lexical cohesion
@@ -241,13 +235,12 @@ def topic_segments(df: DataFrame, conv_col: str = "conv_id",
     word-set arrays (the conv-bucketed partitioning again), then a
     per-conversation aggregate. Word sets are per-turn-bounded; nothing
     grows with corpus size.
+    ``df`` carries ``conv_id``, ``turn_idx`` and ``text``.
     """
     wset = F.array_distinct(F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
         lambda t: t != ""))
-    turns = df.select(F.col(conv_col).alias("conv_id"),
-                      F.col(idx_col).alias("turn_idx"),
-                      wset.alias("wset"))
+    turns = df.select("conv_id", "turn_idx", wset.alias("wset"))
     w = Window.partitionBy("conv_id").orderBy(F.asc("turn_idx"))
     prev = F.lag("wset").over(w)
     inter = F.size(F.array_intersect(prev, F.col("wset")))

@@ -34,32 +34,27 @@ from ragstudio_spark.operators.ranking import top_k
 CHARS_PER_TOKEN = 4
 
 
-def curate_corpus(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", shard_col: str = "lang",
-                  budget: int = 2048) -> DataFrame:
+def curate_corpus(df: DataFrame, budget: int = 2048) -> DataFrame:
     """Curated corpus rows: one per kept document, with redaction audit
     counts, the redacted text, its token estimate, and the training
     sequence assignment (``seq_index``/``seq_token_offset`` within the
     document's shard). Ties in the dedup window break on lowest id —
-    deterministic across partitionings."""
-    canonical = top_k(df, 1, [F.asc(id_col)], by=[F.md5(F.col(text_col))])
-    red = redact_op.with_redaction(canonical, text_col)
+    deterministic across partitionings.
+    ``df`` carries ``doc_id``, ``text`` and ``lang`` (the packing shard)."""
+    canonical = top_k(df, 1, [F.asc("doc_id")], by=[F.md5(F.col("text"))])
+    red = redact_op.with_redaction(canonical)
     toks = red.withColumn(
         "token_count",
         F.expr(f"length(redacted_text) div {CHARS_PER_TOKEN}")
         .cast("bigint"))
     return packing.pack_chunks(
-        toks, budget=budget, partition_col=shard_col,
-        order_cols=(id_col,), token_col="token_count")
+        toks, budget=budget, partition_col="lang",
+        order_cols=("doc_id",))
 
 
-def curate_sft(transcripts: DataFrame, benchmark: DataFrame,
-               conv_col: str = "conv_id", idx_col: str = "turn_idx",
-               role_col: str = "role", text_col: str = "text",
-               bench_text_col: str = "text", bench_id_col: str = "doc_id",
-               ngram_n: int = 13, min_shared: int = 1,
-               max_dup_line_frac: float = 0.3, max_top2_frac: float = 0.2,
-               budget: int = 2048) -> DataFrame:
+def curate_sft(transcripts: DataFrame, benchmark: DataFrame, ngram_n: int = 13,
+               min_shared: int = 1, max_dup_line_frac: float = 0.3,
+               max_top2_frac: float = 0.2, budget: int = 2048) -> DataFrame:
     """SFT curation — the full RLHF data-prep flow as ONE composition of
     already-oracle-gated stages:
 
@@ -81,17 +76,17 @@ def curate_sft(transcripts: DataFrame, benchmark: DataFrame,
     (decontamination), two explode→groupBy families + a semi-join
     (repetition filter), one per-shard window (packing). No Python, no
     collect; every join surface is either per-conversation, broadcast,
-    or 16-way sharded."""
+    or 16-way sharded.
+    ``transcripts`` carries ``conv_id``, ``turn_idx``, ``role`` and
+    ``text``; ``benchmark`` carries ``doc_id`` and ``text``."""
     from ragstudio_spark.operators import dedupe, quality_signals
     from ragstudio_spark.operators import sft as sft_op
 
-    pairs = sft_op.sft_pairs(transcripts, conv_col=conv_col,
-                             idx_col=idx_col, role_col=role_col,
-                             text_col=text_col)
+    pairs = sft_op.sft_pairs(transcripts)
     ex = pairs.select(
-        conv_col, idx_col,
-        F.concat(F.col(conv_col), F.lit(":"),
-                 F.lpad(F.col(idx_col).cast("string"), 6, "0"))
+        "conv_id", "turn_idx",
+        F.concat(F.col("conv_id"), F.lit(":"),
+                 F.lpad(F.col("turn_idx").cast("string"), 6, "0"))
         .alias("example_id"),
         "prompt", "response",
         F.concat(F.col("prompt"), F.lit("\n\n"), F.col("response"))
@@ -115,8 +110,7 @@ def curate_sft(transcripts: DataFrame, benchmark: DataFrame,
     flagged = dedupe.ngram_decontaminate(
         ex.select(F.col("example_id").alias("doc_id"),
                   F.col("example_text").alias("text")),
-        benchmark.select(F.col(bench_id_col).alias("doc_id"),
-                         F.col(bench_text_col).alias("text")),
+        benchmark.select("doc_id", "text"),
         n=ngram_n, min_shared=min_shared)
     # same repartition-before-checkpoint rationale as ``ex``: the
     # anti-join's output partitioning is AQE-coalesced (measured 6
@@ -134,10 +128,10 @@ def curate_sft(transcripts: DataFrame, benchmark: DataFrame,
         "token_count",
         F.expr(f"length(example_text) div {CHARS_PER_TOKEN}")
         .cast("bigint")).withColumn(
-        "shard", F.substring(F.md5(F.col(conv_col)), 1, 1))
+        "shard", F.substring(F.md5(F.col("conv_id")), 1, 1))
     return packing.pack_chunks(
         toks, budget=budget, partition_col="shard",
-        order_cols=("example_id",), token_col="token_count")
+        order_cols=("example_id",))
 
 
 def _manifest_aggs(count_alias: str) -> list:
@@ -168,25 +162,19 @@ def sft_curation_report(curated: DataFrame) -> DataFrame:
     )
 
 
-def curation_report(curated: DataFrame,
-                    shard_col: str = "lang") -> DataFrame:
+def curation_report(curated: DataFrame) -> DataFrame:
     """Per-shard curation manifest: kept docs, total tokens,
     start-assigned sequence slots (``_manifest_aggs``), and redaction
     totals — the audit table a curation run keeps. One
-    partial-aggregated groupBy."""
+    partial-aggregated groupBy. ``curated`` carries ``lang``, the shard key."""
     aggs = _manifest_aggs("n_docs")
     for cat, _p, _r in redact_op.REDACTIONS:
         aggs.append(F.sum(f"n_{cat}").cast("bigint").alias(f"n_{cat}"))
-    return curated.groupBy(shard_col).agg(*aggs)
+    return curated.groupBy("lang").agg(*aggs)
 
 
-def curate_pretrain_stream(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           source_col: str = "source",
-                           shard_col: str = "lang",
-                           min_tokens: int = 20,
-                           per_source_cap: int = 1000,
-                           n_buckets: int = 8,
+def curate_pretrain_stream(df: DataFrame, min_tokens: int = 20,
+                           per_source_cap: int = 1000, n_buckets: int = 8,
                            budget: int = 2048) -> DataFrame:
     """Pretraining-stream curation — the batch analogue of curate_sft,
     composed entirely from already-oracle-gated stages:
@@ -210,20 +198,21 @@ def curate_pretrain_stream(df: DataFrame, text_col: str = "text",
     windows (the operator's stated total-order boundary — run
     per-shard slices at 10^12 docs), one per-shard packing window.
     No Python, no collect, no join at all.
+    ``df`` carries ``doc_id``, ``text``, ``source`` and ``lang``.
     """
     from ragstudio_spark.operators import sampling
 
-    canonical = top_k(df, 1, [F.asc(id_col)], by=[F.md5(F.col(text_col))])
+    canonical = top_k(df, 1, [F.asc("doc_id")], by=[F.md5(F.col("text"))])
     toks = (canonical
             .withColumn("token_count",
-                        F.expr(f"length({text_col}) div {CHARS_PER_TOKEN}")
+                        F.expr(f"length(text) div {CHARS_PER_TOKEN}")
                         .cast("bigint"))
             .filter(F.col("token_count") >= min_tokens))
-    quota = sampling.cap_per_key(toks, source_col, per_source_cap,
-                                 order_cols=(id_col,), salt="quota")
+    quota = sampling.cap_per_key(toks, "source", per_source_cap,
+                                 order_cols=("doc_id",), salt="quota")
     sched = sampling.curriculum_order(
-        quota.select(id_col, shard_col, source_col, "token_count"),
-        "token_count", key_cols=(id_col,), n_buckets=n_buckets)
+        quota.select("doc_id", "lang", "source", "token_count"),
+        "token_count", key_cols=("doc_id",), n_buckets=n_buckets)
     return packing.pack_chunks(
-        sched, budget=budget, partition_col=shard_col,
-        order_cols=("schedule_pos",), token_col="token_count")
+        sched, budget=budget, partition_col="lang",
+        order_cols=("schedule_pos",))

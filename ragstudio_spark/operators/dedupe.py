@@ -8,7 +8,7 @@ Large-scale training-data dedup toolkit over a text column:
   explode once, partial-aggregate ``min()`` map-side (never nest the
   signature computation in reused expressions — Spark inlines and
   recomputes), band join only touches collided buckets.
-* ``simhash16``           — 16-bit md5-nibble-vote sketch (compact scorer).
+* ``simhash16``           — ``simhash64``'s first 16-bit band (compact scorer).
 * ``simhash64`` / ``simhash64_near_pairs`` — 64-bit sketch as 4 × 16-bit
   band values; near-pairs join only docs sharing a band (2^16 buckets per
   band, exact recall at Hamming ≤ 3 by pigeonhole).
@@ -30,7 +30,7 @@ the semantics against DuckDB value-for-value.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 N_HASHES = 8
 N_BANDS = 2
@@ -51,20 +51,19 @@ def shingles_col(words: Column, k: int = 3) -> Column:
     ).otherwise(F.array())
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Groups of bit-identical texts: (text_hash, dup_count, doc_ids)."""
+def exact_duplicates(df: DataFrame) -> DataFrame:
+    """Groups of bit-identical texts: (text_hash, dup_count, doc_ids).
+    ``df`` carries ``doc_id`` and ``text``."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
         .agg(F.count("*").alias("dup_count"),
-             F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
+             F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
         .filter(F.col("dup_count") > 1)
     )
 
 
-def _bound_words(df: DataFrame, text_col: str, id_col: str,
-                 out: str = "_w") -> DataFrame:
+def _bound_words(df: DataFrame, id_col: str, out: str = "_w") -> DataFrame:
     """(id, words-array) with the split BOUND to a column attribute.
     shingles_col references its words input k times per position, and
     Catalyst inlines an in-expression words_col into every reference —
@@ -72,22 +71,22 @@ def _bound_words(df: DataFrame, text_col: str, id_col: str,
     slower on the decontamination gram pass). CollapseProject keeps a
     multi-referenced projection un-inlined, so one intermediate select
     is the whole fix (the schema_extract bind-once lesson)."""
-    return df.select(F.col(id_col), words_col(F.col(text_col)).alias(out))
+    return df.select(F.col(id_col), words_col(F.col("text")).alias(out))
 
 
-def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+def _exploded_shingles(df: DataFrame, id_col: str, k: int) -> DataFrame:
     return (
-        _bound_words(df, text_col, id_col)
+        _bound_words(df, id_col)
         .select(F.col(id_col), shingles_col(F.col("_w"), k).alias("sh"))
         .select(id_col, F.explode("sh").alias("shingle"))
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 3,
+def minhash_signatures(df: DataFrame, id_col: str = "doc_id", k: int = 3,
                        n_hashes: int = N_HASHES) -> DataFrame:
-    """One row per doc with h0..h{n_hashes-1} minima (md5 permutations)."""
-    ex = _exploded_shingles(df, text_col, id_col, k)
+    """One row per doc with h0..h{n_hashes-1} minima (md5 permutations).
+    ``df`` carries ``text`` and the ``id_col`` key."""
+    ex = _exploded_shingles(df, id_col, k)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{h}:"), F.col("shingle")))).alias(f"h{h}")
         for h in range(n_hashes)
@@ -95,21 +94,22 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return ex.groupBy(id_col).agg(*aggs)
 
 
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = 3,
-                      n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", k: int = 3,
+                      n_hashes: int = N_HASHES,
+                      n_bands: int = N_BANDS) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing any signature band.
 
     Recall/precision dial (defaults 8 hashes / 2 bands ≈ the s-curve knee
     at Jaccard ~0.7): more bands with fewer rows each → higher recall,
     more candidates; fewer, wider bands → higher precision, fewer
     candidates. ``n_bands`` must divide ``n_hashes``. Cost tradeoffs at
-    sf0.1 are tabulated in BASELINE.md (minhash parameter sweep)."""
-    bands = _minhash_bands(df, text_col, id_col, k, n_hashes, n_bands)
+    sf0.1 are tabulated in BASELINE.md (minhash parameter sweep).
+    ``df`` carries ``text`` and the ``id_col`` key."""
+    bands = _minhash_bands(df, id_col, k, n_hashes, n_bands)
     a = bands.alias("a")
     b_ = bands.alias("b")
     return (
-        a.join(b_, (F.col(f"a.band_idx") == F.col("b.band_idx"))
+        a.join(b_, (F.col("a.band_idx") == F.col("b.band_idx"))
                & (F.col("a.band_key") == F.col("b.band_key"))
                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
@@ -117,8 +117,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-def _minhash_bands(df: DataFrame, text_col: str, id_col: str, k: int,
-                   n_hashes: int, n_bands: int) -> DataFrame:
+def _minhash_bands(df: DataFrame, id_col: str, k: int, n_hashes: int,
+                   n_bands: int) -> DataFrame:
     """(id, band_idx, band_key) rows. ONE explode(array(struct(...))) per
     caller, never a union of selects over the signature subplan: a union
     re-references the aggregate n_bands times and only optimizer goodwill
@@ -127,7 +127,7 @@ def _minhash_bands(df: DataFrame, text_col: str, id_col: str, k: int,
     (plan-asserted in tests/test_plan_shapes.py)."""
     if n_hashes % n_bands:
         raise ValueError(f"n_bands={n_bands} must divide n_hashes={n_hashes}")
-    sigs = minhash_signatures(df, text_col, id_col, k, n_hashes)
+    sigs = minhash_signatures(df, id_col, k, n_hashes)
     per_band = n_hashes // n_bands
     band_structs = [
         F.struct(
@@ -142,9 +142,8 @@ def _minhash_bands(df: DataFrame, text_col: str, id_col: str, k: int,
     ).select(id_col, "bd.band_idx", "bd.band_key")
 
 
-def cross_corpus_minhash_pairs(left: DataFrame, right: DataFrame,
-                               text_col: str = "text", id_col: str = "doc_id",
-                               k: int = 3, n_hashes: int = N_HASHES,
+def cross_corpus_minhash_pairs(left: DataFrame, right: DataFrame, k: int = 3,
+                               n_hashes: int = N_HASHES,
                                n_bands: int = N_BANDS) -> DataFrame:
     """Near-duplicate candidates BETWEEN two corpora — the benchmark-
     decontamination / incremental-dedup join: which ``left`` docs share a
@@ -157,34 +156,34 @@ def cross_corpus_minhash_pairs(left: DataFrame, right: DataFrame,
     O(N²) self-join, and when ``right`` is a small benchmark suite Spark
     broadcasts its bands; so it does for one streaming micro-batch against
     the committed corpus. An asymmetric corpus-vs-index run shuffles only
-    on band keys, so the committed index can stay partitioned by band."""
-    lb = _minhash_bands(left, text_col, id_col, k, n_hashes, n_bands).alias("l")
-    rb = _minhash_bands(right, text_col, id_col, k, n_hashes, n_bands).alias("r")
+    on band keys, so the committed index can stay partitioned by band.
+    ``left`` and ``right`` carry ``doc_id`` and ``text``."""
+    lb = _minhash_bands(left, "doc_id", k, n_hashes, n_bands).alias("l")
+    rb = _minhash_bands(right, "doc_id", k, n_hashes, n_bands).alias("r")
     return (
         lb.join(rb, (F.col("l.band_idx") == F.col("r.band_idx"))
                 & (F.col("l.band_key") == F.col("r.band_key")))
-        .select(F.col(f"l.{id_col}").alias("left_id"),
-                F.col(f"r.{id_col}").alias("right_id"))
+        .select(F.col("l.doc_id").alias("left_id"),
+                F.col("r.doc_id").alias("right_id"))
         .distinct()
     )
 
 
-def distinct_ngrams(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", n: int = 13,
+def distinct_ngrams(df: DataFrame, n: int = 13,
                     out_id: str = "doc_id") -> DataFrame:
     """(out_id, gram): each document's DISTINCT n-word grams, exploded —
     the shared building block of decontamination. Exposed so a long-lived
     consumer (the streaming curation job) can compute the STATIC
     benchmark side once, localCheckpoint it, and reuse it across
-    micro-batches instead of re-exploding + re-broadcasting per batch."""
-    return (_bound_words(df, text_col, id_col)
-            .select(F.col(id_col).alias(out_id),
+    micro-batches instead of re-exploding + re-broadcasting per batch.
+    ``df`` carries ``doc_id`` and ``text``."""
+    return (_bound_words(df, "doc_id")
+            .select(F.col("doc_id").alias(out_id),
                     F.explode(F.array_distinct(
                         shingles_col(F.col("_w"), n))).alias("gram")))
 
 
 def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame | None,
-                        text_col: str = "text", id_col: str = "doc_id",
                         n: int = 13, min_shared: int = 1,
                         benchmark_grams: DataFrame | None = None) -> DataFrame:
     """EXACT n-gram eval-decontamination — the GPT-3-style complement of
@@ -201,13 +200,13 @@ def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame | None,
     have no grams and can never be flagged. ``benchmark_grams`` (a
     precomputed ``distinct_ngrams(..., out_id="benchmark_id")`` frame,
     SAME n) takes precedence over ``benchmark`` — repeated callers
-    materialize the static side once."""
-    cg = distinct_ngrams(corpus, text_col, id_col, n, out_id="corpus_id")
+    materialize the static side once.
+    ``corpus`` and ``benchmark`` carry ``doc_id`` and ``text``."""
+    cg = distinct_ngrams(corpus, n, out_id="corpus_id")
     if benchmark_grams is not None:
         bg = benchmark_grams
     elif benchmark is not None:
-        bg = distinct_ngrams(benchmark, text_col, id_col, n,
-                             out_id="benchmark_id")
+        bg = distinct_ngrams(benchmark, n, out_id="benchmark_id")
     else:
         raise ValueError("one of benchmark / benchmark_grams is required")
     return (cg.join(bg, on="gram")
@@ -216,9 +215,7 @@ def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame | None,
             .filter(F.col("n_shared") >= min_shared))
 
 
-def repeated_spans(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", n: int = 20,
-                   min_df: int = 2,
+def repeated_spans(df: DataFrame, n: int = 20, min_df: int = 2,
                    max_df: int | None = 1000) -> DataFrame:
     """Verbatim repeated-span mining — the span-LOCATING complement of the
     doc-level near-dup passes (Lee et al.'s exact-substring dedup, public,
@@ -232,7 +229,8 @@ def repeated_spans(df: DataFrame, text_col: str = "text",
     rationale as jaccard_pairs' shingle cap; capped grams are *dropped
     from the report*, which at curation time means "handle ubiquitous
     boilerplate with a dedicated rule, not this table". One explode, one
-    (gram → df) aggregate, one hash-keyed join back to positions."""
+    (gram → df) aggregate, one hash-keyed join back to positions.
+    ``df`` carries ``doc_id`` and ``text``."""
     # words bound once (_bound_words rationale): the slice-per-position
     # transform would otherwise re-split the text once per position
     w = F.col("_w")
@@ -244,21 +242,20 @@ def repeated_spans(df: DataFrame, text_col: str = "text",
                 i.alias("p"),
                 F.array_join(F.slice(w, i + 1, n), " ").alias("g"))),
     ).otherwise(F.array())
-    occ = (_bound_words(df, text_col, id_col)
-           .select(F.col(id_col), F.explode(positioned).alias("s"))
-           .select(id_col, F.col("s.p").alias("word_pos"),
+    occ = (_bound_words(df, "doc_id")
+           .select(F.col("doc_id"), F.explode(positioned).alias("s"))
+           .select("doc_id", F.col("s.p").alias("word_pos"),
                    F.md5(F.col("s.g")).alias("gram_md5")))
     dfreq = occ.groupBy("gram_md5").agg(
-        F.countDistinct(id_col).cast("bigint").alias("n_docs"))
+        F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
     dfreq = dfreq.filter(F.col("n_docs") >= min_df)
     if max_df is not None:
         dfreq = dfreq.filter(F.col("n_docs") <= max_df)
     return occ.join(dfreq, on="gram_md5").select(
-        id_col, "word_pos", "gram_md5", "n_docs")
+        "doc_id", "word_pos", "gram_md5", "n_docs")
 
 
 def cut_repeated_spans(df: DataFrame, spans: DataFrame,
-                       text_col: str = "text", id_col: str = "doc_id",
                        n: int = 20) -> DataFrame:
     """Remove repeated spans from the WORD STREAM, keeping one canonical
     copy corpus-wide — the curation action on ``repeated_spans``' report:
@@ -284,14 +281,16 @@ def cut_repeated_spans(df: DataFrame, spans: DataFrame,
     Shape: a per-gram min-struct aggregate (tiny — one row per flagged
     gram), a canonical/non-canonical split joined back per doc (two
     bounded collect_sets), then one JVM filter over the word array. No
-    Python, no windows over the corpus."""
+    Python, no windows over the corpus.
+    ``df`` carries ``doc_id`` and ``text``; ``spans`` is
+    :func:`repeated_spans` output."""
     canon = spans.groupBy("gram_md5").agg(
-        F.min(F.struct(F.col(id_col), F.col("word_pos"))).alias("c"))
+        F.min(F.struct(F.col("doc_id"), F.col("word_pos"))).alias("c"))
     tagged = spans.join(canon, on="gram_md5").withColumn(
         "_is_canon",
-        (F.col(id_col) == F.col(f"c.{id_col}"))
+        (F.col("doc_id") == F.col("c.doc_id"))
         & (F.col("word_pos") == F.col("c.word_pos")))
-    cuts = tagged.groupBy(id_col).agg(
+    cuts = tagged.groupBy("doc_id").agg(
         F.collect_set(F.when(~F.col("_is_canon"), F.col("word_pos")))
         .alias("_cut_starts"),
         F.collect_set(F.when(F.col("_is_canon"), F.col("word_pos")))
@@ -299,7 +298,7 @@ def cut_repeated_spans(df: DataFrame, spans: DataFrame,
     ).filter(F.size("_cut_starts") > 0)
     # original-case word stream — positions align with the mined (lowered)
     # stream because lower() never changes whitespace
-    w = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+    w = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
     kept = F.zip_with(
         w, F.sequence(F.lit(0), F.greatest(F.size(w) - 1, F.lit(0))),
         lambda word, i: F.when(
@@ -307,30 +306,29 @@ def cut_repeated_spans(df: DataFrame, spans: DataFrame,
                       lambda s: (i >= s) & (i < s + n))
             | F.exists("_keep_starts",
                        lambda s: (i >= s) & (i < s + n)), word))
-    return (df.join(cuts, on=id_col, how="left")
+    return (df.join(cuts, on="doc_id", how="left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.when(F.col("_cut_starts").isNull(),
                        F.array_join(w, " "))
                 .otherwise(F.array_join(F.filter(kept, F.isnotnull), " "))
-                .alias(text_col)))
+                .alias("text")))
 
 
-def exact_new_only(new: DataFrame, seen: DataFrame,
-                   text_col: str = "text") -> DataFrame:
+def exact_new_only(new: DataFrame, seen: DataFrame) -> DataFrame:
     """Incremental exact dedup: rows of ``new`` whose text hash is absent
     from the ``seen`` corpus (anti-join on md5 — one shuffle on the hash,
-    or a broadcast when the new batch's hash set is small)."""
-    seen_h = seen.select(F.md5(F.col(text_col)).alias("_seen_h")).distinct()
+    or a broadcast when the new batch's hash set is small). Both frames
+    carry ``text``."""
+    seen_h = seen.select(F.md5(F.col("text")).alias("_seen_h")).distinct()
     return (
-        new.withColumn("_h", F.md5(F.col(text_col)))
+        new.withColumn("_h", F.md5(F.col("text")))
         .join(seen_h, F.col("_h") == F.col("_seen_h"), "left_anti")
         .drop("_h")
     )
 
 
-def _nibble_votes(df: DataFrame, text_col: str, id_col: str,
-                  n_bits: int) -> DataFrame:
+def _nibble_votes(df: DataFrame, n_bits: int) -> DataFrame:
     """Per-doc ±1 vote sums for md5-nibble SimHash bits, as ``n_bits``
     COLUMNS ``v0..v{n_bits-1}`` — one row per doc.
 
@@ -345,11 +343,11 @@ def _nibble_votes(df: DataFrame, text_col: str, id_col: str,
     per bit reference (the bind-once rule)."""
     n_nibbles = n_bits // 4
     words = (
-        df.select(F.col(id_col),
-                  F.explode(F.array_distinct(words_col(F.col(text_col)))).alias("word"))
-        .select(id_col, F.md5("word").alias("h"))
+        df.select("doc_id", F.explode(F.array_distinct(
+            words_col(F.col("text")))).alias("word"))
+        .select("doc_id", F.md5("word").alias("h"))
     )
-    nibs = words.select(id_col, *[
+    nibs = words.select("doc_id", *[
         (F.instr(F.lit("0123456789abcdef"),
                  F.substring(F.col("h"), i + 1, 1)) - 1).alias(f"n{i}")
         for i in range(n_nibbles)
@@ -359,21 +357,9 @@ def _nibble_votes(df: DataFrame, text_col: str, id_col: str,
                .bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         for b in range(n_bits)
     ]
-    return nibs.groupBy(id_col).agg(*[
+    return nibs.groupBy("doc_id").agg(*[
         F.sum(vote[b]).alias(f"v{b}") for b in range(n_bits)
     ])
-
-
-def simhash16(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """16-bit SimHash over distinct tokens (md5-nibble bit votes)."""
-    votes = _nibble_votes(df, text_col, id_col, 16)
-    val = None
-    for b in range(16):
-        term = F.when(F.col(f"v{b}") > 0,
-                      F.lit(1 << b).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-        val = term if val is None else val + term
-    return votes.select(F.col(id_col), val.cast("bigint").alias("simhash16"))
 
 
 SIMHASH_BITS = 64
@@ -381,8 +367,36 @@ SIMHASH_BAND_BITS = 16
 SIMHASH_BANDS = SIMHASH_BITS // SIMHASH_BAND_BITS
 
 
-def simhash64(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def _simhash_bands(df: DataFrame, n_bands: int) -> DataFrame:
+    """(doc_id, s0..s{n_bands-1}): the 16-bit band values of the SimHash
+    over distinct tokens, low bits first, from the votes of the first
+    ``n_bands * 16`` bits only."""
+    votes = _nibble_votes(df, n_bands * SIMHASH_BAND_BITS)
+    bands = []
+    for i in range(n_bands):
+        val = None
+        for j in range(SIMHASH_BAND_BITS):
+            b = i * SIMHASH_BAND_BITS + j
+            term = F.when(F.col(f"v{b}") > 0,
+                          F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
+            val = term if val is None else val + term
+        bands.append(val.cast("bigint").alias(f"s{i}"))
+    return votes.select(F.col("doc_id"), *bands)
+
+
+def simhash16(df: DataFrame) -> DataFrame:
+    """16-bit SimHash over distinct tokens (md5-nibble bit votes): the
+    first band ``s0`` of :func:`simhash64`, whose bits 0–15 come from the
+    same four md5 nibbles. Only those 16 votes are built: selecting ``s0``
+    from the full 64-bit sketch gives the same optimized plan, but the
+    48 extra votes it analyses and prunes made the 2,500-document
+    benchmark leaf about twice as slow (4 cores).
+    ``df`` carries ``doc_id`` and ``text``."""
+    return _simhash_bands(df, 1).select(
+        "doc_id", F.col("s0").alias("simhash16"))
+
+
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash over distinct tokens, emitted as 4 × 16-bit band
     values ``s0..s3`` (low bits first).
 
@@ -392,22 +406,12 @@ def simhash64(df: DataFrame, text_col: str = "text",
     self-join scale (the retired 16-bit/4-bit scheme had ≤16 buckets/band —
     an all-pairs join in 16 shards at corpus size). Bits come from the first
     16 nibbles of each token's md5, ±1 votes per distinct token
-    (column-wise vote sums — see ``_nibble_votes``)."""
-    votes = _nibble_votes(df, text_col, id_col, SIMHASH_BITS)
-    bands = []
-    for i in range(SIMHASH_BANDS):
-        val = None
-        for j in range(SIMHASH_BAND_BITS):
-            b = i * SIMHASH_BAND_BITS + j
-            term = F.when(F.col(f"v{b}") > 0,
-                          F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-            val = term if val is None else val + term
-        bands.append(val.cast("bigint").alias(f"s{i}"))
-    return votes.select(F.col(id_col), *bands)
+    (column-wise vote sums — see ``_nibble_votes``).
+    ``df`` carries ``doc_id`` and ``text``."""
+    return _simhash_bands(df, SIMHASH_BANDS)
 
 
-def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", max_hamming: int = 3,
+def simhash64_near_pairs(df: DataFrame, max_hamming: int = 3,
                          length_band: bool = False) -> DataFrame:
     """Near-duplicate candidates from the 64-bit sketch: join docs sharing
     any 16-bit band value, then filter on full Hamming distance.
@@ -433,17 +437,18 @@ def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
     pairs at sf1.0) runs on those few cores — the multi-consumer-
     intermediate + repartition-after-aggregation rules from CLAUDE.md,
     both in one. This makes the operator EAGER at call time (like
-    duplicate_clusters). 6.9 → ~4.5 s at sf1.0."""
+    duplicate_clusters). 6.9 → ~4.5 s at sf1.0.
+    ``df`` carries ``doc_id`` and ``text``."""
     n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sh = (simhash64(df, text_col, id_col)
-          .repartition(n_parts, F.col(id_col))
+    sh = (simhash64(df)
+          .repartition(n_parts, F.col("doc_id"))
           .localCheckpoint())
     s_cols = [f"s{i}" for i in range(SIMHASH_BANDS)]
     carry = list(s_cols)
     if length_band:
-        lb = F.floor(F.log2(F.greatest(F.length(F.col(text_col)), F.lit(1)))) \
+        lb = F.floor(F.log2(F.greatest(F.length(F.col("text")), F.lit(1)))) \
               .cast("int").alias("len_bucket")
-        sh = sh.join(df.select(F.col(id_col), lb), on=id_col)
+        sh = sh.join(df.select(F.col("doc_id"), lb), on="doc_id")
         carry.append("len_bucket")
     # single explode — same rationale as minhash_lsh_pairs: the sketch
     # aggregate is provably computed once per doc per join side
@@ -456,8 +461,8 @@ def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
         for i in range(SIMHASH_BANDS)
     ]
     bands = sh.select(
-        F.col(id_col), *carry, F.explode(F.array(*band_structs)).alias("bd")
-    ).select(id_col, *carry, "bd.band", "bd.key")
+        F.col("doc_id"), *carry, F.explode(F.array(*band_structs)).alias("bd")
+    ).select("doc_id", *carry, "bd.band", "bd.key")
     a, b_ = bands.alias("a"), bands.alias("b")
     hamming = None
     for c in s_cols:
@@ -466,9 +471,9 @@ def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
     pairs = (
         a.join(b_, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
                 hamming.alias("hamming"))
         .distinct()
     )
@@ -476,8 +481,7 @@ def simhash64_near_pairs(df: DataFrame, text_col: str = "text",
 
 
 def embedding_near_pairs(vectors: DataFrame, planes: DataFrame,
-                         threshold: float = 0.9, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: vectors sharing a sign-LSH
     bucket (one bit per hyperplane in ``planes``) are candidates; the
     exact sequential-fold cosine runs ONLY on candidates and pairs at or
@@ -499,29 +503,28 @@ def embedding_near_pairs(vectors: DataFrame, planes: DataFrame,
     order as dot(a,b)/(√dot(a,a)·√dot(b,b)), just with the two
     sqrt-folds evaluated n times instead of n²/buckets times
     (bit-identical; measured embedding_near_dup 10.3 → ~3.5 s at
-    sf1.0's 900k candidate pairs)."""
+    sf1.0's 900k candidate pairs).
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
     from ragstudio_spark.operators.similarity import dot, hyperplane_buckets
 
-    buckets = hyperplane_buckets(vectors, planes, id_col, vec_col)
-    vec = F.col(vec_col)
-    normed = vectors.select(F.col(id_col), vec,
+    buckets = hyperplane_buckets(vectors, planes)
+    vec = F.col("embedding")
+    normed = vectors.select(F.col("vec_id"), vec,
                             F.sqrt(dot(vec, vec)).alias("_nrm"))
-    keyed = buckets.join(normed, on=id_col)
+    keyed = buckets.join(normed, on="vec_id")
     a, b = keyed.alias("a"), keyed.alias("b")
-    cos = (dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+    cos = (dot(F.col("a.embedding"), F.col("b.embedding"))
            / (F.col("a._nrm") * F.col("b._nrm")))
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+               & (F.col("a.vec_id") < F.col("b.vec_id")))
         .filter(cos >= threshold)
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("a.vec_id").alias("id_a"),
+                F.col("b.vec_id").alias("id_b"))
     )
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 12,
-                        w: int = 8) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 12, w: int = 8) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     algorithm): hash every character k-gram, slide a window of ``w``
     consecutive hashes, keep each window's minimum — guaranteeing any
@@ -540,46 +543,55 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     makes Catalyst inline and re-evaluate the whole gram array per window
     position — O(n²) md5 calls per document, measured at minutes per
     10 KB row (the module-docstring trap, again). This form is O(n) hashes
-    + one per-doc sort."""
-    n_grams = (F.length(F.col(text_col)) - k + 1).cast("int")
+    + one per-doc sort. ``df`` carries ``doc_id`` and ``text``."""
+    n_grams = (F.length(F.col("text")) - k + 1).cast("int")
     grams = (
         df.filter(n_grams >= w)
-        .select(F.col(id_col), F.col(text_col), n_grams.alias("_n"),
+        .select(F.col("doc_id"), F.col("text"), n_grams.alias("_n"),
                 F.explode(F.sequence(F.lit(0), n_grams - 1)).alias("_i"))
         .select(
-            id_col, "_n", "_i",
-            F.substring(F.md5(F.substring(F.col(text_col), F.col("_i") + 1, k)),
+            "doc_id", "_n", "_i",
+            F.substring(F.md5(F.substring(F.col("text"), F.col("_i") + 1, k)),
                         1, 8).alias("_h"),
         )
     )
-    win = Window.partitionBy(id_col).orderBy("_i").rowsBetween(0, w - 1)
+    win = Window.partitionBy("doc_id").orderBy("_i").rowsBetween(0, w - 1)
     return (
         grams.withColumn("_wm", F.min("_h").over(win))
         .filter(F.col("_i") <= F.col("_n") - w)
-        .select(F.col(id_col), F.col("_wm").alias("fingerprint"))
+        .select(F.col("doc_id"), F.col("_wm").alias("fingerprint"))
         .distinct()
     )
 
 
-def winnow_overlap_pairs(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", k: int = 12, w: int = 8,
+def _drop_hot_keys(df: DataFrame, key: str,
+                   max_df: int | None) -> DataFrame:
+    """Rows of ``df`` whose ``key`` value occurs in at most ``max_df`` rows
+    (``df`` itself when ``max_df`` is None): the hot-key cap that bounds a
+    self-join's fan-out. The hot set is tiny (boilerplate keys only), so
+    AQE broadcasts it."""
+    if max_df is None:
+        return df
+    hot = df.groupBy(key).count().filter(F.col("count") > max_df)
+    return df.join(hot.select(key), key, "left_anti")
+
+
+def winnow_overlap_pairs(df: DataFrame, k: int = 12, w: int = 8,
                          min_shared: int = 2,
                          max_fingerprint_df: int | None = None) -> DataFrame:
     """Document pairs ranked by shared winnowed fingerprints (local-overlap
     candidates). ``max_fingerprint_df`` caps join fan-out exactly like
     ``jaccard_pairs.max_shingle_df`` — boilerplate fingerprints in many
-    docs otherwise explode the self-join at corpus scale."""
-    fps = winnow_fingerprints(df, text_col, id_col, k, w)
-    if max_fingerprint_df is not None:
-        hot = (fps.groupBy("fingerprint").agg(F.count("*").alias("fdf"))
-               .filter(F.col("fdf") > max_fingerprint_df).select("fingerprint"))
-        fps = fps.join(hot, on="fingerprint", how="left_anti")
+    docs otherwise explode the self-join at corpus scale.
+    ``df`` carries ``doc_id`` and ``text``."""
+    fps = _drop_hot_keys(winnow_fingerprints(df, k, w), "fingerprint",
+                         max_fingerprint_df)
     a, b = fps.alias("a"), fps.alias("b")
     return (
         a.join(b, (F.col("a.fingerprint") == F.col("b.fingerprint"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                 F.col(f"b.{id_col}").alias("doc_b"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"),
+                 F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("shared_fingerprints"))
         .filter(F.col("shared_fingerprints") >= min_shared)
     )
@@ -628,29 +640,33 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     for _ in range(max_iter):
         nbr = (
             edges.join(labels, edges.src == labels.id)
-            .select(F.col("dst").alias("id"), "label")
+            .select(F.col("dst").alias("id"), "label",
+                    F.lit(None).cast(labels.schema["label"].dataType)
+                    .alias("_old"))
         )
+        # every id holds one row of ``labels`` (edges are symmetric), so
+        # max(_old) carries the id's previous label through the round
         propagated = (
-            labels.unionByName(nbr)
-            .groupBy("id").agg(F.min("label").alias("label"))
+            labels.withColumn("_old", F.col("label")).unionByName(nbr)
+            .groupBy("id").agg(F.min("label").alias("label"),
+                               F.max("_old").alias("_old"))
         )
         # pointer jumping: label ← label(label). Every label is itself a
         # node id in the same component, so the lookup always hits.
         lut = propagated.select(F.col("id").alias("_lid"),
                                 F.col("label").alias("_lroot"))
-        new_labels = (
+        # the round's own checkpoint job counts the changed labels: no
+        # second action and no join against the previous labels
+        changes = Observation()
+        labels = (
             propagated.join(lut, propagated.label == lut._lid)
-            .select("id", F.col("_lroot").alias("label"))
+            .select("id", F.col("_lroot").alias("label"), "_old")
+            .observe(changes, F.count(F.when(F.col("label") != F.col("_old"),
+                                             1)).alias("changed"))
+            .select("id", "label")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if changes.get["changed"] == 0:
             return labels.select(F.col("id").alias("doc_id"),
                                  F.col("label").alias("cluster_id"))
     raise RuntimeError(
@@ -660,8 +676,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 def semantic_dedup(vectors: DataFrame, planes: DataFrame,
-                   threshold: float = 0.9, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+                   threshold: float = 0.9) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     technique): embedding-cosine near-dup pairs (sign-LSH candidates +
     exact cosine gate, ``embedding_near_pairs``) resolved into connected
@@ -670,12 +685,11 @@ def semantic_dedup(vectors: DataFrame, planes: DataFrame,
     already-gated operators (pairs → clusters → canonical anti-join), so
     every scale property is inherited: bucketed candidate generation,
     log-round label propagation, one anti-join against the (small) drop
-    set."""
+    set. ``vectors`` carries ``vec_id`` and ``embedding``."""
     pairs = embedding_near_pairs(
-        vectors, planes, threshold=threshold,
-        id_col=id_col, vec_col=vec_col
+        vectors, planes, threshold=threshold
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    return keep_canonical(vectors, pairs, id_col=id_col)
+    return keep_canonical(vectors, pairs, id_col="vec_id")
 
 
 def keep_canonical(df: DataFrame, pairs: DataFrame,
@@ -689,7 +703,7 @@ def keep_canonical(df: DataFrame, pairs: DataFrame,
     return df.join(drops, on=id_col, how="left_anti")
 
 
-def _shingle_pair_counts(df: DataFrame, text_col: str, id_col: str, k: int,
+def _shingle_pair_counts(df: DataFrame, k: int,
                          max_shingle_df: int | None) -> DataFrame:
     """(doc_a, doc_b, inter, na, nb) for every doc pair sharing ≥1 distinct
     k-shingle — the shared candidate core of ``jaccard_pairs`` and
@@ -712,22 +726,14 @@ def _shingle_pair_counts(df: DataFrame, text_col: str, id_col: str, k: int,
 
     Semantics are unchanged: inter counts shared DISTINCT shingles; na/nb
     are full distinct-set sizes computed BEFORE the hot-shingle cap."""
-    distinct_sh = (
-        _bound_words(df, text_col, id_col)
-        .select(F.col(id_col),
+    distinct_sh = _drop_hot_keys(
+        _bound_words(df, "doc_id")
+        .select(F.col("doc_id"),
                 F.array_distinct(shingles_col(F.col("_w"), k)).alias("sh"))
-        .select(id_col, F.explode("sh").alias("shingle"))
-    )
-    if max_shingle_df is not None:
-        hot = (
-            distinct_sh.groupBy("shingle").agg(F.count("*").alias("shingle_df"))
-            .filter(F.col("shingle_df") > max_shingle_df)
-            .select("shingle")
-        )
-        # the hot set is tiny (only stop-shingles) — AQE broadcasts it
-        distinct_sh = distinct_sh.join(hot, on="shingle", how="left_anti")
+        .select("doc_id", F.explode("sh").alias("shingle")),
+        "shingle", max_shingle_df)
     ids = (distinct_sh.groupBy("shingle")
-           .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
+           .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("ids"))
            .filter(F.size("ids") >= 2))
     pair_arr = F.flatten(F.transform(
         F.col("ids"),
@@ -753,19 +759,18 @@ def _shingle_pair_counts(df: DataFrame, text_col: str, id_col: str, k: int,
              .groupBy("doc_a", "doc_b")
              .agg(F.count(F.lit(1)).alias("inter")))
     sizes = (
-        _bound_words(df, text_col, id_col)
-        .select(F.col(id_col),
+        _bound_words(df, "doc_id")
+        .select(F.col("doc_id"),
                 F.size(F.array_distinct(shingles_col(F.col("_w"), k)))
                 .alias("n_sh")))
     return (inter
-            .join(sizes.select(F.col(id_col).alias("doc_a"),
+            .join(sizes.select(F.col("doc_id").alias("doc_a"),
                                F.col("n_sh").alias("na")), on="doc_a")
-            .join(sizes.select(F.col(id_col).alias("doc_b"),
+            .join(sizes.select(F.col("doc_id").alias("doc_b"),
                                F.col("n_sh").alias("nb")), on="doc_b"))
 
 
-def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  k: int = 3, min_jaccard: float = 0.0,
+def jaccard_pairs(df: DataFrame, k: int = 3, min_jaccard: float = 0.0,
                   max_shingle_df: int | None = None) -> DataFrame:
     """Exact shingle-set Jaccard for pairs sharing ≥1 shingle.
 
@@ -776,17 +781,16 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     stop-shingle in 10⁶ docs yields 10¹² pair rows — so corpus-wide runs
     MUST set it; the default (None, exact) is the oracle/ground-truth
     mode. Set sizes ``na``/``nb`` stay exact either way — only candidate
-    generation and the intersection count are approximated by the cap."""
-    inter = _shingle_pair_counts(df, text_col, id_col, k, max_shingle_df)
+    generation and the intersection count are approximated by the cap.
+    ``df`` carries ``doc_id`` and ``text``."""
+    inter = _shingle_pair_counts(df, k, max_shingle_df)
     out = inter.withColumn(
         "jaccard", F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
     ).select("doc_a", "doc_b", "jaccard")
     return out.filter(F.col("jaccard") >= min_jaccard) if min_jaccard > 0 else out
 
 
-def containment_pairs(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = 3,
-                      min_containment_ppm: int = 0,
+def containment_pairs(df: DataFrame, k: int = 3, min_containment_ppm: int = 0,
                       max_shingle_df: int | None = None) -> DataFrame:
     """Directed n-gram containment — the doc-IN-doc detector.
 
@@ -808,8 +812,9 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     is O(Σ df²) without ``max_shingle_df`` — corpus runs MUST cap it
     (pairs for capped stop-shingles surface through rarer shared
     shingles); set sizes stay exact either way.
+    ``df`` carries ``doc_id`` and ``text``.
     """
-    inter = _shingle_pair_counts(df, text_col, id_col, k, max_shingle_df)
+    inter = _shingle_pair_counts(df, k, max_shingle_df)
     out = inter.select(
         "doc_a", "doc_b", "inter", "na", "nb",
         F.floor(F.lit(1_000_000) * F.col("inter") / F.col("na"))
@@ -865,7 +870,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     kept = (
         lines.join(firsts, on="h", how="left")
         .withColumn("keep", (~F.col("eligible"))
-                    | ((F.col(f"first.fid") == F.col(id_col))
+                    | ((F.col("first.fid") == F.col(id_col))
                        & (F.col("first.fidx") == F.col("line_idx"))))
     )
     return (
@@ -910,10 +915,10 @@ def _hex_positions(h: str, m_bits: int, k: int) -> list[str]:
     return out
 
 
-def bloom_build(grams: DataFrame, m_bits: int = 1 << 16, k: int = 3,
-                gram_col: str = "gram") -> list[int]:
+def bloom_build(grams: DataFrame, m_bits: int = 1 << 16,
+                k: int = 3) -> list[int]:
     """Driver-side bloom bit array (as ``m_bits // 64`` Python ints) from
-    a gram table — the BENCHMARK side of decontamination, tiny by
+    a ``gram`` table — the BENCHMARK side of decontamination, tiny by
     contract (eval suites), so the distinct-position collect is bounded
     by min(k·|grams|, m_bits) rows. The array ships to executors as a
     literal in the filter expression: membership tests are then pure
@@ -922,7 +927,7 @@ def bloom_build(grams: DataFrame, m_bits: int = 1 << 16, k: int = 3,
     if m_bits % 64 != 0 or m_bits <= 0:
         raise ValueError("m_bits must be a positive multiple of 64")
     hashed = (grams.select(
-        F.md5(F.col(gram_col).cast("string")).alias("_h"))
+        F.md5(F.col("gram").cast("string")).alias("_h"))
         .filter(F.col("_h").isNotNull()))  # NULL grams hash to NULL —
     # an unguarded collect would crash on r.pos = None (review-found)
     pos_exprs = _hex_positions("_h", m_bits, k)
@@ -982,10 +987,8 @@ def bloom_member_col(pos_cols: list[str], words: list[int]) -> Column:
     return out
 
 
-def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 13, m_bits: int = 1 << 16,
-                        k: int = 3) -> DataFrame:
+def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame, n: int = 13,
+                        m_bits: int = 1 << 16, k: int = 3) -> DataFrame:
     """Bloom-prefiltered eval-decontamination screening — the 100-TB
     shape of ``ngram_decontaminate``: the benchmark's grams are folded
     into an ``m_bits`` bloom filter ON THE DRIVER (the eval side is tiny
@@ -999,15 +1002,14 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     set]) — a row with n_exact_shared = 0 is entirely false positives,
     making the filter's precision directly observable. No false
     negatives by construction: every gram of ``ngram_decontaminate``'s
-    flagged docs survives the prefilter."""
-    bg = (distinct_ngrams(benchmark, text_col, id_col, n,
-                          out_id="benchmark_id")
+    flagged docs survives the prefilter.
+    ``corpus`` and ``benchmark`` carry ``doc_id`` and ``text``."""
+    bg = (distinct_ngrams(benchmark, n, out_id="benchmark_id")
           .select("gram").distinct()
           .localCheckpoint())  # 2 consumers (build collect + exact
     # join) — without it the benchmark shingle lineage runs twice
     words = bloom_build(bg, m_bits, k)
-    cg = (distinct_ngrams(corpus, text_col, id_col, n,
-                          out_id="corpus_id")
+    cg = (distinct_ngrams(corpus, n, out_id="corpus_id")
           .withColumn("_h", F.md5(F.col("gram").cast("string"))))
     cg, pos_cols = bind_bloom_positions(cg, "_h", m_bits, k)
     cand = cg.filter(bloom_member_col(pos_cols, words))
@@ -1019,8 +1021,7 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
                  .alias("n_exact_shared")))
 
 
-def stitch_pairs(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", k: int = 5,
+def stitch_pairs(df: DataFrame, k: int = 5,
                  max_boundary_df: int | None = None) -> DataFrame:
     """Boundary-stitch candidates: A's last k words == B's first k words.
 
@@ -1038,32 +1039,29 @@ def stitch_pairs(df: DataFrame, text_col: str = "text",
 
     Scale: two projections + one equi-join on a fixed-width key; shuffle
     volume is one row per document per side regardless of document size.
+    ``df`` carries ``doc_id`` and ``text``.
     """
-    bound = _bound_words(df, text_col, id_col)
+    bound = _bound_words(df, "doc_id")
     n = F.size("_w")
     head = F.concat_ws(" ", F.slice("_w", 1, k))
     # F.slice with negative start takes the LAST k elements
     tail = F.concat_ws(" ", F.slice("_w", -k, k))
     keyed = (bound.filter(n >= 2 * k)  # head and tail must not overlap
-             .select(id_col, head.alias("head_key"), tail.alias("tail_key")))
-    heads = keyed.select(F.col(id_col).alias("doc_b"),
-                         F.col("head_key").alias("boundary"))
-    tails = keyed.select(F.col(id_col).alias("doc_a"),
-                         F.col("tail_key").alias("boundary"))
-    if max_boundary_df is not None:
-        hot_h = (heads.groupBy("boundary").count()
-                 .filter(F.col("count") > max_boundary_df).select("boundary"))
-        hot_t = (tails.groupBy("boundary").count()
-                 .filter(F.col("count") > max_boundary_df).select("boundary"))
-        heads = heads.join(hot_h, "boundary", "left_anti")
-        tails = tails.join(hot_t, "boundary", "left_anti")
+             .select("doc_id", head.alias("head_key"), tail.alias("tail_key")))
+    heads = _drop_hot_keys(
+        keyed.select(F.col("doc_id").alias("doc_b"),
+                     F.col("head_key").alias("boundary")),
+        "boundary", max_boundary_df)
+    tails = _drop_hot_keys(
+        keyed.select(F.col("doc_id").alias("doc_a"),
+                     F.col("tail_key").alias("boundary")),
+        "boundary", max_boundary_df)
     return (tails.join(heads, "boundary")
             .filter(F.col("doc_a") != F.col("doc_b"))
             .select("doc_a", "doc_b", "boundary"))
 
 
-def edit_distance_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", max_distance: int = 20,
+def edit_distance_pairs(df: DataFrame, max_distance: int = 20,
                         prefix_len: int = 12, length_band: int = 20,
                         max_prefix_df: int | None = None) -> DataFrame:
     """Character-level near-duplicates: Levenshtein ≤ ``max_distance``
@@ -1093,22 +1091,19 @@ def edit_distance_pairs(df: DataFrame, text_col: str = "text",
     pair, ~(len/2d)× fewer DP cells than the full O(len²) matrix
     (measured 29.8 → ~2 s at sf1.0 where candidates average ~300 chars
     at d=20). Output (doc_a, doc_b, distance), doc_a < doc_b.
+    ``df`` carries ``doc_id`` and ``text``.
     """
-    keyed = df.select(
-        F.col(id_col),
-        F.col(text_col).alias("_t"),
-        F.substring(F.lower(F.col(text_col)), 1, prefix_len).alias("_pfx"),
-        F.length(text_col).alias("_len"))
-    if max_prefix_df is not None:
-        hot = (keyed.groupBy("_pfx").count()
-               .filter(F.col("count") > max_prefix_df).select("_pfx"))
-        keyed = keyed.join(hot, "_pfx", "left_anti")
+    keyed = _drop_hot_keys(df.select(
+        F.col("doc_id"),
+        F.col("text").alias("_t"),
+        F.substring(F.lower(F.col("text")), 1, prefix_len).alias("_pfx"),
+        F.length("text").alias("_len")), "_pfx", max_prefix_df)
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = a.join(
         b,
         (F.col("a._pfx") == F.col("b._pfx"))
         & (F.abs(F.col("a._len") - F.col("b._len")) <= length_band)
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        & (F.col("a.doc_id") < F.col("b.doc_id")))
     return (cand
             .withColumn("distance",
                         F.levenshtein(F.col("a._t"), F.col("b._t"),
@@ -1116,5 +1111,5 @@ def edit_distance_pairs(df: DataFrame, text_col: str = "text",
                         .cast("bigint"))
             .filter((F.col("distance") >= 0)
                     & (F.col("distance") <= max_distance))
-            .select(F.col(f"a.{id_col}").alias("doc_a"),
-                    F.col(f"b.{id_col}").alias("doc_b"), "distance"))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"), "distance"))

@@ -82,16 +82,16 @@ def feedback_statistics(df: DataFrame, feedback_type: str | None = None,
 
 
 def problematic_queries(df: DataFrame, min_negative_rate: float = 0.5,
-                        min_samples: int = 3,
-                        query_col: str = "query_id") -> DataFrame:
+                        min_samples: int = 3) -> DataFrame:
     """Queries with poor feedback — reference get_problematic_queries
     (feedback_loop.py:473-519): group by query, keep groups with at least
     ``min_samples`` entries whose negative rate reaches the threshold,
     sorted worst-first. The reference sorts by negative_rate only; the id
     tie-break makes the order total (engine-portable).
 
-    Returns (query_id, total_feedback, negative_count, negative_rate)."""
-    grouped = df.groupBy(F.col(query_col).alias("query_id")).agg(
+    Returns (query_id, total_feedback, negative_count, negative_rate).
+    ``df`` carries ``query_id`` and ``score``."""
+    grouped = df.groupBy("query_id").agg(
         F.count("*").cast("bigint").alias("total_feedback"),
         F.sum(F.when(F.col("score") == "negative", 1).otherwise(0))
         .cast("bigint").alias("negative_count"),

@@ -288,12 +288,13 @@ def process_turns(
     return _materialize_chunk_text(out) if materialize_text else out
 
 
-def chunk_text_expr(chunk: str = "c", base: str = "base_utf8") -> str:
+def chunk_text_expr(chunk: str = "c") -> str:
     """SQL expression (for use inside higher-order lambdas) recovering a
     chunk's text from the wire form: literal text when shipped, else the
-    byte-span slice of ``base`` (a BINARY column — shipped as UTF-8 bytes
-    precisely so no per-element string→binary cast runs inside lambdas)."""
-    return (f"coalesce({chunk}.text, cast(substring({base}, "
+    byte-span slice of ``base_utf8`` (a BINARY column — shipped as UTF-8
+    bytes precisely so no per-element string→binary cast runs inside
+    lambdas)."""
+    return (f"coalesce({chunk}.text, cast(substring(base_utf8, "
             f"{chunk}.b_start + 1, {chunk}.b_len) as string))")
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from ragstudio_spark.operators.dedupe import shingles_col, words_col
 
 
-def _turn_grams(conv: DataFrame, text_col: str, k: int) -> DataFrame:
+def _turn_grams(conv: DataFrame, k: int) -> DataFrame:
     """(conv_id, turn_idx, role, gram) — DISTINCT grams per turn.
 
     Only user and assistant turns are shingled: they are the only roles
@@ -43,7 +43,7 @@ def _turn_grams(conv: DataFrame, text_col: str, k: int) -> DataFrame:
     bound = (conv
              .filter(F.col("role").isin("user", "assistant"))
              .select("conv_id", "turn_idx", "role",
-                     words_col(F.coalesce(F.col(text_col), F.lit("")))
+                     words_col(F.coalesce(F.col("text"), F.lit("")))
                      .alias("_w")))
     # shingles_col references its words input k times per position —
     # the array is already bound to the attribute _w (the r5 lesson).
@@ -55,15 +55,14 @@ def _turn_grams(conv: DataFrame, text_col: str, k: int) -> DataFrame:
             .distinct())
 
 
-def turn_grounding(conv: DataFrame, text_col: str = "text",
-                   k: int = 2) -> DataFrame:
+def turn_grounding(conv: DataFrame, k: int = 2) -> DataFrame:
     """Per assistant turn: (conv_id, turn_idx, n_bigrams, n_grounded,
     grounded_ppm), every assistant turn present (zero-gram turns carry
     NULL ppm), ordered by (conv_id, turn_idx).
 
     ``conv`` is transcript-shaped: (conv_id, turn_idx, role, text).
     """
-    grams = _turn_grams(conv, text_col, k)
+    grams = _turn_grams(conv, k)
     user_first = (grams.filter(F.col("role") == "user")
                   .groupBy("conv_id", "gram")
                   .agg(F.min("turn_idx").alias("first_user_idx")))

@@ -37,28 +37,28 @@ from ragstudio_spark.operators.ranking import top_k
 from ragstudio_spark.session import literal_table
 
 
-def positional_postings(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def positional_postings(docs: DataFrame) -> DataFrame:
     """(id, term, pos) positional postings — whitespace tokens, lowered.
 
     The words array is bound to a column attribute first (_bound_words):
     posexplode references its input once so the bind is not load-bearing
     here, but keeping every tokenizer call site on the shared helper
     means one place defines the token contract.
+    ``docs`` carries ``doc_id`` and ``text``.
     """
-    return (_bound_words(docs, text_col, id_col)
-            .select(id_col, F.posexplode("_w").alias("pos", "term")))
+    return (_bound_words(docs, "doc_id")
+            .select("doc_id", F.posexplode("_w").alias("pos", "term")))
 
 
-def write_postings(docs: DataFrame, path: str, n_buckets: int = 64,
-                   text_col: str = "text", id_col: str = "doc_id") -> None:
+def write_postings(docs: DataFrame, path: str, n_buckets: int = 64) -> None:
     """Persist the index term-bucketed: ``bucket = pmod(hash(term), n)``.
 
     A phrase query then reads only the buckets its terms hash into —
     dynamic partition pruning over a literal IN-list, the same layout
     discipline as similarity.write_ivfpq_index (cell-partitioned ANN).
+    ``docs`` carries ``doc_id`` and ``text``.
     """
-    (positional_postings(docs, text_col, id_col)
+    (positional_postings(docs)
      .withColumn("bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
@@ -76,8 +76,8 @@ def read_postings(spark, path: str, terms: list[str]) -> DataFrame:
     return spark.read.parquet(path).filter(F.col("term").isin(terms))
 
 
-def _bounded_rank(counts: DataFrame, order_cols, id_col: str,
-                  out_cols: list[str], top_n: int | None) -> DataFrame:
+def _bounded_rank(counts: DataFrame, order_cols, out_cols: list[str],
+                  top_n: int | None) -> DataFrame:
     """Rank hit counts by ``order_cols`` with the retrieval-tier partial
     top-k discipline: when ``top_n`` is set, a distributed
     ``orderBy().limit(top_n)`` (TakeOrderedAndProject — per-partition
@@ -89,12 +89,11 @@ def _bounded_rank(counts: DataFrame, order_cols, id_col: str,
     Ranks of the surviving rows are identical either way — the limit and
     the window share one total order (``ranking.top_k``'s global form)."""
     return (top_k(counts, top_n, order_cols, rank="rank")
-            .select(id_col, *out_cols, F.col("rank").cast("bigint"))
+            .select("doc_id", *out_cols, F.col("rank").cast("bigint"))
             .orderBy("rank"))
 
 
 def phrase_search(docs_or_postings: DataFrame, phrase: list[str],
-                  id_col: str = "doc_id", text_col: str = "text",
                   postings: bool = False,
                   top_n: int | None = None) -> DataFrame:
     """Exact phrase occurrences per doc: (doc_id, n_occurrences, rank).
@@ -110,34 +109,33 @@ def phrase_search(docs_or_postings: DataFrame, phrase: list[str],
     the ranked output with a distributed partial top-k before the rank
     window (see :func:`_bounded_rank`) — at corpus scale a boilerplate
     phrase present in 10% of documents would otherwise rank through one
-    task.
+    task. Raw ``docs_or_postings`` carries ``doc_id`` and ``text``.
     """
     if not phrase:
         raise ValueError("phrase must be non-empty")
     phrase = [w.lower() for w in phrase]
     k = len(phrase)
     post = (docs_or_postings if postings
-            else positional_postings(docs_or_postings, text_col, id_col))
+            else positional_postings(docs_or_postings))
     phrase_df = literal_table(post.sparkSession,
                               [(w, i) for i, w in enumerate(phrase)],
                               "term string, i int")
     votes = (post.join(phrase_df, "term")
-             .select(id_col, (F.col("pos") - F.col("i")).alias("anchor"),
+             .select("doc_id", (F.col("pos") - F.col("i")).alias("anchor"),
                      "i")
              .filter(F.col("anchor") >= 0))
-    occurrences = (votes.groupBy(id_col, "anchor")
+    occurrences = (votes.groupBy("doc_id", "anchor")
                    .agg(F.countDistinct("i").alias("n_i"))
                    .filter(F.col("n_i") == k))
-    counts = (occurrences.groupBy(id_col)
+    counts = (occurrences.groupBy("doc_id")
               .agg(F.count("*").alias("n_occurrences")))
     return _bounded_rank(counts,
-                         [F.desc("n_occurrences"), F.asc(id_col)],
-                         id_col, ["n_occurrences"], top_n)
+                         [F.desc("n_occurrences"), F.asc("doc_id")],
+                         ["n_occurrences"], top_n)
 
 
 def terms_search(docs_or_postings: DataFrame, terms: list[str],
-                 require_all: bool = True, id_col: str = "doc_id",
-                 text_col: str = "text", postings: bool = False,
+                 require_all: bool = True, postings: bool = False,
                  top_n: int | None = None) -> DataFrame:
     """Boolean bag-of-terms search over the postings index: AND
     (``require_all``) or OR semantics, scored by total term frequency.
@@ -151,17 +149,18 @@ def terms_search(docs_or_postings: DataFrame, terms: list[str],
     ``top_n`` bounds the ranked output with a distributed partial top-k
     before the rank window (see :func:`_bounded_rank`) — OR semantics on
     one common term would otherwise rank the whole corpus in one task.
+    Raw ``docs_or_postings`` carries ``doc_id`` and ``text``.
     """
     if not terms:
         raise ValueError("terms must be non-empty")
     uniq = sorted({t.lower() for t in terms})
     post = (docs_or_postings if postings
-            else positional_postings(docs_or_postings, text_col, id_col))
+            else positional_postings(docs_or_postings))
     hits = (post.filter(F.col("term").isin(uniq))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.countDistinct("term").alias("n_matched_terms"),
                  F.count("*").alias("total_tf")))
     if require_all:
         hits = hits.filter(F.col("n_matched_terms") == len(uniq))
-    return _bounded_rank(hits, [F.desc("total_tf"), F.asc(id_col)],
-                         id_col, ["n_matched_terms", "total_tf"], top_n)
+    return _bounded_rank(hits, [F.desc("total_tf"), F.asc("doc_id")],
+                         ["n_matched_terms", "total_tf"], top_n)

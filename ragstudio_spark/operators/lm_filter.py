@@ -36,34 +36,34 @@ from ragstudio_spark.operators.dedupe import _bound_words, shingles_col
 from ragstudio_spark.operators.ranking import top_k
 
 
-def _bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _bigrams(df: DataFrame) -> DataFrame:
     """(id, bigram) with duplicate occurrences KEPT."""
-    return (_bound_words(df, text_col, id_col)
-            .select(F.col(id_col),
+    return (_bound_words(df, "doc_id")
+            .select(F.col("doc_id"),
                     shingles_col(F.col("_w"), 2).alias("sh"))
-            .select(id_col, F.explode("sh").alias("bigram")))
+            .select("doc_id", F.explode("sh").alias("bigram")))
 
 
-def bigram_counts(reference: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def bigram_counts(reference: DataFrame) -> DataFrame:
     """(bigram, cnt): the reference corpus's bigram table — train once,
-    reuse everywhere (localCheckpoint/persist it before repeated use)."""
-    return (_bigrams(reference, text_col, id_col)
+    reuse everywhere (localCheckpoint/persist it before repeated use).
+    ``reference`` carries ``doc_id`` and ``text``."""
+    return (_bigrams(reference)
             .groupBy("bigram")
             .agg(F.count("*").cast("bigint").alias("cnt")))
 
 
 def _familiarity_scores(df: DataFrame, ref_bigrams: DataFrame,
-                        text_col: str, id_col: str, hit_cap: int) -> DataFrame:
+                        hit_cap: int) -> DataFrame:
     """The grouped accounting WITHOUT the zero-fill join — docs with no
     bigrams are simply absent. The filter consumes this directly (it
     drops zero-bigram docs anyway, so paying a corpus-wide distinct +
     left join to materialize rows it would immediately discard is pure
     waste on the hot path); the reporting entry wraps it with zero-fill."""
     ref = ref_bigrams.select("bigram", F.col("cnt").alias("_ref_cnt"))
-    return (_bigrams(df, text_col, id_col)
+    return (_bigrams(df)
             .join(ref, on="bigram", how="left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").cast("bigint").alias("n_bigrams"),
                  F.sum(F.when(F.col("_ref_cnt").isNotNull(), 1)
                        .otherwise(0)).cast("bigint").alias("n_known"),
@@ -80,22 +80,21 @@ def _familiarity_scores(df: DataFrame, ref_bigrams: DataFrame,
 
 
 def lm_familiarity(df: DataFrame, ref_bigrams: DataFrame,
-                   text_col: str = "text", id_col: str = "doc_id",
                    hit_cap: int = 1000) -> DataFrame:
     """Per-doc familiarity accounting vs the reference table:
     (id, n_bigrams, n_known, known_hits) — all bigint, zero-filled (the
-    REPORT keeps every document, including bigram-less ones)."""
-    scored = _familiarity_scores(df, ref_bigrams, text_col, id_col, hit_cap)
+    REPORT keeps every document, including bigram-less ones).
+    ``df`` carries ``doc_id`` and ``text``."""
+    scored = _familiarity_scores(df, ref_bigrams, hit_cap)
     zero = F.lit(0).cast("bigint")
-    return (df.select(id_col).distinct()
-            .join(scored, on=id_col, how="left")
-            .select(id_col,
+    return (df.select("doc_id").distinct()
+            .join(scored, on="doc_id", how="left")
+            .select("doc_id",
                     *[F.coalesce(F.col(c), zero).alias(c)
                       for c in ("n_bigrams", "n_known", "known_hits")]))
 
 
 def familiarity_filter(df: DataFrame, ref_bigrams: DataFrame,
-                       text_col: str = "text", id_col: str = "doc_id",
                        min_known_frac: float = 0.5,
                        hit_cap: int = 1000) -> DataFrame:
     """Rows of ``df`` whose known-bigram fraction reaches the threshold
@@ -104,18 +103,18 @@ def familiarity_filter(df: DataFrame, ref_bigrams: DataFrame,
     lowest bucket). Cross-multiplied integer comparison; one semi-join
     back onto the corpus. Consumes the pre-zero-fill scores directly —
     absent (bigram-less) docs are exactly the ones the filter drops, so
-    the report's distinct + left-join zero-fill is skipped."""
+    the report's distinct + left-join zero-fill is skipped.
+    ``df`` carries ``doc_id`` and ``text``."""
     scale = 1_000_000
-    sig = _familiarity_scores(df, ref_bigrams, text_col, id_col, hit_cap)
+    sig = _familiarity_scores(df, ref_bigrams, hit_cap)
     keep = sig.filter(
         F.col("n_known") * scale
         >= F.lit(round(min_known_frac * scale)) * F.col("n_bigrams")
-    ).select(id_col)
-    return df.join(keep, on=id_col, how="left_semi")
+    ).select("doc_id")
+    return df.join(keep, on="doc_id", how="left_semi")
 
 
-def pmi_collocations(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", min_count: int = 5,
+def pmi_collocations(df: DataFrame, min_count: int = 5,
                      top_n: int = 50) -> DataFrame:
     """Top-N PMI collocations (pointwise mutual information, public
     Church–Hanks measure): bigrams whose observed frequency most exceeds
@@ -134,13 +133,14 @@ def pmi_collocations(df: DataFrame, text_col: str = "text",
     ONCE and localCheckpointed (it feeds the filter branch AND the
     total — the multi-consumer rule), one more scan for unigrams, two
     key joins, one 1-row-broadcast total; the top-N is a
-    TakeOrderedAndProject, never a full sort."""
+    TakeOrderedAndProject, never a full sort.
+    ``df`` carries ``doc_id`` and ``text``."""
     if min_count < 1 or top_n < 1:
         raise ValueError("min_count and top_n must be positive")
-    uni = (_bound_words(df, text_col, id_col)
+    uni = (_bound_words(df, "doc_id")
            .select(F.explode("_w").alias("w"))
            .groupBy("w").agg(F.count("*").cast("bigint").alias("c")))
-    bc_all = bigram_counts(df, text_col, id_col).localCheckpoint()
+    bc_all = bigram_counts(df).localCheckpoint()
     big = (bc_all
            .filter(F.col("cnt") >= int(min_count))
            .withColumn("w1", F.expr("split(bigram, ' ')[0]"))

@@ -19,9 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def eval_metrics(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-row chunk-size statistics frame."""
-    size = F.length(F.col(text_col))
+def eval_metrics(chunks: DataFrame) -> DataFrame:
+    """One-row chunk-size statistics frame. ``chunks`` carries ``text``."""
+    size = F.length(F.col("text"))
     agg = chunks.agg(
         F.count("*").alias("n_chunks"),
         F.avg(size).alias("mean_size"),
@@ -43,10 +43,10 @@ def eval_metrics(chunks: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def validate_chunks_report(chunks: DataFrame, text_col: str = "text") -> DataFrame:
+def validate_chunks_report(chunks: DataFrame) -> DataFrame:
     """Per-turn quality report: short chunks (<50 chars), mid-word endings,
-    duplicate chunk texts within the turn."""
-    text = F.col(text_col)
+    duplicate chunk texts within the turn. ``chunks`` carries ``text``."""
+    text = F.col("text")
     per_turn = chunks.groupBy("conv_id", "turn_idx").agg(
         F.count("*").alias("n_chunks"),
         F.sum(F.when(F.length(text) < 50, 1).otherwise(0)).alias("short_chunks"),
@@ -100,14 +100,15 @@ def classify_error(error: F.Column) -> F.Column:
     return F.when(error.isNotNull(), expr)
 
 
-def error_taxonomy(metrics: DataFrame, error_col: str = "error") -> DataFrame:
+def error_taxonomy(metrics: DataFrame) -> DataFrame:
     """(category, n_errors) rollup over failed rows — the classified
     errors_by_type aggregate the reference builds in its volume-test
     summary (volume_testing.py:543-560). NULL errors (successful rows)
-    are excluded; one low-cardinality groupBy."""
+    are excluded; one low-cardinality groupBy. ``metrics`` carries
+    ``error``."""
     return (
-        metrics.filter(F.col(error_col).isNotNull())
-        .select(classify_error(F.col(error_col)).alias("category"))
+        metrics.filter(F.col("error").isNotNull())
+        .select(classify_error(F.col("error")).alias("category"))
         .groupBy("category")
         .agg(F.count("*").cast("bigint").alias("n_errors"))
     )

@@ -83,14 +83,13 @@ def ml_scores(text: Column) -> dict[str, Column]:
     return scores_from_weights(text, ML_WEIGHTS)
 
 
-def with_ml_strategy(df: DataFrame, text_col: str = "text",
-                     prefix: str = "ml_") -> DataFrame:
-    """Attach ``{prefix}strategy`` / ``{prefix}confidence`` (+ the integer
-    logits ``{prefix}score_<class>``). Ties break in ML_CLASSES order."""
+def with_ml_strategy(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Attach ``ml_strategy`` / ``ml_confidence`` (+ the integer logits
+    ``ml_score_<class>``). Ties break in ML_CLASSES order."""
     scores = ml_scores(F.col(text_col))
     for cls in ML_CLASSES:
-        df = df.withColumn(f"{prefix}score_{cls}", scores[cls])
-    s = {cls: F.col(f"{prefix}score_{cls}") for cls in ML_CLASSES}
+        df = df.withColumn(f"ml_score_{cls}", scores[cls])
+    s = {cls: F.col(f"ml_score_{cls}") for cls in ML_CLASSES}
     pred = (
         F.when((s["semantic"] >= s["sentence"]) & (s["semantic"] >= s["token"]),
                F.lit("semantic"))
@@ -101,8 +100,8 @@ def with_ml_strategy(df: DataFrame, text_col: str = "text",
     total = sum(list(s.values())[1:], list(s.values())[0])
     conf = F.when(total > 0, best.cast("double") / total).otherwise(F.lit(0.0))
     return (
-        df.withColumn(f"{prefix}strategy", pred)
-        .withColumn(f"{prefix}confidence", conf)
+        df.withColumn("ml_strategy", pred)
+        .withColumn("ml_confidence", conf)
     )
 
 
@@ -120,8 +119,7 @@ TYPE_ONEHOT = ("fiche_technique", "rapport", "article", "document_court")
 STRUCTURAL_DIM = 5 + 3 + len(LANG_ONEHOT) + 1 + len(TYPE_ONEHOT) + 1
 
 
-def structural_features(prefix: str = "profile_",
-                        lang_col: str | None = "language") -> Column:
+def structural_features() -> Column:
     """The reference's FULL structural vector
     (extract_structural_features, feature_engineering.py:51-109) as one
     array<float> column over with_profile's output: numeric block
@@ -132,7 +130,8 @@ def structural_features(prefix: str = "profile_",
     17 dims, float32 like the reference's np.float32 array. The 8-int
     classifier features (ml_features) are the decision-rule SUBSET; this
     is the trainer-facing vector. Missing lang → 'other' (the
-    reference's .get(..., 'unknown') path)."""
+    reference's .get(..., 'unknown') path).
+    Reads ``language`` and the ``profile_*`` columns."""
     def one_hot(value: Column, vocab: tuple[str, ...]) -> list[Column]:
         v = F.lower(F.coalesce(value, F.lit("unknown")))
         hots = [F.when(v == w, F.lit(1.0)).otherwise(F.lit(0.0))
@@ -144,18 +143,18 @@ def structural_features(prefix: str = "profile_",
         hots.append(F.when(in_vocab, F.lit(0.0)).otherwise(F.lit(1.0)))
         return hots
 
-    lang = F.col(lang_col) if lang_col else F.lit("unknown")
+    lang = F.col("language")
     cols = [
-        F.col(f"{prefix}length_tokens"),
-        F.col(f"{prefix}length_chars"),
-        F.col(f"{prefix}hierarchy_depth"),
-        F.col(f"{prefix}structure_score"),
-        F.col(f"{prefix}avg_sentence_length"),
-        F.col(f"{prefix}has_headings").cast("int"),
-        F.col(f"{prefix}has_tables").cast("int"),
-        F.col(f"{prefix}has_lists").cast("int"),
+        F.col("profile_length_tokens"),
+        F.col("profile_length_chars"),
+        F.col("profile_hierarchy_depth"),
+        F.col("profile_structure_score"),
+        F.col("profile_avg_sentence_length"),
+        F.col("profile_has_headings").cast("int"),
+        F.col("profile_has_tables").cast("int"),
+        F.col("profile_has_lists").cast("int"),
         *one_hot(lang, LANG_ONEHOT),
-        *one_hot(F.col(f"{prefix}type"), TYPE_ONEHOT),
+        *one_hot(F.col("profile_type"), TYPE_ONEHOT),
     ]
     return F.array(*[c.cast("float") for c in cols])
 

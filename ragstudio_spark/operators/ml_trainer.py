@@ -41,12 +41,12 @@ from ragstudio_spark.operators.ml_strategy import (
 )
 
 
-def with_features(df: DataFrame, text_col: str = "text",
-                  prefix: str = "f_") -> DataFrame:
+def with_features(df: DataFrame) -> DataFrame:
     """Attach the integer feature columns (feature_engineering's
-    extract_structural_features analog)."""
-    feats = ml_features(F.col(text_col))
-    return df.select("*", *[feats[n].alias(f"{prefix}{n}") for n in ML_FEATURES])
+    extract_structural_features analog).
+    Reads ``text``; the features land in ``f_<name>``."""
+    feats = ml_features(F.col("text"))
+    return df.select("*", *[feats[n].alias(f"f_{n}") for n in ML_FEATURES])
 
 
 def _argmax(s: dict[str, "F.Column"]):
@@ -74,19 +74,17 @@ def _predict_from_features(weights: dict[str, dict[str, int]],
     return _argmax(s)
 
 
-def _predict(weights: dict[str, dict[str, int]], text_col: str):
+def _predict(weights: dict[str, dict[str, int]]):
     """argmax from raw text (evaluation entry point — one pass)."""
-    return _argmax(scores_from_weights(F.col(text_col), weights))
+    return _argmax(scores_from_weights(F.col("text"), weights))
 
 
 def train_strategy_classifier(
     df: DataFrame,
-    text_col: str = "text",
-    label_col: str = "label",
     epochs: int = 20,
     init: dict[str, dict[str, int]] | None = None,
 ) -> tuple[dict[str, dict[str, int]], int]:
-    """Train integer weights from (text, label) rows; returns
+    """Train integer weights from (``text``, ``label``) rows; returns
     ``(weights, epochs_run)``. Labels must be in ML_CLASSES.
 
     Each epoch triggers one Spark job (the misclassification aggregate);
@@ -95,28 +93,28 @@ def train_strategy_classifier(
     reads the checkpointed frame for the same reason), and per-epoch
     scoring runs over the precomputed feature columns, never re-profiling
     the raw text."""
-    feats = with_features(df.select(text_col, label_col), text_col)
-    feats = feats.drop(text_col).localCheckpoint()
+    feats = with_features(df.select("text", "label"))
+    feats = feats.drop("text").localCheckpoint()
     # NULL must be rejected explicitly: ~isin(NULL) evaluates to NULL (not
     # true), so a bare negated isin would let NULL labels slip through and
     # silently shrink every epoch's update set
-    bad = feats.filter(F.col(label_col).isNull()
-                       | ~F.col(label_col).isin(*ML_CLASSES)).limit(1).collect()
+    bad = feats.filter(F.col("label").isNull()
+                       | ~F.col("label").isin(*ML_CLASSES)).limit(1).collect()
     if bad:
-        raise ValueError(f"unknown label: {bad[0][label_col]!r}")
+        raise ValueError(f"unknown label: {bad[0]['label']!r}")
     weights = {c: {n: init[c].get(n, 0) if init else 0 for n in ML_FEATURES}
                for c in ML_CLASSES}
     f_cols = [f"f_{n}" for n in ML_FEATURES]
     for epoch in range(epochs):
         pred = _predict_from_features(weights)
         mis = feats.withColumn("_pred", pred).filter(
-            F.col("_pred") != F.col(label_col))
+            F.col("_pred") != F.col("label"))
         # each misclassified row contributes (+features) to its true class
         # and (-features) to the predicted class; one explode → one groupBy
         # on ≤3 keys — the summed update is row-order independent
         signed = mis.select(
             F.explode(F.array(
-                F.struct(F.col(label_col).alias("cls"), F.lit(1).alias("sgn")),
+                F.struct(F.col("label").alias("cls"), F.lit(1).alias("sgn")),
                 F.struct(F.col("_pred").alias("cls"), F.lit(-1).alias("sgn")),
             )).alias("u"),
             *f_cols,
@@ -133,15 +131,14 @@ def train_strategy_classifier(
     return weights, epochs
 
 
-def evaluate(df: DataFrame, weights: dict[str, dict[str, int]],
-             text_col: str = "text", label_col: str = "label") -> DataFrame:
+def evaluate(df: DataFrame, weights: dict[str, dict[str, int]]) -> DataFrame:
     """Accuracy + per-class counts (the reference's classification_report
     analog, training.py:1-333 — integer counts only, oracle-friendly).
-    Returns one row per class: (label, n, correct)."""
-    pred = _predict(weights, text_col)
+    Returns one row per class: (label, n, correct).
+    ``df`` carries ``text`` and ``label``."""
+    pred = _predict(weights)
     return (
-        df.select(F.col(label_col).alias("label"),
-                  (pred == F.col(label_col)).alias("ok"))
+        df.select("label", (pred == F.col("label")).alias("ok"))
         .groupBy("label")
         .agg(F.count("*").cast("bigint").alias("n"),
              F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("bigint")

@@ -23,20 +23,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def pack_chunks(df: DataFrame, budget: int,
-                partition_col: str = "conv_id",
-                order_cols=("turn_idx", "chunk_index"),
-                token_col: str = "token_count") -> DataFrame:
+def pack_chunks(df: DataFrame, budget: int, partition_col: str = "conv_id",
+                order_cols=("turn_idx", "chunk_index")) -> DataFrame:
     """Assign each chunk a (``partition_col``, ``seq_index``) training
     sequence and its ``seq_token_offset``: cum_before = tokens preceding
     the chunk in its shard's stream; seq_index = cum_before // budget;
-    offset = cum_before - seq_index * budget."""
+    offset = cum_before - seq_index * budget.
+    ``df`` carries ``token_count``."""
     if budget <= 0:
         raise ValueError(f"budget must be positive: {budget}")
     w = (Window.partitionBy(partition_col)
          .orderBy(*[F.asc(c) for c in order_cols])
          .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum(F.col(token_col)).over(w), F.lit(0)) \
+    cum_before = F.coalesce(F.sum(F.col("token_count")).over(w), F.lit(0)) \
         .cast("bigint")
     return (df.withColumn("_cum_before", cum_before)
             # integral `div`, never floor(double-/): bigint/int in Spark is
@@ -50,11 +49,11 @@ def pack_chunks(df: DataFrame, budget: int,
             .drop("_cum_before"))
 
 
-def sequence_stats(packed: DataFrame, partition_col: str = "conv_id",
-                   token_col: str = "token_count") -> DataFrame:
+def sequence_stats(packed: DataFrame) -> DataFrame:
     """Per-sequence accounting: (shard, seq_index, n_chunks, n_tokens) —
     the shard manifest a trainer reads. One partial-aggregated groupBy on
-    the (shard, seq) key."""
-    return (packed.groupBy(F.col(partition_col), F.col("seq_index"))
+    the (shard, seq) key.
+    ``packed`` carries ``conv_id``, ``seq_index`` and ``token_count``."""
+    return (packed.groupBy(F.col("conv_id"), F.col("seq_index"))
             .agg(F.count("*").cast("bigint").alias("n_chunks"),
-                 F.sum(F.col(token_col)).cast("bigint").alias("n_tokens")))
+                 F.sum(F.col("token_count")).cast("bigint").alias("n_tokens")))

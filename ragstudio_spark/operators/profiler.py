@@ -114,27 +114,27 @@ def structure_score(
     return F.least(F.lit(1.0), F.greatest(F.lit(0.0), score))
 
 
-def with_profile(df: DataFrame, text_col: str = "extracted_text", prefix: str = "profile_") -> DataFrame:
-    """Attach all profile columns with a common prefix."""
+def with_profile(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
+    """Attach all ``profile_*`` columns."""
     text = F.col(text_col)
     tokens = F.floor(F.length(text) / 4).cast("int")
     df = (
-        df.withColumn(f"{prefix}type", doc_type(text))
-        .withColumn(f"{prefix}length_chars", F.length(text).cast("int"))
-        .withColumn(f"{prefix}length_tokens", tokens)
-        .withColumn(f"{prefix}has_headings", has_headings(text))
-        .withColumn(f"{prefix}has_tables", has_tables(text))
-        .withColumn(f"{prefix}has_lists", has_lists(text))
-        .withColumn(f"{prefix}hierarchy_depth", hierarchy_depth(text).cast("int"))
-        .withColumn(f"{prefix}avg_sentence_length", avg_sentence_length(text))
+        df.withColumn("profile_type", doc_type(text))
+        .withColumn("profile_length_chars", F.length(text).cast("int"))
+        .withColumn("profile_length_tokens", tokens)
+        .withColumn("profile_has_headings", has_headings(text))
+        .withColumn("profile_has_tables", has_tables(text))
+        .withColumn("profile_has_lists", has_lists(text))
+        .withColumn("profile_hierarchy_depth", hierarchy_depth(text).cast("int"))
+        .withColumn("profile_avg_sentence_length", avg_sentence_length(text))
     )
     return df.withColumn(
-        f"{prefix}structure_score",
+        "profile_structure_score",
         structure_score(
-            F.col(f"{prefix}hierarchy_depth"),
-            F.col(f"{prefix}has_headings"),
-            F.col(f"{prefix}has_tables"),
-            F.col(f"{prefix}has_lists"),
-            F.col(f"{prefix}length_tokens"),
+            F.col("profile_hierarchy_depth"),
+            F.col("profile_has_headings"),
+            F.col("profile_has_tables"),
+            F.col("profile_has_lists"),
+            F.col("profile_length_tokens"),
         ),
     )

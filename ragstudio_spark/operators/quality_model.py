@@ -87,38 +87,38 @@ def score_col(text: Column,
     return expr
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text",
+def with_quality_score(df: DataFrame,
                        weights: dict[str, int] | None = None) -> DataFrame:
-    """Attach ``qm_score`` (bigint) and ``qm_keep`` (score > 0)."""
-    s = score_col(F.col(text_col), weights)
+    """Attach ``qm_score`` (bigint) and ``qm_keep`` (score > 0).
+    ``df`` carries ``text``."""
+    s = score_col(F.col("text"), weights)
     return df.withColumn("qm_score", s).withColumn(
         "qm_keep", F.col("qm_score") > 0)
 
 
-def with_features(df: DataFrame, text_col: str = "text",
-                  prefix: str = "f_") -> DataFrame:
-    feats = qm_features(F.col(text_col))
+def with_features(df: DataFrame) -> DataFrame:
+    """Attach the integer quality features of ``text`` as ``f_<name>``
+    columns."""
+    feats = qm_features(F.col("text"))
     return df.select("*",
-                     *[feats[n].alias(f"{prefix}{n}") for n in QM_FEATURES])
+                     *[feats[n].alias(f"f_{n}") for n in QM_FEATURES])
 
 
 def train_quality_model(
     df: DataFrame,
-    text_col: str = "text",
-    label_col: str = "keep",
     epochs: int = 20,
     init: dict[str, int] | None = None,
 ) -> tuple[dict[str, int], int]:
-    """Binary batch perceptron from (text, keep∈boolean) rows; returns
-    ``(weights, epochs_run)``. Per epoch: score with current weights,
+    """Binary batch perceptron from (``text``, ``keep``∈boolean) rows;
+    returns ``(weights, epochs_run)``. Per epoch: score with current weights,
     one aggregate sums (±features) over the misclassified rows
     (y = +1 for keep, −1 for drop), weights update by the sums — row
     order and partitioning never matter. Input features are extracted
     once and localCheckpoint'ed (upstream lineage may hold a Python hop;
     it must not re-execute per epoch)."""
-    feats = with_features(df.select(text_col, label_col), text_col)
-    feats = feats.drop(text_col).localCheckpoint()
-    if feats.filter(F.col(label_col).isNull()).limit(1).collect():
+    feats = with_features(df.select("text", "keep"))
+    feats = feats.drop("text").localCheckpoint()
+    if feats.filter(F.col("keep").isNull()).limit(1).collect():
         raise ValueError("NULL label in training data")
     weights = {n: (init.get(n, 0) if init else 0) for n in QM_FEATURES}
     f_cols = [f"f_{n}" for n in QM_FEATURES]
@@ -128,8 +128,8 @@ def train_quality_model(
             if weights[name]:
                 expr = expr + F.lit(weights[name]) * F.col(f"f_{name}")
         pred_keep = expr > 0
-        mis = feats.filter(pred_keep != F.col(label_col))
-        y = F.when(F.col(label_col), F.lit(1)).otherwise(F.lit(-1))
+        mis = feats.filter(pred_keep != F.col("keep"))
+        y = F.when(F.col("keep"), F.lit(1)).otherwise(F.lit(-1))
         delta = mis.select(
             *[F.sum(y * F.col(c)).alias(c) for c in f_cols]).collect()[0]
         if delta[f_cols[0]] is None:        # no misclassifications
@@ -139,12 +139,12 @@ def train_quality_model(
     return weights, epochs
 
 
-def evaluate(df: DataFrame, weights: dict[str, int],
-             text_col: str = "text", label_col: str = "keep") -> DataFrame:
-    """(label, n, correct) counts — integer-only accuracy report."""
-    pred = score_col(F.col(text_col), weights) > 0
-    return (df.select(F.col(label_col).alias("label"),
-                      (pred == F.col(label_col)).alias("ok"))
+def evaluate(df: DataFrame, weights: dict[str, int]) -> DataFrame:
+    """(label, n, correct) counts — integer-only accuracy report.
+    ``df`` carries ``text`` and ``keep``."""
+    pred = score_col(F.col("text"), weights) > 0
+    return (df.select(F.col("keep").alias("label"),
+                      (pred == F.col("keep")).alias("ok"))
             .groupBy("label")
             .agg(F.count("*").cast("bigint").alias("n"),
                  F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("bigint")

@@ -134,8 +134,7 @@ C4_MIN_SENTENCES = 5
 C4_TERMINALS = (".", "!", "?", '"')
 
 
-def c4_clean(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def c4_clean(df: DataFrame) -> DataFrame:
     """C4-style cleaning — the published line/page rules as one codegen'd
     projection (no shuffle, no Python):
 
@@ -154,8 +153,9 @@ def c4_clean(df: DataFrame, text_col: str = "text",
     curation keeps the audit trail). NULL text is treated as empty —
     zero counts and c4_keep = false, mirroring repetition_signals' NULL
     zero-fill (NULL would otherwise propagate through split/filter and
-    surface as n_kept = -1 via F.size(NULL))."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    surface as n_kept = -1 via F.size(NULL)).
+    ``df`` carries ``doc_id`` and ``text``."""
+    t = F.coalesce(F.col("text"), F.lit(""))
 
     def line_ok(ln):
         trimmed = F.trim(ln)
@@ -186,5 +186,5 @@ def c4_clean(df: DataFrame, text_col: str = "text",
             & ~F.contains(t, F.lit("{"))
             & (F.col("n_sentences") >= C4_MIN_SENTENCES))
     return (df.withColumn("c4_keep", keep)
-            .select(id_col, "clean_text", "n_kept", "n_dropped",
+            .select("doc_id", "clean_text", "n_kept", "n_dropped",
                     "n_sentences", "c4_keep"))

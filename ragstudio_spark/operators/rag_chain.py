@@ -45,23 +45,22 @@ CHARS_PER_TOKEN = 4
 
 
 def assemble_context(hits: DataFrame, k: int = 4,
-                     token_budget: int = 2048,
-                     query_col: str = "query_id", rank_col: str = "rank",
-                     text_col: str = "text") -> DataFrame:
+                     token_budget: int = 2048) -> DataFrame:
     """Per query: (query_id, context, n_sources, context_tokens).
 
     ``n_sources`` counts the chunks that made it into the context;
     ``context_tokens`` is their len-div-4 total. Ranks beyond ``k`` are
     dropped before the budget applies (the retriever's k and the
     context budget are independent knobs, mirroring the reference where
-    k lives on the retriever and the window lives with the LLM)."""
+    k lives on the retriever and the window lives with the LLM).
+    ``hits`` carries ``query_id``, ``rank`` and ``text``."""
     if token_budget <= 0:
         raise ValueError(f"token_budget must be positive: {token_budget}")
-    hitlist = (hits.filter(F.col(rank_col) <= k)
-               .groupBy(query_col)
+    hitlist = (hits.filter(F.col("rank") <= k)
+               .groupBy("query_id")
                .agg(F.array_sort(F.collect_list(F.struct(
-                   F.col(rank_col).cast("bigint").alias("rank"),
-                   F.coalesce(F.col(text_col), F.lit("")).alias("text")))
+                   F.col("rank").cast("bigint").alias("rank"),
+                   F.coalesce(F.col("text"), F.lit("")).alias("text")))
                ).alias("hl")))
     # one fold, accumulate-once (CLAUDE.md: never re-reference the array
     # in ratio-style expressions): acc = (cum prefix tokens — always
@@ -92,7 +91,7 @@ def assemble_context(hits: DataFrame, k: int = 4,
     # three fields from an ALIASED struct column keeps Catalyst from
     # inlining the aggregate() three times
     return (hitlist.withColumn("_f", fold)
-            .select(query_col, F.col("_f.ctx").alias("context"),
+            .select("query_id", F.col("_f.ctx").alias("context"),
                     F.col("_f.n").alias("n_sources"),
                     F.col("_f.toks").alias("context_tokens")))
 
@@ -107,29 +106,27 @@ def rag_prompt(context: Column, question: Column,
                     F.lit(tail))
 
 
-def citations(hits: DataFrame, k: int = 4, query_col: str = "query_id",
-              rank_col: str = "rank", text_col: str = "text",
-              source_col: str = "source_name",
-              page_col: str | None = "page") -> DataFrame:
+def citations(hits: DataFrame, k: int = 4) -> DataFrame:
     """format_answer's source rows (chain.py:207-216): per hit,
     ``line`` = "[i] {filename} (page {page})" and ``preview`` = first
     200 chars with newlines flattened to spaces, suffixed "...". The
     reference prints 'Unknown' / 'N/A' for missing metadata — NULLs
-    coalesce the same way."""
-    page = (F.coalesce(F.col(page_col).cast("string"), F.lit("N/A"))
-            if page_col else F.lit("N/A"))
-    return (hits.filter(F.col(rank_col) <= k)
-            .select(query_col, F.col(rank_col).alias("rank"),
-                    F.concat(F.lit("["), F.col(rank_col).cast("string"),
+    coalesce the same way.
+    ``hits`` carries ``query_id``, ``rank``, ``text``, ``source_name`` and
+    ``page``."""
+    page = F.coalesce(F.col("page").cast("string"), F.lit("N/A"))
+    return (hits.filter(F.col("rank") <= k)
+            .select("query_id", "rank",
+                    F.concat(F.lit("["), F.col("rank").cast("string"),
                              F.lit("] "),
-                             F.coalesce(F.col(source_col),
+                             F.coalesce(F.col("source_name"),
                                         F.lit("Unknown")),
                              F.lit(" (page "), page, F.lit(")"))
                     .alias("line"),
                     F.concat(
                         F.substring(
                             F.regexp_replace(
-                                F.coalesce(F.col(text_col), F.lit("")),
+                                F.coalesce(F.col("text"), F.lit("")),
                                 "\n", " "),
                             1, 200),
                         F.lit("...")).alias("preview")))

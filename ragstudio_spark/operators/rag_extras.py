@@ -151,9 +151,7 @@ def _query_terms(query: str) -> list[str]:
 
 def expansion_search(docs: DataFrame, query: str,
                      expander: QueryExpander | None = None,
-                     k_per_query: int = 4, final_k: int = 10,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+                     k_per_query: int = 4, final_k: int = 10) -> DataFrame:
     """QueryExpansionRetriever.retrieve over BM25: search per expanded
     query, merge in expansion order, dedup (first expansion that surfaced
     a doc wins), cap at final_k. Returns (doc_id, expansion_idx, rank).
@@ -163,21 +161,21 @@ def expansion_search(docs: DataFrame, query: str,
     VERDICT task 3: the per-leg scans re-read the corpus per expansion);
     each leg is then a stats broadcast + distributed top-k
     (TakeOrderedAndProject) over the materialized table, and the merge
-    unions k_per_query rows per expansion — trivially small."""
+    unions k_per_query rows per expansion — trivially small.
+    ``docs`` carries ``doc_id`` and ``text``."""
     expander = expander or QueryExpander()
     merged = None
-    for i, scores in _shared_bm25_legs(docs, query, expander,
-                                       text_col, id_col):
+    for i, scores in _shared_bm25_legs(docs, query, expander):
         topk = (
-            scores.orderBy(F.desc("bm25_score"), F.asc(id_col)).limit(k_per_query)
-            .select(F.col(id_col), F.lit(i).alias("expansion_idx"))
+            scores.orderBy(F.desc("bm25_score"), F.asc("doc_id")).limit(k_per_query)
+            .select(F.col("doc_id"), F.lit(i).alias("expansion_idx"))
         )
         merged = topk if merged is None else merged.unionByName(topk)
     if merged is None:
         raise ValueError("no expandable terms in query")
-    dedup = top_k(merged, 1, ["expansion_idx"], by=[id_col])
-    return top_k(dedup, final_k, ["expansion_idx", F.asc(id_col)],
-                 rank="rank").select(id_col, "expansion_idx", "rank")
+    dedup = top_k(merged, 1, ["expansion_idx"], by=["doc_id"])
+    return top_k(dedup, final_k, ["expansion_idx", F.asc("doc_id")],
+                 rank="rank").select("doc_id", "expansion_idx", "rank")
 
 
 #: integer-quantized reciprocal-rank unit: 1e12 div (k + rank). Exact in
@@ -187,8 +185,7 @@ def expansion_search(docs: DataFrame, query: str,
 RRF_SCALE = 1_000_000_000_000
 
 
-def _shared_bm25_legs(docs: DataFrame, query: str, expander: QueryExpander,
-                      text_col: str, id_col: str):
+def _shared_bm25_legs(docs: DataFrame, query: str, expander: QueryExpander):
     """Yield (expansion_idx, bm25-scores frame) per expansion, all legs
     scoring from ONE materialized corpus scan: the tf/df term table is
     built once for the UNION of the expansions' terms (first-appearance
@@ -215,18 +212,17 @@ def _shared_bm25_legs(docs: DataFrame, query: str, expander: QueryExpander,
         expansions.append((i, idx))
     if not expansions:
         return
-    per_doc, stats = retrieval.bm25_term_table(docs, shared, text_col, id_col)
+    per_doc, stats = retrieval.bm25_term_table(docs, shared)
     per_doc = per_doc.localCheckpoint()
     stats = stats.localCheckpoint()
     for i, idx in expansions:
-        yield i, retrieval.bm25_scores_from(per_doc, stats, idx, id_col)
+        yield i, retrieval.bm25_scores_from(per_doc, stats, idx)
 
 
 def multi_query_search(docs: DataFrame, query: str,
                        expander: QueryExpander | None = None,
                        k_per_query: int = 4, final_k: int = 10,
-                       rrf_k: int = 60, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+                       rrf_k: int = 60) -> DataFrame:
     """MultiQueryRetriever semantics (reference retrievers.py:79-104),
     rank-fused: expand the query, BM25 top-k per expansion, then fuse
     the lists by reciprocal rank (the EnsembleRetriever treatment the
@@ -239,23 +235,23 @@ def multi_query_search(docs: DataFrame, query: str,
     expansion (``_shared_bm25_legs`` — r6 VERDICT task 3); each expansion
     then contributes one distributed top-k (TakeOrderedAndProject) of ≤ k
     rows over it; the union, fusion groupBy and final rank all run over
-    ≤ num_queries·k rows — corpus size enters exactly once."""
+    ≤ num_queries·k rows — corpus size enters exactly once.
+    ``docs`` carries ``doc_id`` and ``text``."""
     expander = expander or QueryExpander()
     merged = None
-    for i, scores in _shared_bm25_legs(docs, query, expander,
-                                       text_col, id_col):
+    for i, scores in _shared_bm25_legs(docs, query, expander):
         ranked = top_k(scores, k_per_query,
-                       [F.desc("bm25_score"), F.asc(id_col)],
-                       rank="_r").select(id_col, "_r")  # ≤ k rows: tiny window
+                       [F.desc("bm25_score"), F.asc("doc_id")],
+                       rank="_r").select("doc_id", "_r")  # ≤ k rows: tiny window
         merged = ranked if merged is None else merged.unionByName(ranked)
     if merged is None:
         raise ValueError("no expandable terms in query")
     fused = (merged
-             .groupBy(id_col)
+             .groupBy("doc_id")
              .agg(F.count("*").cast("int").alias("n_lists"),
                   F.sum(F.expr(f"{RRF_SCALE} div ({int(rrf_k)} + _r)"))
                   .cast("bigint").alias("fused_score")))
-    return (top_k(fused, final_k, [F.desc("fused_score"), F.asc(id_col)],
+    return (top_k(fused, final_k, [F.desc("fused_score"), F.asc("doc_id")],
                   rank="rank")
             .withColumn("rank", F.col("rank").cast("bigint")))
 
@@ -266,45 +262,37 @@ _HIT_STRUCT = ("struct<rank:bigint, doc_id:bigint, emb:array<double>, "
                "nrm:double, qsim:double>")
 
 
-def _ranked_hitlist(candidates: DataFrame, query_col: str, rank_col: str,
-                    id_col: str, vec_col: str,
-                    query_vec_col: str) -> DataFrame:
+def _ranked_hitlist(candidates: DataFrame) -> DataFrame:
     """(query_id, hl) where hl is the rank-sorted array of candidate
     structs (rank, doc_id, emb, nrm=|emb|, qsim=cos(query, emb)) — the
     shared front half of the greedy retrieval folds. Dots are pinned
     left-to-right folds so both engines produce bit-identical doubles."""
     qsim = F.expr(
-        f"aggregate(zip_with(CAST({vec_col} AS array<double>), "
-        f"CAST({query_vec_col} AS array<double>), (x, y) -> x * y), "
-        f"cast(0.0 as double), (acc, v) -> acc + v)")
+        "aggregate(zip_with(CAST(embedding AS array<double>), "
+        "CAST(query_embedding AS array<double>), (x, y) -> x * y), "
+        "cast(0.0 as double), (acc, v) -> acc + v)")
     nrm = F.expr(
-        f"sqrt(aggregate(zip_with(CAST({vec_col} AS array<double>), "
-        f"CAST({vec_col} AS array<double>), (x, y) -> x * y), "
-        f"cast(0.0 as double), (acc, v) -> acc + v))")
+        "sqrt(aggregate(zip_with(CAST(embedding AS array<double>), "
+        "CAST(embedding AS array<double>), (x, y) -> x * y), "
+        "cast(0.0 as double), (acc, v) -> acc + v))")
     qnrm = F.expr(
-        f"sqrt(aggregate(zip_with(CAST({query_vec_col} AS array<double>), "
-        f"CAST({query_vec_col} AS array<double>), (x, y) -> x * y), "
-        f"cast(0.0 as double), (acc, v) -> acc + v))")
+        "sqrt(aggregate(zip_with(CAST(query_embedding AS array<double>), "
+        "CAST(query_embedding AS array<double>), (x, y) -> x * y), "
+        "cast(0.0 as double), (acc, v) -> acc + v))")
     return (candidates
-            .select(query_col,
+            .select("query_id",
                     F.struct(
-                        F.col(rank_col).cast("bigint").alias("rank"),
-                        F.col(id_col).cast("bigint").alias("doc_id"),
-                        F.col(vec_col).cast("array<double>").alias("emb"),
+                        F.col("rank").cast("bigint").alias("rank"),
+                        F.col("doc_id").cast("bigint").alias("doc_id"),
+                        F.col("embedding").cast("array<double>").alias("emb"),
                         nrm.alias("nrm"),
                         (qsim / (nrm * qnrm)).alias("qsim")).alias("c"))
-            .groupBy(query_col)
+            .groupBy("query_id")
             .agg(F.array_sort(F.collect_list("c")).alias("hl")))
 
 
-def compression_retrieve(candidates: DataFrame,
-                         sim_threshold: float = 0.5,
-                         redundancy_threshold: float = 0.95,
-                         query_col: str = "query_id",
-                         rank_col: str = "rank", id_col: str = "doc_id",
-                         vec_col: str = "embedding",
-                         query_vec_col: str = "query_embedding"
-                         ) -> DataFrame:
+def compression_retrieve(candidates: DataFrame, sim_threshold: float = 0.5,
+                         redundancy_threshold: float = 0.95) -> DataFrame:
     """The reference's 'compression' retrieval strategy
     (get_contextual_compression_retriever, retrievers.py:105-143):
     a DocumentCompressorPipeline of EmbeddingsRedundantFilter (greedy —
@@ -321,8 +309,7 @@ def compression_retrieve(candidates: DataFrame,
     groupBy is a per-query fold over a k-bounded hit list — the greedy
     chain is sequential by nature, but k is the retriever's top-k, so
     the aggregate state is O(k·dim), never corpus-sized."""
-    hl = _ranked_hitlist(candidates, query_col, rank_col, id_col,
-                         vec_col, query_vec_col)
+    hl = _ranked_hitlist(candidates)
     # greedy leader walk: one fold whose accumulator is the kept list
     kept = F.expr(f"""
         aggregate(
@@ -337,10 +324,10 @@ def compression_retrieve(candidates: DataFrame,
             acc, array_append(acc, c)),
           acc -> acc)
     """)
-    w = Window.partitionBy(query_col).orderBy("orig_rank")
+    w = Window.partitionBy("query_id").orderBy("orig_rank")
     return (hl.withColumn("_k", kept)
-            .select(query_col, F.explode("_k").alias("c"))
-            .select(query_col, F.col("c.doc_id").alias("doc_id"),
+            .select("query_id", F.explode("_k").alias("c"))
+            .select("query_id", F.col("c.doc_id").alias("doc_id"),
                     F.col("c.rank").alias("orig_rank"),
                     F.col("c.qsim").alias("qsim"))
             .filter(F.col("qsim") >= float(sim_threshold))
@@ -349,11 +336,7 @@ def compression_retrieve(candidates: DataFrame,
 
 
 def mmr_rerank(candidates: DataFrame, lambda_mult: float = 0.5,
-               k: int = 4,
-               query_col: str = "query_id",
-               rank_col: str = "rank", id_col: str = "doc_id",
-               vec_col: str = "embedding",
-               query_vec_col: str = "query_embedding") -> DataFrame:
+               k: int = 4) -> DataFrame:
     """Maximal-marginal-relevance diversified reranking (the langchain
     ``search_type="mmr"`` the reference's retriever ecosystem exposes;
     semantics of langchain's maximal_marginal_relevance): greedily pick
@@ -373,8 +356,7 @@ def mmr_rerank(candidates: DataFrame, lambda_mult: float = 0.5,
     lam = float(lambda_mult)
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lambda_mult must be in [0, 1]")
-    hl = _ranked_hitlist(candidates, query_col, rank_col, id_col,
-                         vec_col, query_vec_col)
+    hl = _ranked_hitlist(candidates)
     # One fold per query: step ``k`` times; each step scores the not-yet-
     # selected candidates (penalty fold starts at -2.0, strictly below
     # any cosine, so the max over a NONEMPTY selection is the true max —
@@ -412,8 +394,8 @@ def mmr_rerank(candidates: DataFrame, lambda_mult: float = 0.5,
           sel -> sel)
     """)
     return (hl.withColumn("_k", kept)
-            .select(query_col, F.posexplode("_k").alias("_p", "c"))
-            .select(query_col, F.col("c.doc_id").alias("doc_id"),
+            .select("query_id", F.posexplode("_k").alias("_p", "c"))
+            .select("query_id", F.col("c.doc_id").alias("doc_id"),
                     (F.col("_p") + 1).cast("bigint").alias("rank")))
 
 
@@ -443,28 +425,29 @@ def load_cross_encoder(model_name: str = "cross-encoder/ms-marco-MiniLM-L-6-v2")
 
 
 def rerank(candidates: DataFrame, score: Column,
-           config: RerankerConfig | None = None,
-           id_col: str = "doc_id") -> DataFrame:
+           config: RerankerConfig | None = None) -> DataFrame:
     """Rerank semantics (reranker.py:163-227) over a candidates DataFrame:
     attach ``rerank_score`` from ``score`` (any Column — a JVM relevance
     expression or a pandas-UDF cross-encoder), sort desc (ties on id asc),
-    drop below min_score, keep top_k, assign final ranks."""
+    drop below min_score, keep top_k, assign final ranks.
+    ``candidates`` carries ``doc_id``."""
     cfg = config or RerankerConfig()
     scored = candidates.withColumn("rerank_score", score)
     if cfg.min_score is not None:
         scored = scored.filter(F.col("rerank_score") >= cfg.min_score)
-    return top_k(scored, cfg.top_k, [F.desc("rerank_score"), F.asc(id_col)],
+    return top_k(scored, cfg.top_k, [F.desc("rerank_score"), F.asc("doc_id")],
                  rank="rank")
 
 
-def lexical_overlap_score(query: str, text_col: str = "text") -> Column:
+def lexical_overlap_score(query: str) -> Column:
     """Deterministic stand-in scorer (and a useful cheap reranker on its
-    own): |query ∩ doc| / |query| over word sets — JVM-side, codegen'd."""
+    own): |query ∩ doc| / |query| over word sets — JVM-side, codegen'd.
+    Scores the ``text`` column."""
     terms = list(dict.fromkeys(_query_terms(query)))
     if not terms:
         return F.lit(0.0)
     hits = None
     for t in terms:
-        h = F.when(F.lower(F.col(text_col)).rlike(rf"\b{t}\b"), 1).otherwise(0)
+        h = F.when(F.lower(F.col("text")).rlike(rf"\b{t}\b"), 1).otherwise(0)
         hits = h if hits is None else hits + h
     return hits.cast("double") / F.lit(float(len(terms)))

@@ -42,30 +42,30 @@ REDACTIONS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def with_redaction(df: DataFrame, text_col: str = "text",
-                   out_col: str = "redacted_text") -> DataFrame:
-    """Adds ``out_col`` plus integer ``n_<category>`` audit counts.
+def with_redaction(df: DataFrame) -> DataFrame:
+    """Adds ``redacted_text`` (from ``text``) plus integer
+    ``n_<category>`` audit counts.
 
     Counts are measured on the text state each rule actually sees (after
     the earlier rules ran), matching what got replaced — not on the raw
     input, where an email's digits would double-count as a phone."""
-    staged = F.col(text_col)
+    staged = F.col("text")
     cols = []
     for cat, pattern, repl in REDACTIONS:
         cols.append(F.size(F.regexp_extract_all(staged, F.lit(pattern),
                                                 F.lit(0)))
                     .alias(f"n_{cat}"))
         staged = F.regexp_replace(staged, pattern, repl)
-    return df.select("*", *cols, staged.alias(out_col))
+    return df.select("*", *cols, staged.alias("redacted_text"))
 
 
-def redaction_report(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redaction_report(df: DataFrame) -> DataFrame:
     """Corpus rollup: one row per category with total matches and the
     count of affected documents — the audit table a curation run keeps.
     ONE aggregation pass (all categories as columns of a single agg, then
     an explode to rows) — a per-category agg would rescan the corpus and
-    re-run the whole regex chain once per category."""
-    redacted = with_redaction(df, text_col)
+    re-run the whole regex chain once per category. ``df`` carries ``text``."""
+    redacted = with_redaction(df)
     aggs = []
     for cat, _p, _r in REDACTIONS:
         aggs.append(F.sum(f"n_{cat}").cast("bigint").alias(f"m_{cat}"))

@@ -275,9 +275,7 @@ def ranked_eval(results: DataFrame, qrels: DataFrame, k: int = 10,
         .alias("recall_ppm"))
 
 
-def ndcg_eval(results: DataFrame, qrels: DataFrame, k: int = 10,
-              query_col: str = "query_id", doc_col: str = "doc_id",
-              rank_col: str = "rank") -> DataFrame:
+def ndcg_eval(results: DataFrame, qrels: DataFrame, k: int = 10) -> DataFrame:
     """nDCG@k with binary relevance — the graded rank-aware metric
     ranked_eval's integer family cannot express.
 
@@ -300,7 +298,9 @@ def ndcg_eval(results: DataFrame, qrels: DataFrame, k: int = 10,
 
     Per query: n_rel, n_rel_ret, ndcg_ppm (NULL when the query has no
     judgments). Scale shape is ranked_eval's: top-k filter, one join,
-    one grouped fold — no window over the corpus.
+    one grouped fold — no window over the corpus. ``results`` carries
+    ``query_id``, ``doc_id`` and ``rank``; ``qrels`` carries ``query_id``
+    and ``doc_id``.
     """
     import math
 
@@ -315,30 +315,30 @@ def ndcg_eval(results: DataFrame, qrels: DataFrame, k: int = 10,
     disc_arr = F.array(*[F.lit(d) for d in discounts])
     ideal_arr = F.array(*[F.lit(p) for p in prefix])
     hits = (results
-            .filter(F.col(rank_col) <= k)
-            .select(query_col, doc_col,
-                    F.col(rank_col).cast("int").alias("_r"))
-            .join(qrels.select(query_col, doc_col).distinct(),
-                  on=[query_col, doc_col], how="inner"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "doc_id",
+                    F.col("rank").cast("int").alias("_r"))
+            .join(qrels.select("query_id", "doc_id").distinct(),
+                  on=["query_id", "doc_id"], how="inner"))
     per_q = (hits
-             .groupBy(query_col)
+             .groupBy("query_id")
              .agg(F.count("*").cast("bigint").alias("n_rel_ret"),
                   F.sort_array(F.collect_list("_r")).alias("_ranks")))
     dcg = F.aggregate(
         F.transform(F.col("_ranks"),
                     lambda r: F.element_at(disc_arr, r)),
         F.lit(0.0), lambda a, v: a + v)
-    judged = (qrels.select(query_col, doc_col).distinct()
-              .groupBy(query_col)
+    judged = (qrels.select("query_id", "doc_id").distinct()
+              .groupBy("query_id")
               .agg(F.count("*").cast("bigint").alias("n_rel")))
     # the universe is BOTH sides, the ranked_eval full-outer contract:
     # a results-only query must surface with n_rel = 0 and NULL ndcg
     # (review-found — a qrels-only universe silently dropped it)
-    universe = (results.select(query_col).distinct()
-                .join(judged, query_col, "full_outer")
+    universe = (results.select("query_id").distinct()
+                .join(judged, "query_id", "full_outer")
                 .withColumn("n_rel", F.coalesce("n_rel", F.lit(0))
                             .cast("bigint")))
-    joined = (universe.join(per_q, query_col, "left")
+    joined = (universe.join(per_q, "query_id", "left")
               .withColumn("_dcg", F.coalesce(dcg, F.lit(0.0)))
               .withColumn("_m", F.least(F.col("n_rel"), F.lit(k))
                           .cast("int"))
@@ -346,8 +346,8 @@ def ndcg_eval(results: DataFrame, qrels: DataFrame, k: int = 10,
                   F.col("n_rel") > 0,
                   F.element_at(ideal_arr, F.col("_m")))))
     return (joined.select(
-        query_col, "n_rel",
+        "query_id", "n_rel",
         F.coalesce("n_rel_ret", F.lit(0)).cast("bigint").alias("n_rel_ret"),
         F.floor(F.lit(1_000_000) * F.col("_dcg") / F.col("_idcg"))
         .cast("bigint").alias("ndcg_ppm"))
-        .orderBy(query_col))
+        .orderBy("query_id"))

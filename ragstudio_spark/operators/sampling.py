@@ -45,13 +45,13 @@ def hash_fraction(key_cols, salt: str = "") -> Column:
         .cast("double") / F.lit(_DENOM)
 
 
-def hash_sample(df: DataFrame, rate: float, key_cols=("doc_id",),
-                salt: str = "") -> DataFrame:
+def hash_sample(df: DataFrame, rate: float, salt: str = "") -> DataFrame:
     """Deterministic Bernoulli-style sample: row kept iff
-    hash_fraction < rate. Change ``salt`` for an independent re-draw."""
+    hash_fraction < rate. Change ``salt`` for an independent re-draw.
+    Rows are keyed by ``doc_id``."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0,1]: {rate}")
-    return df.filter(hash_fraction(list(key_cols), salt) < rate)
+    return df.filter(hash_fraction(["doc_id"], salt) < rate)
 
 
 def stratified_sample(df: DataFrame, strata_col: str, rates: dict[str, float],
@@ -69,25 +69,25 @@ def stratified_sample(df: DataFrame, strata_col: str, rates: dict[str, float],
     return df.filter(hash_fraction(list(key_cols), salt) < rate)
 
 
-def split(df: DataFrame, heldout_rate: float = 0.01, key_cols=("doc_id",),
+def split(df: DataFrame, heldout_rate: float = 0.01,
           salt: str = "split") -> DataFrame:
     """Stable train/heldout assignment: adds ``split`` ∈ {train, heldout}.
     Disjoint and exhaustive by construction; a row's split never changes
-    as the corpus grows (contamination-safe heldout)."""
-    frac = hash_fraction(list(key_cols), salt)
+    as the corpus grows (contamination-safe heldout).
+    Rows are keyed by ``doc_id``."""
+    frac = hash_fraction(["doc_id"], salt)
     return df.withColumn(
         "split",
         F.when(frac < heldout_rate, F.lit("heldout")).otherwise(F.lit("train")))
 
 
-def hash_top_n(df: DataFrame, n: int, key_cols=("doc_id",),
-               salt: str = "") -> DataFrame:
+def hash_top_n(df: DataFrame, n: int, salt: str = "") -> DataFrame:
     """Exactly-n deterministic uniform subset: the n smallest key hashes.
     Compiles to a distributed partial top-n (TakeOrderedAndProject), so no
-    full sort shuffle at corpus scale."""
-    h = F.md5(_key_col(list(key_cols), salt))
+    full sort shuffle at corpus scale. Rows are keyed by ``doc_id``."""
+    h = F.md5(_key_col(["doc_id"], salt))
     return (df.withColumn("_h", h)
-            .orderBy(F.asc("_h"), *[F.asc(c) for c in key_cols])
+            .orderBy(F.asc("_h"), F.asc("doc_id"))
             .limit(n).drop("_h"))
 
 
@@ -110,8 +110,7 @@ def cap_per_key(df: DataFrame, key_col: str, n: int,
 
 
 def mixture_plan(df: DataFrame, key_col: str, weights_ppm: dict[str, int],
-                 token_budget: int,
-                 token_col: str = "token_count") -> DataFrame:
+                 token_budget: int) -> DataFrame:
     """Epoch-accounting for a weighted training mixture (the planning
     step BEFORE mixture_sample executes it — how many passes over each
     domain a token budget buys): per domain,
@@ -130,7 +129,7 @@ def mixture_plan(df: DataFrame, key_col: str, weights_ppm: dict[str, int],
     visible zero-supply row, never as budget silently vanishing from
     the plan (review-found). Weights summing past 1,000,000 ppm are a
     caller error and raise. One per-domain aggregate outer-joined with
-    the (tiny, literal) weight table."""
+    the (tiny, literal) weight table. ``df`` carries ``token_count``."""
     if token_budget <= 0:
         raise ValueError(f"token_budget must be positive: {token_budget}")
     if token_budget > 2**63 // 1_000_000:
@@ -150,7 +149,7 @@ def mixture_plan(df: DataFrame, key_col: str, weights_ppm: dict[str, int],
             "over-allocated plan")
     totals = df.groupBy(key_col).agg(
         F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(F.coalesce(F.col(token_col), F.lit(0))).cast("bigint")
+        F.sum(F.coalesce(F.col("token_count"), F.lit(0))).cast("bigint")
         .alias("n_tokens"))
     if weights_ppm:
         wtable = literal_table(
@@ -219,13 +218,11 @@ def mixture_sample(df: DataFrame, key_col: str, shares: dict[str, float],
             .drop("_n"))
 
 
-def select_to_budget(df: DataFrame, token_budget: int,
-                     order_col: str, token_col: str,
-                     group_cols=("source",),
-                     tie_col: str = "doc_id") -> DataFrame:
-    """Budgeted greedy curation: walk each group's rows in ``order_col``
-    DESC (quality first; ties on ``tie_col`` asc), keeping rows while
-    the RUNNING token total stays within ``token_budget`` — the
+def select_to_budget(df: DataFrame, token_budget: int, order_col: str,
+                     token_col: str) -> DataFrame:
+    """Budgeted greedy curation: walk each ``source`` group's rows in
+    ``order_col`` DESC (quality first; ties on ``doc_id`` asc), keeping
+    rows while the RUNNING token total stays within ``token_budget`` — the
     "take best until the budget is spent" selection every
     mixture-targeted training run performs after scoring.
 
@@ -236,16 +233,13 @@ def select_to_budget(df: DataFrame, token_budget: int,
     a sequential per-group fold over the whole group (not scale-safe on
     corpus-sized groups) for a marginal utilization gain.
 
-    Output: group cols + (doc_id…, tokens, cum_tokens) for kept rows.
-    Scale shape: ONE window cumsum per group — groups (sources,
-    languages) must be bounded-cardinality keys, NOT a single global
-    group (an ungrouped call funnels the corpus through one partition;
-    pass group_cols=() only on small inputs)."""
+    Output: the kept rows plus ``cum_tokens``. Scale shape: ONE window
+    cumsum per ``source`` — a bounded-cardinality key, NOT a single
+    global group (which would funnel the corpus through one partition)."""
     if token_budget <= 0:
         raise ValueError("token_budget must be positive")
-    gb = list(group_cols)
-    w = (Window.partitionBy(*[F.col(c) for c in gb])
-         .orderBy(F.desc(order_col), F.asc(tie_col))
+    w = (Window.partitionBy("source")
+         .orderBy(F.desc(order_col), F.asc("doc_id"))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (df
             .withColumn("cum_tokens",
@@ -293,7 +287,6 @@ def curriculum_order(df: DataFrame, difficulty_col: str,
 
 
 def systematic_weighted_sample(df: DataFrame, n: int, weight_col: str,
-                               key_cols=("doc_id",),
                                salt: str = "sws") -> DataFrame:
     """Exact-integer systematic (SUS) weighted sampling without replacement.
 
@@ -329,14 +322,14 @@ def systematic_weighted_sample(df: DataFrame, n: int, weight_col: str,
     intermediate, not just n·Σw: the ceil-division numerator
     cum·n + total − 1 reaches total·(n+1) − 1 on the last row
     (review-found — a total at exactly 2^63/n would pass an n·Σw
-    guard and still wrap the numerator).
+    guard and still wrap the numerator). Rows are keyed by ``doc_id``.
     """
     if n <= 0:
         raise ValueError("n must be positive")
-    frac = hash_fraction(list(key_cols), salt)
+    frac = hash_fraction(["doc_id"], salt)
     base = (df.withColumn("_tie", frac)
             .withColumn("_w", F.col(weight_col).cast("bigint")))
-    order = Window.orderBy(F.asc("_tie"), *[F.asc(c) for c in key_cols])
+    order = Window.orderBy(F.asc("_tie"), F.asc("doc_id"))
     cum = F.sum("_w").over(order.rowsBetween(Window.unboundedPreceding, 0))
     total = F.sum("_w").over(
         Window.partitionBy().rowsBetween(Window.unboundedPreceding,

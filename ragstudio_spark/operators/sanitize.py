@@ -28,6 +28,7 @@ def sanitize_map(col: Column) -> Column:
     )
 
 
-def with_sanitized_metadata(df: DataFrame, map_col: str = "metadata",
-                            out_col: str | None = None) -> DataFrame:
-    return df.withColumn(out_col or map_col, sanitize_map(F.col(map_col)))
+def with_sanitized_metadata(df: DataFrame) -> DataFrame:
+    """Replace the ``metadata`` map column with its sanitized copy
+    (:func:`sanitize_map`)."""
+    return df.withColumn("metadata", sanitize_map(F.col("metadata")))

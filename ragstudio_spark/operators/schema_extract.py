@@ -67,8 +67,7 @@ def _per_match(text: Column, pattern: str, build) -> Column:
         lambda m: build(m))
 
 
-def extract_math_schemas(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def extract_math_schemas(df: DataFrame) -> DataFrame:
     """(id, schema_id, schema_type, description, confidence,
     n_references) — one row per schema occurrence, reference order within
     each family preserved by the match order of regexp_extract_all.
@@ -78,10 +77,11 @@ def extract_math_schemas(df: DataFrame, text_col: str = "text",
     filters that array, and Catalyst's CollapseProject keeps a
     multiply-referenced non-cheap projection un-inlined — so the document
     is split+lowered exactly once per row instead of once per schema
-    occurrence (S full-text walks per doc otherwise)."""
+    occurrence (S full-text walks per doc otherwise).
+    ``df`` carries ``doc_id`` and ``text``."""
     df = df.withColumn("_lines_lower",
-                       F.split(F.lower(F.col(text_col)), "\n"))
-    t = F.col(text_col)
+                       F.split(F.lower(F.col("text")), "\n"))
+    t = F.col("text")
     L = F.col("_lines_lower")
 
     def g(m: Column, pat: str, idx: int) -> Column:
@@ -144,18 +144,17 @@ def extract_math_schemas(df: DataFrame, text_col: str = "text",
         circles, triangles, lines, segments, latex, curves,
         asymptote, tableau, figures)
     return (
-        df.select(F.col(id_col), F.explode(all_schemas).alias("s"))
-        .select(id_col, "s.schema_id", "s.schema_type", "s.description",
+        df.select(F.col("doc_id"), F.explode(all_schemas).alias("s"))
+        .select("doc_id", "s.schema_id", "s.schema_type", "s.description",
                 "s.confidence", "s.n_references")
     )
 
 
-def schema_type_counts(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def schema_type_counts(df: DataFrame) -> DataFrame:
     """Corpus rollup: (schema_type, n_schemas, n_docs) — the aggregation
     the reference leaves to its JSON summary (save_schemas,
-    schema_extractor.py:294-364)."""
-    schemas = extract_math_schemas(df, text_col, id_col)
+    schema_extractor.py:294-364). ``df`` carries ``doc_id`` and ``text``."""
+    schemas = extract_math_schemas(df)
     return schemas.groupBy("schema_type").agg(
         F.count("*").cast("bigint").alias("n_schemas"),
-        F.countDistinct(id_col).cast("bigint").alias("n_docs"))
+        F.countDistinct("doc_id").cast("bigint").alias("n_docs"))

@@ -20,45 +20,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def sessionize(df: DataFrame, gap_minutes: int = 30,
-               user_col: str = "user_id", ts_col: str = "ts",
-               order_tiebreak: str = "event_id") -> DataFrame:
+def sessionize(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Attach ``session_seq`` (1-based per user) and ``session_id``
-    (user#seq) to every event row."""
-    order = [F.col(ts_col).asc(), F.col(order_tiebreak).asc()]
-    w = Window.partitionBy(user_col).orderBy(*order)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    (user#seq) to every event row.
+    ``df`` carries ``user_id``, ``ts`` and ``event_id``."""
+    order = [F.col("ts").asc(), F.col("event_id").asc()]
+    w = Window.partitionBy("user_id").orderBy(*order)
+    prev_ts = F.lag(F.col("ts")).over(w)
     new_session = F.when(
         prev_ts.isNotNull()
-        & (F.col(ts_col).cast("timestamp")
+        & (F.col("ts").cast("timestamp")
            > prev_ts.cast("timestamp") + F.expr(f"INTERVAL {gap_minutes} MINUTE")),
         1,
     ).otherwise(0)
-    cum = Window.partitionBy(user_col).orderBy(*order).rowsBetween(
+    cum = Window.partitionBy("user_id").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     out = df.withColumn("_new", new_session).withColumn(
         "session_seq", (F.sum("_new").over(cum) + 1).cast("bigint")).drop("_new")
     return out.withColumn(
         "session_id",
-        F.concat_ws("#", F.col(user_col), F.col("session_seq").cast("string")))
+        F.concat_ws("#", F.col("user_id"), F.col("session_seq").cast("string")))
 
 
-def session_stats(df: DataFrame, gap_minutes: int = 30,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  order_tiebreak: str = "event_id") -> DataFrame:
-    """Per-session rollup: event count + span (first/last event time)."""
-    s = sessionize(df, gap_minutes, user_col, ts_col, order_tiebreak)
+def session_stats(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Per-session rollup: event count + span (first/last event time).
+    ``df`` carries ``user_id``, ``ts`` and ``event_id``."""
+    s = sessionize(df, gap_minutes)
     return (
-        s.groupBy(user_col, "session_seq", "session_id")
+        s.groupBy("user_id", "session_seq", "session_id")
         .agg(F.count("*").alias("n_events"),
-             F.min(ts_col).alias("session_start"),
-             F.max(ts_col).alias("session_end"))
+             F.min("ts").alias("session_start"),
+             F.max("ts").alias("session_end"))
     )
 
 
-def funnel(df: DataFrame, steps: list[str],
-           user_col: str = "user_id", ts_col: str = "ts",
-           type_col: str = "event_type") -> DataFrame:
+def funnel(df: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered-funnel analysis: per user, the EARLIEST strictly-increasing
     completion of the step sequence (view → click → purchase …).
 
@@ -73,29 +69,29 @@ def funnel(df: DataFrame, steps: list[str],
     on the user key — k co-partitioned shuffles for a k-step funnel,
     never a per-user window over raw events and no cross join; the
     aggregates collapse map-side so the shuffled volume is one row per
-    user per step.
+    user per step. ``df`` carries ``user_id``, ``ts`` and ``event_type``.
     """
     if not steps:
         raise ValueError("steps must be non-empty")
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    base = df.select(user_col, F.col(type_col).alias("_t"),
-                     us(ts_col).alias("_us"))
-    out = base.select(user_col).distinct()
+    base = df.select("user_id", F.col("event_type").alias("_t"),
+                     us("ts").alias("_us"))
+    out = base.select("user_id").distinct()
     prev = None
     for i, step in enumerate(steps):
         ev = base.filter(F.col("_t") == step)
         if prev is not None:
-            ev = (ev.join(out.select(user_col, F.col(prev).alias("_p")),
-                          user_col)
+            ev = (ev.join(out.select("user_id", F.col(prev).alias("_p")),
+                          "user_id")
                   .filter(F.col("_us") > F.col("_p")))
         col = f"step{i + 1}_us"
-        mins = ev.groupBy(user_col).agg(F.min("_us").alias(col))
+        mins = ev.groupBy("user_id").agg(F.min("_us").alias(col))
         # each out feeds TWO consumers (the next step's ev join and the
         # next out) — without a checkpoint the plan subtree doubles per
         # step (~2^k growth) and a replan rescans raw events per branch
         # (the CLAUDE.md multi-consumer rule; review-found). The
         # checkpointed frame is one row per user.
-        out = out.join(mins, user_col, "left").localCheckpoint()
+        out = out.join(mins, "user_id", "left").localCheckpoint()
         prev = col
     reached = sum(
         F.when(F.col(f"step{i + 1}_us").isNotNull(), 1).otherwise(0)
@@ -103,12 +99,10 @@ def funnel(df: DataFrame, steps: list[str],
     return (out.withColumn("n_steps", reached.cast("int"))
             .withColumn("converted",
                         F.col(f"step{len(steps)}_us").isNotNull())
-            .orderBy(user_col))
+            .orderBy("user_id"))
 
 
-def cohort_retention(df: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts",
-                     period_days: int = 7) -> DataFrame:
+def cohort_retention(df: DataFrame, period_days: int = 7) -> DataFrame:
     """Cohort retention table: of the users first seen in period P, how
     many were active again in P+k.
 
@@ -122,11 +116,12 @@ def cohort_retention(df: DataFrame, user_col: str = "user_id",
     Scale: distinct (user, period) activity + a per-user min — two
     map-side-collapsing aggregates and one join on the user key; the
     output is cohorts × offsets, tiny at any corpus size.
+    ``df`` carries ``user_id`` and ``ts``.
     """
     period_us = period_days * 86_400 * 1_000_000
     base = df.select(
-        F.col(user_col).alias("_u"),
-        F.expr(f"unix_micros(CAST({ts_col} AS TIMESTAMP)) DIV {period_us}")
+        F.col("user_id").alias("_u"),
+        F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {period_us}")
         .cast("bigint").alias("_p"))
     activity = base.distinct()
     firsts = activity.groupBy("_u").agg(F.min("_p").alias("_cohort"))
@@ -149,9 +144,7 @@ def cohort_retention(df: DataFrame, user_col: str = "user_id",
             .orderBy("cohort_period", "period_offset"))
 
 
-def transition_matrix(df: DataFrame, user_col: str = "user_id",
-                      ts_col: str = "ts", type_col: str = "event_type",
-                      tiebreak_col: str = "event_id") -> DataFrame:
+def transition_matrix(df: DataFrame) -> DataFrame:
     """First-order Markov transition counts between consecutive events
     of the same user: (from_type, to_type, n, row_total, p_ppm).
 
@@ -159,11 +152,11 @@ def transition_matrix(df: DataFrame, user_col: str = "user_id",
     grouped count; ``p_ppm`` = (1e6·n) DIV row_total — exact integer
     division, the float-free row-normalization. The matrix is
     |types|² rows regardless of corpus size.
+    ``df`` carries ``user_id``, ``ts``, ``event_type`` and ``event_id``.
     """
-    w = Window.partitionBy(user_col).orderBy(F.asc(ts_col),
-                                             F.asc(tiebreak_col))
-    pairs = (df.select(user_col, ts_col, tiebreak_col,
-                       F.col(type_col).alias("to_type"))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    pairs = (df.select("user_id", "ts", "event_id",
+                       F.col("event_type").alias("to_type"))
              .withColumn("from_type", F.lag("to_type").over(w))
              .filter(F.col("from_type").isNotNull()))
     counts = (pairs.groupBy("from_type", "to_type")
@@ -177,9 +170,7 @@ def transition_matrix(df: DataFrame, user_col: str = "user_id",
             .orderBy("from_type", "to_type"))
 
 
-def rolling_active(df: DataFrame, window_days: int = 7,
-                   user_col: str = "user_id",
-                   ts_col: str = "ts") -> DataFrame:
+def rolling_active(df: DataFrame, window_days: int = 7) -> DataFrame:
     """Daily + trailing-window active users (DAU/WAU-style), exactly.
 
     COUNT(DISTINCT) over a RANGE window is inexpressible in Spark; the
@@ -196,6 +187,7 @@ def rolling_active(df: DataFrame, window_days: int = 7,
     (day, n_active_1d, n_active_wd) — the window column name is FIXED
     (``n_active_wd``) so window_days=1 cannot collide with the DAU
     column and downstream schemas are parameter-independent.
+    ``df`` carries ``user_id`` and ``ts``.
     """
     if window_days <= 0:
         raise ValueError("window_days must be positive")
@@ -204,8 +196,8 @@ def rolling_active(df: DataFrame, window_days: int = 7,
     # multi-consumer localCheckpoint rule; it is the post-shuffle
     # distinct, day-count × user-count sized (review-found)
     daily = (df.select(
-        F.col(user_col).alias("_u"),
-        F.expr(f"unix_micros(CAST({ts_col} AS TIMESTAMP)) DIV {day_us}")
+        F.col("user_id").alias("_u"),
+        F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {day_us}")
         .cast("bigint").alias("_d"))
         .distinct()
         .localCheckpoint())

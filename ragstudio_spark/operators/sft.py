@@ -18,41 +18,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def sft_pairs(df: DataFrame, conv_col: str = "conv_id",
-              idx_col: str = "turn_idx", role_col: str = "role",
-              text_col: str = "text", user_role: str = "user",
+def sft_pairs(df: DataFrame, user_role: str = "user",
               assistant_role: str = "assistant") -> DataFrame:
     """(conv_id, turn_idx, prompt, response, prompt_chars,
     response_chars) — one row per mined pair; ``turn_idx`` is the USER
-    turn's index."""
-    w = Window.partitionBy(conv_col).orderBy(F.asc(idx_col))
+    turn's index.
+    ``df`` carries ``conv_id``, ``turn_idx``, ``role`` and ``text``."""
+    w = Window.partitionBy("conv_id").orderBy(F.asc("turn_idx"))
     cand = df.select(
-        F.col(conv_col), F.col(idx_col), F.col(role_col),
-        F.col(text_col).alias("prompt"),
-        F.lead(role_col).over(w).alias("_nrole"),
-        F.lead(text_col).over(w).alias("response"),
-        F.lead(idx_col).over(w).alias("_nidx"),
+        F.col("conv_id"), F.col("turn_idx"), F.col("role"),
+        F.col("text").alias("prompt"),
+        F.lead("role").over(w).alias("_nrole"),
+        F.lead("text").over(w).alias("response"),
+        F.lead("turn_idx").over(w).alias("_nidx"),
     )
-    return (cand.filter((F.col(role_col) == user_role)
+    return (cand.filter((F.col("role") == user_role)
                         & (F.col("_nrole") == assistant_role)
-                        & (F.col("_nidx") == F.col(idx_col) + 1))
-            .select(conv_col, idx_col, "prompt", "response",
+                        & (F.col("_nidx") == F.col("turn_idx") + 1))
+            .select("conv_id", "turn_idx", "prompt", "response",
                     F.coalesce(F.length("prompt"), F.lit(0))
                     .cast("bigint").alias("prompt_chars"),
                     F.coalesce(F.length("response"), F.lit(0))
                     .cast("bigint").alias("response_chars")))
 
 
-def sft_multiturn(df: DataFrame, conv_col: str = "conv_id",
-                  idx_col: str = "turn_idx", role_col: str = "role",
-                  text_col: str = "text", user_role: str = "user",
+def sft_multiturn(df: DataFrame, user_role: str = "user",
                   assistant_role: str = "assistant",
                   max_context_turns: int = 8) -> DataFrame:
     """Multi-turn SFT examples: for each assistant turn directly preceded
     by a user turn, the prompt is the last ``max_context_turns`` turns
     rendered as ``role: text`` lines (conversation-history format), the
     response is the assistant turn. Returns (conv_id, turn_idx [of the
-    assistant turn], prompt, response, n_context_turns).
+    assistant turn], prompt, response, n_context_turns). ``df`` carries
+    ``conv_id``, ``turn_idx``, ``role`` and ``text``.
 
     The context window is a bounded per-conversation ROWS frame — never
     the whole conversation (a 2000-turn transcript must not quadratically
@@ -68,22 +66,22 @@ def sft_multiturn(df: DataFrame, conv_col: str = "conv_id",
     sorts per input row); array_sort now appears exactly once, in the
     prompt projection of surviving rows, and n_context_turns reads the
     unsorted attribute."""
-    w_full = Window.partitionBy(conv_col).orderBy(F.asc(idx_col))
+    w_full = Window.partitionBy("conv_id").orderBy(F.asc("turn_idx"))
     w_frame = w_full.rowsBetween(-max_context_turns, -1)
     raw_ctx = F.collect_list(
-        F.struct(F.col(idx_col).alias("i"), F.col(role_col).alias("r"),
-                 F.col(text_col).alias("t"))).over(w_frame)
+        F.struct(F.col("turn_idx").alias("i"), F.col("role").alias("r"),
+                 F.col("text").alias("t"))).over(w_frame)
     cand = df.select(
-        F.col(conv_col), F.col(idx_col), F.col(role_col),
-        F.col(text_col).alias("response"),
-        F.lag(role_col).over(w_full).alias("_prole"),
-        F.lag(idx_col).over(w_full).alias("_pidx"),
+        F.col("conv_id"), F.col("turn_idx"), F.col("role"),
+        F.col("text").alias("response"),
+        F.lag("role").over(w_full).alias("_prole"),
+        F.lag("turn_idx").over(w_full).alias("_pidx"),
         raw_ctx.alias("_ctx"))
-    return (cand.filter((F.col(role_col) == assistant_role)
+    return (cand.filter((F.col("role") == assistant_role)
                         & (F.col("_prole") == user_role)
-                        & (F.col("_pidx") == F.col(idx_col) - 1))
+                        & (F.col("_pidx") == F.col("turn_idx") - 1))
             .select(
-                conv_col, idx_col,
+                "conv_id", "turn_idx",
                 F.array_join(
                     F.transform(F.array_sort(F.col("_ctx")),
                                 lambda s: F.concat(
@@ -95,10 +93,7 @@ def sft_multiturn(df: DataFrame, conv_col: str = "conv_id",
                 F.size("_ctx").cast("int").alias("n_context_turns")))
 
 
-def preference_pairs(df: DataFrame, key_col: str = "query_id",
-                     id_col: str = "feedback_id",
-                     rating_col: str = "numeric_rating",
-                     min_gap: float = 1.0) -> DataFrame:
+def preference_pairs(df: DataFrame, min_gap: float = 1.0) -> DataFrame:
     """Preference-pair mining (the DPO/RLHF data-prep step): per key,
     pair the highest-rated candidate (chosen) with the lowest-rated
     (rejected), emitted only when the rating gap reaches ``min_gap`` —
@@ -110,43 +105,45 @@ def preference_pairs(df: DataFrame, key_col: str = "query_id",
     via the portable max-then-min-among-ties shape (arg_max struct
     orderings differ across engines). Rows with NULL ratings never
     participate. Shape: one groupBy for the extremes, two tie-resolving
-    joins on the key — all key-partitioned, no windows over the corpus."""
+    joins on the key — all key-partitioned, no windows over the corpus.
+    ``df`` carries ``query_id`` (the key), ``feedback_id`` and
+    ``numeric_rating``."""
     dec = "decimal(18,2)"
-    rated = (df.filter(F.col(rating_col).isNotNull())
-             .select(F.col(key_col), F.col(id_col),
-                     F.col(rating_col).cast(dec).alias("_r")))
-    ext = rated.groupBy(key_col).agg(F.max("_r").alias("_max_r"),
-                                     F.min("_r").alias("_min_r"))
-    chosen = (rated.join(ext, on=key_col)
+    rated = (df.filter(F.col("numeric_rating").isNotNull())
+             .select(F.col("query_id"), F.col("feedback_id"),
+                     F.col("numeric_rating").cast(dec).alias("_r")))
+    ext = rated.groupBy("query_id").agg(F.max("_r").alias("_max_r"),
+                                        F.min("_r").alias("_min_r"))
+    chosen = (rated.join(ext, on="query_id")
               .filter(F.col("_r") == F.col("_max_r"))
-              .groupBy(key_col)
-              .agg(F.min(id_col).alias("chosen_id"),
+              .groupBy("query_id")
+              .agg(F.min("feedback_id").alias("chosen_id"),
                    F.max("_r").alias("chosen_rating")))
-    rejected = (rated.join(ext, on=key_col)
+    rejected = (rated.join(ext, on="query_id")
                 .filter(F.col("_r") == F.col("_min_r"))
-                .groupBy(key_col)
-                .agg(F.min(id_col).alias("rejected_id"),
+                .groupBy("query_id")
+                .agg(F.min("feedback_id").alias("rejected_id"),
                      F.max("_r").alias("rejected_rating")))
     # gap test on exact decimals; EMITTED ratings cast to double (the
     # decimal values are exact, and engines render decimals differently)
-    return (chosen.join(rejected, on=key_col)
+    return (chosen.join(rejected, on="query_id")
             .filter((F.col("chosen_rating") - F.col("rejected_rating")
                      >= F.lit(min_gap).cast(dec))
                     & (F.col("chosen_id") != F.col("rejected_id")))
-            .select(key_col, "chosen_id", "rejected_id",
+            .select("query_id", "chosen_id", "rejected_id",
                     F.col("chosen_rating").cast("double")
                     .alias("chosen_rating"),
                     F.col("rejected_rating").cast("double")
                     .alias("rejected_rating")))
 
 
-def sft_pair_stats(pairs: DataFrame,
-                   conv_col: str = "conv_id") -> DataFrame:
+def sft_pair_stats(pairs: DataFrame) -> DataFrame:
     """One-row dataset manifest: pair count, conversations covered,
-    exact char totals (integer — oracle discipline)."""
+    exact char totals (integer — oracle discipline).
+    ``pairs`` carries ``conv_id``."""
     return pairs.agg(
         F.count("*").cast("bigint").alias("n_pairs"),
-        F.countDistinct(conv_col).cast("bigint").alias("n_conversations"),
+        F.countDistinct("conv_id").cast("bigint").alias("n_conversations"),
         # coalesce: F.sum over zero rows is NULL, and the manifest
         # contract is exact bigint totals, including for an empty mine
         F.coalesce(F.sum("prompt_chars"), F.lit(0)).cast("bigint")

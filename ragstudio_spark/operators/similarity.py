@@ -41,15 +41,14 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def brute_force_topk(
-    vectors: DataFrame, queries: DataFrame, k: int = 5,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    query_id_col: str | None = None,
-) -> DataFrame:
-    """(query_id, neighbor_id, rank, similarity) for each query vector."""
-    q_id = query_id_col or id_col
-    q = queries.select(F.col(q_id).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v_vec"))
+def brute_force_topk(vectors: DataFrame, queries: DataFrame,
+                     k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, rank, similarity) for each query vector.
+    ``vectors`` and ``queries`` carry ``vec_id`` and ``embedding``."""
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"),
+                       F.col("embedding").alias("v_vec"))
     sims = (
         F.broadcast(q).crossJoin(v)
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -60,17 +59,17 @@ def brute_force_topk(
         "query_id", "neighbor_id", "rank", "similarity")
 
 
-def ivf_assign(vectors: DataFrame, centroids: DataFrame,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               centroid_id_col: str = "cid") -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid (cosine, id tie-break).
     The centroid side is broadcast-hinted explicitly: it is k rows by
     construction, and an unhinted cross join is the one shape never left
-    to the cardinality estimator on a stats-less cluster."""
-    v = vectors.select(F.col(id_col), F.col(vec_col))
-    c = centroids.select(F.col(centroid_id_col), F.col(vec_col).alias("c_vec"))
+    to the cardinality estimator on a stats-less cluster.
+    ``vectors`` and ``centroids`` carry ``vec_id``/``cid`` and
+    ``embedding``."""
+    v = vectors.select(F.col("vec_id"), F.col("embedding"))
+    c = centroids.select(F.col("cid"), F.col("embedding").alias("c_vec"))
     scored = v.crossJoin(F.broadcast(c)).withColumn(
-        "sim", cosine(F.col(vec_col), F.col("c_vec")))
+        "sim", cosine(F.col("embedding"), F.col("c_vec")))
     # argmax as ONE max(struct) aggregate instead of a row_number window:
     # partial-aggregates map-side (the window exchanged + sorted the full
     # |V|×k score table every call — r7, guide §2.3). max(struct(sim,
@@ -80,24 +79,28 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     # 0-based rank or a caller-supplied id), so the double negation is
     # exact and type-preserving.
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(F.max(F.struct(F.col("sim"),
-                            (-F.col(centroid_id_col)).alias("nc"))).alias("b"))
-        .select(id_col, (-F.col("b.nc")).alias(centroid_id_col))
+                            (-F.col("cid")).alias("nc"))).alias("b"))
+        .select("vec_id", (-F.col("b.nc")).alias("cid"))
     )
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
-             k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: search only the query's centroid cell."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col)
-    v = vectors.join(assign, on=id_col)
+             k: int = 3) -> DataFrame:
+    """Approximate top-k: search only the query's centroid cell.
+    ``vectors``, ``queries`` and ``centroids`` carry ``vec_id``/``cid`` and
+    ``embedding``."""
+    assign = ivf_assign(vectors, centroids)
+    v = vectors.join(assign, on="vec_id")
     q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .join(assign.withColumnRenamed(id_col, "query_id"), on="query_id")
+        queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
+        .join(assign.withColumnRenamed("vec_id", "query_id"), on="query_id")
     )
     cand = q.join(
-        v.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v_vec"), "cid"),
+        v.select(F.col("vec_id").alias("neighbor_id"),
+                 F.col("embedding").alias("v_vec"), "cid"),
         on="cid",
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     scored = cand.withColumn("similarity", cosine(F.col("q_vec"), F.col("v_vec")))
@@ -115,7 +118,6 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 
 def kmeans_centroids(vectors: DataFrame, k: int = 16, iters: int = 2,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
                      exact: bool = False) -> DataFrame:
     """Deterministic Lloyd k-means for the IVF coarse quantizer: init from
     the k lowest-id vectors, assign by squared L2 (ties → lowest cid),
@@ -133,24 +135,26 @@ def kmeans_centroids(vectors: DataFrame, k: int = 16, iters: int = 2,
 
     Empty clusters keep their previous centroid (deterministic). Centroid
     ids are the 0-based rank of the seed vector by id — never a cast of
-    the id value, which silently NULLed every cid for string ids."""
-    seed_w = Window.orderBy(F.asc(id_col))
+    the id value, which silently NULLed every cid for string ids.
+    ``vectors`` carries ``vec_id`` and ``embedding``; returns (cid,
+    embedding)."""
+    seed_w = Window.orderBy(F.asc("vec_id"))
     cents = (
-        vectors.orderBy(F.asc(id_col)).limit(k)
+        vectors.orderBy(F.asc("vec_id")).limit(k)
         .select((F.row_number().over(seed_w) - F.lit(1)).cast("int").alias("cid"),
-                F.col(vec_col).alias("c_vec"))
+                F.col("embedding").alias("c_vec"))
     )
-    v = vectors.select(F.col(id_col), F.col(vec_col))
+    v = vectors.select(F.col("vec_id"), F.col("embedding"))
     for _ in range(iters):
         scored = v.crossJoin(F.broadcast(cents)).withColumn(
-            "d", _l2sq(F.col(vec_col), F.col("c_vec")))
-        assign = top_k(scored, 1, [F.asc("d"), F.asc("cid")], by=[id_col],
-                       rank="rn").select(id_col, vec_col, "cid")
+            "d", _l2sq(F.col("embedding"), F.col("c_vec")))
+        assign = top_k(scored, 1, [F.asc("d"), F.asc("cid")], by=["vec_id"],
+                       rank="rn").select("vec_id", "embedding", "cid")
         if exact:
             grouped = assign.groupBy("cid").agg(
                 F.count("*").alias("n"),
-                F.array_sort(F.collect_list(F.struct(F.col(id_col).alias("i"),
-                                                     F.col(vec_col).alias("v"))))
+                F.array_sort(F.collect_list(F.struct(F.col("vec_id").alias("i"),
+                                                     F.col("embedding").alias("v"))))
                 .alias("ms"),
             )
             zero = F.transform(F.element_at("ms", 1)["v"],
@@ -164,7 +168,7 @@ def kmeans_centroids(vectors: DataFrame, k: int = 16, iters: int = 2,
                 F.transform(summed, lambda s: s / F.col("n")).alias("c_vec"))
         else:
             cells = assign.select(
-                "cid", F.posexplode(F.col(vec_col)).alias("pos", "x"))
+                "cid", F.posexplode(F.col("embedding")).alias("pos", "x"))
             dims = (
                 cells.groupBy("cid", "pos")
                 .agg((F.sum(F.col("x").cast("double")) / F.count("*")).alias("m"))
@@ -179,11 +183,10 @@ def kmeans_centroids(vectors: DataFrame, k: int = 16, iters: int = 2,
             cents.alias("o").join(new.alias("n"), on="cid", how="left")
             .select("cid", F.coalesce(F.col("n.c_vec"), F.col("o.c_vec")).alias("c_vec"))
         )
-    return cents.select("cid", F.col("c_vec").alias(vec_col))
+    return cents.select("cid", F.col("c_vec").alias("embedding"))
 
 
 def pq_train(vectors: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              exact: bool = False) -> DataFrame:
     """Product-quantization codebooks: split each vector into ``m``
     contiguous sub-vectors and train a ``k``-centroid k-means per
@@ -194,8 +197,9 @@ def pq_train(vectors: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
     so a 10⁹-vector index fits executor memory where raw floats cannot.
     Training reuses kmeans_centroids — all its determinism guarantees
     (and its ``exact`` oracle mode: order-fixed member folds, bit-identical
-    centroid doubles across engines) apply per subspace."""
-    dim_row = vectors.select(F.size(vec_col).alias("d")).first()
+    centroid doubles across engines) apply per subspace.
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
+    dim_row = vectors.select(F.size("embedding").alias("d")).first()
     if dim_row is None:
         raise ValueError("pq_train: empty vectors input")
     d = dim_row["d"]
@@ -205,11 +209,11 @@ def pq_train(vectors: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
     books = None
     for j in range(m):
         sliced = vectors.select(
-            F.col(id_col), F.slice(vec_col, j * sub + 1, sub).alias(vec_col))
-        cb = kmeans_centroids(sliced, k=k, iters=iters, id_col=id_col,
-                              vec_col=vec_col, exact=exact).select(
+            "vec_id",
+            F.slice("embedding", j * sub + 1, sub).alias("embedding"))
+        cb = kmeans_centroids(sliced, k=k, iters=iters, exact=exact).select(
             F.lit(j).alias("subspace"), "cid",
-            F.col(vec_col).alias("sub_vec"))
+            F.col("embedding").alias("sub_vec"))
         books = cb if books is None else books.unionByName(cb)
     # codebooks are a tiny (m×k rows) model artifact consumed by several
     # downstream actions (shape checks, encode, search) — materialize ONCE
@@ -229,50 +233,52 @@ def _codebook_shape(codebooks: DataFrame, m: int) -> int:
     return first["s"]
 
 
-def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int = 4,
-              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def pq_encode(vectors: DataFrame, codebooks: DataFrame,
+              m: int = 4) -> DataFrame:
     """Encode each vector as ``m`` codebook indices: (id, codes array<int>).
     One broadcast of the (m×k)-row codebooks; assignment is the same
     squared-L2 argmin as training (id tie-break → deterministic codes).
     A vector whose dimensionality doesn't match the codebooks fails the
     task loudly instead of silently mis-encoding — the guard wraps the
     sub-vector expression itself (a guard on a dropped column is pruned
-    by Catalyst and never runs)."""
+    by Catalyst and never runs).
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
     sub = _codebook_shape(codebooks, m)
-    dim_ok = F.size(F.col(vec_col)) == m * sub
+    dim_ok = F.size(F.col("embedding")) == m * sub
     err = F.raise_error(
         F.concat(F.lit("pq_encode: vector dim "),
-                 F.size(F.col(vec_col)).cast("string"),
+                 F.size(F.col("embedding")).cast("string"),
                  F.lit(f" != m*sub = {m * sub}")))
     subs = vectors.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(F.array(*[
             F.struct(F.lit(j).alias("subspace"),
-                     F.when(dim_ok, F.slice(vec_col, j * sub + 1, sub))
+                     F.when(dim_ok, F.slice("embedding", j * sub + 1, sub))
                      .otherwise(err).alias("sv"))
             for j in range(m)
         ])).alias("s"),
-    ).select(id_col, "s.subspace", "s.sv")
+    ).select("vec_id", "s.subspace", "s.sv")
     scored = subs.join(F.broadcast(codebooks), on="subspace").withColumn(
         "d2", _l2sq(F.col("sv"), F.col("sub_vec")))
     # argmin via min(struct) — the window exchanged + sorted |V|·m·k
     # scored rows per encode (r7; see ivf_assign for the equivalence)
-    best = (scored.groupBy(id_col, "subspace")
+    best = (scored.groupBy("vec_id", "subspace")
             .agg(F.min(F.struct(F.col("d2"), F.col("cid"))).alias("b"))
-            .select(id_col, "subspace", F.col("b.cid").alias("cid")))
+            .select("vec_id", "subspace", F.col("b.cid").alias("cid")))
     return (
-        best.groupBy(id_col)
+        best.groupBy("vec_id")
         .agg(F.array_sort(F.collect_list(F.struct("subspace", "cid"))).alias("sc"))
-        .select(id_col, F.transform("sc", lambda s: s["cid"]).alias("codes"))
+        .select("vec_id", F.transform("sc", lambda s: s["cid"]).alias("codes"))
     )
 
 
 def pq_topk(codes: DataFrame, codebooks: DataFrame, query_vec: list[float],
-            k: int = 5, m: int = 4, id_col: str = "vec_id") -> DataFrame:
+            k: int = 5, m: int = 4) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: precompute the query's
     distance to every codebook centroid (an m×k table, broadcast), then
     each encoded vector's approximate distance is m array lookups — no
-    float vectors touched at scan time. Returns (neighbor_id, rank)."""
+    float vectors touched at scan time. Returns (neighbor_id, rank).
+    ``codes`` carries ``vec_id`` and ``codes``."""
     sub = _codebook_shape(codebooks, m)
     if len(query_vec) != m * sub:
         raise ValueError(
@@ -289,7 +295,7 @@ def pq_topk(codes: DataFrame, codebooks: DataFrame, query_vec: list[float],
         _l2sq(F.element_at(q_arr, F.col("subspace") + 1), F.col("sub_vec")),
     ).select("subspace", "cid", "qd")
     exploded = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.posexplode("codes").alias("subspace", "cid"))
     dist = (
         exploded.join(F.broadcast(table), on=["subspace", "cid"])
@@ -299,10 +305,8 @@ def pq_topk(codes: DataFrame, codebooks: DataFrame, query_vec: list[float],
                  rank="rank").select("neighbor_id", "rank")
 
 
-def ivfpq_index(vectors: DataFrame, centroids: DataFrame,
-                codebooks: DataFrame, m: int = 4,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def ivfpq_index(vectors: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+                m: int = 4) -> DataFrame:
     """(id, cell, codes): the IVF-PQ index table — coarse cell assignment
     (ivf_assign) joined with PQ codes (pq_encode). This is the artifact a
     10⁹-vector deployment materializes once and partitions/buckets BY
@@ -312,11 +316,11 @@ def ivfpq_index(vectors: DataFrame, centroids: DataFrame,
     Delta vs Faiss IVFPQ, documented: codes encode the RAW vector, not
     the residual (v − centroid) — composition of the two oracle-gated
     operators as-is; residual encoding is a recall refinement, not a
-    scale-shape change."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col).select(
-        id_col, F.col("cid").alias("cell"))
-    codes = pq_encode(vectors, codebooks, m, id_col, vec_col)
-    return assign.join(codes, on=id_col)
+    scale-shape change. ``vectors`` carries ``vec_id`` and ``embedding``."""
+    assign = ivf_assign(vectors, centroids).select(
+        "vec_id", F.col("cid").alias("cell"))
+    codes = pq_encode(vectors, codebooks, m)
+    return assign.join(codes, on="vec_id")
 
 
 def _residual(vec: Column, cent: Column) -> Column:
@@ -325,10 +329,8 @@ def _residual(vec: Column, cent: Column) -> Column:
                       lambda x, y: x.cast("double") - y.cast("double"))
 
 
-def ivfpq_train_residual(vectors: DataFrame, centroids: DataFrame,
-                         m: int = 4, k: int = 16, iters: int = 2,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
+def ivfpq_train_residual(vectors: DataFrame, centroids: DataFrame, m: int = 4,
+                         k: int = 16, iters: int = 2,
                          exact: bool = False) -> DataFrame:
     """PQ codebooks trained on RESIDUALS (v − cell centroid) — the Faiss
     IVFPQ refinement: raw-vector codebooks must spread their k centroids
@@ -337,29 +339,26 @@ def ivfpq_train_residual(vectors: DataFrame, centroids: DataFrame,
     re-encoding the coarse position the cell id already carries. Returns
     codebooks in pq_train's (subspace, cid, sub_vec) shape. ``exact``
     selects pq_train's order-fixed-fold oracle mode (the
-    ``ann_ivfpq_residual_topk`` correctness gate), never the scale path."""
-    res = _cell_residuals(vectors, centroids, id_col, vec_col).drop("cell")
-    return pq_train(res, m=m, k=k, iters=iters, id_col=id_col,
-                    vec_col=vec_col, exact=exact)
+    ``ann_ivfpq_residual_topk`` correctness gate), never the scale path.
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
+    res = _cell_residuals(vectors, centroids).drop("cell")
+    return pq_train(res, m=m, k=k, iters=iters, exact=exact)
 
 
-def _cell_residuals(vectors: DataFrame, centroids: DataFrame, id_col: str,
-                    vec_col: str) -> DataFrame:
+def _cell_residuals(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(id, cell, v − cell centroid): each vector's residual against the
     centroid ivf_assign gives it."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col)
-    cents = centroids.select(F.col("cid"), F.col(vec_col).alias("_c_vec"))
-    return (vectors.join(assign, on=id_col)
+    assign = ivf_assign(vectors, centroids)
+    cents = centroids.select(F.col("cid"), F.col("embedding").alias("_c_vec"))
+    return (vectors.join(assign, on="vec_id")
             .join(F.broadcast(cents), on="cid")
-            .select(F.col(id_col), F.col("cid").alias("cell"),
-                    _residual(F.col(vec_col), F.col("_c_vec"))
-                    .alias(vec_col)))
+            .select(F.col("vec_id"), F.col("cid").alias("cell"),
+                    _residual(F.col("embedding"), F.col("_c_vec"))
+                    .alias("embedding")))
 
 
 def ivfpq_index_residual(vectors: DataFrame, centroids: DataFrame,
-                         codebooks: DataFrame, m: int = 4,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         codebooks: DataFrame, m: int = 4) -> DataFrame:
     """(id, cell, codes) with codes over residuals — companion of
     ivfpq_train_residual; same storage/pruning layout as ivfpq_index.
 
@@ -368,26 +367,27 @@ def ivfpq_index_residual(vectors: DataFrame, centroids: DataFrame,
     without materialization the |V|×|C| cell assignment would execute
     twice per index build. localCheckpoint is the single-job equivalent
     of what a real 10⁹-vector build does anyway: persist the assignment/
-    residual table before encoding."""
-    res = _cell_residuals(vectors, centroids, id_col, vec_col).localCheckpoint()
-    codes = pq_encode(res.drop("cell"), codebooks, m, id_col, vec_col)
-    return res.select(id_col, "cell").join(codes, on=id_col)
+    residual table before encoding.
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
+    res = _cell_residuals(vectors, centroids).localCheckpoint()
+    codes = pq_encode(res.drop("cell"), codebooks, m)
+    return res.select("vec_id", "cell").join(codes, on="vec_id")
 
 
 def ivfpq_topk_residual(index: DataFrame, centroids: DataFrame,
-                        codebooks: DataFrame, queries: DataFrame,
-                        k: int = 5, nprobe: int = 2, m: int = 4,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+                        codebooks: DataFrame, queries: DataFrame, k: int = 5,
+                        nprobe: int = 2, m: int = 4) -> DataFrame:
     """Search over residual codes: the query's distance table is computed
     per PROBED CELL from the query's own residual against that cell's
     centroid (q − c), so the table is |Q|·nprobe·m·k rows — still tiny,
-    still broadcast. Candidates join on (query, cell, subspace, cid)."""
+    still broadcast. Candidates join on (query, cell, subspace, cid).
+    ``index`` carries ``vec_id``; ``queries`` and ``centroids`` carry
+    ``embedding`` (and ``vec_id``/``cid``)."""
     sub = _codebook_shape(codebooks, m)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
     cents_b = F.broadcast(
-        centroids.select("cid", F.col(vec_col).alias("c_vec")))
+        centroids.select("cid", F.col("embedding").alias("c_vec")))
     probed = q.crossJoin(cents_b).withColumn(
         "sim", cosine(F.col("q_vec"), F.col("c_vec")))
     probes = top_k(probed, nprobe, [F.desc("sim"), F.asc("cid")],
@@ -406,7 +406,7 @@ def ivfpq_topk_residual(index: DataFrame, centroids: DataFrame,
           .withColumn("qd", _l2sq(F.col("q_sv"), F.col("sub_vec")))
           .select("query_id", "cell", "subspace", "cid", "qd"))
     cand = (probes.select("query_id", "cell")
-            .join(index.withColumnRenamed(id_col, "neighbor_id"), on="cell")
+            .join(index.withColumnRenamed("vec_id", "neighbor_id"), on="cell")
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "cell", "neighbor_id",
                     F.posexplode("codes").alias("subspace", "cid")))
@@ -419,26 +419,25 @@ def ivfpq_topk_residual(index: DataFrame, centroids: DataFrame,
         "query_id", "neighbor_id", "rank")
 
 
-def ann_recall_report(approx: DataFrame, exact: DataFrame,
-                      query_col: str = "query_id",
-                      neighbor_col: str = "neighbor_id") -> DataFrame:
+def ann_recall_report(approx: DataFrame, exact: DataFrame) -> DataFrame:
     """Evaluation harness for ANN results against exact ground truth:
     per query, (n_exact, n_approx, n_hits) — INTEGER counts only, the
     oracle discipline; callers derive recall = n_hits / n_exact. The
     exact side defines the query universe (a query the approximate
     index returned nothing for still reports, with zeros). Both inputs
-    are top-k tables (tiny); one distinct per side + one key join."""
+    are top-k tables (tiny); one distinct per side + one key join.
+    ``approx`` and ``exact`` carry ``query_id`` and ``neighbor_id``."""
     # single-pass shape: ONE full-outer join of the two distinct pair
     # sets, then one groupBy — each input's (possibly expensive) search
     # lineage is referenced exactly once, never re-executed per counter
     # (Spark does not dedupe common subplans across joins — the
     # codebase's measured multi-consumer lesson)
-    e = (exact.select(F.col(query_col), F.col(neighbor_col)).distinct()
+    e = (exact.select(F.col("query_id"), F.col("neighbor_id")).distinct()
          .withColumn("_e", F.lit(1)))
-    a = (approx.select(F.col(query_col), F.col(neighbor_col)).distinct()
+    a = (approx.select(F.col("query_id"), F.col("neighbor_id")).distinct()
          .withColumn("_a", F.lit(1)))
-    joined = e.join(a, on=[query_col, neighbor_col], how="full_outer")
-    return (joined.groupBy(query_col)
+    joined = e.join(a, on=["query_id", "neighbor_id"], how="full_outer")
+    return (joined.groupBy("query_id")
             .agg(F.sum(F.coalesce("_e", F.lit(0))).cast("bigint")
                  .alias("n_exact"),
                  F.sum(F.coalesce("_a", F.lit(0))).cast("bigint")
@@ -466,9 +465,8 @@ def read_ivfpq_index(spark, path: str) -> DataFrame:
 
 
 def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
-               queries: DataFrame, k: int = 5, nprobe: int = 2, m: int = 4,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+               queries: DataFrame, k: int = 5, nprobe: int = 2,
+               m: int = 4) -> DataFrame:
     """Approximate top-k through the composed IVF-PQ architecture: route
     each query to its ``nprobe`` nearest cells (same cosine measure as
     ivf_assign — probing must agree with assignment), then asymmetric-
@@ -479,13 +477,15 @@ def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
     per-query distance table is |Q|·m·k rows (broadcastable for bounded
     query sets); the scan reads nprobe/|cells| of the code table and
     never touches a float vector. With the index bucketed by cell the
-    probe join is partition-pruned."""
+    probe join is partition-pruned.
+    ``index`` carries ``vec_id``; ``queries`` and ``centroids`` carry
+    ``embedding`` (and ``vec_id``/``cid``)."""
     sub = _codebook_shape(codebooks, m)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
     # nprobe nearest cells per query (cosine desc, cid asc — determinism)
     probed = q.crossJoin(
-        F.broadcast(centroids.select("cid", F.col(vec_col).alias("c_vec")))
+        F.broadcast(centroids.select("cid", F.col("embedding").alias("c_vec")))
     ).withColumn("sim", cosine(F.col("q_vec"), F.col("c_vec")))
     probes = top_k(probed, nprobe, [F.desc("sim"), F.asc("cid")],
                    by=["query_id"], rank="rn").select(
@@ -504,7 +504,7 @@ def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
           .withColumn("qd", _l2sq(F.col("q_sv"), F.col("sub_vec")))
           .select("query_id", "subspace", "cid", "qd"))
     # candidates = probed cells' codes only; adist = m table lookups
-    cand = (probes.join(index.withColumnRenamed(id_col, "neighbor_id"),
+    cand = (probes.join(index.withColumnRenamed("vec_id", "neighbor_id"),
                         on="cell")
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id",
@@ -518,19 +518,19 @@ def ivfpq_topk(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
 
 
 
-def hyperplane_buckets(vectors: DataFrame, planes: DataFrame,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       plane_id_col: str = "plane") -> DataFrame:
-    """Sign-bit LSH bucket per vector: bucket = Σ (dot(v, plane_p) > 0) << p."""
-    v = vectors.select(F.col(id_col), F.col(vec_col))
-    p = planes.select(F.col(plane_id_col), F.col(vec_col).alias("p_vec"))
+def hyperplane_buckets(vectors: DataFrame, planes: DataFrame) -> DataFrame:
+    """Sign-bit LSH bucket per vector: bucket = Σ (dot(v, plane_p) > 0) << p.
+    ``vectors`` carries ``vec_id`` and ``embedding``; ``planes`` carries
+    ``plane`` and ``embedding``."""
+    v = vectors.select(F.col("vec_id"), F.col("embedding"))
+    p = planes.select(F.col("plane"), F.col("embedding").alias("p_vec"))
     bits = v.crossJoin(F.broadcast(p)).select(
-        id_col, plane_id_col,
-        F.when(dot(F.col(vec_col), F.col("p_vec")) > 0, 1).otherwise(0).alias("bit"),
+        "vec_id", "plane",
+        F.when(dot(F.col("embedding"), F.col("p_vec")) > 0, 1).otherwise(0).alias("bit"),
     )
-    return bits.groupBy(id_col).agg(
+    return bits.groupBy("vec_id").agg(
         F.sum(F.col("bit").cast("bigint")
-              * F.pow(2, F.col(plane_id_col)).cast("bigint")).cast("bigint").alias("bucket")
+              * F.pow(2, F.col("plane")).cast("bigint")).cast("bigint").alias("bucket")
     )
 
 
@@ -538,7 +538,7 @@ def hyperplane_buckets(vectors: DataFrame, planes: DataFrame,
 # scalar quantization (SQ8)
 # --------------------------------------------------------------------------
 
-def sq8_params(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def sq8_params(vectors: DataFrame) -> DataFrame:
     """Per-dimension [min, max] calibration for 8-bit scalar quantization:
     one row ``(mins: array<double>, maxs: array<double>)``.
 
@@ -547,9 +547,10 @@ def sq8_params(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     across partitionings and engines. localCheckpointed: the params feed
     BOTH the corpus encode and the query encode (the tiny-model fan-out
     rule — without it each consumer re-runs the corpus scan).
+    ``vectors`` carries ``embedding``.
     """
     dims = (
-        vectors.select(F.posexplode(vec_col).alias("pos", "x"))
+        vectors.select(F.posexplode("embedding").alias("pos", "x"))
         .groupBy("pos")
         .agg(F.min(F.col("x").cast("double")).alias("mn"),
              F.max(F.col("x").cast("double")).alias("mx"))
@@ -564,17 +565,16 @@ def sq8_params(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def sq8_encode(vectors: DataFrame, params: DataFrame,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def sq8_encode(vectors: DataFrame, params: DataFrame) -> DataFrame:
     """8-bit codes: ``floor((x - min) / (max - min) * 255)`` clamped to
     [0, 255] per dimension (constant dimensions code to 0). Returns
     ``(id, code: array<bigint>)`` — 1 byte of information per dimension
     vs 4 for the raw float, the classic 4× index-memory cut. The
     arithmetic is the same IEEE-double expression shape the DuckDB twin
-    uses, so codes match bit-for-bit."""
+    uses, so codes match bit-for-bit.
+    ``vectors`` carries ``vec_id`` and ``embedding``."""
     v = vectors.crossJoin(F.broadcast(params))
-    num = F.zip_with(F.col(vec_col), F.col("mins"),
+    num = F.zip_with(F.col("embedding"), F.col("mins"),
                      lambda x, mn: x.cast("double") - mn)
     den = F.zip_with(F.col("maxs"), F.col("mins"), lambda mx, mn: mx - mn)
     code = F.zip_with(
@@ -583,7 +583,7 @@ def sq8_encode(vectors: DataFrame, params: DataFrame,
             F.least(F.lit(255).cast("long"),
                     F.greatest(F.lit(0).cast("long"),
                                F.floor(n / d * 255.0)))))
-    return v.select(F.col(id_col), code.alias("code"))
+    return v.select(F.col("vec_id"), code.alias("code"))
 
 
 def sq8_dequantize(code: Column, mins: Column, maxs: Column) -> Column:
@@ -597,9 +597,7 @@ def sq8_dequantize(code: Column, mins: Column, maxs: Column) -> Column:
         lambda s, mx: s["mn"] + s["c"] * ((mx - s["mn"]) / 255.0))
 
 
-def sq8_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str | None = None) -> DataFrame:
+def sq8_topk(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """SQ8 search, FAISS-ScalarQuantizer-style: encode corpus AND queries
     to 8-bit per-dimension affine codes, rank by the dot product in the
     DEQUANTIZED space — ``(query_id, neighbor_id, rank)``.
@@ -615,17 +613,17 @@ def sq8_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
 
     Scale story: the index at rest is 1-byte codes + one tiny params row
     (4× less memory than raw floats, no training step unlike PQ);
-    queries are broadcast; decode happens in-flight at scan time."""
-    q_id = query_id_col or id_col
-    params = sq8_params(vectors, vec_col)
-    codes = sq8_encode(vectors, params, id_col, vec_col)
+    queries are broadcast; decode happens in-flight at scan time.
+    ``vectors`` and ``queries`` carry ``vec_id`` and ``embedding``."""
+    params = sq8_params(vectors)
+    codes = sq8_encode(vectors, params)
     dec = sq8_dequantize(F.col("code"), F.col("mins"), F.col("maxs"))
     v_hat = (codes.crossJoin(F.broadcast(params))
-             .select(F.col(id_col).alias("neighbor_id"),
+             .select(F.col("vec_id").alias("neighbor_id"),
                      dec.alias("v_hat")))
-    q_hat = (sq8_encode(queries, params, q_id, vec_col)
+    q_hat = (sq8_encode(queries, params)
              .crossJoin(F.broadcast(params))
-             .select(F.col(q_id).alias("query_id"), dec.alias("q_hat")))
+             .select(F.col("vec_id").alias("query_id"), dec.alias("q_hat")))
     scored = (
         F.broadcast(q_hat).crossJoin(v_hat)
         .filter(F.col("neighbor_id") != F.col("query_id"))

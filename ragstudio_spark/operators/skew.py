@@ -26,9 +26,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int = 32, cols: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int = 32) -> DataFrame:
+    """Attach ``salt``: a hash of (``conv_id``, ``turn_idx``) modulo
+    ``n_salts``."""
     return df.withColumn(
-        "salt", F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salts)).cast("int")
+        "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts)).cast("int")
     )
 
 
@@ -44,12 +46,8 @@ def salted_conv_agg(df: DataFrame, value_col: Column, n_salts: int = 32) -> Data
     )
 
 
-def assemble_conversations(
-    df: DataFrame,
-    text_col: str = "text",
-    sep: str = "\n\n",
-    bucket_size: int = 64,
-) -> DataFrame:
+def assemble_conversations(df: DataFrame, sep: str = "\n\n",
+                           bucket_size: int = 64) -> DataFrame:
     """Turn-ordered conversation assembly (turns → one document per
     conversation), skew-safe via two-phase ordered concatenation:
 
@@ -61,6 +59,7 @@ def assemble_conversations(
 
     Ordering comes from (bucket, turn_idx) sort keys inside array_sort —
     deterministic under any shuffle. Returns (conv_id, n_turns, doc_text).
+    ``df`` carries ``conv_id``, ``turn_idx`` and ``text``.
     """
     bucket = (F.col("turn_idx") / bucket_size).cast("int")
     partial = (
@@ -72,7 +71,7 @@ def assemble_conversations(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.struct(F.col("turn_idx"), F.coalesce(F.col(text_col), F.lit("")).alias("t"))
+                            F.struct(F.col("turn_idx"), F.coalesce(F.col("text"), F.lit("")).alias("t"))
                         )
                     ),
                     lambda s: s["t"],
@@ -98,18 +97,19 @@ def assemble_conversations(
     )
 
 
-def rebalance_by_size(df: DataFrame, text_col: str = "text",
+def rebalance_by_size(df: DataFrame,
                       num_partitions: int | None = None) -> DataFrame:
     """Range-partition on (log-size bucket, row hash): giant turns spread
-    uniformly, small turns pack densely — equalizes pandas-UDF batch cost."""
-    bucket = F.floor(F.log2(F.greatest(F.length(F.col(text_col)), F.lit(1))))
+    uniformly, small turns pack densely — equalizes pandas-UDF batch cost.
+    ``df`` carries ``conv_id``, ``turn_idx`` and ``text``."""
+    bucket = F.floor(F.log2(F.greatest(F.length(F.col("text")), F.lit(1))))
     spread = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(1 << 20))
     if num_partitions:
         return df.repartitionByRange(num_partitions, bucket, spread)
     return df.repartitionByRange(bucket, spread)
 
 
-def skew_report(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",)) -> DataFrame:
+def skew_report(df: DataFrame) -> DataFrame:
     """One-row skew diagnostic for a prospective groupBy/join key — the
     measurement that decides whether ``with_salt`` is needed BEFORE a
     10^12-row shuffle pins a reducer.
@@ -127,11 +127,11 @@ def skew_report(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",)) -> Data
 
     Scale: one partial-aggregated groupBy over the key (counts), then a
     key-count-sized aggregate — the report costs one shuffle over keys,
-    never over rows.
+    never over rows. The key is ``conv_id``.
     """
     from pyspark.sql import Window
 
-    counts = df.groupBy(*key_cols).agg(F.count("*").alias("_c"))
+    counts = df.groupBy("conv_id").agg(F.count("*").alias("_c"))
     w = Window.orderBy(F.asc("_c"))
     ranked = (counts
               .withColumn("_r", F.row_number().over(w))
@@ -155,17 +155,16 @@ def skew_report(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",)) -> Data
         .drop("_mean"))
 
 
-def heavy_keys(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",),
-               multiplier: int = 2) -> DataFrame:
+def heavy_keys(df: DataFrame, multiplier: int = 2) -> DataFrame:
     """Keys whose row count exceeds ``multiplier``× the mean — the
     explicit hot-key list for targeted salting or AQE skew-join hints.
     Exact integer predicate against the DIV-floored mean (the
     skew_report overflow rationale), ordered by count desc with key
-    tiebreaks."""
+    tiebreaks. The key is ``conv_id``."""
     # key-sized counts feed TWO consumers (the stats aggregate and the
     # output join) within ONE plan: exchange reuse computes the input
     # groupBy once (ReusedExchange), so a checkpoint would only add a job.
-    counts = df.groupBy(*key_cols).agg(F.count("*").cast("bigint")
+    counts = df.groupBy("conv_id").agg(F.count("*").cast("bigint")
                                        .alias("key_count"))
     stats = (counts.agg(F.sum("key_count").cast("bigint").alias("_total"),
                         F.count("*").cast("bigint").alias("_nk"))
@@ -176,4 +175,4 @@ def heavy_keys(df: DataFrame, key_cols: tuple[str, ...] = ("conv_id",),
                         F.expr("(1000000 * key_count) DIV _mean")
                         .cast("bigint"))
             .drop("_total", "_nk", "_mean")
-            .orderBy(F.desc("key_count"), *[F.asc(c) for c in key_cols]))
+            .orderBy(F.desc("key_count"), F.asc("conv_id")))

@@ -86,8 +86,7 @@ def snapshot_diff_summary(old: DataFrame, new: DataFrame,
                     .cast("bigint").alias("n")))
 
 
-def scd2_history(events: DataFrame, key_cols: Sequence[str],
-                 attr_col: str, ts_col: str = "ts",
+def scd2_history(events: DataFrame, key_cols: Sequence[str], attr_col: str,
                  tiebreak_col: str | None = None) -> DataFrame:
     """Type-2 slowly-changing-dimension history from an append-only event log.
 
@@ -109,7 +108,7 @@ def scd2_history(events: DataFrame, key_cols: Sequence[str],
     no global window, no collect. Ordering must be total per key: pass
     ``tiebreak_col`` when ``ts`` can tie (e.g. the event id).
     """
-    order = [F.asc(ts_col)] + (
+    order = [F.asc("ts")] + (
         [F.asc(tiebreak_col)] if tiebreak_col else [])
     w = Window.partitionBy(*key_cols).orderBy(*order)
     prev = F.lag(attr_col).over(w)
@@ -120,11 +119,11 @@ def scd2_history(events: DataFrame, key_cols: Sequence[str],
     # re-window over change rows only: each change's expiry is the next
     # change's start (not the next raw event's)
     w2 = Window.partitionBy(*key_cols).orderBy(*order)
-    nxt = F.lead(ts_col).over(w2)
+    nxt = F.lead("ts").over(w2)
     return (changed
             .select(*key_cols,
                     F.col(attr_col).alias("attr_value"),
-                    F.unix_micros(F.col(ts_col).cast("timestamp"))
+                    F.unix_micros(F.col("ts").cast("timestamp"))
                     .alias("valid_from_us"),
                     F.unix_micros(nxt.cast("timestamp"))
                     .alias("valid_to_us"))
@@ -207,8 +206,7 @@ def join_cardinality(left: DataFrame, right: DataFrame, on: str,
 
 def distribution_drift_from_counts(old_counts: DataFrame,
                                    new_counts: DataFrame,
-                                   bucket_col: str,
-                                   count_col: str = "key_count") -> DataFrame:
+                                   bucket_col: str) -> DataFrame:
     """distribution_drift over PRE-COUNTED bucket tables — the streaming
     composition point: feed it two ``read_key_counts`` outputs (baseline
     log vs live log) and the TV alarm runs over key-sized tables without
@@ -220,10 +218,11 @@ def distribution_drift_from_counts(old_counts: DataFrame,
     caller passing the raw batch-tagged monitor store (one row per key
     PER BATCH) would otherwise fan the null-safe outer join out
     many-to-many and double-count TV with no error.
+    Both tables carry ``key_count``.
     """
     def expand(df, side):
         return (df.groupBy(bucket_col)
-                .agg(F.sum(F.col(count_col).cast("bigint"))
+                .agg(F.sum(F.col("key_count").cast("bigint"))
                      .cast("bigint").alias(f"n_{side}")))
 
     def shares(df, side):

@@ -45,5 +45,6 @@ def content_type(text: Column) -> Column:
     )
 
 
-def with_content_type(df, text_col: str = "text", out_col: str = "content_type"):
-    return df.withColumn(out_col, content_type(F.col(text_col)))
+def with_content_type(df):
+    """Attach ``content_type``, sniffed from ``text``."""
+    return df.withColumn("content_type", content_type(F.col("text")))

@@ -11,13 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def with_strategy(df: DataFrame, prefix: str = "profile_") -> DataFrame:
-    tokens = F.col(f"{prefix}length_tokens")
-    headings = F.col(f"{prefix}has_headings")
-    depth = F.col(f"{prefix}hierarchy_depth")
-    dtype = F.col(f"{prefix}type")
-    tables = F.col(f"{prefix}has_tables")
-    score = F.col(f"{prefix}structure_score")
+def with_strategy(df: DataFrame) -> DataFrame:
+    """Attach the ``strategy*`` columns, read from with_profile's
+    ``profile_*`` columns."""
+    tokens = F.col("profile_length_tokens")
+    headings = F.col("profile_has_headings")
+    depth = F.col("profile_hierarchy_depth")
+    dtype = F.col("profile_type")
+    tables = F.col("profile_has_tables")
+    score = F.col("profile_structure_score")
 
     def ladder(short, structured, technical, tabular, high_structure, long_, default):
         return (

@@ -23,16 +23,17 @@ from pyspark.sql import DataFrame, functions as F
 TOOL_PAYLOAD_SCHEMA = "tool string, status string, call_id bigint"
 
 
-def parse_tool_calls(df: DataFrame, tool_col: str = "tool",
+def parse_tool_calls(df: DataFrame,
                      id_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
                      keep_raw: bool = False) -> DataFrame:
     """One row per turn carrying a tool payload: typed fields parsed
     JVM-side. Malformed JSON yields NULL fields (from_json PERMISSIVE),
-    never a task failure."""
-    parsed = F.from_json(F.col(tool_col), TOOL_PAYLOAD_SCHEMA)
-    extra = [F.col(tool_col).alias("tool_json")] if keep_raw else []
+    never a task failure. ``df`` carries the ``tool`` payload and
+    ``id_cols``."""
+    parsed = F.from_json(F.col("tool"), TOOL_PAYLOAD_SCHEMA)
+    extra = [F.col("tool").alias("tool_json")] if keep_raw else []
     return (
-        df.filter(F.col(tool_col).isNotNull())
+        df.filter(F.col("tool").isNotNull())
         .select(*id_cols, parsed.alias("_p"), *extra)
         .select(
             *id_cols,

@@ -195,15 +195,15 @@ def resolve(spark: SparkSession, path: str, now: int,
 
 
 def lookup_df(queries: DataFrame, path: str, prefix: str, key: Column,
-              now: int, value_alias: str = "cached_value") -> DataFrame:
+              now: int) -> DataFrame:
     """Bulk get: left-join the query set against the resolved live view;
-    misses carry NULL ``value_alias``. The cache side streams through
+    misses carry NULL ``cached_value``. The cache side streams through
     one aggregate; broadcast/shuffle choice is left to AQE (queries are
     usually the small side)."""
     live = resolve(queries.sparkSession, path, now, prefix=prefix)
     return (queries.withColumn("_ck", key)
             .join(live.select(F.col("key").alias("_ck"),
-                              F.col("value").alias(value_alias)),
+                              F.col("value").alias("cached_value")),
                   on="_ck", how="left")
             .drop("_ck"))
 

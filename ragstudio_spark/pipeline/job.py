@@ -141,7 +141,7 @@ def _outputs(transcripts: DataFrame, turns: DataFrame,
                         F.lpad(F.col("chunk_index").cast("string"), 6, "0")),
         ).localCheckpoint()
         pairs = dedupe.minhash_lsh_pairs(
-            keyed, text_col="text", id_col="_k", n_hashes=16, n_bands=4)
+            keyed, id_col="_k", n_hashes=16, n_bands=4)
         chunks = dedupe.keep_canonical(keyed, pairs, id_col="_k").drop("_k")
 
     return PipelineOutput(chunks=chunks, metrics=metrics, quarantine=quarantine,

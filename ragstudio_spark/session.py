@@ -1,6 +1,8 @@
-"""SparkSession factories with the engine's settings (SQL_CONF: AQE with
-skew splitting, bounded Arrow batches, UTC; local shuffle partitions sized
-to cores), and literal_table, which builds tables of Python values."""
+"""SparkSession factories with the engine's settings (SQL_CONF: bounded
+Arrow batches, UTC, one optimizer-rule exclusion; local shuffle partitions
+sized to cores), and literal_table, which builds tables of Python values.
+AQE, its partition coalescing and skew-join splitting and the 128 MiB file
+split are Spark's defaults, so SQL_CONF does not restate them."""
 
 from __future__ import annotations
 
@@ -11,15 +13,11 @@ from pyspark.sql.types import ArrayType, StructType
 
 # spark.sql.* settings of every engine session (get_spark, submit_session)
 SQL_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.pyspark.selfDestruct.enabled": "true",
     # multi-KB turn payloads: keep Arrow batches bounded so a batch of
     # long transcripts fits executor memory
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.session.timeZone": "UTC",
     # InferFiltersFromGenerate synthesizes size(expr)>0 below explode()
     # and pushdown then inlines the generator's (interpreted, higher-

@@ -339,9 +339,7 @@ def incremental_near_dedup_stream(spark: SparkSession, input_dir: str,
                   .writeStream.foreachBatch(process), checkpoint_dir)
 
 
-def curate_stream_batch(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        benchmark: DataFrame | None = None,
+def curate_stream_batch(df: DataFrame, benchmark: DataFrame | None = None,
                         ngram_n: int = 13,
                         benchmark_grams: DataFrame | None = None) -> DataFrame:
     """The row-local curation stages (the non-dedup legs of
@@ -362,27 +360,27 @@ def curate_stream_batch(df: DataFrame, text_col: str = "text",
     The repetition keep predicate is quality_signals.repetition_keep_cond
     — the same Column the batch repetition_filter applies, so flag and
     filter can never diverge; contamination reuses
-    dedupe.ngram_decontaminate, the oracle-gated batch operator."""
+    dedupe.ngram_decontaminate, the oracle-gated batch operator.
+    ``df`` and ``benchmark`` carry ``doc_id`` and ``text``."""
     from ragstudio_spark.operators import quality_signals
     from ragstudio_spark.operators import redact as redact_op
 
-    red = redact_op.with_redaction(df, text_col).drop(text_col)
-    sig = quality_signals.repetition_signals(df, text_col, id_col).select(
-        id_col, "total_chars",
+    red = redact_op.with_redaction(df).drop("text")
+    sig = quality_signals.repetition_signals(df).select(
+        "doc_id", "total_chars",
         quality_signals.repetition_keep_cond().alias("rep_keep"))
-    c4 = quality_signals.c4_clean(df, text_col, id_col).select(
-        id_col, "n_kept", "n_sentences", "c4_keep")
-    out = red.join(sig, on=id_col).join(c4, on=id_col)
+    c4 = quality_signals.c4_clean(df).select(
+        "doc_id", "n_kept", "n_sentences", "c4_keep")
+    out = red.join(sig, on="doc_id").join(c4, on="doc_id")
     if benchmark is not None or benchmark_grams is not None:
         from ragstudio_spark.operators import dedupe
 
         flagged = dedupe.ngram_decontaminate(
-            df.select(F.col(id_col).alias("doc_id"),
-                      F.col(text_col).alias("text")),
+            df.select("doc_id", "text"),
             benchmark, n=ngram_n, benchmark_grams=benchmark_grams,
-        ).select(F.col("corpus_id").alias(id_col)).distinct() \
+        ).select(F.col("corpus_id").alias("doc_id")).distinct() \
             .withColumn("contaminated", F.lit(True))
-        out = out.join(flagged, on=id_col, how="left").withColumn(
+        out = out.join(flagged, on="doc_id", how="left").withColumn(
             "contaminated", F.coalesce(F.col("contaminated"), F.lit(False)))
     return out
 
@@ -573,9 +571,7 @@ def read_cms_counters(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def session_stats_stream(stream_df: DataFrame, gap_minutes: int = 30,
-                         watermark: str = "1 hour",
-                         user_col: str = "user_id",
-                         ts_col: str = "ts") -> DataFrame:
+                         watermark: str = "1 hour") -> DataFrame:
     """Streaming gap-sessionization via the built-in ``session_window``
     — the native stateful form of operators/sessions.session_stats.
 
@@ -589,15 +585,15 @@ def session_stats_stream(stream_df: DataFrame, gap_minutes: int = 30,
     gap — emitted as epoch micros (the representation rule).
 
     Batch equality (user, start, last, n_events) is pinned in
-    tests/test_streaming_sessions.py.
+    tests/test_streaming_sessions.py. Events carry ``user_id`` and ``ts``.
     """
     gap_us = gap_minutes * 60 * 1_000_000
     return (stream_df
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.session_window(F.col(ts_col), f"{gap_minutes} minutes"),
-                     F.col(user_col))
+            .withWatermark("ts", watermark)
+            .groupBy(F.session_window(F.col("ts"), f"{gap_minutes} minutes"),
+                     F.col("user_id"))
             .agg(F.count("*").alias("n_events"))
-            .select(user_col,
+            .select("user_id",
                     F.unix_micros(F.col("session_window.start"))
                     .alias("session_start_us"),
                     (F.unix_micros(F.col("session_window.end")) - gap_us)

@@ -132,7 +132,7 @@ def main() -> None:
         copies (only the final line carries the copy token), so at 10×
         each eligible line is a 10-member exact-dup group — the heaviest
         realistic load for the first-occurrence join."""
-        bound = dedupe._bound_words(d, "text", "doc_id")
+        bound = dedupe._bound_words(d, "doc_id")
         lines = F.when(
             F.size("_w") > 0,
             F.transform(
@@ -158,7 +158,7 @@ def main() -> None:
         TRUE stitch pair per doc, so true-pair volume scales with the
         corpus (the copy-token corpus alone has no boundary matches:
         every tail ends with its copy token)."""
-        bound = dedupe._bound_words(d, "text", "doc_id")
+        bound = dedupe._bound_words(d, "doc_id")
         m = (F.size("_w") / 2).cast("int")
         first = F.concat_ws(" ", F.slice("_w", 1, m + k))
         second = F.concat_ws(

@@ -43,7 +43,7 @@ def main() -> None:
     spark = get_spark("bpe-train", master="local[8]", shuffle_partitions=8)
     docs = spark.read.parquet(f"/root/testdata/sf{args.sf}/documents.parquet")
     t0 = time.time()
-    vocab = bpe_trainer.pretokenize(docs, "text").localCheckpoint()
+    vocab = bpe_trainer.pretokenize(docs).localCheckpoint()
     n_pieces = vocab.count()
     print(f"vocabulary: {n_pieces} distinct pieces "
           f"({time.time() - t0:.1f}s corpus pass)", flush=True)

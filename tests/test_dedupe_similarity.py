@@ -221,6 +221,26 @@ class TestClusters:
         assert {r["cluster_id"] for r in got} == {0}
         assert len(got) == n + 1
 
+    def test_rounds_count_changes_without_a_count_action(self, spark,
+                                                         monkeypatch):
+        """Each round's checkpoint job counts the changed labels through an
+        Observation, so no round runs a separate count() action."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(20)], "doc_a int, doc_b int")
+        calls = []
+        count = DataFrame.count
+
+        def counted(self):
+            calls.append(1)
+            return count(self)
+
+        monkeypatch.setattr(DataFrame, "count", counted)
+        got = dedupe.duplicate_clusters(pairs).collect()
+        assert {r["cluster_id"] for r in got} == {0} and len(got) == 21
+        assert calls == []
+
     def test_non_convergence_raises_loudly(self, spark):
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(30)], "doc_a int, doc_b int")

@@ -384,3 +384,55 @@ def test_no_python_local_relation_outside_literal_table():
                     found.append(f"{path.relative_to(root)}:{node.lineno}")
     assert found == [], found
     assert helper_ranges == 1   # the guard still recognizes the idiom
+
+
+def test_no_unset_column_name_parameters():
+    """An operator takes a column-name parameter only when some caller
+    passes another name: every defaulted ``*_col``/``*_cols`` parameter of
+    a public function under ragstudio_spark/ (kernel/ and
+    pipeline/guards.py aside) is set by some call in the repository, by
+    keyword or by position. Calls match by function name, and a call with
+    ``*args``/``**kwargs`` counts as setting everything, so the scan can
+    only over-count setters."""
+    import ast
+    import collections
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = [p for d in ("ragstudio_spark", "scripts", "tests", "perfbench")
+             for p in (repo / d).rglob("*.py")]
+    files += [repo / f for f in ("bench.py", "bench_extra.py",
+                                 "__spark_entry__.py")]
+    by_kw, n_pos, star = collections.defaultdict(set), {}, set()
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                    k.arg is None for k in node.keywords):
+                star.add(name)
+            n_pos[name] = max(n_pos.get(name, 0), len(node.args))
+            by_kw[name] |= {k.arg for k in node.keywords}
+    unset = []
+    for path in sorted((repo / "ragstudio_spark").rglob("*.py")):
+        rel = path.relative_to(repo / "ragstudio_spark").as_posix()
+        if rel.startswith("kernel/") or rel == "pipeline/guards.py":
+            continue
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if (not isinstance(fn, ast.FunctionDef)
+                    or fn.name.startswith("_") or fn.name in star):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            defaulted = [(i - skip, p) for i, p in enumerate(pos)
+                         if i >= len(pos) - len(a.defaults)]
+            defaulted += [(None, p) for p, d in zip(a.kwonlyargs,
+                                                    a.kw_defaults) if d]
+            for i, p in defaulted:
+                if (p.arg.endswith(("_col", "_cols"))
+                        and p.arg not in by_kw[fn.name]
+                        and (i is None or n_pos.get(fn.name, 0) <= i)):
+                    unset.append(f"{rel}:{fn.name}({p.arg})")
+    assert unset == [], unset
